@@ -1,1 +1,1 @@
-"""Vectorized function surface: tile math UDFs, text analysis, vector ops."""
+"""Function surface: tile math expressions, text analysis, vector ops."""

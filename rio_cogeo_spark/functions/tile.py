@@ -1,10 +1,10 @@
-"""Vectorized tile-assignment UDFs (Arrow/pandas — no per-row Python).
+"""Tile assignment and k-ring expansion as Spark built-in expressions.
 
-The Spark-facing wrappers around rio_cogeo_spark.grid: each UDF receives
-pandas Series, runs numpy math over the whole Arrow batch, and returns a
-Series/DataFrame. Mirrors the reference's pixel→tile alignment
-(/root/reference/rio_cogeo/utils.py:125-140) as a *computed key* — tile
-assignment is a projection, not a shuffle (SURVEY.md §2.3 J1).
+The Spark-facing wrappers around rio_cogeo_spark.grid: every function
+returns a Column made of JVM built-ins, so whole-stage codegen evaluates
+it with no Python boundary. Mirrors the reference's pixel→tile alignment
+(rio_cogeo/utils.py:125-140) as a *computed key* — tile assignment is a
+projection, not a shuffle (SURVEY.md §2.3 J1).
 
 ``tile_xy_sql`` emits the equivalent ANSI-SQL (DuckDB-runnable) formula so
 the driver's oracle reproduces the exact same integer tile ids: the only
@@ -15,158 +15,111 @@ integer for hash-derived coordinates.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from rio_cogeo_spark import grid
 
-_TILE_SCHEMA = StructType(
-    [StructField("tile_x", LongType()), StructField("tile_y", LongType())]
-)
+_CELL_MASK = (1 << 29) - 1
 
 
-def _tile_xy_cols(lon: Column, lat: Column, zoom: int) -> "tuple[Column, Column]":
-    """JVM-expression twin of ``grid.tile_index`` — the Column form of
-    :func:`tile_xy_sql`, operator-for-operator (same literals, same
-    association order), so whole-stage codegen evaluates the assignment
-    with no Python boundary. Bit-exactness vs the numpy UDF is gated by
-    scripts/verify_tile_expr.py (r06: 0 mismatches over every local
-    dataset x zooms 0..20, including the 2M-row jittered bench pages;
-    the DuckDB oracle twins evaluate the identical formula and have
-    matched the numpy output since round 1)."""
-    import math
+def _tile_xy_cols(
+    lon: Column,
+    lat: Column,
+    zoom: int,
+    tms: grid.TileMatrixSet = grid.WEB_MERCATOR_QUAD,
+) -> "tuple[Column, Column]":
+    """The one Spark implementation of ``TileMatrixSet.tile_index``: the
+    grid's driver constants (bbox, matrix size, projection, row
+    coalescing) become literals of a JVM expression. On WebMercatorQuad
+    it is the Column form of :func:`tile_xy_sql`, operator-for-operator
+    (same literals, same association order), so the DuckDB oracle twins
+    evaluate the identical formula. Equality with the numpy
+    ``tile_index`` on quad, geographic and variable-width grids is
+    asserted by tests/test_tile_expr.py."""
+    minx, miny, maxx, maxy = (float(v) for v in tms.bbox)
+    nx, ny = tms.matrix_size(zoom)
+    if tms.geographic:
+        x, y = lon, lat
+    else:
+        lat_c = F.least(
+            F.greatest(lat, F.lit(float(-grid.MAX_LAT))), F.lit(float(grid.MAX_LAT))
+        )
+        x = lon * F.lit(float(grid.ORIGIN_SHIFT)) / F.lit(180.0)
+        y = (
+            F.log(F.tan((F.lit(90.0) + lat_c) * F.lit(math.pi) / F.lit(360.0)))
+            * F.lit(float(grid.EARTH_RADIUS))
+        )
 
-    n = 1 << zoom
-    span = 2.0 * grid.ORIGIN_SHIFT
-    lat_c = F.least(
-        F.greatest(lat, F.lit(float(-grid.MAX_LAT))), F.lit(float(grid.MAX_LAT))
-    )
-    mx = lon * F.lit(float(grid.ORIGIN_SHIFT)) / F.lit(180.0)
-    my = (
-        F.log(F.tan((F.lit(90.0) + lat_c) * F.lit(math.pi) / F.lit(360.0)))
-        * F.lit(float(grid.EARTH_RADIUS))
-    )
-    zero = F.lit(0).cast("bigint")
-    top = F.lit(n - 1).cast("bigint")
-    tx = F.least(
-        F.greatest(
-            F.floor(
-                (mx + F.lit(float(grid.ORIGIN_SHIFT))) / F.lit(span)
-                * F.lit(float(n))
-            ).cast("bigint"),
-            zero,
-        ),
-        top,
-    )
-    ty = F.least(
-        F.greatest(
-            F.floor(
-                (F.lit(float(grid.ORIGIN_SHIFT)) - my) / F.lit(span)
-                * F.lit(float(n))
-            ).cast("bigint"),
-            zero,
-        ),
-        top,
-    )
+    def clipped_index(offset: Column, span: float, n: int) -> Column:
+        return F.least(
+            F.greatest(
+                F.floor(offset / F.lit(span) * F.lit(float(n))).cast("bigint"),
+                F.lit(0).cast("bigint"),
+            ),
+            F.lit(n - 1).cast("bigint"),
+        )
+
+    tx = clipped_index(x + F.lit(-minx), maxx - minx, nx)
+    ty = clipped_index(F.lit(maxy) - y, maxy - miny, ny)
+    spans = tms.row_spans(zoom)
+    if spans:
+        # coalesced rows snap tile_x to the leftmost constituent column;
+        # wrapping each span around the previous ones makes later spans win
+        c = F.lit(1).cast("bigint")
+        for r0, r1, k in spans:
+            c = F.when(
+                ty.between(int(r0), int(r1)), F.lit(int(k)).cast("bigint")
+            ).otherwise(c)
+        tx = F.call_function("div", tx, c) * c
     return tx, ty
-
-
-def tile_assign_udf(
-    lon: Column, lat: Column, zoom: int, tms: "grid.TileMatrixSet | None" = None
-) -> Column:
-    """Arrow-UDF tile assignment (the pre-r06 hot path; kept for
-    non-default tile matrix sets, whose grids have no SQL twin, and as
-    the reference side of scripts/verify_tile_expr.py)."""
-
-    @F.pandas_udf(_TILE_SCHEMA)
-    def _assign(lon_s: pd.Series, lat_s: pd.Series) -> pd.DataFrame:
-        if tms is None:
-            tx, ty = grid.tile_index(lon_s.to_numpy(), lat_s.to_numpy(), zoom)
-        else:
-            tx, ty = tms.tile_index(lon_s.to_numpy(), lat_s.to_numpy(), zoom)
-        return pd.DataFrame({"tile_x": tx, "tile_y": ty})
-
-    return _assign(lon, lat)
 
 
 def tile_assign(
     lon: Column, lat: Column, zoom: int, tms: "grid.TileMatrixSet | None" = None
 ) -> Column:
-    """(lon, lat) → struct(tile_x, tile_y) at ``zoom``.
-
-    r06: the WebMercatorQuad path is a pure JVM expression
-    (:func:`_tile_xy_cols` — guide §4.1 "prefer built-ins"): removes
-    the ArrowEvalPython node (and its JVM↔Python serialization plus the
-    doubled runnable-thread pressure bench.py documents) from every
-    tile-keyed operator. Values are bit-identical to the former Arrow
-    UDF (verify_tile_expr.py gate). A custom ``tms`` keeps the
-    vectorized UDF (its grids are arbitrary numpy)."""
-    if tms is not None:
-        return tile_assign_udf(lon, lat, zoom, tms=tms)
-    tx, ty = _tile_xy_cols(lon, lat, zoom)
+    """(lon, lat) → struct(tile_x, tile_y) at ``zoom`` on ``tms``
+    (default WebMercatorQuad) — a pure JVM expression
+    (:func:`_tile_xy_cols`), on every grid."""
+    tx, ty = _tile_xy_cols(
+        lon, lat, zoom, grid.WEB_MERCATOR_QUAD if tms is None else tms
+    )
     return F.struct(tx.alias("tile_x"), ty.alias("tile_y"))
 
 
 def cell_id(lon: Column, lat: Column, zoom: int) -> Column:
-    """(lon, lat) → packed int64 cell id (z<<58 | x<<29 | y). r06: pure
-    JVM expression (same gate as :func:`tile_assign`)."""
+    """(lon, lat) → packed int64 cell id (z<<58 | x<<29 | y) on
+    WebMercatorQuad; pure JVM expression (:func:`_tile_xy_cols`)."""
     tx, ty = _tile_xy_cols(lon, lat, zoom)
-    return (
-        F.shiftleft(F.lit(int(zoom)).cast("bigint"), 58)
-        .bitwiseOR(F.shiftleft(tx, 29))
-        .bitwiseOR(ty)
+    return _pack(F.lit(int(zoom)).cast("bigint"), tx, ty)
+
+
+def _pack(z: Column, tx: Column, ty: Column) -> Column:
+    return F.shiftleft(z, 58).bitwiseOR(F.shiftleft(tx, 29)).bitwiseOR(ty)
+
+
+def k_ring_cells(cell: Column, k: "int | Column" = 1) -> Column:
+    """Packed cell id → array of packed neighbor cell ids within
+    Chebyshev distance ``k`` (kNN candidate expansion, SURVEY.md §2.3
+    J3): the built-in twin of ``grid.k_ring``, same cells in the same
+    order. ``k`` is a constant or a per-row Column (the adaptive kNN
+    phase 2). Rows clamp to the matrix; columns wrap around the
+    antimeridian over at most ``2^zoom`` of them, so no cell repeats."""
+    k = (F.lit(k) if isinstance(k, int) else k).cast("bigint")
+    z = F.shiftright(cell, 58)
+    x = F.shiftright(cell, 29).bitwiseAND(F.lit(_CELL_MASK))
+    y = cell.bitwiseAND(F.lit(_CELL_MASK))
+    n = F.call_function("shiftleft", F.lit(1).cast("bigint"), z.cast("int"))
+    rows = F.sequence(F.greatest(y - k, F.lit(0).cast("bigint")), F.least(y + k, n - 1))
+    cols = F.transform(
+        F.sequence(F.lit(0).cast("bigint"), F.least(k * 2 + 1, n) - 1),
+        lambda i: F.pmod(x - k + i, n),
     )
-
-
-def k_ring_cells(cell: Column, k: int = 1) -> Column:
-    """Packed cell id → array of packed neighbor cell ids within Chebyshev
-    distance k (kNN candidate expansion, SURVEY.md §2.3 J3)."""
-
-    @F.pandas_udf("array<long>")
-    def _ring(cells: pd.Series) -> pd.Series:
-        arr = cells.to_numpy(dtype=np.int64)
-        z, tx, ty = grid.unpack_cell(arr)
-        out = []
-        for i in range(len(arr)):
-            ring = grid.k_ring(int(tx[i]), int(ty[i]), int(z[i]), k)
-            out.append([int(grid.pack_cell(int(z[i]), x, y)) for x, y in ring])
-        return pd.Series(out)
-
-    return _ring(cell)
-
-
-def k_ring_cells_var(cell: Column, ring: Column) -> Column:
-    """Variable-radius k-ring: per-row ring size (adaptive kNN phase 2).
-    Same packed-cell output as :func:`k_ring_cells`."""
-
-    @F.pandas_udf("array<long>")
-    def _ring(cells: pd.Series, rings: pd.Series) -> pd.Series:
-        arr = cells.to_numpy(dtype=np.int64)
-        rs = rings.to_numpy(dtype=np.int64)
-        z, tx, ty = grid.unpack_cell(arr)
-        out = []
-        for i in range(len(arr)):
-            ring_list = grid.k_ring(int(tx[i]), int(ty[i]), int(z[i]), int(rs[i]))
-            out.append(
-                [int(grid.pack_cell(int(z[i]), x, y)) for x, y in ring_list]
-            )
-        return pd.Series(out)
-
-    return _ring(cell, ring)
-
-
-def mercator_xy(lon: Column, lat: Column) -> Column:
-    """(lon, lat) → struct(mx, my) EPSG:3857 doubles."""
-
-    @F.pandas_udf("struct<mx: double, my: double>")
-    def _merc(lon_s: pd.Series, lat_s: pd.Series) -> pd.DataFrame:
-        mx, my = grid.lonlat_to_mercator(lon_s.to_numpy(), lat_s.to_numpy())
-        return pd.DataFrame({"mx": mx, "my": my})
-
-    return _merc(lon, lat)
+    return F.flatten(
+        F.transform(rows, lambda r: F.transform(cols, lambda c: _pack(z, c, r)))
+    )
 
 
 # --------------------------------------------------------------------------

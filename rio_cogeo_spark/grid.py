@@ -12,8 +12,9 @@ rio-cogeo delegates to morecantile / rasterio:
 * ``web_optimized_grid``      — /root/reference/rio_cogeo/utils.py:88-147
 * tile addressing (z, x, y)   — /root/reference/rio_cogeo/utils.py:125-137
 
-Zero Spark imports: everything here is unit-testable numpy and is called
-from vectorized pandas UDFs (rio_cogeo_spark/functions/tile.py).
+Zero Spark imports: everything here is unit-testable numpy. The Spark
+Column twins of tile_index and k_ring live in
+rio_cogeo_spark/functions/tile.py.
 """
 
 from __future__ import annotations
@@ -280,8 +281,8 @@ class TileMatrixSet:
     At zoom z the matrix is ``matrix_width0*2^z x matrix_height0*2^z``
     tiles of ``tile_px`` px. ``geographic=True`` means the CRS IS lon/lat
     (e.g. WorldCRS84Quad) so no projection step is applied; otherwise
-    coordinates go through web-mercator. A frozen dataclass with no
-    callable fields, so it pickles cleanly into pandas-UDF closures.
+    coordinates go through web-mercator. A frozen dataclass of driver
+    constants, which functions/tile.py folds into Spark literals.
 
     The module-level functions (cell_size/tile_index/...) remain the
     WebMercatorQuad fast path and are floating-point-identical to
@@ -327,12 +328,16 @@ class TileMatrixSet:
             return (int(w), int(h))
         return (self.matrix_width0 << zoom, self.matrix_height0 << zoom)
 
+    def row_spans(self, zoom: int) -> tuple:
+        """The ``(min_row, max_row, coalesce)`` entries at ``zoom``;
+        empty when every row is uniform. Later entries win."""
+        vw = self.variable_widths
+        return (vw[zoom] or ()) if vw is not None and zoom < len(vw) else ()
+
     def _coalesce_per_row(self, zoom: int) -> Optional[np.ndarray]:
         """Per-row coalescing factor at ``zoom`` (length = matrix height),
         or None when every row is uniform."""
-        if self.variable_widths is None or zoom >= len(self.variable_widths):
-            return None
-        spans = self.variable_widths[zoom]
+        spans = self.row_spans(zoom)
         if not spans:
             return None
         _, ny = self.matrix_size(zoom)
@@ -510,7 +515,8 @@ def tms_from_dict(d: dict) -> TileMatrixSet:
 
 def k_ring(tx: int, ty: int, zoom: int, k: int = 1) -> list[tuple[int, int]]:
     """Neighbor tiles within Chebyshev distance ``k`` — the kNN candidate
-    expansion (SURVEY.md §2.3 J3). X wraps around the antimeridian; Y is
+    expansion (SURVEY.md §2.3 J3). X wraps around the antimeridian over
+    at most ``n`` columns, so no tile repeats when ``2k+1 > n``; Y is
     clamped to the matrix."""
     n = 1 << zoom
     out = []
@@ -518,7 +524,7 @@ def k_ring(tx: int, ty: int, zoom: int, k: int = 1) -> list[tuple[int, int]]:
         yy = ty + dy
         if yy < 0 or yy >= n:
             continue
-        for dx in range(-k, k + 1):
+        for dx in range(-k, -k + min(2 * k + 1, n)):
             out.append(((tx + dx) % n, yy))
     return out
 

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rio_cogeo_spark import grid
-from rio_cogeo_spark.functions.tile import cell_id
+from rio_cogeo_spark.functions.tile import cell_id, k_ring_cells
 from rio_cogeo_spark.synth import MEGACITIES
 
 PREFILTER_ZOOM = 11   # PIP: fine enough that ~90% of hot-cell candidates are interior
@@ -214,7 +214,7 @@ def point_in_polygon(
         # construction — the ray-cast numpy work runs only on boundary-cell
         # rows, vectorized per admin group (never per row). One pass over
         # one Arrow stream: a split+union formulation would execute the
-        # pages scan + cell-assignment UDF + broadcast join TWICE (no
+        # pages scan + cell assignment + broadcast join TWICE (no
         # shuffle boundary to reuse between the branches).
         out = interior_s.to_numpy(dtype=bool).copy()
         bnd = ~out
@@ -290,10 +290,11 @@ def knn_kring(
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Scale-path kNN: expand each query's cell into its k-ring (a
-    vectorized UDF + explode — no driver-side loop, so the query set can
-    itself be a large table) and equi-join pages on the cell key
-    (north_star: 'kNN answered by H3 k-ring expansion') — candidates
-    shrink from |pages| to the ring occupancy, then exact top-k. Falls
+    built-in array expression + explode — no driver-side loop and no
+    Python boundary, so the query set can itself be a large table) and
+    equi-join pages on the cell key (north_star: 'kNN answered by H3
+    k-ring expansion') — candidates shrink from |pages| to the ring
+    occupancy, then exact top-k. Falls
     back to widening callers if a ring under-fills (checked by tests
     against knn_bruteforce); :func:`knn_kring_exact` automates that.
 
@@ -302,8 +303,6 @@ def knn_kring(
     shuffles before the top-k. Set False for a query table too large to
     broadcast: both sides shuffle on the cell key instead.
     """
-    from rio_cogeo_spark.functions.tile import k_ring_cells
-
     qcells = (
         queries_df.withColumn("cell", cell_id(F.col("q_lon"), F.col("q_lat"), zoom))
         .withColumn("cell", F.explode(k_ring_cells(F.col("cell"), ring)))
@@ -365,7 +364,7 @@ def knn_kring_exact(
     routing  per query: kth-dist <= coverage_bound(start_ring) → done;
              else compute the smallest ring whose coverage bound covers
              the kth distance (vectorized binary search on the bound).
-    phase 2  variable-ring explode (k_ring_cells_var) → one more join →
+    phase 2  per-row-ring explode (k_ring_cells) → one more join →
              top-k. Exact by construction: the phase-2 ring contains the
              phase-1 ring, so its kth distance can only shrink and stays
              within the chosen bound.
@@ -383,8 +382,6 @@ def knn_kring_exact(
     empty-neighborhood queries — a tiny set for any real point
     distribution.
     """
-    from rio_cogeo_spark.functions.tile import k_ring_cells_var
-
     with_cell = pages.withColumn("cell", cell_id(F.col("lon"), F.col("lat"), zoom))
 
     # phase 1 output is O(k·|queries|): checkpoint it so the stats agg,
@@ -454,7 +451,7 @@ def knn_kring_exact(
     exp = routed.filter(F.col("ring") > 0)
     qcells = (
         exp.withColumn("cell", cell_id(F.col("q_lon"), F.col("q_lat"), zoom))
-        .withColumn("cell", F.explode(k_ring_cells_var(F.col("cell"), F.col("ring"))))
+        .withColumn("cell", F.explode(k_ring_cells(F.col("cell"), F.col("ring"))))
         .select("query_id", "q_lat", "q_lon", "cell")
     )
     if broadcast_queries:

@@ -5,7 +5,7 @@ Reference lifecycle (/root/reference/rio_cogeo/cogeo.py:75-467, SURVEY.md §3.1)
 * stage 1 analyze  — infer bands/nodata/extent        → here: bounds agg + BandSpecs
 * stage 2 plan     — vrt_params / aligned output grid → here: :class:`TileJobPlan`
 * stage 3 execute  — per-block read/write loop        → here: ONE tile-assignment
-  projection (Arrow UDF, no shuffle) + base-zoom groupBy (partial agg map-side)
+  projection (JVM expression, no shuffle) + base-zoom groupBy (partial agg map-side)
 * stage 4 aggregate— build_overviews([base**j ...])   → here: per-level
   ``groupBy(tx // base, ty // base)`` chain (cogeo.py:381-390)
 * stage 5 finalize — ordered COG copy                 → here: deterministic
@@ -28,7 +28,6 @@ from typing import Callable, Dict, List, Optional, Tuple
 
 import warnings
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -227,37 +226,14 @@ def plan_tile_job(
     ).first()
     if b is None or b["w"] is None:
         raise ValueError("cannot plan a tile job over an empty pages table")
+    # tile_index is floor + clip of a per-axis monotonic map on quad
+    # grids, so the tile extent of the lon/lat bounds is the extent of
+    # the per-page tile indices that tile_assign computes (the two agree
+    # point for point: tests/test_tile_expr.py)
     idx = grid.tile_index if tms is None else tms.tile_index
-    tx0, ty0 = idx([b["w"]], [b["n"]], max_zoom)
-    tx1, ty1 = idx([b["e"]], [b["s"]], max_zoom)
-    return _plan_from_tile_extent(
-        int(tx0[0]), int(ty0[0]), int(tx1[0]), int(ty1[0]),
-        max_zoom, overview_level, decimation_base, blocksize,
-        aligned_levels, overview_blocksize,
-    )
-
-
-def _plan_from_tile_extent(
-    tx0: int,
-    ty0: int,
-    tx1: int,
-    ty1: int,
-    max_zoom: int,
-    overview_level: Optional[int] = None,
-    decimation_base: int = 2,
-    blocksize: int = grid.DEFAULT_BLOCKSIZE,
-    aligned_levels: Optional[int] = None,
-    overview_blocksize: Optional[int] = None,
-) -> TileJobPlan:
-    """Plan from a base-zoom tile extent. tile_index is monotonic in lon
-    (and anti-monotonic in lat), so the min/max of per-page tile indices —
-    available for free from the already-aggregated base level — equals
-    the tile extent of the lon/lat bounds; deriving the plan here saves
-    one full pages scan per translate."""
-    tx0 = np.asarray([tx0], dtype=np.int64)
-    ty0 = np.asarray([ty0], dtype=np.int64)
-    tx1 = np.asarray([tx1], dtype=np.int64)
-    ty1 = np.asarray([ty1], dtype=np.int64)
+    txs, tys = idx([b["w"], b["e"]], [b["n"], b["s"]], max_zoom)
+    tx0, tx1 = int(txs[0]), int(txs[1])
+    ty0, ty1 = int(tys[0]), int(tys[1])
     if aligned_levels:
         base_zoom = max(max_zoom - aligned_levels, 0)
         shift = max_zoom - base_zoom
@@ -267,8 +243,8 @@ def _plan_from_tile_extent(
         ty0 = (ty0 >> shift) << shift
         tx1 = (((tx1 >> shift) + 1) << shift) - 1
         ty1 = (((ty1 >> shift) + 1) << shift) - 1
-    width_cells = int(tx1[0] - tx0[0] + 1)
-    height_cells = int(ty1[0] - ty0[0] + 1)
+    width_cells = tx1 - tx0 + 1
+    height_cells = ty1 - ty0 + 1
     width_px = width_cells * blocksize
     height_px = height_cells * blocksize
 
@@ -293,7 +269,7 @@ def _plan_from_tile_extent(
         decimation_base=decimation_base,
         blocksize=blocksize,
         overview_blocksize=overview_blocksize,
-        extent=(int(tx0[0]), int(ty0[0]), int(tx1[0]), int(ty1[0])),
+        extent=(tx0, ty0, tx1, ty1),
         width_px=width_px,
         height_px=height_px,
         decimations=decimations,
@@ -304,8 +280,8 @@ def assign_tiles(
     pages: DataFrame, zoom: int, tms: Optional[grid.TileMatrixSet] = None
 ) -> DataFrame:
     """Stage 3a: the tile-assignment projection — a computed key via one
-    Arrow-vectorized UDF, NO shuffle (SURVEY.md §2.3 J1). ``tms`` selects
-    a non-default tile matrix set (reference cogeo.py:86)."""
+    built-in JVM expression, NO shuffle (SURVEY.md §2.3 J1). ``tms``
+    selects a non-default tile matrix set (reference cogeo.py:86)."""
     t = tile_assign(F.col("lon"), F.col("lat"), zoom, tms=tms)
     return pages.withColumn("tile_x", t["tile_x"]).withColumn("tile_y", t["tile_y"])
 
@@ -544,52 +520,21 @@ def cog_translate(
             BandSpec("mask_count", lambda: F.count(F.lit(1)).cast("long"), "sum")
         ]
 
-    # Plan extent (r06): on the default WebMercatorQuad grid the tile
-    # index is monotonic per axis (floor + clip of a monotonic mercator
-    # map), so the extent comes from a scan-only min/max over the page
-    # COORDINATES, tiled driver-side with the same grid.tile_index the
-    # per-row JVM expression mirrors (bit-exactness gate
-    # scripts/verify_tile_expr.py). The former form aggregated the full
-    # base-tile table just to read 4 numbers, forcing the whole base
-    # aggregation as a separate planning job before the caller's first
-    # action. Non-quad / variable-width TMS grids keep the base-level
-    # derivation (their x-mapping is row-dependent, not axis-monotonic).
+    # Plan extent from a scan-only min/max over the page coordinates
+    # (plan_tile_job), never from the base aggregation, which would run
+    # as a separate planning job before the caller's first action.
     level = base_tiles(valid_pages, max_zoom, bands, tms=tms)
     if persist_levels:
         level = level.persist()
-    if tms is None:
-        bbox = valid_pages.agg(
-            F.min("lon").alias("lon0"), F.max("lon").alias("lon1"),
-            F.max("lat").alias("lat1"), F.min("lat").alias("lat0"),
-        ).first()
-        if bbox is None or bbox["lon0"] is None:
-            raise ValueError("cannot plan a tile job over an empty pages table")
-        _txs, _tys = grid.tile_index(
-            [bbox["lon0"], bbox["lon1"]], [bbox["lat1"], bbox["lat0"]],
-            max_zoom,
-        )
-        ext = {
-            "tx0": int(_txs[0]), "tx1": int(_txs[1]),
-            "ty0": int(_tys[0]), "ty1": int(_tys[1]),
-        }
-    else:
-        row = level.agg(
-            F.min("tile_x").alias("tx0"),
-            F.max("tile_x").alias("tx1"),
-            F.min("tile_y").alias("ty0"),
-            F.max("tile_y").alias("ty1"),
-        ).first()
-        if row is None or row["tx0"] is None:
-            raise ValueError("cannot plan a tile job over an empty pages table")
-        ext = {k: row[k] for k in ("tx0", "tx1", "ty0", "ty1")}
-    plan = _plan_from_tile_extent(
-        int(ext["tx0"]), int(ext["ty0"]), int(ext["tx1"]), int(ext["ty1"]),
+    plan = plan_tile_job(
+        valid_pages,
         max_zoom,
         overview_level,
         decimation_base,
         blocksize,
         aligned_levels=(aligned_levels if web_optimized else None),
         overview_blocksize=overview_blocksize,
+        tms=tms,
     )
 
     # tag forwarding — reference stage 5 (cogeo.py:395-437)

@@ -2,7 +2,7 @@
 query (north_star adjacency — the reference's one-shot `cog_translate`
 run as a watermarked Structured Streaming rollup over arriving pages).
 
-The tile-assignment Arrow UDF is stateless, so it runs unchanged inside
+The tile-assignment expression is stateless, so it runs unchanged inside
 a streaming plan; the per-tile aggregation becomes a watermarked
 tumbling-window groupBy. Late pages beyond the watermark are dropped
 exactly as a batch re-run would re-place them — the batch twin

@@ -78,8 +78,8 @@ def main() -> None:
     )
 
     # 2. tile assignment = projection only: a pure JVM expression (r06
-    # — the former ArrowEvalPython boundary is gone; values gated
-    # bit-exact by scripts/verify_tile_expr.py), and the assignment
+    # — the former ArrowEvalPython boundary is gone; values asserted
+    # equal to numpy by tests/test_tile_expr.py), and the assignment
     # adds ZERO exchanges over the bare pages plan (the pages synth
     # itself carries one broadcast join)
     assigned = assign_tiles(pages, 8)

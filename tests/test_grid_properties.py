@@ -76,6 +76,7 @@ def test_k_ring_contains_center_and_wraps(z, tx, ty, k):
     tx, ty = tx % n, ty % n
     ring = grid.k_ring(tx, ty, z, k)
     assert (tx, ty) in ring
+    assert len(set(ring)) == len(ring)
     assert all(0 <= x < n and 0 <= y < n for x, y in ring)
     # ring size bounded by the full square, shrunk only by y-clamping
     assert len(ring) <= (2 * k + 1) ** 2

@@ -97,6 +97,23 @@ def test_knn_kring_equals_bruteforce(spark, pages):
     assert len(brute) == 50
 
 
+@pytest.mark.parametrize("zoom, ring", [(0, 1), (1, 2)])
+def test_knn_kring_wrapping_ring_equals_bruteforce(spark, sf_small, zoom, ring):
+    """A ring wider than the matrix (2*ring+1 > 2^zoom) covers the whole
+    world once: every neighbour appears once, exactly as brute force."""
+    small = synth_pages(spark, sf_small)
+    rows = [
+        (f"Q{cid:02d}", float(lat), float(lon)) for cid, _, lat, lon in MEGACITIES[:10]
+    ]
+    q = spark.createDataFrame(rows, "query_id string, q_lat double, q_lon double")
+    brute = sorted(tuple(r) for r in J.knn_bruteforce(small, q, k=5).collect())
+    got = sorted(
+        tuple(r) for r in J.knn_kring(small, q, k=5, zoom=zoom, ring=ring).collect()
+    )
+    assert got == brute
+    assert len(brute) == 50
+
+
 def test_zonal_counts_consistent(pages, areas):
     rects = [a for a in areas if a.admin_id.startswith("A")]
     z = {r["admin_id"]: r["page_count"] for r in J.zonal_stats(pages, rects).collect()}
