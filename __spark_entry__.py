@@ -439,7 +439,7 @@ def q_dedup_incremental(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="lsh_index_")
     try:
         DD.minhash_save_index(old, path, num_hashes=128, bands=64)
-        # eager_release materializes the (small) result, so the on-disk
+        # the call materializes the (small) result, so the on-disk
         # index can be dropped before returning
         return DD.minhash_dedup_against_index(new, path, threshold=0.5)
     finally:
@@ -2555,7 +2555,7 @@ def q_top_per_lang(spark, sf_dir):
 def q_chunks(spark, sf_dir):
     """Document chunking (embedding-pipeline primitive): stage the token
     array once, emit every chunk from a slice-transform projection —
-    ZERO Exchange (plan-audit check #13)."""
+    ZERO Exchange (plan-shape row chunk_docs)."""
     from rio_cogeo_spark.operators.chunking import chunk_docs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

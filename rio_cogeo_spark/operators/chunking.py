@@ -10,7 +10,8 @@ document, no shuffle at all. The earlier formulation (posexplode every
 token → groupBy(doc, chunk) → sorted collect_list) was hash-identical
 but shuffled the corpus's ENTIRE token stream (~10^13 rows at 100 TB);
 this one keeps the whole operator inside a single WholeStageCodegen
-projection (plan-audited: docs/PLANS.md check #13, zero Exchange).
+projection (zero Exchange, pinned by the ``chunk_docs`` row of
+tests/test_plan_shapes.py).
 """
 
 from __future__ import annotations

@@ -851,7 +851,8 @@ def minhash_lsh_pairs(
     )
     # materialize the (small) pair set eagerly so the signature cache can
     # be released here instead of leaking for the session's lifetime;
-    # eager_release=False keeps the full lazy plan (plan audits/explain)
+    # eager_release=False keeps the full lazy plan, which the
+    # minhash_lsh_pairs row of tests/test_plan_shapes.py pins
     if eager_release:
         out = out.localCheckpoint(eager=True)
         sigs.unpersist()
@@ -942,7 +943,6 @@ def minhash_dedup_against_index(
     new_docs: DataFrame,
     path: str,
     threshold: float = 0.5,
-    eager_release: bool = True,
 ) -> DataFrame:
     """Near-dup pairs between ``new_docs`` and a corpus indexed by
     :func:`minhash_save_index`: ``(doc_a, doc_b, jaccard)`` with doc_a
@@ -954,7 +954,9 @@ def minhash_dedup_against_index(
     Plan shape: the new snapshot's thin band table joins the index's on
     (band, bucket) — only 3-column tables shuffle; the index's shingle
     arrays are read for SURVIVING candidates only (join on doc_id). The
-    old corpus itself is never touched."""
+    old corpus itself is never touched. The result is materialized
+    (localCheckpoint) before return, so the caller may drop the on-disk
+    index before consuming it."""
     import json
     import os
 
@@ -995,9 +997,8 @@ def minhash_dedup_against_index(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    if eager_release:
-        out = out.localCheckpoint(eager=True)
-        sigs_new.unpersist()
+    out = out.localCheckpoint(eager=True)
+    sigs_new.unpersist()
     return out
 
 

@@ -157,7 +157,6 @@ def hotspots(
     radius: int = 1,
     x_col: str = "tile_x",
     y_col: str = "tile_y",
-    materialize_input: bool = True,
 ) -> DataFrame:
     """Getis-Ord Gi* hotspot z-scores over the FULL grid.
 
@@ -181,21 +180,19 @@ def hotspots(
     aggregate broadcast back as a literal cross-join (AQE folds it into
     a BroadcastNestedLoopJoin of one row).
 
-    ``materialize_input`` (r06): the moments branch and the focal
-    branch both consume ``tiles``; column pruning specializes each
+    The input is materialized once (r06): the moments branch and the
+    focal branch both consume ``tiles``; column pruning specializes each
     branch's aggregate, so exchange reuse never fires and the input
-    lineage (a full base-tile build when fed from ``base_tiles``) runs
-    TWICE. Default True localCheckpoints the pruned tile projection
-    once per call — an eager, call-scoped materialization (no
+    lineage (a full base-tile build when fed from ``base_tiles``) would
+    run TWICE. So the pruned tile projection is localCheckpointed once
+    per call — an eager, call-scoped materialization (no
     cross-invocation cache; the tile table is 4^zoom-bounded, never
     corpus-sized, so the checkpoint is safe at any corpus scale).
-    False keeps the fully lazy plan (plan audits).
     """
     n_grid = float(4 ** zoom)
-    if materialize_input:
-        tiles = tiles.select(
-            F.col(x_col), F.col(y_col), F.col(value_col)
-        ).localCheckpoint(eager=True)
+    tiles = tiles.select(
+        F.col(x_col), F.col(y_col), F.col(value_col)
+    ).localCheckpoint(eager=True)
     vals = tiles.select(F.col(value_col).cast("double").alias("_v"))
     # two exact moments (integer-valued doubles: sums are order-independent),
     # std derived afterwards with plain * and sqrt so the DuckDB oracle twin

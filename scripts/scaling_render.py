@@ -163,7 +163,7 @@ the cliff and is the more faithful proxy.
   never shuffles; interior-cell candidates skip Python entirely;
 * no stage collects to the driver; no per-row Python anywhere
   (pytest-enforced: test_knn_kring_builds_lazily_without_driver_jobs,
-  test_bucketed_join_has_no_exchange; plan audit in docs/PLANS.md).
+  test_bucketed_join_has_no_exchange; plan shapes in tests/test_plan_shapes.py).
 
 Raw JSON: BENCH/scaling_runs.json. Reproduce:
 `python scripts/scaling.py 2 8 5 && python scripts/scaling.py 1 4 5 &&

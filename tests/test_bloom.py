@@ -4,6 +4,7 @@ false positives, and the scale contract (corpus side never shuffles)."""
 
 import pytest
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark.operators.contamination import (
     bloom_prefilter,
@@ -88,14 +89,8 @@ def test_bloom_false_positives_shrink_with_m(spark):
 
 
 def test_bloom_corpus_plan_has_no_exchange(spark):
-    import io
-    from contextlib import redirect_stdout
-
     corpus, bench, _ = _corpus_bench(spark)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        bloom_prefilter(corpus, bench, n=3).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(bloom_prefilter(corpus, bench, n=3))
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
 

@@ -11,6 +11,7 @@ the Z-order layout variant.
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark.functions.tile import (
     _morton_scalar,
@@ -378,18 +379,12 @@ def test_focal_mode_ignores_absent_cells_and_validates(spark):
 
 
 def test_focal_mode_no_window_no_join(spark):
-    import io
-    from contextlib import redirect_stdout
-
     from rio_cogeo_spark.operators.focal import focal_mode
 
     tiles = spark.createDataFrame(
         [(0, 0, 1)], "tile_x long, tile_y long, cls long"
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        focal_mode(tiles, 4).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(focal_mode(tiles, 4))
     assert "Window" not in plan
     assert "Join" not in plan  # occupancy rides the vote rows
 
@@ -458,18 +453,12 @@ def test_area_weighted_density_distortion_and_total(spark):
 
 
 def test_area_weighted_density_is_pure_projection(spark):
-    import io
-    from contextlib import redirect_stdout
-
     from rio_cogeo_spark.operators.focal import area_weighted_density
 
     tiles = spark.createDataFrame(
         [(0, 0, 5)], "tile_x long, tile_y long, page_count long"
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        area_weighted_density(tiles, 8).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(area_weighted_density(tiles, 8))
     assert "Exchange" not in plan and "Join" not in plan
 
 
@@ -514,18 +503,12 @@ def test_hillshade_slope_facing_light_brighter(spark):
 
 
 def test_hillshade_no_window_no_join(spark):
-    import io
-    from contextlib import redirect_stdout
-
     from rio_cogeo_spark.operators.focal import hillshade
 
     tiles = spark.createDataFrame(
         [(0, 0, 1)], "tile_x long, tile_y long, page_count long"
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        hillshade(tiles, 4).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(hillshade(tiles, 4))
     assert "Window" not in plan and "Join" not in plan
     assert "partial_sum" in plan  # slot folds map-side-combine
 

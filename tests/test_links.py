@@ -4,6 +4,7 @@ of both endpoints, deterministic top-anchor election, DuckDB twins."""
 
 import pytest
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark.operators.links import (
     anchor_stats,
@@ -167,13 +168,7 @@ def test_meta_twins_match_duckdb(spark):
 
 
 def test_meta_robots_plan_is_filter_only(spark):
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        meta_robots_noindex(_meta_df(spark)).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(meta_robots_noindex(_meta_df(spark)))
     assert "Exchange" not in plan and "Join" not in plan
 
 

@@ -4,6 +4,7 @@ resolution (connected components)."""
 
 import pytest
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark.functions import text as TX
 from rio_cogeo_spark.operators.contamination import (
@@ -402,7 +403,7 @@ def test_chunk_docs_single_shuffle(spark):
     docs = _docs(spark, [(i, "x y z w v u t s") for i in range(50)])
     plan = chunk_docs(docs, chunk_tokens=3)._jdf.queryExecution().executedPlan().toString()
     # round 4: the slice-transform projection has ZERO exchanges (the
-    # grouped formulation had one) — plan-audit check #13
+    # grouped formulation had one) — plan-shape row chunk_docs
     assert plan.count("Exchange") == 0
 
 
@@ -583,9 +584,6 @@ def test_column_profile_golden_with_nulls(spark):
 
 
 def test_data_checks_pass_fail_and_single_pass(spark):
-    import io
-    from contextlib import redirect_stdout
-
     from rio_cogeo_spark.operators.report import data_checks
 
     df = spark.createDataFrame(
@@ -608,10 +606,7 @@ def test_data_checks_pass_fail_and_single_pass(spark):
     assert out["r4"] == (3, True)
     assert out["r5"] == (2, True)
     # all rules fold in ONE aggregation pass over one scan
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        data_checks(df, rules).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(data_checks(df, rules))
     assert plan.count("Scan ExistingRDD") <= 1 or "ReusedExchange" in plan \
         or plan.count("Union") >= 1
     with __import__("pytest").raises(ValueError):

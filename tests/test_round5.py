@@ -9,6 +9,7 @@ value-identical).
 
 import numpy as np
 import pytest
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark import grid
 from rio_cogeo_spark.errors import IncompatibleOptions
@@ -686,17 +687,12 @@ def test_snapshot_change_stats(spark):
 
 def test_snapshot_change_stats_single_exchange(spark):
     # window + same-key rollup must reuse one hash partitioning
-    import contextlib, io
-
     from rio_cogeo_spark.operators.dedup import snapshot_change_stats
 
     df = spark.createDataFrame(
         [(1, "a.com", 1, "t")], "doc_id long, url string, ts_sec long, text string"
     )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        snapshot_change_stats(df).explain(mode="formatted")
-    plan = buf.getvalue()
+    plan = plan_of(snapshot_change_stats(df))
     assert plan.count(") Exchange") == 1, plan
 
 

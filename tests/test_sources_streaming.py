@@ -6,6 +6,7 @@ import os
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark.operators import multimodal as MM
 from rio_cogeo_spark.operators import raster as R
@@ -215,9 +216,6 @@ def test_multimodal_real_decoder_is_stubbed(spark, sf_small):
 
 
 def test_bucketed_join_has_no_exchange(spark, pages):
-    import io
-    from contextlib import redirect_stdout
-
     from rio_cogeo_spark.operators.translate import assign_tiles, base_tiles
 
     assigned = assign_tiles(pages, 6).select("url", "n_chars", "tile_x", "tile_y")
@@ -229,10 +227,7 @@ def test_bucketed_join_has_no_exchange(spark, pages):
     a = spark.table("pages_b")
     b = spark.table("tiles_b")
     joined = a.join(b, ["tile_x", "tile_y"])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        joined.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(joined)
     # co-bucketed join must not shuffle either side
     assert "Exchange hashpartitioning" not in plan, plan
     # and results are correct

@@ -3,6 +3,7 @@ deterministic tie-break, exact-ppm share.
 """
 
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark.operators.join import AdminArea
 from rio_cogeo_spark.operators.zonal import zonal_mode
@@ -58,15 +59,9 @@ def test_empty_zone_absent_and_zones_independent(spark):
 def test_no_window_in_plan(spark):
     # the majority pick must be a combinable aggregate, never a per-zone
     # row_number window (hot-zone skew rule)
-    import io
-    from contextlib import redirect_stdout
-
     area = _area("Z", 0.0, 10.0, 0.0, 10.0)
     df = zonal_mode(_pages(spark, [(1, 5.0, 5.0, "en")]), [area])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(df)
     assert "Window" not in plan
     assert "partial_min" in plan or "partial_count" in plan
 
@@ -94,17 +89,11 @@ def test_nearest_zone_assignment_and_ties(spark):
 
 
 def test_nearest_zone_zero_shuffle(spark):
-    import io
-    from contextlib import redirect_stdout
-
     from rio_cogeo_spark.operators.zonal import nearest_zone
 
     a = _area("A", 0.0, 2.0, 0.0, 2.0)
     pages = spark.createDataFrame(
         [(1, 1.0, 1.0)], "doc_id long, lat double, lon double"
     )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        nearest_zone(pages, [a]).explain("formatted")
-    plan = buf.getvalue()
+    plan = plan_of(nearest_zone(pages, [a]))
     assert "Exchange" not in plan and "Join" not in plan
