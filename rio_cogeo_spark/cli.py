@@ -242,7 +242,7 @@ def cmd_create(args) -> int:
     except IncompatibleOptions as exc:
         print(str(exc), file=sys.stderr)
         return 2
-    tms = None
+    tms = grid.WEB_MERCATOR_QUAD
     if args.tms:
         # custom TileMatrixSet from a JSON file (reference --tms,
         # scripts/cli.py:214-219)
@@ -292,21 +292,13 @@ def cmd_create(args) -> int:
     )
     # zoom resolution, reference scripts/cli.py:146-156 semantics:
     # --zoom-level wins; else --source-resolution + --zoom-level-strategy
-    # (grid.zoom_for_res); else --max-zoom. A non-default strategy with
+    # (tms.zoom_for_res); else --max-zoom. A non-default strategy with
     # nothing to apply it to is a usage error, never a silent no-op.
     if args.zoom_level is not None:
         max_zoom = args.zoom_level
     elif args.source_resolution is not None:
-        max_zoom = (
-            tms.zoom_for_res(
-                args.source_resolution,
-                zoom_level_strategy=args.zoom_level_strategy,
-            )
-            if tms is not None
-            else grid.zoom_for_res(
-                args.source_resolution,
-                zoom_level_strategy=args.zoom_level_strategy,
-            )
+        max_zoom = tms.zoom_for_res(
+            args.source_resolution, zoom_level_strategy=args.zoom_level_strategy
         )
         print(f"Deriving zoom level {max_zoom} from source resolution "
               f"{args.source_resolution} ({args.zoom_level_strategy})",
@@ -383,7 +375,7 @@ def cmd_create(args) -> int:
                 "zoom_level_strategy": args.zoom_level_strategy,
                 "source_resolution": args.source_resolution,
                 "resampling": args.resampling,
-                "tms": (args.tms and tms.id) or "WebMercatorQuad",
+                "tms": tms.id,
             },
             f,
         )

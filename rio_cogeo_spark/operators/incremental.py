@@ -34,26 +34,22 @@ from pyspark.sql import DataFrame
 from rio_cogeo_spark import grid
 from rio_cogeo_spark.errors import IncompatibleOptions
 from rio_cogeo_spark.operators.translate import (
-    _MERGE_FNS,
+    FOLD_SAFE_MERGES,
     BandSpec,
+    _merge_aggs,
     cog_translate,
     default_bands,
 )
 
-#: merges for which merge(pyramid(A), pyramid(B)) == pyramid(A ∪ B)
-#: exactly — the same algebra that gates the tiny-top-level fold.
-#: avg/rms are chain-dependent (the merged average would weight the two
-#: sides equally regardless of their counts), so incremental updates of
-#: those bands must carry (sum, count) pairs instead.
-MERGEABLE = frozenset({"sum", "min", "max", "hll"})
-
 
 def _assert_mergeable(bands: List[BandSpec]) -> None:
-    bad = [s.name for s in bands if s.merge not in MERGEABLE]
+    """Merging two pyramids is exact only for the fold-safe merges; an
+    avg/rms merge would weight both sides equally whatever their counts."""
+    bad = [s.name for s in bands if s.merge not in FOLD_SAFE_MERGES]
     if bad:
         raise IncompatibleOptions(
             f"bands {bad} are not incrementally mergeable (merge must be "
-            f"one of {sorted(MERGEABLE)}); carry sum+count and derive the "
+            f"one of {sorted(FOLD_SAFE_MERGES)}); carry sum+count and derive the "
             "ratio at read time instead"
         )
 
@@ -108,12 +104,11 @@ def pyramid_merge(
     bands = bands or default_bands()
     _assert_mergeable(bands)
     cols = ["zoom", "tile_x", "tile_y"] + [s.name for s in bands]
-    merges = [_MERGE_FNS[s.merge](s.name).alias(s.name) for s in bands]
     return (
         existing.select(*cols)
         .unionByName(delta.select(*cols))
         .groupBy("zoom", "tile_x", "tile_y")
-        .agg(*merges)
+        .agg(*_merge_aggs(bands))
     )
 
 

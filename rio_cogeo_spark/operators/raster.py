@@ -275,7 +275,6 @@ def build_pixel_pyramid(
     px: int = grid.DEFAULT_BLOCKSIZE,
     kernel: str = "sum",
     salt_partials: bool = False,
-    persist_levels: bool = True,
 ) -> DataFrame:
     """Rasterized overview pyramid: base density tiles at ``max_zoom``,
     then ``levels`` pixel-level overview builds with ``kernel`` — the
@@ -284,21 +283,19 @@ def build_pixel_pyramid(
 
     Output: (zoom, tile_x, tile_y, pixels array<long>) for zooms
     ``max_zoom .. max_zoom - levels``. Each level's groupBy shuffles ~4x
-    fewer, fixed-size rows (px*px longs).
+    fewer, fixed-size rows (px*px longs). Every level is persisted, so
+    its ``applyInPandas`` merge runs once for both its union branch and
+    the next level; the persisted levels stay cached after the call.
     """
     if kernel not in ALL_KERNELS:
         raise ValueError(
             f"Invalid overview resampling kernel: {kernel}. "
             f"Should be one of {sorted(ALL_KERNELS)}."
         )
-    level = rasterize_tiles(pages, max_zoom, px, salt_partials=salt_partials)
-    if persist_levels:
-        level = level.persist()
+    level = rasterize_tiles(pages, max_zoom, px, salt_partials=salt_partials).persist()
     out = level
     for _ in range(levels):
-        level = downsample_pixel_level(level, px, kernel)
-        if persist_levels:
-            level = level.persist()
+        level = downsample_pixel_level(level, px, kernel).persist()
         out = out.unionByName(level)
     return out
 

@@ -213,10 +213,15 @@ def plan_tile_job(
     (utils.py:120-140; reference tests/test_web.py:241-300), so every
     overview level down to k stays tile-aligned.
     """
-    if tms is not None and not tms.is_quad:
+    tms = tms or grid.WEB_MERCATOR_QUAD
+    if not tms.is_quad:
+        # variable-width / explicit-matrix grids address tiles fine
+        # (grid.TileMatrixSet.tile_index) but have no power-of-2 parent
+        # relation, so overview decimation (tx // base) is undefined
         raise IncompatibleOptions(
             f"TMS {tms.id!r} is not a quad (power-of-2) tile matrix set; "
-            "tile-job plans require quad parent-cell decimation."
+            "tile-job plans and pyramids require quad parent-cell decimation. "
+            "Use tile_assign/assign_tiles for addressing on this grid."
         )
     b = pages.agg(
         F.min("lon").alias("w"),
@@ -230,8 +235,7 @@ def plan_tile_job(
     # grids, so the tile extent of the lon/lat bounds is the extent of
     # the per-page tile indices that tile_assign computes (the two agree
     # point for point: tests/test_tile_expr.py)
-    idx = grid.tile_index if tms is None else tms.tile_index
-    txs, tys = idx([b["w"], b["e"]], [b["n"], b["s"]], max_zoom)
+    txs, tys = tms.tile_index([b["w"], b["e"]], [b["n"], b["s"]], max_zoom)
     tx0, tx1 = int(txs[0]), int(txs[1])
     ty0, ty1 = int(tys[0]), int(tys[1])
     if aligned_levels:
@@ -255,17 +259,9 @@ def plan_tile_job(
         height=height_px,
         minsize=blocksize,
     )
-    pow2 = decimation_base >= 2 and (decimation_base & (decimation_base - 1)) == 0
-    if not decimations:
-        min_zoom = max_zoom
-    elif pow2:
-        # zoom labels step by log2(decimation) → TMS-valid at every level
-        min_zoom = max(max_zoom - (int(decimations[-1]).bit_length() - 1), 0)
-    else:
-        min_zoom = max(max_zoom - len(decimations), 0)
-    return TileJobPlan(
+    plan = TileJobPlan(
         max_zoom=max_zoom,
-        min_zoom=min_zoom,
+        min_zoom=max_zoom,
         decimation_base=decimation_base,
         blocksize=blocksize,
         overview_blocksize=overview_blocksize,
@@ -274,6 +270,9 @@ def plan_tile_job(
         height_px=height_px,
         decimations=decimations,
     )
+    # the coarsest level's zoom label, clamped to the TMS zoom range
+    plan.min_zoom = max(plan.level_zoom_decs[-1][0], 0)
+    return plan
 
 
 def assign_tiles(
@@ -304,21 +303,28 @@ def base_tiles(
     )
 
 
+def _merge_aggs(bands: List[BandSpec]) -> List[Column]:
+    """The merge aggregate of every band, named after the band — the one
+    band-merge algebra of overview levels, the fold and pyramid merges."""
+    bad = [s.name for s in bands if s.merge not in _MERGE_FNS]
+    if bad:
+        raise IncompatibleOptions(
+            f"bands {bad} have no merge rule (merge must be one of "
+            f"{sorted(_MERGE_FNS)})"
+        )
+    return [_MERGE_FNS[s.merge](s.name).alias(s.name) for s in bands]
+
+
 def next_level(tiles: DataFrame, zoom: int, base: int, bands: List[BandSpec]) -> DataFrame:
     """Stage 4 step: one overview level — ``groupBy(tx // base, ty // base)``
     (cogeo.py:389). Input rows shrink ~base² per level, so each successive
     shuffle is smaller; floor-division keys keep partition locality."""
-    merges = []
-    for spec in bands:
-        if spec.merge not in _MERGE_FNS:
-            raise IncompatibleOptions(f"non-mergeable band merge: {spec.merge}")
-        merges.append(_MERGE_FNS[spec.merge](spec.name).alias(spec.name))
     return (
         tiles.groupBy(
             F.floor(F.col("tile_x") / base).cast("long").alias("tile_x"),
             F.floor(F.col("tile_y") / base).cast("long").alias("tile_y"),
         )
-        .agg(*merges)
+        .agg(*_merge_aggs(bands))
         .withColumn("zoom", F.lit(zoom).cast("int"))
     )
 
@@ -344,10 +350,12 @@ def next_level(tiles: DataFrame, zoom: int, base: int, bands: List[BandSpec]) ->
 # corpus size.
 FOLD_CELLS = 1_048_576
 
-# Merges where a direct multi-level derivation equals the level chain:
-# avg/rms are chain-dependent (avg over 16 grandchildren != avg of 4
-# child avgs when child counts differ — GDAL's overview-from-overview
-# semantics), so pyramids carrying them never fold.
+# Merges where a direct multi-level derivation equals the level chain,
+# and merge(pyramid(A), pyramid(B)) == pyramid(A ∪ B) (operators/
+# incremental.py): avg/rms are chain-dependent (avg over 16 grandchildren
+# != avg of 4 child avgs when child counts differ — GDAL's
+# overview-from-overview semantics), so pyramids carrying them never fold
+# and never merge.
 FOLD_SAFE_MERGES = frozenset({"sum", "min", "max", "hll"})
 
 
@@ -365,11 +373,6 @@ def fold_levels(
     overviews level-by-level because GDAL must write each IFD; a
     mergeable-band table has no such constraint).
     """
-    merges = []
-    for spec in bands:
-        if spec.merge not in _MERGE_FNS:
-            raise IncompatibleOptions(f"non-mergeable band merge: {spec.merge}")
-        merges.append(_MERGE_FNS[spec.merge](spec.name).alias(spec.name))
     lv = F.explode(
         F.array(*[
             F.struct(
@@ -387,7 +390,7 @@ def fold_levels(
             F.floor(F.col("tile_x") / F.col("lv.f")).cast("long").alias("tile_x"),
             F.floor(F.col("tile_y") / F.col("lv.f")).cast("long").alias("tile_y"),
         )
-        .agg(*merges)
+        .agg(*_merge_aggs(bands))
     )
 
 
@@ -431,7 +434,6 @@ def cog_translate(
     decimation_base: int = 2,
     blocksize: int = grid.DEFAULT_BLOCKSIZE,
     bands: Optional[List[BandSpec]] = None,
-    persist_levels: bool = True,
     nodata: Optional[float] = None,
     validity_col: Optional[str] = None,
     add_mask: bool = False,
@@ -461,19 +463,17 @@ def cog_translate(
     ``web_optimized=True`` aligns the output grid to WebMercatorQuad —
     the base zoom comes from ``zoom_level`` (overrides the strategy,
     cogeo.py:141-143), or from ``source_resolution`` via
-    ``grid.zoom_for_res(zoom_level_strategy)``, or from an explicit
+    ``tms.zoom_for_res(zoom_level_strategy)``, or from an explicit
     ``max_zoom``; ``aligned_levels`` k snaps the extent outward to whole
     tiles at ``max_zoom - k`` so every overview down to k stays
     tile-aligned (reference tests/test_web.py:241-300).
 
-    ``persist_levels`` persists each level so the final union does NOT
-    re-derive the whole lineage once per level (each level is both a
-    union branch and the next level's input — without a persist the
-    pages scan + base agg would run L times). At cluster scale the same
-    role is played by writing one table/Iceberg snapshot per level
-    (SURVEY.md §7 step 4 — snapshot per level = checkpoint).
+    The result is a lazy plan that caches nothing: each level is both a
+    union branch and the next level's input, and Spark's exchange reuse
+    shares it between the two.
     """
     bands = bands or default_bands()
+    tms = tms or grid.WEB_MERCATOR_QUAD
 
     # option validation + rewrites — reference stage 1 (cogeo.py:225-255)
     if overview_resampling not in grid.ALL_KERNELS:
@@ -485,15 +485,6 @@ def cog_translate(
         raise IncompatibleOptions(
             "Cannot add a colormap for multiple bands data."
         )
-    if tms is not None and not tms.is_quad:
-        # variable-width / explicit-matrix grids address tiles fine
-        # (grid.TileMatrixSet.tile_index) but have no power-of-2 parent
-        # relation, so overview decimation (tx // base) is undefined
-        raise IncompatibleOptions(
-            f"TMS {tms.id!r} is not a quad (power-of-2) tile matrix set; "
-            "pyramids/overviews require quad parent-cell decimation. "
-            "Use tile_assign/assign_tiles for addressing on this grid."
-        )
     # zoom resolution (cogeo.py:134-145 / utils.py:106-117): an explicit
     # zoom_level wins; else an explicit max_zoom; else derive from the
     # source resolution with the zoom_level_strategy
@@ -504,14 +495,9 @@ def cog_translate(
             raise ValueError(
                 "one of max_zoom, zoom_level or source_resolution is required"
             )
-        if tms is None:
-            max_zoom = grid.zoom_for_res(
-                source_resolution, zoom_level_strategy=zoom_level_strategy
-            )
-        else:
-            max_zoom = tms.zoom_for_res(
-                source_resolution, zoom_level_strategy=zoom_level_strategy
-            )
+        max_zoom = tms.zoom_for_res(
+            source_resolution, zoom_level_strategy=zoom_level_strategy
+        )
     valid_pages, invalid_pages = apply_nodata(pages, nodata, validity_col)
     if add_mask or nodata is not None or validity_col is not None:
         # P6: the mask band — per-cell count of VALID points, the
@@ -521,11 +507,9 @@ def cog_translate(
         ]
 
     # Plan extent from a scan-only min/max over the page coordinates
-    # (plan_tile_job), never from the base aggregation, which would run
-    # as a separate planning job before the caller's first action.
-    level = base_tiles(valid_pages, max_zoom, bands, tms=tms)
-    if persist_levels:
-        level = level.persist()
+    # (plan_tile_job, which also rejects non-quad grids), never from the
+    # base aggregation, which would run as a separate planning job before
+    # the caller's first action.
     plan = plan_tile_job(
         valid_pages,
         max_zoom,
@@ -536,11 +520,12 @@ def cog_translate(
         overview_blocksize=overview_blocksize,
         tms=tms,
     )
+    level = base_tiles(valid_pages, max_zoom, bands, tms=tms)
 
     # tag forwarding — reference stage 5 (cogeo.py:395-437)
     props: Dict[str, str] = dict(tags or {})
     props["OVERVIEW_RESAMPLING"] = overview_resampling.upper()
-    props["TILING_SCHEME_NAME"] = tms.id if tms is not None else "WebMercatorQuad"
+    props["TILING_SCHEME_NAME"] = tms.id
     props["TILING_SCHEME_ZOOM_LEVEL"] = str(max_zoom)
     if web_optimized and aligned_levels:
         # reference tag name, cogeo.py:423
@@ -598,8 +583,6 @@ def cog_translate(
             break
         z, dec = pairs[i]
         level = next_level(level, z, decimation_base, bands)
-        if persist_levels:
-            level = level.persist()
         levels.append(level)
         prev_dec = dec
         i += 1

@@ -178,6 +178,12 @@ ROWS = [
         "Exchange": 1, "HashAggregate": 2,
         r"HashAggregate.*[\s\S]*Exchange[\s\S]*HashAggregate": 1},
         lambda c: T.base_tiles(c.pages, 8)),
+    # the pyramid caches no level: exchange reuse shares each one between
+    # its union branch and the next level
+    Row("cog_translate", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
+        "Exchange": 3, "Generate": 1, "HashAggregate": 6, "Union": 1,
+        "InMemoryTableScan": 0},
+        lambda c: T.cog_translate(c.pages, max_zoom=10, overview_level=6)[0]),
     # PIP prefilter: broadcast join on the cell key, never a sort-merge
     Row("point_in_polygon", {"ArrowEvalPython": 1, "BroadcastExchange": 2,
         "BroadcastHashJoin Inner": 2},
@@ -434,9 +440,9 @@ ROWS = [
     Row("morton_range", {"BroadcastExchange": 1, "BroadcastHashJoin Inner": 1,
         "Exchange": 1, "HashAggregate": 2},
         lambda c: E.q_morton_range(c.spark, c.sf)),
-    Row("pyramid_merge", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
-        "Exchange": 5, "Generate": 2, "HashAggregate": 10, "Union": 1,
-        "partial_sum": 8},
+    Row("pyramid_merge", {"BroadcastExchange": 4, "BroadcastHashJoin Inner": 4,
+        "Exchange": 7, "Generate": 2, "HashAggregate": 14, "Union": 1,
+        "partial_sum": 10},
         lambda c: incremental.pyramid_merge(*(
             T.cog_translate(c.pages.filter(keep), max_zoom=8, overview_level=3)[0]
             for keep in (F.col("doc_id") % 10 != 9, F.col("doc_id") % 10 == 9)))),

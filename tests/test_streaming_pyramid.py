@@ -5,7 +5,7 @@ commits, replay idempotency (streaming/pyramid.py).
 import pytest
 from pyspark.sql import functions as F
 
-from rio_cogeo_spark.operators.translate import cog_translate
+from rio_cogeo_spark.operators.translate import cog_translate, warp_bands
 from rio_cogeo_spark.streaming.pyramid import (
     maintain_pyramid,
     read_pyramid_store,
@@ -84,3 +84,23 @@ def test_streaming_available_now_matches_batch(spark, tmp_path):
     )
     q2.awaitTermination(300)
     assert _vals(read_pyramid_store(spark, store)) == got
+
+
+def test_pyramid_builds_leave_no_cached_data(spark, tmp_path):
+    # cog_translate is a lazy plan: neither a direct build (the fold
+    # path and the level chain of a non-foldable avg band) nor a run of
+    # store updates may leave cached data behind in the session
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    pages = synth_pages(spark, SF)
+    for bands in (None, warp_bands("average")):
+        tiles, _ = cog_translate(pages, max_zoom=10, overview_level=6, bands=bands)
+        assert tiles.count() > 0
+        assert cache_empty()
+    store = str(tmp_path / "store")
+    for i in range(3):
+        batch = pages.filter(F.col("doc_id") % 3 == i)
+        assert update_pyramid_store(batch, i, store, ZOOM, LEVELS)
+        assert cache_empty()

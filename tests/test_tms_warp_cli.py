@@ -35,10 +35,14 @@ def pages_path(spark, sf_small, tmp_path_factory):
 
 def test_web_mercator_quad_is_fp_identical_to_fast_path():
     rng = np.random.default_rng(7)
-    lon = rng.uniform(-179, 179, 5000)
-    lat = rng.uniform(-84, 84, 5000)
+    # plus the corners plan_tile_job can pass in: the mercator clip
+    # bound, the poles, out-of-range latitudes and longitudes
+    corners = [(x, y) for x in (180.0, -180.0, 200.0, -200.0)
+               for y in (grid.MAX_LAT, -grid.MAX_LAT, 90.0, -90.0, 95.0, -95.0)]
+    lon = np.concatenate([rng.uniform(-179, 179, 5000), [c[0] for c in corners]])
+    lat = np.concatenate([rng.uniform(-84, 84, 5000), [c[1] for c in corners]])
     q = grid.WEB_MERCATOR_QUAD
-    for z in (0, 3, 8, 15):
+    for z in (0, 3, 8, 15, 30):
         tx_a, ty_a = grid.tile_index(lon, lat, z)
         tx_b, ty_b = q.tile_index(lon, lat, z)
         assert (tx_a == tx_b).all() and (ty_a == ty_b).all()
