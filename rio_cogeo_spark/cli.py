@@ -4,9 +4,13 @@ info, re-targeted at pages→tiles pyramid builds.
 
 Usage:
   python -m rio_cogeo_spark.cli create  <pages_path> <out_dir> [--max-zoom Z]
-      [--overview-level N] [--decimation-base B] [--profile NAME] [--resume]
+      [--overview-level N] [--decimation-base B] [--profile NAME]
   python -m rio_cogeo_spark.cli validate <tiles_dir> [--strict]
   python -m rio_cogeo_spark.cli info     <tiles_dir> [--json]
+
+``create`` always resumes: levels already committed under ``out_dir``
+(``resumable_pyramid``'s per-level manifests) are kept, not rebuilt,
+whatever options built them.
 """
 
 from __future__ import annotations

@@ -6,14 +6,16 @@ pattern (/root/reference/rio_cogeo/cogeo.py:362-379: block window first,
 per-pixel dataset_mask second):
 
   phase 1  pages.cell ⋈ broadcast(explode(admin.covering_cells))   (equi)
-  phase 2  exact ray-cast refine, numpy-vectorized per admin group (theta)
+  phase 2  exact ray-cast refine, one built-in ``aggregate`` over the
+           ring arrays each boundary-cell row carries            (theta)
 
 Scale design: the admin table is small (countries/regions ≤ 10^5 rings) →
 broadcast; the pages side never shuffles for phase 1 (broadcast hash join
-preserves scan partitioning). Phase 2 is a batch-vectorized Arrow UDF —
-per *admin* loop, never per row. Hot cells (megacities) inflate candidate
-counts, not join keys, so no salting is needed on the broadcast path; AQE
-skew-split covers the groupBy in zonal stats.
+preserves scan partitioning). Phase 2 is a JVM expression on the joined
+row: no Python worker and no Arrow transfer, and candidates in interior
+cells skip it. Hot cells (megacities) inflate candidate counts, not join
+keys, so no salting is needed on the broadcast path; AQE skew-split
+covers the groupBy in zonal stats.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rio_cogeo_spark import grid
@@ -120,14 +122,19 @@ def covering_cells(area: AdminArea, zoom: int = PREFILTER_ZOOM) -> List[Tuple[in
 
 def admin_cells_df(spark: SparkSession, areas: List[AdminArea],
                    zoom: int = PREFILTER_ZOOM) -> DataFrame:
-    """Broadcast side: one row per (admin_id, covering cell, interior)."""
-    rows = [
-        (a.admin_id, a.name, int(c), bool(interior))
-        for a in areas
-        for c, interior in covering_cells(a, zoom)
-    ]
+    """Broadcast side: one row per (admin_id, covering cell, interior).
+    Boundary-cell rows carry the ring as ``rx``/``ry`` for the exact
+    refine; interior rows carry null, as they never reach it."""
+    rows = []
+    for a in areas:
+        ring = ([float(v) for v in a.ring_lon], [float(v) for v in a.ring_lat])
+        rows += [
+            (a.admin_id, a.name, int(c), bool(interior), *((None, None) if interior else ring))
+            for c, interior in covering_cells(a, zoom)
+        ]
     return spark.createDataFrame(
-        rows, "admin_id string, name string, cell long, interior boolean"
+        rows, "admin_id string, name string, cell long, interior boolean, "
+              "rx array<double>, ry array<double>"
     )
 
 
@@ -148,18 +155,30 @@ def ray_cast(lon: np.ndarray, lat: np.ndarray,
     return inside
 
 
-# Memoized PIP dim side: the admin-boundary broadcast inputs are STATIC
+# ``ray_cast``'s even-odd crossing count as one built-in expression over
+# the candidate's ring arrays, in ray_cast's operation order, so the JVM's
+# IEEE doubles give the numpy result bit for bit. The division is reached
+# only when the edge straddles ``lat``, where ry[i] != ry[i-1] (ANSI-safe).
+# A string, not a Column: F.expr needs an active session.
+_REFINE_SQL = (
+    "interior OR aggregate(sequence(1, size(rx) - 1), false, (acc, i) -> acc != "
+    "(((ry[i - 1] > lat) != (ry[i] > lat)) AND "
+    "lon < (rx[i] - rx[i - 1]) * (lat - ry[i - 1]) / (ry[i] - ry[i - 1]) + rx[i - 1]))"
+)
+
+
+# Memoized PIP dim side: the admin-boundary broadcast table is STATIC
 # across queries of a job (the reference opens its dataset/config once
-# per translate, cogeo.py:86) — re-deriving the covering-cell table,
-# the ring broadcast and the id map on every call re-runs ~1 s of
-# driver-serial Python per query, a pure Amdahl term a long-running
-# cluster job amortizes to zero.  Keyed on the full ring content (not
-# object identity), so mutated/replaced area lists never hit stale
-# entries; keyed on the JVM context so a restarted session rebuilds.
+# per translate, cogeo.py:86) — re-deriving the covering cells and their
+# rings on every call re-runs ~1 s of driver-serial Python per query, a
+# pure Amdahl term a long-running cluster job amortizes to zero.  Keyed
+# on the full ring content (not object identity), so mutated/replaced
+# area lists never hit stale entries; keyed on the JVM context so a
+# restarted session rebuilds.
 _PIP_DIM_CACHE: dict = {}
 
 
-def _pip_dim_side(spark: SparkSession, areas: List[AdminArea], zoom: int):
+def _pip_dim_side(spark: SparkSession, areas: List[AdminArea], zoom: int) -> DataFrame:
     key = (
         id(spark.sparkContext._jsc),
         zoom,
@@ -174,17 +193,9 @@ def _pip_dim_side(spark: SparkSession, areas: List[AdminArea], zoom: int):
     if hit is not None:
         return hit
     cells = admin_cells_df(spark, areas, zoom)
-    # integer admin index for the refine UDF: int-array group masks are
-    # ~10x faster than string equality over object dtype
-    idx_of = {a.admin_id: i for i, a in enumerate(areas)}
-    rings = [(np.asarray(a.ring_lon), np.asarray(a.ring_lat)) for a in areas]
-    bc = spark.sparkContext.broadcast(rings)
-    idx_map = F.create_map(
-        *[x for a in areas for x in (F.lit(a.admin_id), F.lit(idx_of[a.admin_id]))]
-    )
     _PIP_DIM_CACHE.clear()  # one live dim side per process is plenty
-    _PIP_DIM_CACHE[key] = (cells, bc, idx_map)
-    return cells, bc, idx_map
+    _PIP_DIM_CACHE[key] = cells
+    return cells
 
 
 def point_in_polygon(
@@ -198,39 +209,15 @@ def point_in_polygon(
 
     Returns pages columns + ``admin_id``/``name`` for inner.
     """
-    spark = pages.sparkSession
-    cells, bc, idx_map = _pip_dim_side(spark, areas, zoom)
-
+    cells = _pip_dim_side(pages.sparkSession, areas, zoom)
     with_cell = pages.withColumn("cell", cell_id(F.col("lon"), F.col("lat"), zoom))
-    candidates = with_cell.join(F.broadcast(cells), "cell", "inner").withColumn(
-        "admin_idx", idx_map[F.col("admin_id")]
+    # one pass over the joined rows: a split+union of interior and
+    # boundary candidates would run the pages scan + broadcast join twice
+    matched = (
+        with_cell.join(F.broadcast(cells), "cell", "inner")
+        .filter(F.expr(_REFINE_SQL))
+        .drop("cell", "interior", "rx", "ry")
     )
-
-    @F.pandas_udf("boolean")
-    def _match(lon_s: pd.Series, lat_s: pd.Series, admin_s: pd.Series,
-               interior_s: pd.Series) -> pd.Series:
-        # Interior-cell shortcut applied INSIDE the batch: candidates whose
-        # prefilter cell is wholly inside the ring are matches by
-        # construction — the ray-cast numpy work runs only on boundary-cell
-        # rows, vectorized per admin group (never per row). One pass over
-        # one Arrow stream: a split+union formulation would execute the
-        # pages scan + cell assignment + broadcast join TWICE (no
-        # shuffle boundary to reuse between the branches).
-        out = interior_s.to_numpy(dtype=bool).copy()
-        bnd = ~out
-        if bnd.any():
-            lon = lon_s.to_numpy(dtype=np.float64)
-            lat = lat_s.to_numpy(dtype=np.float64)
-            admins = admin_s.to_numpy(dtype=np.int32)
-            for admin in np.unique(admins[bnd]):
-                m = bnd & (admins == admin)
-                rlon, rlat = bc.value[admin]
-                out[m] = ray_cast(lon[m], lat[m], rlon, rlat)
-        return pd.Series(out)
-
-    matched = candidates.filter(
-        _match(F.col("lon"), F.col("lat"), F.col("admin_idx"), F.col("interior"))
-    ).drop("cell", "admin_idx", "interior")
 
     if how == "inner":
         return matched

@@ -223,6 +223,18 @@ def plan_tile_job(
             "tile-job plans and pyramids require quad parent-cell decimation. "
             "Use tile_assign/assign_tiles for addressing on this grid."
         )
+    plan = TileJobPlan(max_zoom=max_zoom, min_zoom=max_zoom, decimation_base=decimation_base,
+                       blocksize=blocksize, overview_blocksize=overview_blocksize)
+    if overview_level is not None:
+        # an explicit level count fixes the zoom labels: reject a chain
+        # that runs below zoom 0 before the extent scan starts a Spark job
+        plan.decimations = grid.overview_decimations(overview_level, decimation_base)
+        if plan.level_zoom_decs[-1][0] < 0:
+            raise IncompatibleOptions(
+                f"overview_level={overview_level} with decimation_base="
+                f"{decimation_base} labels levels below zoom 0 "
+                f"(zooms {plan.zooms}) from max_zoom={max_zoom}"
+            )
     b = pages.agg(
         F.min("lon").alias("w"),
         F.max("lon").alias("e"),
@@ -247,31 +259,15 @@ def plan_tile_job(
         ty0 = (ty0 >> shift) << shift
         tx1 = (((tx1 >> shift) + 1) << shift) - 1
         ty1 = (((ty1 >> shift) + 1) << shift) - 1
-    width_cells = tx1 - tx0 + 1
-    height_cells = ty1 - ty0 + 1
-    width_px = width_cells * blocksize
-    height_px = height_cells * blocksize
-
-    decimations = grid.overview_decimations(
-        overview_level,
-        decimation_base=decimation_base,
-        width=width_px,
-        height=height_px,
-        minsize=blocksize,
-    )
-    plan = TileJobPlan(
-        max_zoom=max_zoom,
-        min_zoom=max_zoom,
-        decimation_base=decimation_base,
-        blocksize=blocksize,
-        overview_blocksize=overview_blocksize,
-        extent=(tx0, ty0, tx1, ty1),
-        width_px=width_px,
-        height_px=height_px,
-        decimations=decimations,
-    )
-    # the coarsest level's zoom label, clamped to the TMS zoom range
-    plan.min_zoom = max(plan.level_zoom_decs[-1][0], 0)
+    plan.extent = (tx0, ty0, tx1, ty1)
+    plan.width_px = (tx1 - tx0 + 1) * blocksize
+    plan.height_px = (ty1 - ty0 + 1) * blocksize
+    if overview_level is None:
+        # inferred levels stop at one tile across, never below zoom 0
+        plan.decimations = grid.overview_decimations(
+            None, decimation_base, plan.width_px, plan.height_px, minsize=blocksize
+        )
+    plan.min_zoom = plan.level_zoom_decs[-1][0]
     return plan
 
 

@@ -3,9 +3,11 @@ cell/bbox prefilter must disagree with the exact refine), kNN k-ring vs
 brute force, semi/anti consistency."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from rio_cogeo_spark import grid
 from rio_cogeo_spark.operators import join as J
 from rio_cogeo_spark.synth import MEGACITIES, synth_pages
 
@@ -43,6 +45,38 @@ def test_pip_matches_numpy_oracle_including_concave(pages, areas):
     )
     pdf = pages.select("url", "lon", "lat").toPandas()
     assert got == _numpy_pip(pdf, areas)
+
+
+def test_pip_refine_matches_ray_cast_on_hostile_points(spark, areas):
+    """The built-in refine equals ``ray_cast`` on points where another
+    operation order or edge rule would flip the answer: every ring vertex
+    ±1e-12 on each axis, points at each vertex latitude across the ring's
+    bbox (the half-open edge rule), and non-finite or out-of-range
+    coordinates. The rectangles' horizontal edges have ry[i] == ry[i-1],
+    so under ANSI the division must stay behind the crossing test."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    eps = (-1e-12, 0.0, 1e-12)
+    pts = []
+    for a in areas:
+        for vlon, vlat in zip(a.ring_lon[:-1], a.ring_lat[:-1]):
+            pts += [(vlon + dx, vlat + dy) for dx in eps for dy in eps]
+        lons = np.linspace(min(a.ring_lon), max(a.ring_lon), 3)
+        pts += [(float(x), vlat) for vlat in sorted(set(a.ring_lat)) for x in lons]
+    pts += [
+        (x, y)
+        for x in (np.nan, np.inf, -np.inf, 180.0, -180.0, 200.0)
+        for y in (np.nan, np.inf, grid.MAX_LAT, -grid.MAX_LAT, 90.0)
+    ]
+    rows = [(f"h{i}", float(x), float(y)) for i, (x, y) in enumerate(pts)]
+    df = spark.createDataFrame(rows, "url string, lon double, lat double")
+    got = sorted(
+        (r["url"], r["admin_id"])
+        for r in J.point_in_polygon(df, areas).select("url", "admin_id").collect()
+    )
+    with np.errstate(invalid="ignore"):  # 0 * inf in ray_cast's masked-out rows
+        want = _numpy_pip(pd.DataFrame(rows, columns=["url", "lon", "lat"]), areas)
+    assert len(rows) > 1000 and want
+    assert got == want
 
 
 def test_star_differs_from_bbox(pages, areas):

@@ -184,9 +184,9 @@ ROWS = [
         "Exchange": 3, "Generate": 1, "HashAggregate": 6, "Union": 1,
         "InMemoryTableScan": 0},
         lambda c: T.cog_translate(c.pages, max_zoom=10, overview_level=6)[0]),
-    # PIP prefilter: broadcast join on the cell key, never a sort-merge
-    Row("point_in_polygon", {"ArrowEvalPython": 1, "BroadcastExchange": 2,
-        "BroadcastHashJoin Inner": 2},
+    # PIP prefilter: broadcast join on the cell key, never a sort-merge;
+    # the exact refine is a built-in filter (no Python node)
+    Row("point_in_polygon", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2},
         lambda c: J.point_in_polygon(c.pages, c.admin)),
     Row("knn_bruteforce", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 1,
         "BroadcastNestedLoopJoin Cross": 1, "Exchange": 1, "Window": 1,
@@ -466,9 +466,9 @@ ROWS = [
             c.rng(200, "id % 10 AS query_id", "id % 97 + 100 AS vec_id",
                   "CAST(id % 13 AS DOUBLE) AS cos"),
             c.rng(20, "id AS doc_a", "id + 100 AS doc_b"), k=5)),
-    Row("zonal_mode", {"ArrowEvalPython": 1, "BroadcastExchange": 2,
-        "BroadcastHashJoin Inner": 2, "Exchange": 2, "HashAggregate": 2,
-        "SortAggregate": 2, "partial_min|partial_count": 2},
+    Row("zonal_mode", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
+        "Exchange": 2, "HashAggregate": 2, "SortAggregate": 2,
+        "partial_min|partial_count": 2},
         lambda c: zonal.zonal_mode(c.pages, c.admin)),
     Row("ann_pq_topk", {"BroadcastExchange": 7, "BroadcastHashJoin Inner": 3,
         "BroadcastNestedLoopJoin Cross": 4, "Exchange": 11, "Generate": 6,

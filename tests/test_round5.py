@@ -138,6 +138,21 @@ def test_pyramid_rejects_non_quad_tms(spark, sf_small):
     assert len(rows) == 50
 
 
+def test_pyramid_rejects_levels_below_zoom_0(spark, sf_small):
+    """An overview_level deeper than max_zoom would label tiles at
+    negative zooms: refused before any Spark job runs."""
+    pages = synth_pages(spark, sf_small)
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup())
+    with pytest.raises(IncompatibleOptions, match="below zoom 0"):
+        T.cog_translate(pages, max_zoom=2, overview_level=5)
+    with pytest.raises(IncompatibleOptions, match="below zoom 0"):
+        T.plan_tile_job(pages, max_zoom=3, overview_level=2, decimation_base=4)
+    assert set(st.getJobIdsForGroup()) == before
+    # the deepest chain that fits ends at zoom 0
+    assert T.plan_tile_job(pages, max_zoom=2, overview_level=2).zooms == [2, 1, 0]
+
+
 # --- CLI parity tail: --dtype / --add-mask / --co (reference
 # scripts/cli.py:111-117 --add-mask, options.dtype_opt,
 # options.creation_options + cli.py:270-271 profile patching)
