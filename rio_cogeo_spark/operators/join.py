@@ -7,15 +7,21 @@ per-pixel dataset_mask second):
 
   phase 1  pages.cell ⋈ broadcast(explode(admin.covering_cells))   (equi)
   phase 2  exact ray-cast refine, one built-in ``aggregate`` over the
-           ring arrays each boundary-cell row carries            (theta)
+           clipped edges each boundary-cell row carries          (theta)
+
+Each boundary cell carries only the ring edges that can change the
+answer for a point in it, plus the parity of the edges that every point
+of it crosses (S2 ShapeIndex's clipped shapes), so the refine tests one
+or two edges per candidate instead of the whole ring.
 
 Scale design: the admin table is small (countries/regions ≤ 10^5 rings) →
 broadcast; the pages side never shuffles for phase 1 (broadcast hash join
-preserves scan partitioning). Phase 2 is a JVM expression on the joined
-row: no Python worker and no Arrow transfer, and candidates in interior
-cells skip it. Hot cells (megacities) inflate candidate counts, not join
-keys, so no salting is needed on the broadcast path; AQE skew-split
-covers the groupBy in zonal stats.
+preserves scan partitioning). The cells table is a JVM local relation
+built from Arrow, and phase 2 is a JVM expression on the joined row, so
+the join starts no Python worker; candidates in interior cells skip
+phase 2. Hot cells (megacities) inflate candidate counts, not join keys,
+so no salting is needed on the broadcast path; AQE skew-split covers the
+groupBy in zonal stats.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,7 +39,9 @@ from rio_cogeo_spark import grid
 from rio_cogeo_spark.functions.tile import cell_id, k_ring_cells
 from rio_cogeo_spark.synth import MEGACITIES
 
-PREFILTER_ZOOM = 11   # PIP: fine enough that ~90% of hot-cell candidates are interior
+# PIP: fine enough that most hot-cell candidates are interior (85.7% on
+# the 2M-page benchmark input: 1,713,949 of 2,000,531)
+PREFILTER_ZOOM = 11
 KNN_ZOOM = 7          # kNN: ring-2 coverage radius must exceed the kth distance
 
 
@@ -82,7 +91,13 @@ def _cell_is_interior(area: AdminArea, tx: int, ty: int, zoom: int) -> bool:
     ring: all 4 corners inside by ray-cast AND no ring edge can cross the
     cell bbox (Cohen-Sutherland trivial-reject per edge; any edge not
     trivially outside demotes the cell to 'boundary'). False negatives
-    only route points through the exact refine — never wrong results."""
+    only route points through the exact refine — never wrong results.
+    The grid's outer rows and columns are never interior: ``cell_id``
+    also puts clamped latitudes, clipped longitudes and non-finite
+    coordinates there, which lie outside the tile."""
+    last = (1 << zoom) - 1
+    if tx in (0, last) or ty in (0, last):
+        return False
     w, s, e, n = grid.tile_bounds_mercator([tx], [ty], zoom)
     corners_lon, corners_lat = grid.mercator_to_lonlat(
         np.array([w[0], e[0], e[0], w[0]]), np.array([s[0], s[0], n[0], n[0]])
@@ -120,22 +135,79 @@ def covering_cells(area: AdminArea, zoom: int = PREFILTER_ZOOM) -> List[Tuple[in
     return cells
 
 
+# Outward pad of a cell's lon/lat bounds: far above the rounding gap
+# between the JVM's cell assignment and the numpy bounds (``cell_id``
+# puts points a few ulps past a border, up to ~6e-14 deg, in the cell),
+# far below a cell's width at any zoom the PIP join uses.
+_CELL_PAD = 1e-7
+
+
+def _cell_bounds(tx: int, ty: int, zoom: int) -> Tuple[float, float, float, float]:
+    """Padded (west, south, east, north) lon/lat holding every point that
+    ``cell_id`` puts in the cell. The grid's outer rows and columns also
+    take clamped latitudes, clipped longitudes and NaN/±inf coordinates,
+    so their outer side is unbounded."""
+    w, s, e, n = grid.tile_bounds_mercator([tx], [ty], zoom)
+    lon, lat = grid.mercator_to_lonlat([w[0], e[0]], [s[0], n[0]])
+    last = (1 << zoom) - 1
+    return (
+        -np.inf if tx == 0 else float(lon[0]) - _CELL_PAD,
+        -np.inf if ty == last else float(lat[0]) - _CELL_PAD,
+        np.inf if tx == last else float(lon[1]) + _CELL_PAD,
+        np.inf if ty == 0 else float(lat[1]) + _CELL_PAD,
+    )
+
+
+def _clip_edges(area: AdminArea, tx: int, ty: int, zoom: int):
+    """The ring clipped to one cell, after the clipped shapes of S2's
+    ShapeIndex: ``(flip, x0, y0, x1, y1)``. An edge adds 1 to
+    ``ray_cast``'s count for a point when ``ymin <= lat < ymax`` and
+    ``lon`` lies west of the crossing. An edge that can do so for no point
+    of the cell is dropped; one that does so for every point is folded
+    into the parity ``flip``. The rest are kept, in ring order and
+    orientation, so the refine evaluates them as ``ray_cast`` does."""
+    w, s, e, n = _cell_bounds(tx, ty, zoom)
+    rlon = np.asarray(area.ring_lon, dtype=np.float64)
+    rlat = np.asarray(area.ring_lat, dtype=np.float64)
+    x0, y0, x1, y1 = rlon[:-1], rlat[:-1], rlon[1:], rlat[1:]
+    ymin, ymax = np.minimum(y0, y1), np.maximum(y0, y1)
+    can = (ymin != ymax) & (ymax > s) & (ymin <= n) & (np.maximum(x0, x1) > w)
+    # only bounded cells flip: NaN longitudes land in column 0 and cross nothing
+    every = can & (ymin < s) & (ymax > n) & (np.minimum(x0, x1) > e) & np.isfinite(w)
+    keep = can & ~every
+    return bool(every.sum() % 2), x0[keep], y0[keep], x1[keep], y1[keep]
+
+
+_CELLS_SCHEMA = pa.schema(
+    [("admin_id", pa.string()), ("name", pa.string()), ("cell", pa.int64()),
+     ("interior", pa.bool_()), ("flip", pa.bool_())]
+    + [(c, pa.list_(pa.float64())) for c in ("ex0", "ey0", "ex1", "ey1")]
+)
+
+
 def admin_cells_df(spark: SparkSession, areas: List[AdminArea],
                    zoom: int = PREFILTER_ZOOM) -> DataFrame:
-    """Broadcast side: one row per (admin_id, covering cell, interior).
-    Boundary-cell rows carry the ring as ``rx``/``ry`` for the exact
-    refine; interior rows carry null, as they never reach it."""
+    """Broadcast side: one row per (admin_id, covering cell) that some
+    point can match. An interior row matches every point of its cell. A
+    boundary row carries its clipped edges as ``ex0/ey0/ex1/ey1`` (never
+    empty) and the parity ``flip`` of the edges every point crosses (see
+    ``_clip_edges``). The table is handed over as Arrow, so Spark plans it
+    as a JVM local relation and no Python worker ever scans it."""
     rows = []
     for a in areas:
-        ring = ([float(v) for v in a.ring_lon], [float(v) for v in a.ring_lat])
-        rows += [
-            (a.admin_id, a.name, int(c), bool(interior), *((None, None) if interior else ring))
-            for c, interior in covering_cells(a, zoom)
-        ]
-    return spark.createDataFrame(
-        rows, "admin_id string, name string, cell long, interior boolean, "
-              "rx array<double>, ry array<double>"
-    )
+        for c, interior in covering_cells(a, zoom):
+            row = (a.admin_id, a.name, c, True, False, None, None, None, None)
+            if not interior:
+                _, tx, ty = grid.unpack_cell(c)
+                flip, *edges = _clip_edges(a, int(tx), int(ty), zoom)
+                if edges[0].size:
+                    row = (*row[:3], False, flip, *(e.tolist() for e in edges))
+                elif not flip:
+                    continue  # no point of this cell is inside
+            rows.append(row)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(_CELLS_SCHEMA.names, r)) for r in rows], schema=_CELLS_SCHEMA
+    ))
 
 
 def ray_cast(lon: np.ndarray, lat: np.ndarray,
@@ -155,26 +227,33 @@ def ray_cast(lon: np.ndarray, lat: np.ndarray,
     return inside
 
 
-# ``ray_cast``'s even-odd crossing count as one built-in expression over
-# the candidate's ring arrays, in ray_cast's operation order, so the JVM's
-# IEEE doubles give the numpy result bit for bit. The division is reached
-# only when the edge straddles ``lat``, where ry[i] != ry[i-1] (ANSI-safe).
+# ``ray_cast``'s even-odd crossing count over the candidate cell's
+# clipped edges, XORed with the cell's ``flip``, as one built-in
+# expression. Each edge is evaluated in ray_cast's operation order, so the
+# JVM's IEEE doubles give the numpy result bit for bit. The division is
+# reached only when the edge straddles ``lat``, where ey1[i] != ey0[i]
+# (ANSI-safe). Every array read and the division stay inside the lambda:
+# once the filter becomes the broadcast join's condition, subexpression
+# elimination hoists common subexpressions out of ``AND`` guards, so a
+# read or division outside the lambda can run on rows its guard excludes
+# (an ``ex0[0]`` there raised INVALID_ARRAY_INDEX). Boundary rows never
+# have an empty edge list, since ``sequence(0, -1)`` is ``[0, -1]``.
 # A string, not a Column: F.expr needs an active session.
 _REFINE_SQL = (
-    "interior OR aggregate(sequence(1, size(rx) - 1), false, (acc, i) -> acc != "
-    "(((ry[i - 1] > lat) != (ry[i] > lat)) AND "
-    "lon < (rx[i] - rx[i - 1]) * (lat - ry[i - 1]) / (ry[i] - ry[i - 1]) + rx[i - 1]))"
+    "interior OR (flip != aggregate(sequence(0, size(ex0) - 1), false, (acc, i) -> "
+    "acc != (((ey0[i] > lat) != (ey1[i] > lat)) AND "
+    "lon < (ex1[i] - ex0[i]) * (lat - ey0[i]) / (ey1[i] - ey0[i]) + ex0[i])))"
 )
 
 
 # Memoized PIP dim side: the admin-boundary broadcast table is STATIC
 # across queries of a job (the reference opens its dataset/config once
-# per translate, cogeo.py:86) — re-deriving the covering cells and their
-# rings on every call re-runs ~1 s of driver-serial Python per query, a
-# pure Amdahl term a long-running cluster job amortizes to zero.  Keyed
-# on the full ring content (not object identity), so mutated/replaced
-# area lists never hit stale entries; keyed on the JVM context so a
-# restarted session rebuilds.
+# per translate, cogeo.py:86). Building it runs the covering-cell and
+# edge-clipping loops, driver-serial Python that takes ~1 s per call;
+# the cached DataFrame is a JVM local relation, so reusing it costs
+# nothing on the executors. Keyed on the full ring content (not object
+# identity), so mutated/replaced area lists never hit stale entries;
+# keyed on the JVM context so a restarted session rebuilds.
 _PIP_DIM_CACHE: dict = {}
 
 
@@ -216,7 +295,7 @@ def point_in_polygon(
     matched = (
         with_cell.join(F.broadcast(cells), "cell", "inner")
         .filter(F.expr(_REFINE_SQL))
-        .drop("cell", "interior", "rx", "ry")
+        .drop("cell", "interior", "flip", "ex0", "ey0", "ex1", "ey1")
     )
 
     if how == "inner":

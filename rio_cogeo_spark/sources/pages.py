@@ -100,14 +100,16 @@ def _manifest_path(root: str, zoom: int) -> str:
 
 
 def _write_level(
-    tiles: DataFrame, root: str, zoom: int, compression: Optional[str] = None
+    tiles: DataFrame, root: str, zoom: int, options: dict,
+    compression: Optional[str] = None,
 ) -> dict:
     """Atomic level commit: write to a temp dir, fsync the manifest last
     (the parquet stand-in for an Iceberg snapshot commit). The manifest
     records per-partition row counts — the 'per-partition lineage +
-    tile-count metrics' of the north_star. ``compression`` is the
-    profile/creation-option parquet codec (reference profiles.py:10-18
-    COMPRESS= creation option)."""
+    tile-count metrics' of the north_star — and the ``options`` the level
+    was built with. ``compression`` is the profile/creation-option
+    parquet codec (reference profiles.py:10-18 COMPRESS= creation
+    option)."""
     tmp = os.path.join(root, f"_tmp_z{zoom}")
     final = _level_dir(root, zoom)
     w = (
@@ -133,6 +135,7 @@ def _write_level(
         "zoom": zoom,
         "n_tiles": n_tiles,
         "partitions": per_part,
+        "options": options,
         "complete": True,
     }
     with open(_manifest_path(root, zoom), "w") as f:
@@ -140,13 +143,15 @@ def _write_level(
     return manifest
 
 
-def _level_complete(root: str, zoom: int) -> bool:
+def _level_complete(root: str, zoom: int, options: dict) -> bool:
+    """The level is committed, and with the same ``options``."""
     mp = _manifest_path(root, zoom)
     if not os.path.exists(mp):
         return False
     try:
         with open(mp) as f:
-            return bool(json.load(f).get("complete"))
+            m = json.load(f)
+        return bool(m.get("complete")) and m.get("options") == options
     except Exception:  # noqa: BLE001
         return False
 
@@ -168,7 +173,10 @@ def resumable_pyramid(
     """Checkpointed pyramid build: one committed level at a time,
     max_zoom first (children before parents), skipping levels whose
     manifest is already complete — kill the job between levels and rerun
-    to resume. Returns (plan, manifests).
+    to resume. A level committed with other options (decimation base,
+    bands and merges, dtype, grid, codec) is rebuilt, and so is every
+    level above a rebuilt one, since it is made from it. Returns (plan,
+    manifests).
 
     ``dtype`` (Spark type name) casts every band on write, and each
     overview re-aggregates the CASTED committed level below it — exactly
@@ -194,12 +202,22 @@ def resumable_pyramid(
 
     manifests = []
     prev: Optional[DataFrame] = None
+    rebuilt = False
     for z, dec in plan.level_zoom_decs:
-        if _level_complete(root, z):
+        options = {
+            "zoom": z,
+            "decimation_base": decimation_base,
+            "bands": [[b.name, b.merge] for b in bands],
+            "dtype": dtype,
+            "grid": (tms or _grid.WEB_MERCATOR_QUAD).id,
+            "codec": compression,
+        }
+        if not rebuilt and _level_complete(root, z, options):
             with open(_manifest_path(root, z)) as f:
                 manifests.append(json.load(f))
             prev = spark.read.parquet(_level_dir(root, z))
             continue
+        rebuilt = True
         if dec == 1:
             level = base_tiles(pages, z, bands, tms=tms).drop("zoom")
         else:
@@ -210,7 +228,7 @@ def resumable_pyramid(
                 "tile_x", "tile_y",
                 *[F.col(b.name).cast(dtype).alias(b.name) for b in bands],
             )
-        manifests.append(_write_level(level, root, z, compression=compression))
+        manifests.append(_write_level(level, root, z, options, compression=compression))
         prev = spark.read.parquet(_level_dir(root, z))
     return plan, manifests
 

@@ -4,6 +4,7 @@ brute force, semi/anti consistency."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,6 +78,75 @@ def test_pip_refine_matches_ray_cast_on_hostile_points(spark, areas):
         want = _numpy_pip(pd.DataFrame(rows, columns=["url", "lon", "lat"]), areas)
     assert len(rows) > 1000 and want
     assert got == want
+
+
+def _staircase(zoom):
+    """A ring whose vertices are cell corners at ``zoom``: its vertical and
+    slanted edges start and end on cell borders, where the JVM's cell
+    assignment and the numpy cell bounds differ by an ulp."""
+    _, _, clat, clon = MEGACITIES[0]
+    tx, ty = (int(v[0]) for v in grid.tile_index([clon], [clat], zoom))
+    w, _, _, n = grid.tile_bounds_mercator(np.arange(tx, tx + 7), np.arange(ty, ty + 7), zoom)
+    lon, lat = grid.mercator_to_lonlat(w, n)
+    steps = [(0, 0), (6, 0), (6, 2), (4, 3), (4, 4), (2, 4), (2, 6), (0, 6), (0, 0)]
+    return J.AdminArea(
+        f"G{zoom}", "staircase",
+        tuple(float(lon[i]) for i, _ in steps), tuple(float(lat[j]) for _, j in steps),
+    )
+
+
+# over the antimeridian and past MAX_LAT: its cells are in the grid's
+# first row and column, where non-finite and clamped points land
+_POLE = J.AdminArea("P000", "antimeridian_pole", (-181.0, -179.0, -179.0, -181.0, -181.0),
+                    (84.0, 84.0, 89.0, 89.0, 84.0))
+
+
+def _near(v):
+    """``v`` and its neighbours 1 ulp and 1e-12 away on either side."""
+    return (v - 1e-12, np.nextafter(v, -np.inf), v, np.nextafter(v, np.inf), v + 1e-12)
+
+
+@pytest.mark.parametrize("zoom, min_flips, min_edges", [(J.PREFILTER_ZOOM, 1, 1), (7, 0, 3)])
+def test_pip_clipped_edges_exact_at_cell_borders(spark, areas, zoom, min_flips, min_edges):
+    """Each boundary cell keeps only the ring edges that can count for a
+    point in it and folds those that count for all of them into ``flip``.
+    Points at every boundary cell's corners, edge midpoints and centre,
+    moved by 1 ulp and by 1e-12 on each axis, sit where a clip with too
+    little padding (the JVM puts some points a few ulps outside the numpy
+    cell bounds), a wrong span test or a wrong ``flip`` changes the
+    answer. Non-finite and out-of-range points land in ``_POLE``'s
+    cells, which must stay unbounded on the grid's outer side. The
+    result must still be ``ray_cast``'s. One Spark job."""
+    areas = [*areas, _staircase(zoom), _POLE]
+    xs, ys, flips, most = [], [], 0, 0
+    for a in areas:
+        for c, interior in J.covering_cells(a, zoom):
+            if interior:
+                continue
+            _, tx, ty = (int(v) for v in grid.unpack_cell(c))
+            flip, x0, *_ = J._clip_edges(a, tx, ty, zoom)
+            flips, most = flips + flip, max(most, x0.size)
+            w, s, e, n = grid.tile_bounds_mercator([tx], [ty], zoom)
+            lon, lat = grid.mercator_to_lonlat([w[0], e[0]], [s[0], n[0]])
+            for x in (lon[0], (lon[0] + lon[1]) / 2, lon[1]):
+                for y in (lat[0], (lat[0] + lat[1]) / 2, lat[1]):
+                    near_x, near_y = _near(x), _near(y)
+                    xs += [px for px in near_x for _ in near_y]
+                    ys += [py for _ in near_x for py in near_y]
+    assert flips >= min_flips and most >= min_edges
+    outer_x = (np.nan, np.inf, -np.inf, -200.0, -180.5, -180.0, -179.5, 180.0, 200.0)
+    outer_y = (np.nan, np.inf, -np.inf, 90.0, 89.0, 86.0, 84.5, grid.MAX_LAT, -grid.MAX_LAT)
+    xs += [x for x in outer_x for _ in outer_y]
+    ys += [y for _ in outer_x for y in outer_y]
+    cols = {"url": [f"b{i}" for i in range(len(xs))], "lon": xs, "lat": ys}
+    # pa.table keeps NaN (a pandas round trip would turn it into null)
+    got = sorted(
+        (r["url"], r["admin_id"])
+        for r in J.point_in_polygon(spark.createDataFrame(pa.table(cols)), areas, zoom)
+        .select("url", "admin_id").collect()
+    )
+    with np.errstate(invalid="ignore"):  # 0 * inf in ray_cast's masked-out rows
+        assert got == _numpy_pip(pd.DataFrame(cols), areas)
 
 
 def test_star_differs_from_bbox(pages, areas):

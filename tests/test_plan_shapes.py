@@ -185,8 +185,10 @@ ROWS = [
         "InMemoryTableScan": 0},
         lambda c: T.cog_translate(c.pages, max_zoom=10, overview_level=6)[0]),
     # PIP prefilter: broadcast join on the cell key, never a sort-merge;
-    # the exact refine is a built-in filter (no Python node)
-    Row("point_in_polygon", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2},
+    # the exact refine is a built-in filter (no Python node), and the cells
+    # table is a local relation beside synth's city table (no Python scan)
+    Row("point_in_polygon", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
+        "LocalTableScan": 4, "Scan ExistingRDD": 0},
         lambda c: J.point_in_polygon(c.pages, c.admin)),
     Row("knn_bruteforce", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 1,
         "BroadcastNestedLoopJoin Cross": 1, "Exchange": 1, "Window": 1,

@@ -11,7 +11,7 @@ from test_plan_shapes import plan_of
 from rio_cogeo_spark.operators import multimodal as MM
 from rio_cogeo_spark.operators import raster as R
 from rio_cogeo_spark.operators import skew as SK
-from rio_cogeo_spark.operators.translate import base_tiles
+from rio_cogeo_spark.operators.translate import base_tiles, default_bands
 from rio_cogeo_spark.sources import pages as SRC
 from rio_cogeo_spark.streaming import events as EV
 from rio_cogeo_spark.synth import synth_pages
@@ -52,6 +52,26 @@ def test_resumable_pyramid_and_resume(tmp_path, spark, pages):
     assert [m["zoom"] for m in manifests2] == [8, 7, 6, 5]
     after = sorted(map(tuple, SRC.read_pyramid(spark, root).collect()))
     assert after == before
+
+
+def test_resume_rebuilds_levels_built_with_other_options(tmp_path, spark, pages, monkeypatch):
+    """A level committed with other options is rebuilt, not reused; a
+    rerun with the same options commits nothing."""
+    root = str(tmp_path / "pyr")
+    SRC.resumable_pyramid(pages, root, max_zoom=6, overview_level=2)
+    plan, manifests = SRC.resumable_pyramid(pages, root, max_zoom=6, overview_level=2, dtype="int")
+    names = {b.name for b in default_bands()}
+    for z in plan.zooms:
+        types = {f.dataType.simpleString()
+                 for f in spark.read.parquet(f"{root}/zoom={z}").schema if f.name in names}
+        assert types == {"int"}, (z, types)
+
+    def no_commit(*args, **kwargs):
+        raise AssertionError("a level built with the same options was rebuilt")
+
+    monkeypatch.setattr(SRC, "_write_level", no_commit)
+    _, again = SRC.resumable_pyramid(pages, root, max_zoom=6, overview_level=2, dtype="int")
+    assert again == manifests
 
 
 def test_write_table_profile_roundtrip(tmp_path, spark, pages):
