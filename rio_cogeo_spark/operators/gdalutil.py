@@ -20,7 +20,6 @@ def raster_hist(
     tiles: DataFrame,
     n_buckets: int = 16,
     value_col: str = "page_count",
-    reuse: bool = True,
 ) -> DataFrame:
     """Value histogram of the tile grid — the ``gdalinfo -hist`` analog
     (GDAL reports a bucketed pixel-value histogram per band). Buckets
@@ -33,17 +32,17 @@ def raster_hist(
     ``[lo, hi]`` are the bucket's inclusive integer bounds.
 
     Scale design: the tile fold is read by the (vmin, vmax) 1-row
-    aggregate AND the bucket fold — localCheckpoint-pinned
-    (``reuse=True``) so it computes ONCE; both joins broadcast (1-row
+    aggregate AND the bucket fold — localCheckpoint-pinned so it
+    computes ONCE; both joins broadcast (1-row
     bounds, ``n_buckets``-row bucket spine).
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     spark = tiles.sparkSession
-    vals = tiles.select(F.col(value_col).cast("long").alias("v"))
-    if reuse:
-        # the bounds aggregate and the bucket fold both read this
-        vals = vals.localCheckpoint(eager=False)
+    # the bounds aggregate and the bucket fold both read this
+    vals = tiles.select(
+        F.col(value_col).cast("long").alias("v")
+    ).localCheckpoint(eager=False)
     bounds = vals.agg(
         F.min("v").alias("vmin"), F.max("v").alias("vmax")
     )
@@ -108,7 +107,6 @@ def scale_bytes(
     value_col: str = "page_count",
     lo: int = 0,
     hi: int = 255,
-    reuse: bool = True,
 ) -> DataFrame:
     """Linear rescale of the tile values onto ``[lo, hi]`` — the
     ``gdal_translate -scale`` analog (GDAL maps src min/max onto the
@@ -127,9 +125,7 @@ def scale_bytes(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
         F.col(value_col).cast("long").alias("v"),
-    )
-    if reuse:
-        base = base.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     bounds = base.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
     return base.crossJoin(F.broadcast(bounds)).select(
         "tile_x", "tile_y", "v",
@@ -303,7 +299,6 @@ def equalize(
     tiles: DataFrame,
     levels: int = 256,
     value_col: str = "page_count",
-    reuse: bool = True,
 ) -> DataFrame:
     """Histogram equalization of the tile values — the classic CDF
     remap GDAL users reach via ``gdal_translate -scale`` pipelines and
@@ -322,14 +317,12 @@ def equalize(
     """
     if levels < 2:
         raise ValueError(f"levels must be >= 2, got {levels}")
+    # the frequency fold and the remap join both read this
     base = tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
         F.col(value_col).cast("long").alias("v"),
-    )
-    if reuse:
-        # the frequency fold and the remap join both read this
-        base = base.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     freq = base.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -35,9 +35,7 @@ Scale design (100 TB / 10^8-host graph):
   PageRank's irreducible data movement;
 * the rank table is node-bounded (hosts, not edges, not pages); each
   iteration's join of edges with ranks on ``src`` broadcasts the ranks
-  when the host table fits (``broadcast_ranks=True``, the common case:
-  10^8 hosts x 16 B ≈ 1.6 GB is marginal, 10^7 is trivial), else a
-  co-partitioned shuffle join whose build side has one row per host;
+  (10^8 hosts x 16 B ≈ 1.6 GB is marginal, 10^7 is trivial);
 * iteration count is FIXED and small (the crawl scheduler wants a
   stable ordering, not convergence to 1e-12); lineage therefore stays
   bounded without checkpointing, but ``checkpoint_every`` is exposed
@@ -87,7 +85,6 @@ def host_pagerank(
     damping_pct: int = 85,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_ranks: bool = True,
     checkpoint_every: int = 0,
 ) -> DataFrame:
     """Fixed-point damped PageRank over a host edge list.
@@ -100,7 +97,8 @@ def host_pagerank(
 
     all in exact BIGINT, so the result hashes identically on any
     engine/partitioning. Returns ``(host, rank_ppb)`` for every host in
-    the graph; higher = fetch sooner.
+    the graph; higher = fetch sooner. Each iteration broadcasts the
+    node-bounded ``(host, outdeg, rank)`` table into the edge join.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -124,9 +122,7 @@ def host_pagerank(
     ranks = nodes.select("host", F.lit(SCALE).alias("rank"))
 
     for it in range(iterations):
-        src_side = ranks.join(outdeg, "host")  # dangling hosts drop here
-        if broadcast_ranks:
-            src_side = F.broadcast(src_side)
+        src_side = F.broadcast(ranks.join(outdeg, "host"))  # dangling hosts drop
         contrib = (
             e.join(src_side, e["src"] == src_side["host"])
             .select(
@@ -203,7 +199,6 @@ def host_distance(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "host",
-    broadcast_dist: bool = True,
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """BFS hop distance from a seed host set — crawl-frontier DEPTH (how
@@ -223,10 +218,9 @@ def host_distance(
     Scale design (100 TB / 10^8-host graph): per round, ONE edge-table
     shuffle (the relaxation join on ``src``) + one node-bounded MIN
     fold with map-side partials; the dist table is node-bounded and
-    broadcasts when it fits (``broadcast_dist=True``), else a
-    co-partitioned join. ``max_hops`` is fixed and small (crawl
-    schedulers care about the first few hops), so the unrolled lineage
-    stays bounded; ``checkpoint_every`` cuts it for deeper runs. No
+    broadcast into the relaxation join. ``max_hops`` is fixed and small
+    (crawl schedulers care about the first few hops), so the unrolled
+    lineage stays bounded; ``checkpoint_every`` cuts it for deeper runs. No
     step collects.
     """
     if max_hops < 0:
@@ -236,7 +230,7 @@ def host_distance(
         "host", F.lit(0).cast("int").alias("hops")
     )
     for it in range(max_hops):
-        d = F.broadcast(dist) if broadcast_dist else dist
+        d = F.broadcast(dist)
         relaxed = (
             e.join(d, e["src"] == d["host"])
             .select(F.col("dst").alias("host"), (F.col("hops") + 1).alias("hops"))
@@ -349,7 +343,6 @@ def crawl_frontier(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "host",
-    materialize_edges: bool = True,
 ) -> DataFrame:
     """The graph suite's flagship composition — the crawl-frontier
     priority table (Cho/Garcia-Molina/Page WWW'98 combine importance
@@ -362,8 +355,8 @@ def crawl_frontier(
     reciprocity, divided by seed distance — exact BIGINT throughout
     (staged div order is the contract). Only hosts within the BFS
     horizon appear (beyond-horizon hosts are not fetchable this cycle
-    by definition). Input edges are deduped once and shared by all
-    three component passes.
+    by definition). Input edges are deduped once and pinned with an
+    eager ``localCheckpoint``, which all three component passes share.
 
     Returns ``(host, hops, rank_ppb, recip_ppm, priority_ppb)``.
     Scale: inherits the component designs (node-bounded rank/dist
@@ -380,9 +373,9 @@ def crawl_frontier(
     # PageRank, reciprocity), each of whose per-round lineage re-derives
     # it — materialize it once per call (edge-bounded host graph, never
     # corpus-sized; the documented production form is a persisted edge
-    # table). False keeps the fully lazy plan (audits/explain).
-    if materialize_edges:
-        e = e.localCheckpoint(eager=True)
+    # table). Without the pin, the sf0.01 `frontier` query on 4 cores
+    # took 2.5 s instead of 1.6 s.
+    e = e.localCheckpoint(eager=True)
     d = host_distance(e, seeds, max_hops=max_hops, seed_col=seed_col)
     r = host_pagerank(e, iterations=iterations)
     rec = reciprocal_links(e)
@@ -408,7 +401,6 @@ def host_trustrank(
     src_col: str = "src",
     dst_col: str = "dst",
     seed_col: str = "host",
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Seeded TrustRank over a host edge list — the classic web-spam
     demotion complement to PageRank (Gyongyi/Garcia-Molina/Pedersen,
@@ -435,7 +427,7 @@ def host_trustrank(
     Scale design (100 TB / 10^8-host graph): identical movement to
     :func:`host_pagerank` — the edge list shuffles ONCE per iteration
     in the map-side-combinable contribution fold; the trust table is
-    node-bounded and broadcast when it fits (``broadcast_ranks``); the
+    node-bounded and broadcast into the edge join; the
     seed set is crawl-curated (thousands), always broadcast via the
     node-table left join. No step collects.
     """
@@ -468,9 +460,7 @@ def host_trustrank(
     )
 
     for _ in range(iterations):
-        src_side = trust.join(outdeg, "host")  # dangling hosts drop here
-        if broadcast_ranks:
-            src_side = F.broadcast(src_side)
+        src_side = F.broadcast(trust.join(outdeg, "host"))  # dangling hosts drop
         contrib = e.join(src_side, e["src"] == src_side["host"]).select(
             F.col("dst").alias("host"),
             F.expr("trust div outdeg").alias("c"),
@@ -669,7 +659,6 @@ def host_hits(
     iterations: int = 2,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """HITS hubs & authorities over a host edge list (Kleinberg,
     "Authoritative sources in a hyperlinked environment", JACM 1999) —
@@ -693,8 +682,8 @@ def host_hits(
 
     Scale design (100 TB / 10^8-host graph): two edge-bounded
     map-side-combinable folds per iteration (HITS' irreducible
-    movement); the score tables are node-bounded and broadcast when
-    they fit (``broadcast_scores``); each normalization is ONE 1-row
+    movement); the score tables are node-bounded and broadcast into
+    each edge join and the final merge; each normalization is ONE 1-row
     total aggregate cross-joined back as a broadcast. No step
     collects. DuckDB twin :func:`host_hits_sql` (chained-CTE unroll).
     """
@@ -731,7 +720,7 @@ def host_hits(
     hub = nodes.select("host", F.lit(SCALE).alias("h"))
 
     for _ in range(iterations):
-        h_side = F.broadcast(hub) if broadcast_scores else hub
+        h_side = F.broadcast(hub)
         a_raw = (
             e.join(h_side, e["src"] == h_side["host"])
             .select(F.col("dst").alias("host"), F.col("h"))
@@ -744,7 +733,7 @@ def host_hits(
             ),
             "a",
         )
-        a_side = F.broadcast(auth) if broadcast_scores else auth
+        a_side = F.broadcast(auth)
         h_raw = (
             e.join(a_side, e["dst"] == a_side["host"])
             .select(F.col("src").alias("host"), F.col("a"))
@@ -760,9 +749,8 @@ def host_hits(
 
     # node-bounded final merge — broadcast explicitly (the checkpoint
     # pins strip stats, so auto-broadcast would fall back to SMJ)
-    hub_b = F.broadcast(hub) if broadcast_scores else hub
     return (
-        auth.join(hub_b, "host")
+        auth.join(F.broadcast(hub), "host")
         .select(
             "host",
             F.col("a").alias("auth_ppb"),
@@ -948,7 +936,6 @@ def k_core(
     rounds: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_alive: bool = True,
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-round k-core peel over the undirected host graph — the
@@ -967,8 +954,7 @@ def k_core(
     compact).
 
     Scale design (100 TB / 10^9-edge graph): per round, the alive set
-    is node-bounded and broadcasts when it fits
-    (``broadcast_alive=True``, the common case), so the edge table
+    is node-bounded and broadcast, so the edge table
     never shuffles for the induced-subgraph filter — two left-semi
     probes; the degree fold is map-side-combinable. ``rounds`` is fixed
     and small, lineage bounded; ``checkpoint_every`` cuts it for deeper
@@ -997,7 +983,7 @@ def k_core(
 
     alive = _deg(und).filter(F.col("deg") >= k)
     for it in range(rounds - 1):
-        a = F.broadcast(alive) if broadcast_alive else alive
+        a = F.broadcast(alive)
         induced = (
             und.join(a.select(F.col("host").alias("u")), "u", "left_semi")
             .join(a.select(F.col("host").alias("v")), "v", "left_semi")
@@ -1042,7 +1028,6 @@ def degree_assortativity(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_degrees: bool = True,
 ) -> DataFrame:
     """Directed out-in degree assortativity of the host graph — do
     high-fanout hosts link to high-fanin hosts? (Newman 2002: the
@@ -1065,19 +1050,16 @@ def degree_assortativity(
     Scale design: two node-bounded degree folds (map-side combinable,
     computed independently — no full-outer degree union is needed
     because x only ever keys on src and y on dst); the edge list — the
-    big table — is joined against them broadcast when
-    ``broadcast_degrees`` (the 10^8-host table is ~1.6 GB; flip to
-    False for a co-partitioned shuffle join beyond that), then ONE
-    combinable moment fold. Nothing collects, no window, no Python.
+    big table — is joined against both by broadcast (the 10^8-host
+    table is ~1.6 GB), then ONE combinable moment fold. Nothing
+    collects, no window, no Python.
     """
-    out_d = edges.groupBy(F.col(src_col).alias("__s")).agg(
+    out_d = F.broadcast(edges.groupBy(F.col(src_col).alias("__s")).agg(
         F.count(F.lit(1)).alias("x")
-    )
-    in_d = edges.groupBy(F.col(dst_col).alias("__t")).agg(
+    ))
+    in_d = F.broadcast(edges.groupBy(F.col(dst_col).alias("__t")).agg(
         F.count(F.lit(1)).alias("y")
-    )
-    if broadcast_degrees:
-        out_d, in_d = F.broadcast(out_d), F.broadcast(in_d)
+    ))
     xy = (
         edges.join(out_d, F.col(src_col) == F.col("__s"), "inner")
         .join(in_d, F.col(dst_col) == F.col("__t"), "inner")

@@ -353,7 +353,6 @@ def knn_kring(
     k: int = 5,
     zoom: int = KNN_ZOOM,
     ring: int = 1,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Scale-path kNN: expand each query's cell into its k-ring (a
     built-in array expression + explode — no driver-side loop and no
@@ -364,20 +363,16 @@ def knn_kring(
     back to widening callers if a ring under-fills (checked by tests
     against knn_bruteforce); :func:`knn_kring_exact` automates that.
 
-    ``broadcast_queries`` (default True) broadcasts the exploded query
-    cells — right up to ~10^6 probe rows, and the pages side then never
-    shuffles before the top-k. Set False for a query table too large to
-    broadcast: both sides shuffle on the cell key instead.
+    The exploded query cells are broadcast — right up to ~10^6 probe
+    rows, and the pages side then never shuffles before the top-k.
     """
     qcells = (
         queries_df.withColumn("cell", cell_id(F.col("q_lon"), F.col("q_lat"), zoom))
         .withColumn("cell", F.explode(k_ring_cells(F.col("cell"), ring)))
         .select("query_id", "q_lat", "q_lon", "cell")
     )
-    if broadcast_queries:
-        qcells = F.broadcast(qcells)
     with_cell = pages.withColumn("cell", cell_id(F.col("lon"), F.col("lat"), zoom))
-    joined = with_cell.join(qcells, "cell", "inner")
+    joined = with_cell.join(F.broadcast(qcells), "cell", "inner")
     return _knn_topk(joined, k)
 
 
@@ -420,7 +415,6 @@ def knn_kring_exact(
     zoom: int = KNN_ZOOM,
     start_ring: int = 1,
     max_ring: int = 64,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Provably exact k-ring kNN in TWO distributed phases (no per-round
     result collects — the only driver-side data is one aggregate row per
@@ -441,12 +435,10 @@ def knn_kring_exact(
     aggregate DataFrame (never a driver collect), so the query set can
     itself be a large table: the only eager materializations are two
     ``localCheckpoint``s of O(k·|queries|) and O(|queries|) rows, both
-    distributed. With ``broadcast_queries=False`` neither the exploded
-    ring cells nor the done-id set is broadcast (both scale with
-    |queries|); the brute-force fallback branch still broadcasts its
-    residual, which the adaptive ring routing keeps to the genuinely
-    empty-neighborhood queries — a tiny set for any real point
-    distribution.
+    distributed. The exploded ring cells, the done-id set and the
+    brute-force fallback's residual are broadcast; the adaptive ring
+    routing keeps that residual to the genuinely empty-neighborhood
+    queries — a tiny set for any real point distribution.
     """
     with_cell = pages.withColumn("cell", cell_id(F.col("lon"), F.col("lat"), zoom))
 
@@ -455,8 +447,7 @@ def knn_kring_exact(
     # of the big join (lineage truncated; blocks freed when the result
     # DataFrame is GC'd).
     phase1 = knn_kring(with_cell.drop("cell"), queries_df, k=k, zoom=zoom,
-                       ring=start_ring,
-                       broadcast_queries=broadcast_queries).localCheckpoint(eager=True)
+                       ring=start_ring).localCheckpoint(eager=True)
     stats = phase1.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n"), F.max("dist2").alias("dkth")
     )
@@ -510,9 +501,7 @@ def knn_kring_exact(
     )
 
     done_ids = routed.filter(F.col("ring") == -1).select("query_id")
-    if broadcast_queries:
-        done_ids = F.broadcast(done_ids)
-    out_done = phase1.join(done_ids, "query_id", "inner")
+    out_done = phase1.join(F.broadcast(done_ids), "query_id", "inner")
 
     exp = routed.filter(F.col("ring") > 0)
     qcells = (
@@ -520,9 +509,7 @@ def knn_kring_exact(
         .withColumn("cell", F.explode(k_ring_cells(F.col("cell"), F.col("ring"))))
         .select("query_id", "q_lat", "q_lon", "cell")
     )
-    if broadcast_queries:
-        qcells = F.broadcast(qcells)
-    out_expand = _knn_topk(with_cell.join(qcells, "cell", "inner"), k)
+    out_expand = _knn_topk(with_cell.join(F.broadcast(qcells), "cell", "inner"), k)
 
     brute_q = routed.filter(F.col("ring") == -2).select("query_id", "q_lat", "q_lon")
     out_brute = knn_bruteforce(pages, brute_q, k=k)

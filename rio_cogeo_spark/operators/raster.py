@@ -274,7 +274,6 @@ def build_pixel_pyramid(
     levels: int,
     px: int = grid.DEFAULT_BLOCKSIZE,
     kernel: str = "sum",
-    salt_partials: bool = False,
 ) -> DataFrame:
     """Rasterized overview pyramid: base density tiles at ``max_zoom``,
     then ``levels`` pixel-level overview builds with ``kernel`` — the
@@ -283,19 +282,21 @@ def build_pixel_pyramid(
 
     Output: (zoom, tile_x, tile_y, pixels array<long>) for zooms
     ``max_zoom .. max_zoom - levels``. Each level's groupBy shuffles ~4x
-    fewer, fixed-size rows (px*px longs). Every level is persisted, so
-    its ``applyInPandas`` merge runs once for both its union branch and
-    the next level; the persisted levels stay cached after the call.
+    fewer, fixed-size rows (px*px longs). Nothing is persisted: each
+    level is both a union branch and the next level's input, and
+    exchange reuse shares its input exchange between the two, so each
+    level's ``applyInPandas`` merge runs at most twice per action and
+    nothing stays cached after it.
     """
     if kernel not in ALL_KERNELS:
         raise ValueError(
             f"Invalid overview resampling kernel: {kernel}. "
             f"Should be one of {sorted(ALL_KERNELS)}."
         )
-    level = rasterize_tiles(pages, max_zoom, px, salt_partials=salt_partials).persist()
+    level = rasterize_tiles(pages, max_zoom, px)
     out = level
     for _ in range(levels):
-        level = downsample_pixel_level(level, px, kernel).persist()
+        level = downsample_pixel_level(level, px, kernel)
         out = out.unionByName(level)
     return out
 

@@ -1510,7 +1510,6 @@ BENFORD_PPM = (301029, 176091, 124938, 96910, 79181,
 def benford(
     df: DataFrame,
     key_col: str = "host",
-    reuse_counts: bool = True,
 ) -> DataFrame:
     """Benford's-law first-digit audit over a per-key count
     distribution (pages per host): the classic forensic test for
@@ -1526,17 +1525,17 @@ def benford(
     sign/zero cases); shares are integer-div ppm; ``dev_ppm`` is a
     plain integer subtraction. Hash-exact by construction.
 
-    Scale design: ONE corpus fold to the per-key count table, one
-    9-group fold over it, broadcast of the 9-row literal digit table.
+    Scale design: ONE corpus fold to the per-key count table
+    (localCheckpoint-pinned — the digit fold and the key total both
+    read it), one 9-group fold over it, broadcast of the 9-row literal
+    digit table.
     """
     spark = df.sparkSession
+    # the digit fold and the key total both read this fold; pin it so
+    # the corpus folds ONCE
     counts = df.groupBy(F.col(key_col).alias("k")).agg(
         F.count(F.lit(1)).alias("cnt")
-    )
-    if reuse_counts:
-        # the digit fold and the key total both read this fold; pin it
-        # so the corpus folds ONCE
-        counts = counts.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     obs = counts.select(
         F.substring(F.col("cnt").cast("string"), 1, 1).cast("int")
         .alias("digit")
@@ -1690,7 +1689,6 @@ def spearman(
     df: DataFrame,
     a_col: str,
     b_col: str,
-    reuse_joint: bool = True,
 ) -> DataFrame:
     """Spearman rank correlation between two integer columns (the
     quality-signal sanity check: "does token count actually track
@@ -1709,19 +1707,18 @@ def spearman(
     constant.
 
     Scale design: ONE corpus fold to the JOINT (a, b) frequency table
-    (bounded by distinct value pairs); the marginal rank tables derive
+    (bounded by distinct value pairs, localCheckpoint-pinned because
+    three subtrees read it); the marginal rank tables derive
     from it and broadcast back; windows touch only the tiny marginal
     tables. The corpus never shuffles twice and nothing collects.
     """
+    # three subtrees (joint terms + two marginal rank tables) read this
+    # fold; localCheckpoint pins it so the corpus folds ONCE (the
+    # dedup.py df_cap discipline)
     joint = df.groupBy(
         F.col(a_col).cast("long").alias("av"),
         F.col(b_col).cast("long").alias("bv"),
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    if reuse_joint:
-        # three subtrees (joint terms + two marginal rank tables) read
-        # this fold; localCheckpoint pins it so the corpus folds ONCE
-        # (the dedup.py df_cap discipline)
-        joint = joint.localCheckpoint(eager=False)
+    ).agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint(eager=False)
     wa = Window.orderBy("av").rowsBetween(Window.unboundedPreceding, -1)
     ranks_a = (
         joint.groupBy("av").agg(F.sum("cnt").alias("f"))
@@ -1807,7 +1804,6 @@ def volume_acf(
     pages: DataFrame,
     max_lag: int = 7,
     ts_col: str = "ts_sec",
-    reuse_days: bool = True,
 ) -> DataFrame:
     """Autocorrelation of the daily crawl volume at lags ``1…max_lag``
     — the seasonality read behind :func:`volume_anomaly` (a weekly
@@ -1825,18 +1821,17 @@ def volume_acf(
     NULL when the series is constant.
 
     Scale design: ONE map-side-combinable day-count fold over the
-    corpus; the lag windows, the 1-row (N, S) broadcast, and the
-    per-lag folds all run on the DAY table (rows = distinct days).
+    corpus, localCheckpoint-pinned; the lag windows, the 1-row (N, S)
+    broadcast, and the per-lag folds all run on the DAY table (rows =
+    distinct days).
     """
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
+    # the (N, S) totals and the lag table both read the day fold; pin
+    # it so the corpus folds ONCE
     days = pages.select(
         F.expr(f"{ts_col} div 86400").alias("day")
-    ).groupBy("day").agg(F.count(F.lit(1)).alias("y"))
-    if reuse_days:
-        # the (N, S) totals and the lag table both read the day fold;
-        # pin it so the corpus folds ONCE
-        days = days.localCheckpoint(eager=False)
+    ).groupBy("day").agg(F.count(F.lit(1)).alias("y")).localCheckpoint(eager=False)
     totals = days.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("_n"),
         F.sum(F.col("y").cast("decimal(38,0)")).alias("_s"),
@@ -1923,7 +1918,6 @@ def group_boxplot(
     docs: DataFrame,
     value_col: str = "n_chars",
     group_col: str = "lang",
-    reuse: bool = True,
 ) -> DataFrame:
     """Per-group Tukey box-plot summary with EXACT integer fences —
     the outlier dashboard over :func:`group_quantiles`: quartiles, the
@@ -1942,12 +1936,10 @@ def group_boxplot(
     count both read it); the fence table is group-bounded and
     broadcasts back. No corpus sort, no per-row window.
     """
+    # quantile probe and outlier count both read this fold
     freq = docs.groupBy(
         F.col(group_col).alias("grp"), F.col(value_col).cast("long").alias("v")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    if reuse:
-        # quantile probe and outlier count both read this fold
-        freq = freq.localCheckpoint(eager=False)
+    ).agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint(eager=False)
     w = (
         Window.partitionBy("grp").orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

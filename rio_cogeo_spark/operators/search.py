@@ -359,7 +359,6 @@ def tfidf_keywords(
     k: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_df: bool = True,
 ) -> DataFrame:
     """Per-document top-k keyword extraction by exact-integer tf-idf —
     the pipeline primitive behind topic tagging, corpus browsing, and
@@ -373,9 +372,7 @@ def tfidf_keywords(
 
     Scale design (100 TB): the postings build is the one corpus-width
     explode (map-side-combinable groupBy); document frequencies are a
-    vocab-bounded second aggregate joined back by term — broadcast when
-    the vocabulary fits (``broadcast_df=True``), else a co-partitioned
-    shuffle join with one build row per term; N joins as a broadcast
+    vocab-bounded second aggregate broadcast back by term; N joins as a broadcast
     1-row aggregate; the per-doc rank window's partition is one
     document's DISTINCT terms (bounded by doc vocabulary, never the
     corpus), so no partition outgrows memory at any corpus size.
@@ -384,9 +381,7 @@ def tfidf_keywords(
     df_by_term = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_total = docs.agg(F.count(F.lit(1)).alias("n_total"))
     scored = (
-        postings.join(
-            F.broadcast(df_by_term) if broadcast_df else df_by_term, "term"
-        )
+        postings.join(F.broadcast(df_by_term), "term")
         .crossJoin(F.broadcast(n_total))
         .withColumn(
             "score", F.col("tf") * F.expr(f"(n_total * {_IDF_SCALE}) div df")

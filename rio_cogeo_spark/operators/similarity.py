@@ -217,7 +217,6 @@ def ann_ivf_topk(
     n_probe: int = 3,
     list_col: str = "label",
     include_self: bool = False,
-    broadcast_queries: bool = True,
     lloyd_iters: int = 0,
     n_lists: int = None,
 ) -> DataFrame:
@@ -231,10 +230,9 @@ def ann_ivf_topk(
     Probe routing is distributed: the (tiny) centroid matrix ships to
     executors inside the routing UDF's closure and each query's n_probe
     list is computed vectorized per Arrow batch, then exploded — the
-    query table is never collected, so queries can themselves be a large
-    table. ``broadcast_queries`` keeps the probe side broadcast (right
-    for <=10^6 probe rows); set False to let the optimizer shuffle both
-    sides on ivf_list when the query table is huge.
+    query table is never collected. The exploded probe side is
+    broadcast into the join on ``ivf_list`` (right for <=10^6 probe
+    rows).
 
     ``n_lists`` switches the quantizer to the label-free k-means++
     sample seed (see :func:`ivf_build_centroids`) — the right mode for a
@@ -257,9 +255,7 @@ def ann_ivf_topk(
     probes = queries.withColumn(
         "ivf_list", F.explode(_probe_lists(F.col("q_embedding")))
     )
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    joined = indexed.join(probes, "ivf_list", "inner")
+    joined = indexed.join(F.broadcast(probes), "ivf_list", "inner")
     if not include_self:
         joined = joined.filter(F.col("vec_id") != F.col("query_id"))
     cos = cosine_rounded(F.col("embedding"), F.col("q_embedding"))
@@ -373,7 +369,6 @@ def ann_ivf_topk_with_index(
     k: int = 10,
     n_probe: int = 3,
     include_self: bool = False,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF ANN against a prebuilt quantizer (see :func:`ivf_save_index`)
     — identical query plan to :func:`ann_ivf_topk` minus the build."""
@@ -391,9 +386,7 @@ def ann_ivf_topk_with_index(
     probes = queries.withColumn(
         "ivf_list", F.explode(_probe_lists(F.col("q_embedding")))
     )
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    joined = indexed.join(probes, "ivf_list", "inner")
+    joined = indexed.join(F.broadcast(probes), "ivf_list", "inner")
     if not include_self:
         joined = joined.filter(F.col("vec_id") != F.col("query_id"))
     cos = cosine_rounded(F.col("embedding"), F.col("q_embedding"))
@@ -560,7 +553,6 @@ def bitext_mine(
     src_id: str = "src_id",
     tgt_id: str = "tgt_id",
     vec_col: str = "embedding",
-    broadcast_tgt: bool = True,
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk, ACL 2019 — the
     LASER / CCMatrix / ParaCrawl parallel-corpus miner): for every
@@ -590,9 +582,9 @@ def bitext_mine(
     source with ``margin_ppm >= margin_threshold_ppm``.
 
     Scale design (100 TB): this is the EXACT path — the target set
-    broadcasts (``broadcast_tgt``, the ann_bruteforce_topk discipline)
-    and the corpus-side table never shuffles except the two id-bounded
-    neighborhood folds (map-side-combinable sum/count per id). At
+    and its neighborhood means broadcast (the ann_bruteforce_topk
+    discipline) and the corpus-side table never shuffles except the
+    two id-bounded neighborhood folds (map-side-combinable sum/count per id). At
     trillion-vector scale, swap the crossJoin candidate generator for
     the IVF routing already in this module (``ivf_assign_lists`` /
     :func:`semantic_dedup_pairs`'s cluster-local expansion) — margin
@@ -609,7 +601,7 @@ def bitext_mine(
 
     s = src.select(F.col(src_id), F.col(vec_col).alias("_sv"))
     t = tgt.select(F.col(tgt_id), F.col(vec_col).alias("_tv"))
-    pairs = s.crossJoin(F.broadcast(t) if broadcast_tgt else t).select(
+    pairs = s.crossJoin(F.broadcast(t)).select(
         src_id,
         tgt_id,
         F.round(cosine_rounded(F.col("_sv"), F.col("_tv")) * 1_000_000, 0)
@@ -642,11 +634,9 @@ def bitext_mine(
     # a_src is src-cardinality (joins back co-partitioned on src_id — a
     # legitimate shuffle at corpus scale); a_tgt is target-bounded and
     # rides the same broadcast budget as the target set itself
-    if broadcast_tgt:
-        a_tgt = F.broadcast(a_tgt)
     scored = (
         pairs.join(a_src, src_id)
-        .join(a_tgt, tgt_id)
+        .join(F.broadcast(a_tgt), tgt_id)
         .filter(F.col("a_src") + F.col("a_tgt") > 0)
         .select(
             src_id,
@@ -725,7 +715,6 @@ def hard_negatives(
     score_col: str = "cos",
     src: str = "doc_a",
     dst: str = "doc_b",
-    broadcast_components: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (DPR, Karpukhin et
     al. EMNLP'20; SimCSE): per anchor, the top-``k`` most-similar
@@ -745,7 +734,7 @@ def hard_negatives(
 
     Scale design (100 TB): the component table is bounded by the
     DUPLICATE population (never the corpus) and broadcasts twice onto
-    the candidate pool (``broadcast_components=True``); the pool itself
+    the candidate pool; the pool itself
     is n_queries x pool_k rows; the final rank window is per-query and
     bounded by pool_k. The corpus never shuffles — mining happened
     upstream in the ANN operator.
@@ -753,14 +742,12 @@ def hard_negatives(
     from rio_cogeo_spark.operators.dedup import connected_components
 
     comp = connected_components(pairs, src, dst)
-    cq = comp.select(
+    cq = F.broadcast(comp.select(
         F.col("doc_id").alias(query_col), F.col("component").alias("_q_comp")
-    )
-    cc = comp.select(
+    ))
+    cc = F.broadcast(comp.select(
         F.col("doc_id").alias(cand_col), F.col("component").alias("_c_comp")
-    )
-    if broadcast_components:
-        cq, cc = F.broadcast(cq), F.broadcast(cc)
+    ))
     w = Window.partitionBy(query_col).orderBy(
         F.col(score_col).desc(), F.col(cand_col).asc()
     )

@@ -13,6 +13,7 @@ from test_plan_shapes import plan_of
 
 from rio_cogeo_spark import grid
 from rio_cogeo_spark.errors import IncompatibleOptions
+from rio_cogeo_spark.operators import rarity, sampling
 from rio_cogeo_spark.operators import translate as T
 from rio_cogeo_spark.synth import synth_pages
 
@@ -1199,18 +1200,6 @@ def test_token_rarity_scores_common_vs_rare(spark):
     assert got[3]["n_tokens"] == 2
 
 
-def test_token_rarity_broadcast_off_identical(spark):
-    from rio_cogeo_spark.operators.rarity import token_rarity
-
-    df = spark.createDataFrame(
-        [(i, f"w{i % 3} common common") for i in range(12)],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, token_rarity(df, broadcast_vocab=True).collect()))
-    b = sorted(map(tuple, token_rarity(df, broadcast_vocab=False).collect()))
-    assert a == b
-
-
 def test_snapshot_paragraph_diff_add_remove_common(spark):
     from rio_cogeo_spark.operators.dedup import snapshot_paragraph_diff
 
@@ -1903,16 +1892,22 @@ def test_bigram_lm_conditional_scores(spark):
     assert got[2]["novel_frac_ppm"] == 500_000
 
 
-def test_bigram_lm_broadcast_off_identical(spark):
-    from rio_cogeo_spark.operators.rarity import bigram_lm
-
+@pytest.mark.parametrize("fn, switch, args", [
+    (rarity.token_rarity, "broadcast_vocab", ()),
+    (rarity.bigram_lm, "broadcast_model", ()),
+    (sampling.importance_weights, "broadcast_model", ("lang = 'en'",)),
+], ids=["token_rarity", "bigram_lm", "importance_weights"])
+def test_broadcast_off_identical(spark, fn, switch, args):
+    # the shuffle-join plan a caller picks for a model too large to
+    # broadcast gives the broadcast plan's rows
     df = spark.createDataFrame(
-        [(i, f"w{i % 3} common common w{i % 5}") for i in range(12)],
-        "doc_id long, text string",
+        [(i, f"w{i % 3} common common w{i % 5}", ("en", "de")[i % 2])
+         for i in range(12)],
+        "doc_id long, text string, lang string",
     )
-    a = sorted(map(tuple, bigram_lm(df, broadcast_model=True).collect()))
-    b = sorted(map(tuple, bigram_lm(df, broadcast_model=False).collect()))
-    assert a == b
+    a = sorted(map(tuple, fn(df, *args, **{switch: True}).collect()))
+    b = sorted(map(tuple, fn(df, *args, **{switch: False}).collect()))
+    assert a and a == b
 
 
 def test_lexical_diversity_ttr_and_hapax(spark):

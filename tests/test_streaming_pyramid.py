@@ -5,6 +5,7 @@ commits, replay idempotency (streaming/pyramid.py).
 import pytest
 from pyspark.sql import functions as F
 
+from rio_cogeo_spark.operators.raster import build_pixel_pyramid
 from rio_cogeo_spark.operators.translate import cog_translate, warp_bands
 from rio_cogeo_spark.streaming.pyramid import (
     maintain_pyramid,
@@ -87,9 +88,10 @@ def test_streaming_available_now_matches_batch(spark, tmp_path):
 
 
 def test_pyramid_builds_leave_no_cached_data(spark, tmp_path):
-    # cog_translate is a lazy plan: neither a direct build (the fold
-    # path and the level chain of a non-foldable avg band) nor a run of
-    # store updates may leave cached data behind in the session
+    # cog_translate and build_pixel_pyramid are lazy plans: neither a
+    # direct build (the fold path and the level chain of a non-foldable
+    # avg band, or the pixel level chain) nor a run of store updates may
+    # leave cached data behind in the session
     def cache_empty():
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -99,6 +101,8 @@ def test_pyramid_builds_leave_no_cached_data(spark, tmp_path):
         tiles, _ = cog_translate(pages, max_zoom=10, overview_level=6, bands=bands)
         assert tiles.count() > 0
         assert cache_empty()
+    assert build_pixel_pyramid(pages, max_zoom=5, levels=2, px=4).count() > 0
+    assert cache_empty()
     store = str(tmp_path / "store")
     for i in range(3):
         batch = pages.filter(F.col("doc_id") % 3 == i)
