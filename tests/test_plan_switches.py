@@ -15,24 +15,27 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "rio_cogeo_spark"
-SWITCH = re.compile(r"^(broadcast_|reuse|materialize_|salt_)")
+PREFIX = r"(broadcast_|reuse|materialize_|salt_)"
+SWITCH = re.compile("^" + PREFIX)
 
 
-def _py_files(root):
-    for path in sorted(root.rglob("*.py")):
-        if not any(part.startswith(".") for part in path.relative_to(REPO).parts):
-            yield path
+def _trees():
+    """``{path: module}`` for every repo file that mentions a switch name."""
+    trees = {}
+    for path in sorted(REPO.rglob("*.py")):
+        if any(part.startswith(".") for part in path.relative_to(REPO).parts):
+            continue
+        text = path.read_text()
+        if re.search(r"\b" + PREFIX, text):
+            trees[path] = ast.parse(text, filename=str(path))
+    return trees
 
 
-def _parse(path):
-    return ast.parse(path.read_text(), filename=str(path))
-
-
-def _switches():
+def _switches(trees):
     """``{(function, param): default}`` for every bool plan switch."""
     found = {}
-    for path in _py_files(PACKAGE):
-        for node in ast.walk(_parse(path)):
+    for tree in trees:
+        for node in ast.walk(tree):
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             a = node.args
@@ -54,16 +57,20 @@ def _bools(nodes):
     return {n.value for n in nodes if isinstance(n, ast.Constant) and isinstance(n.value, bool)}
 
 
-def _flipped_literals():
-    """``{(callee, keyword): {literal bools passed}}`` over every call in the repo."""
+def _is_parametrized(fn):
+    return any(_name(getattr(d, "func", None)) == "parametrize" for d in fn.decorator_list)
+
+
+def _flipped_literals(trees):
+    """``{(callee, keyword): {literal bools passed}}`` over every call."""
     seen = {}
-    for path in _py_files(REPO):
-        for node in ast.walk(_parse(path)):
+    for tree in trees:
+        for node in ast.walk(tree):
             if isinstance(node, ast.Call):
                 for kw in node.keywords:
                     for b in _bools([kw.value] if kw.arg else []):
                         seen.setdefault((_name(node.func), kw.arg), set()).add(b)
-            elif isinstance(node, ast.FunctionDef) and node.decorator_list:
+            elif isinstance(node, ast.FunctionDef) and _is_parametrized(node):
                 # parametrized over (function, switch): credit each row
                 # with the bools the body splats in via **{switch: ...}
                 splat = _bools(
@@ -82,9 +89,10 @@ def _flipped_literals():
 
 
 def test_every_plan_switch_has_a_caller_that_flips_it():
-    switches = _switches()
+    trees = _trees()
+    switches = _switches(t for p, t in trees.items() if PACKAGE in p.parents)
     assert switches, "scan found no switches; the pattern or package path is stale"
-    seen = _flipped_literals()
+    seen = _flipped_literals(trees.values())
     unflipped = sorted(
         f"{fn}({param}={default})"
         for (fn, param), default in switches.items()

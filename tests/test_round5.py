@@ -1899,10 +1899,17 @@ def test_bigram_lm_conditional_scores(spark):
 ], ids=["token_rarity", "bigram_lm", "importance_weights"])
 def test_broadcast_off_identical(spark, fn, switch, args):
     # the shuffle-join plan a caller picks for a model too large to
-    # broadcast gives the broadcast plan's rows
+    # broadcast gives the broadcast plan's rows. The input is built from
+    # pandas (an Arrow local relation), so no action re-runs a Python
+    # worker to scan it.
+    import pandas as pd
+
     df = spark.createDataFrame(
-        [(i, f"w{i % 3} common common w{i % 5}", ("en", "de")[i % 2])
-         for i in range(12)],
+        pd.DataFrame(
+            [(i, f"w{i % 3} common common w{i % 5}", ("en", "de")[i % 2])
+             for i in range(12)],
+            columns=["doc_id", "text", "lang"],
+        ),
         "doc_id long, text string, lang string",
     )
     a = sorted(map(tuple, fn(df, *args, **{switch: True}).collect()))
