@@ -471,7 +471,7 @@ def q_semantic_dedup(spark, sf_dir):
         "vec_id", F.col("vec_id") + 10_000
     )
     both = emb.unionByName(copies)
-    cent = SIM.ivf_build_centroids(both, list_col="label", lloyd_iters=0)
+    cent = SIM.ivf_build_centroids(both, lloyd_iters=0)
     return SIM.semantic_dedup_pairs(both, cent, threshold=0.4)
 
 
@@ -724,14 +724,14 @@ def q_gini(spark, sf_dir):
 
     pages = _pages(spark, sf_dir)
     hosts = pages.select(TX.host_col(F.col("url")).alias("host"))
-    return host_concentration(hosts, "host")
+    return host_concentration(hosts)
 
 
 def _gini_oracle() -> str:
     from rio_cogeo_spark.operators.report import host_concentration_sql
 
     inner = f"{pages_cte('VARCHAR')} SELECT {TX.HOST_SQL} AS host FROM pages"
-    return host_concentration_sql(inner, "host")
+    return host_concentration_sql(inner)
 
 
 def q_chi2(spark, sf_dir):
@@ -762,7 +762,7 @@ def q_zipf(spark, sf_dir):
     from rio_cogeo_spark.operators.report import zipf_slope
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return zipf_slope(docs, "text", top_k=500)
+    return zipf_slope(docs, top_k=500)
 
 
 def _zipf_oracle() -> str:
@@ -828,14 +828,14 @@ def q_heaps(spark, sf_dir):
     from rio_cogeo_spark.operators.report import heaps_fit
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return heaps_fit(docs, "doc_id", "text", n_points=8)
+    return heaps_fit(docs, n_points=8)
 
 
 def _heaps_oracle() -> str:
     from rio_cogeo_spark.functions.text import TOKENS_SQL
     from rio_cogeo_spark.operators.report import heaps_fit_sql
 
-    return heaps_fit_sql("documents", TOKENS_SQL, "doc_id", n_points=8)
+    return heaps_fit_sql("documents", TOKENS_SQL, n_points=8)
 
 
 def q_entropy(spark, sf_dir):
@@ -845,14 +845,14 @@ def q_entropy(spark, sf_dir):
     from rio_cogeo_spark.operators.report import lang_entropy
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return lang_entropy(docs, "text", "lang")
+    return lang_entropy(docs)
 
 
 def _entropy_oracle() -> str:
     from rio_cogeo_spark.functions.text import TOKENS_SQL
     from rio_cogeo_spark.operators.report import lang_entropy_sql
 
-    return lang_entropy_sql("documents", TOKENS_SQL, "lang")
+    return lang_entropy_sql("documents", TOKENS_SQL)
 
 
 def q_data_checks(spark, sf_dir):
@@ -948,7 +948,7 @@ def q_quality_cut(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return filter_by_group_quantile(
-        docs, q=0.25, value_col="n_chars", group_col="lang"
+        docs, q=0.25
     ).select("doc_id", "lang", "n_chars")
 
 
@@ -1220,15 +1220,13 @@ def q_curriculum(spark, sf_dir):
     from rio_cogeo_spark.operators.sampling import curriculum_interleave
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return curriculum_interleave(docs, group_col="lang", score_col="n_chars")
+    return curriculum_interleave(docs, score_col="n_chars")
 
 
 def _curriculum_oracle() -> str:
     from rio_cogeo_spark.operators.sampling import curriculum_interleave_sql
 
-    return curriculum_interleave_sql(
-        "documents", group_col="lang", score_expr="n_chars"
-    )
+    return curriculum_interleave_sql("documents", score_expr="n_chars")
 
 
 def q_temperature_mix(spark, sf_dir):
@@ -1298,7 +1296,7 @@ def q_vocab_stats(spark, sf_dir):
     from rio_cogeo_spark.operators.rarity import vocab_stats
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return vocab_stats(docs, group_col="lang")
+    return vocab_stats(docs)
 
 
 def q_corpus_info(spark, sf_dir):
@@ -1316,7 +1314,7 @@ def q_median_chars(spark, sf_dir):
     from rio_cogeo_spark.operators.report import group_median
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return group_median(docs, value_col="n_chars", group_col="lang")
+    return group_median(docs, group_col="lang")
 
 
 def q_host_distance(spark, sf_dir):
@@ -1371,7 +1369,7 @@ def q_quartiles(spark, sf_dir):
     from rio_cogeo_spark.operators.report import group_quantiles
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return group_quantiles(docs, value_col="n_chars", group_col="lang")
+    return group_quantiles(docs)
 
 
 def q_gopher(spark, sf_dir):
@@ -2458,7 +2456,7 @@ def q_readability(spark, sf_dir):
     """Flesch reading-ease corpus quality signal: word / sentence /
     vowel-group-syllable counts + the x1000 exact-BIGINT score."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    rs = TX.readability_stats("text")
+    rs = TX.readability_stats()
     return docs.select(
         "doc_id",
         rs["n_words"].alias("n_words"),
@@ -2998,14 +2996,14 @@ def q_benford(spark, sf_dir):
 
     pages = _pages(spark, sf_dir)
     hosts = pages.select(TX.host_col(F.col("url")).alias("host"))
-    return benford(hosts, "host")
+    return benford(hosts)
 
 
 def _benford_oracle() -> str:
     from rio_cogeo_spark.operators.report import benford_sql
 
     inner = f"{pages_cte('VARCHAR')} SELECT {TX.HOST_SQL} AS host FROM pages"
-    return benford_sql(inner, "host")
+    return benford_sql(inner)
 
 
 def q_mannwhitney(spark, sf_dir):
@@ -3268,13 +3266,13 @@ def q_boxplot(spark, sf_dir):
     from rio_cogeo_spark.operators.report import group_boxplot
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return group_boxplot(docs, "n_chars", "lang")
+    return group_boxplot(docs)
 
 
 def _boxplot_oracle() -> str:
     from rio_cogeo_spark.operators.report import group_boxplot_sql
 
-    return group_boxplot_sql("documents", "n_chars", "lang")
+    return group_boxplot_sql("documents")
 
 
 def q_equalize(spark, sf_dir):
@@ -3502,13 +3500,13 @@ def q_kruskal(spark, sf_dir):
     from rio_cogeo_spark.operators.report import kruskal_wallis
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return kruskal_wallis(docs, "n_chars", "lang")
+    return kruskal_wallis(docs)
 
 
 def _kruskal_oracle() -> str:
     from rio_cogeo_spark.operators.report import kruskal_wallis_sql
 
-    return kruskal_wallis_sql("documents", "n_chars", "lang")
+    return kruskal_wallis_sql("documents")
 
 
 def q_cusum(spark, sf_dir):
@@ -3973,7 +3971,7 @@ def q_theilsen(spark, sf_dir):
             + F.col("id") % 1800
         ).alias("ts_sec")
     )
-    return theil_sen_days(pages.unionByName(ramp), "ts_sec")
+    return theil_sen_days(pages.unionByName(ramp))
 
 
 def _theilsen_oracle() -> str:
@@ -3985,7 +3983,7 @@ def _theilsen_oracle() -> str:
     + id % 1800 AS ts_sec FROM range(600) t(id))
 , ts_all AS (SELECT ts_sec FROM pages
              UNION ALL SELECT ts_sec FROM ts_ramp)"""
-    return theil_sen_days_sql(cte, "ts_sec", table="ts_all")
+    return theil_sen_days_sql(cte, table="ts_all")
 
 
 def q_mann_kendall(spark, sf_dir):
@@ -4006,7 +4004,7 @@ def q_mann_kendall(spark, sf_dir):
             + F.col("id") % 1800
         ).alias("ts_sec")
     )
-    return mann_kendall_days(pages.unionByName(ramp), "ts_sec")
+    return mann_kendall_days(pages.unionByName(ramp))
 
 
 def _mann_kendall_oracle() -> str:
@@ -4018,7 +4016,7 @@ def _mann_kendall_oracle() -> str:
     + id % 1800 AS ts_sec FROM range(600) t(id))
 , ts_all AS (SELECT ts_sec FROM pages
              UNION ALL SELECT ts_sec FROM ts_ramp)"""
-    return mann_kendall_days_sql(cte, "ts_sec", table="ts_all")
+    return mann_kendall_days_sql(cte, table="ts_all")
 
 
 def q_transitions(spark, sf_dir):
@@ -5072,15 +5070,13 @@ def q_cell_median(spark, sf_dir):
         .cast("long").alias("cell_id"),
         "n_chars",
     )
-    return group_median(pts, value_col="n_chars", group_col="cell_id")
+    return group_median(pts, group_col="cell_id")
 
 
 def _cell_median_oracle() -> str:
     from rio_cogeo_spark.operators.report import group_median_sql
 
-    inner = group_median_sql(
-        "assigned", value_col="n_chars", group_col="cell_id"
-    ).strip()
+    inner = group_median_sql("assigned", group_col="cell_id").strip()
     assert inner.startswith("WITH ")
     assigned = (
         f"{_P}\n, assigned AS (SELECT"
@@ -7300,7 +7296,7 @@ def _lexdiv_oracle() -> str:
 def _vocab_stats_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import vocab_stats_sql
 
-    return vocab_stats_sql("documents", group_col="lang")
+    return vocab_stats_sql("documents")
 
 
 def _collocations_oracle() -> str:
@@ -7347,8 +7343,7 @@ def _corpus_info_oracle() -> str:
 def _median_chars_oracle() -> str:
     from rio_cogeo_spark.operators.report import group_median_sql
 
-    return group_median_sql("documents", value_col="n_chars",
-                            group_col="lang")
+    return group_median_sql("documents", group_col="lang")
 
 
 def _host_distance_oracle() -> str:
@@ -7428,8 +7423,7 @@ FROM win GROUP BY 1"""
 def _quartiles_oracle() -> str:
     from rio_cogeo_spark.operators.report import group_quantiles_sql
 
-    return group_quantiles_sql("documents", value_col="n_chars",
-                               group_col="lang")
+    return group_quantiles_sql("documents")
 
 
 def _gopher_oracle() -> str:

@@ -16,13 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-def with_hilbert(
-    df: DataFrame,
-    zoom: int,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    out_col: str = "hilbert",
-) -> DataFrame:
+def with_hilbert(df: DataFrame, zoom: int) -> DataFrame:
     """Hilbert-curve index of each tile — the locality-superior
     alternative to :func:`morton_key` for range-partitioned layout
     (consecutive Hilbert keys are ALWAYS rook-adjacent cells, so a
@@ -42,8 +36,8 @@ def with_hilbert(
     if not (0 <= zoom <= 31):
         raise ValueError(f"zoom must be in [0, 31], got {zoom}")
     n = 1 << zoom
-    out = df.withColumn("_hx", F.col(x_col).cast("long")).withColumn(
-        "_hy", F.col(y_col).cast("long")
+    out = df.withColumn("_hx", F.col("tile_x").cast("long")).withColumn(
+        "_hy", F.col("tile_y").cast("long")
     ).withColumn("_hd", F.lit(0).cast("long"))
     for i in range(zoom - 1, -1, -1):
         s = 1 << i
@@ -71,7 +65,7 @@ def with_hilbert(
         ).withColumn(
             "_ny", F.when(F.col("_ry") == 0, flip_x).otherwise(F.col("_hy"))
         ).withColumn("_hx", F.col("_nx")).withColumn("_hy", F.col("_ny"))
-    return out.withColumn(out_col, F.col("_hd")).drop(
+    return out.withColumn("hilbert", F.col("_hd")).drop(
         "_hx", "_hy", "_hd", "_rx", "_ry", "_nx", "_ny"
     )
 

@@ -320,19 +320,19 @@ def repetition_stats(text: Column) -> dict[str, Column]:
     }
 
 
-def repetition_sql(table: str = "documents", id_col: str = "doc_id") -> str:
+def repetition_sql(table: str = "documents") -> str:
     """Full DuckDB twin of :func:`repetition_stats`. Stages toks/bg
     through CTE columns so lambdas reference a materialized list instead
     of re-splitting the text per element (the naive inline form is
     O(L³) splits per row and ~35s on 500 docs; this is milliseconds)."""
     return rf"""
-WITH t AS (SELECT {id_col}, {TOKENS_SQL} AS toks FROM {table}),
-b AS (SELECT {id_col},
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {table}),
+b AS (SELECT doc_id,
              list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
                             i -> array_to_string(toks[i:i+1], ' ')) AS bg
       FROM t),
-st AS (SELECT {id_col}, bg, len(bg) AS n, list_distinct(bg) AS dbg FROM b)
-SELECT {id_col},
+st AS (SELECT doc_id, bg, len(bg) AS n, list_distinct(bg) AS dbg FROM b)
+SELECT doc_id,
        CAST(n AS INT) AS n_bigrams,
        CAST(len(dbg) AS INT) AS n_distinct_bigrams,
        CAST(coalesce(list_max(list_transform(dbg,
@@ -466,16 +466,14 @@ def pii_scrub_cols(text: Column) -> dict:
     return cols
 
 
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", keep_text: bool = True
-) -> DataFrame:
+def pii_scrub(df: DataFrame, keep_text: bool = True) -> DataFrame:
     """Append PII redaction columns to ``df`` (see
     :func:`pii_scrub_cols`). ``keep_text=False`` drops the raw text —
     the production shape, where unredacted bytes must not flow past
     this operator."""
-    cols = pii_scrub_cols(F.col(text_col))
+    cols = pii_scrub_cols(F.col("text"))
     out = df.withColumns(cols)
-    return out.drop(text_col) if not keep_text else out
+    return out.drop("text") if not keep_text else out
 
 
 def pii_scrub_sql(text_expr: str = "text") -> dict:
@@ -540,10 +538,10 @@ _SENT_PATTERN = r"[.!?]+"
 _SYLL_PATTERN = r"[aeiouy]+"
 
 
-def readability_stats(text_col: str = "text") -> dict:
-    """Per-row readability columns over the column NAMED ``text_col``
-    (a name, not a Column — the exact integer ``div`` arithmetic is
-    built as SQL expression text, mirroring the DuckDB twin verbatim):
+def readability_stats() -> dict:
+    """Per-row readability columns over the ``text`` column (the exact
+    integer ``div`` arithmetic is built as SQL expression text,
+    mirroring the DuckDB twin verbatim):
 
     * ``n_words`` — shared whitespace tokenizer count;
     * ``n_sentences`` — terminal-punctuation runs (``[.!?]+``);
@@ -560,12 +558,11 @@ def readability_stats(text_col: str = "text") -> dict:
     Everything is whole-stage-codegen projection work — zero joins,
     zero shuffles, linear scan at any corpus size.
     """
-    c = text_col
-    words = rf"CAST(size(split(trim({c}), '\\s+')) AS BIGINT)"
-    sent = rf"CAST(size(regexp_extract_all({c}, '[.!?]+', 0)) AS BIGINT)"
+    words = r"CAST(size(split(trim(text), '\\s+')) AS BIGINT)"
+    sent = r"CAST(size(regexp_extract_all(text, '[.!?]+', 0)) AS BIGINT)"
     syll = (
-        rf"CAST(size(regexp_extract_all(lower({c}), '[aeiouy]+', 0))"
-        rf" AS BIGINT)"
+        r"CAST(size(regexp_extract_all(lower(text), '[aeiouy]+', 0))"
+        r" AS BIGINT)"
     )
     flesch = (
         f"CAST(206835 AS BIGINT)"

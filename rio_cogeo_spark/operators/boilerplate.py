@@ -34,32 +34,29 @@ def boilerplate_lines(
     pages: DataFrame,
     min_frac_ppm: int = 500_000,
     min_docs: int = 2,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-    text_col: str = "text",
 ) -> DataFrame:
-    """Strip host-frequent lines. Returns ``(id_col, host, text,
+    """Strip host-frequent lines. Returns ``(doc_id, host, text,
     n_kept, n_total)``; documents reduced to zero lines drop from the
     output (their every line was site furniture). Blank lines are
     never counted as boilerplate and never survive reassembly."""
     lines = (
         pages.select(
-            F.col(id_col),
-            host_col(F.col(url_col)).alias("host"),
-            F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
+            F.col("doc_id"),
+            host_col(F.col("url")).alias("host"),
+            F.posexplode(F.split(F.col("text"), "\n")).alias("idx", "line"),
         )
         .filter(F.length(F.trim(F.col("line"))) > 0)
         .withColumn("lh", F.md5(F.col("line")))
     )
     line_docs = (
-        lines.select("host", "lh", id_col)
-        .dropDuplicates(["host", "lh", id_col])
+        lines.select("host", "lh", "doc_id")
+        .dropDuplicates(["host", "lh", "doc_id"])
         .groupBy("host", "lh")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
     host_docs = (
-        pages.select(host_col(F.col(url_col)).alias("host"), id_col)
-        .dropDuplicates(["host", id_col])
+        pages.select(host_col(F.col("url")).alias("host"), "doc_id")
+        .dropDuplicates(["host", "doc_id"])
         .groupBy("host")
         .agg(F.count(F.lit(1)).alias("host_docs"))
     )
@@ -71,10 +68,10 @@ def boilerplate_lines(
         )
         .select("host", "lh")
     )
-    totals = lines.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_total"))
+    totals = lines.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_total"))
     kept = lines.join(hot, ["host", "lh"], "left_anti")
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.any_value(F.col("host")).alias("host"),
             F.concat_ws(
@@ -88,6 +85,6 @@ def boilerplate_lines(
             ).alias("text"),
             F.count(F.lit(1)).alias("n_kept"),
         )
-        .join(totals, id_col)
-        .select(id_col, "host", "text", "n_kept", "n_total")
+        .join(totals, "doc_id")
+        .select("doc_id", "host", "text", "n_kept", "n_total")
     )

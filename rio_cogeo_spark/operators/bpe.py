@@ -29,18 +29,13 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import tokens_col
 
 
-def bpe_merge_topk(
-    docs: DataFrame,
-    k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merge_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     """Top-k adjacent character pairs by corpus occurrence count (the
     next BPE merges). Words shorter than 2 characters contribute no
     pairs. Returns ``(pair, n, rank)`` with ``n`` = total occurrences
     across the corpus (weighted by word frequency, as BPE counts)."""
     vocab = (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_w"))
         .filter(F.length("word") >= 2)
@@ -60,11 +55,7 @@ def bpe_merge_topk(
     return topk.withColumn("rank", F.row_number().over(w))
 
 
-def bpe_merge_topk_sql(
-    table: str = "documents",
-    k: int = 50,
-    id_col: str = "doc_id",
-) -> str:
+def bpe_merge_topk_sql(table: str = "documents", k: int = 50) -> str:
     """DuckDB twin of :func:`bpe_merge_topk` (same vocab-first shape)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 

@@ -22,12 +22,7 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import tokens_col
 
 
-def chunk_docs(
-    docs: DataFrame,
-    chunk_tokens: int = 128,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_docs(docs: DataFrame, chunk_tokens: int = 128) -> DataFrame:
     """Non-overlapping fixed-size chunks:
     ``(doc_id, chunk_idx, chunk_text, n_tokens)``, ordered tokens
     preserved. Sliding/overlapping windows compose from this by unioning
@@ -40,8 +35,8 @@ def chunk_docs(
     if C <= 0:
         raise ValueError(f"chunk_tokens must be positive, got {chunk_tokens}")
     staged = docs.select(
-        F.col(id_col),
-        tokens_col(F.col(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens_col(F.col("text")).alias("toks"),
     )
     n = F.size("toks")
     # size(NULL) is -1 under the non-ANSI default, so the <= 0 guard
@@ -66,10 +61,10 @@ def chunk_docs(
         )
     )
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(chunk_structs).alias("chunk_idx", "c"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.col("c.chunk_text").alias("chunk_text"),
         F.col("c.n_tokens").alias("n_tokens"),
@@ -80,8 +75,6 @@ def chunk_docs_sliding(
     docs: DataFrame,
     chunk_tokens: int = 128,
     stride: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Overlapping sliding-window chunks (the RAG-ingest default):
     window i covers tokens ``[i*stride, i*stride + chunk_tokens)``.
@@ -99,8 +92,8 @@ def chunk_docs_sliding(
     if S > C:
         raise ValueError("stride > chunk_tokens would skip tokens")
     staged = docs.select(
-        F.col(id_col),
-        tokens_col(F.col(text_col)).alias("toks"),
+        F.col("doc_id"),
+        tokens_col(F.col("text")).alias("toks"),
     )
     n = F.size("toks")
     n_windows = F.ceil(
@@ -125,10 +118,10 @@ def chunk_docs_sliding(
         )
     )
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(chunk_structs).alias("chunk_idx", "c"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("int").alias("chunk_idx"),
         F.col("c.chunk_text").alias("chunk_text"),
         F.col("c.n_tokens").alias("n_tokens"),
@@ -139,7 +132,6 @@ def chunk_docs_sliding_sql(
     table: str = "documents",
     chunk_tokens: int = 128,
     stride: int = 64,
-    id_col: str = "doc_id",
     toks_sql: str = None,
 ) -> str:
     """DuckDB twin of :func:`chunk_docs_sliding`."""
@@ -148,16 +140,16 @@ def chunk_docs_sliding_sql(
     toks = toks_sql or TOKENS_SQL
     C, S = int(chunk_tokens), int(stride)
     return rf"""
-WITH t AS (SELECT {id_col}, {toks} AS toks FROM {table}),
-nn AS (SELECT {id_col}, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
-w AS (SELECT {id_col}, toks, n,
+WITH t AS (SELECT doc_id, {toks} AS toks FROM {table}),
+nn AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
+w AS (SELECT doc_id, toks, n,
              CAST(ceil(CAST(greatest(n - {C}, 0) AS DOUBLE) / {S}) AS INT) + 1
                  AS n_windows
       FROM nn),
-e AS (SELECT {id_col}, toks,
+e AS (SELECT doc_id, toks,
              unnest(generate_series(0, n_windows - 1)) AS chunk_idx
       FROM w)
-SELECT {id_col}, CAST(chunk_idx AS INT) AS chunk_idx,
+SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
        array_to_string(toks[chunk_idx * {S} + 1 : chunk_idx * {S} + {C}], ' ')
            AS chunk_text,
        CAST(len(toks[chunk_idx * {S} + 1 : chunk_idx * {S} + {C}]) AS BIGINT)
@@ -168,7 +160,6 @@ FROM e"""
 def chunk_docs_sql(
     table: str = "documents",
     chunk_tokens: int = 128,
-    id_col: str = "doc_id",
     toks_sql: str = None,
 ) -> str:
     """DuckDB twin of :func:`chunk_docs`."""
@@ -178,14 +169,14 @@ def chunk_docs_sql(
     # (value, index) lambda instead of a lateral generate_series —
     # DuckDB table functions reject lateral column parameters
     return rf"""
-WITH t AS (SELECT {id_col}, {toks} AS toks FROM {table}),
-e AS (SELECT {id_col},
+WITH t AS (SELECT doc_id, {toks} AS toks FROM {table}),
+e AS (SELECT doc_id,
              unnest(list_transform(toks,
                     (x, i) -> {{'pos': i - 1, 'tok': x}})) AS pt
       FROM t),
-a AS (SELECT {id_col}, CAST(pt.pos // {chunk_tokens} AS INT) AS chunk_idx,
+a AS (SELECT doc_id, CAST(pt.pos // {chunk_tokens} AS INT) AS chunk_idx,
              pt.pos AS pos, pt.tok AS tok FROM e)
-SELECT {id_col}, chunk_idx,
+SELECT doc_id, chunk_idx,
        string_agg(tok, ' ' ORDER BY pos) AS chunk_text,
        COUNT(*) AS n_tokens
 FROM a GROUP BY 1, 2"""

@@ -31,14 +31,12 @@ def contamination_hits(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-corpus-document count of distinct word n-grams shared with any
     benchmark document. Returns only contaminated docs:
     ``(doc_id, n_hits)`` with ``n_hits >= 1``.
 
-    ``benchmark`` only needs ``text_col``. Both sides shingle with the
+    ``benchmark`` only needs ``text``. Both sides shingle with the
     same distinct n-gram formula as the Jaccard/MinHash dedup suite, so
     "hit" means exactly one shared shingle type (multiplicity ignored,
     as in the standard contamination definition).
@@ -54,19 +52,19 @@ def contamination_hits(
 
     bench_sh = (
         benchmark.select(
-            F.explode(shingles_col(F.col(text_col), n)).alias("shingle")
+            F.explode(shingles_col(F.col("text"), n)).alias("shingle")
         )
         .distinct()
     )
     corpus_sh = corpus.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), tokens_col(F.col("text")).alias("_toks")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("shingle"),
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle", "inner")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
 
@@ -75,18 +73,16 @@ def contamination_rate(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Fraction of each contaminated document's shingles that collide
     with the benchmark: ``(doc_id, n_hits, n_shingles, hit_frac)`` —
     the thresholdable form (e.g. drop docs with hit_frac > 0.8)."""
-    hits = contamination_hits(corpus, benchmark, n, id_col, text_col)
+    hits = contamination_hits(corpus, benchmark, n)
     sizes = corpus.select(
-        F.col(id_col),
-        F.size(shingles_col(F.col(text_col), n)).alias("n_shingles"),
+        F.col("doc_id"),
+        F.size(shingles_col(F.col("text"), n)).alias("n_shingles"),
     )
-    return hits.join(sizes, id_col, "inner").withColumn(
+    return hits.join(sizes, "doc_id", "inner").withColumn(
         "hit_frac",
         F.round(
             F.col("n_hits").cast("double")
@@ -122,8 +118,6 @@ def bloom_prefilter(
     n: int = 3,
     m_bits: int = 1 << 20,
     n_hashes: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Bloom-filter contamination PREFILTER (Bloom, CACM 1970; double
     hashing per Kirsch & Mitzenmacher, ESA 2006): flag corpus documents
@@ -163,7 +157,7 @@ def bloom_prefilter(
 
     bench_pos = (
         benchmark.select(
-            F.explode(shingles_col(F.col(text_col), n)).alias("sh")
+            F.explode(shingles_col(F.col("text"), n)).alias("sh")
         )
         .distinct()
         .select(F.explode(F.array(*_bloom_pos_cols(F.col("sh"), m_bits, n_hashes))).alias("pos"))
@@ -194,9 +188,9 @@ def bloom_prefilter(
         np.add.at(out, np.repeat(np.arange(len(pos_flat)), lens), hit)
         return pd.Series(out)
 
-    sh = shingles_col(F.col(text_col), n)
+    sh = shingles_col(F.col("text"), n)
     probes = corpus.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(sh).alias("n_shingles"),
         F.flatten(
             F.transform(
@@ -206,7 +200,7 @@ def bloom_prefilter(
     )
     return (
         probes.select(
-            id_col, "n_shingles", n_maybe_udf(F.col("pos")).alias("n_maybe")
+            "doc_id", "n_shingles", n_maybe_udf(F.col("pos")).alias("n_maybe")
         )
         .filter(F.col("n_maybe") >= 1)
     )

@@ -10,6 +10,8 @@ with a DF-cap filter (drop shingles appearing in > df_cap docs, the
 standard stopword-shingle guard). MinHash/LSH reduces candidate pairs to
 band-bucket collisions; signatures are computed from JVM-side xxhash64
 shingle hashes so Python only does vectorized numpy min-reductions.
+
+Column names are fixed: ``doc_id``, ``text``, ``url`` and ``ts_sec``.
 """
 
 from __future__ import annotations
@@ -61,9 +63,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def url_dedup_latest(
-    pages: DataFrame, url_col: str = "url", ts_col: str = "ts_sec"
-) -> DataFrame:
+def url_dedup_latest(pages: DataFrame) -> DataFrame:
     """Re-crawl snapshot resolution: one row per CANONICAL url (see
     functions/text.canonical_url — scheme/www/fragment/trailing-slash
     normalization), keeping the NEWEST snapshot, ties by highest doc_id
@@ -75,36 +75,31 @@ def url_dedup_latest(
     ordering struct partial-aggregates per input partition, so shuffle
     bytes are bounded by distinct-URL count, not snapshot count (a
     window row_number would sort every partition's full snapshot list
-    instead). Returns (canon_url, doc_id, ``ts_col``, n_snapshots)."""
+    instead). Returns (canon_url, doc_id, ts_sec, n_snapshots)."""
     from rio_cogeo_spark.functions.text import canonical_url
 
-    ordk = F.struct(F.col(ts_col), F.col("doc_id"))
+    ordk = F.struct(F.col("ts_sec"), F.col("doc_id"))
     return (
         pages.select(
-            canonical_url(F.col(url_col)).alias("canon_url"),
+            canonical_url(F.col("url")).alias("canon_url"),
             "doc_id",
-            F.col(ts_col),
+            F.col("ts_sec"),
         )
         .groupBy("canon_url")
         .agg(
-            F.max_by(F.struct(F.col("doc_id"), F.col(ts_col)), ordk).alias("kept"),
+            F.max_by(F.struct(F.col("doc_id"), F.col("ts_sec")), ordk).alias("kept"),
             F.count(F.lit(1)).alias("n_snapshots"),
         )
         .select(
             "canon_url",
             F.col("kept.doc_id").alias("doc_id"),
-            F.col(f"kept.{ts_col}").alias(ts_col),
+            F.col("kept.ts_sec").alias("ts_sec"),
             "n_snapshots",
         )
     )
 
 
-def novelty_by_day(
-    pages: DataFrame,
-    ts_col: str = "ts_sec",
-    text_col: str = "text",
-    day_sec: int = 86_400,
-) -> DataFrame:
+def novelty_by_day(pages: DataFrame, day_sec: int = 86_400) -> DataFrame:
     """Per-day crawl novelty — the cross-time dedup-rate dashboard a
     crawl operator watches: of the pages fetched on day D, how many
     carry exact text already seen on an EARLIER day? A rising stale
@@ -124,8 +119,8 @@ def novelty_by_day(
     No windows, nothing collects.
     """
     h = pages.select(
-        F.expr(f"{ts_col} div {int(day_sec)}").alias("day"),
-        F.md5(F.col(text_col)).alias("h"),
+        F.expr(f"ts_sec div {int(day_sec)}").alias("day"),
+        F.md5(F.col("text")).alias("h"),
     )
     first = h.groupBy("h").agg(F.min("day").alias("first_day"))
     return (
@@ -146,14 +141,12 @@ def novelty_by_day(
     )
 
 
-def novelty_by_day_sql(
-    pages_cte: str, ts_col: str = "ts_sec", day_sec: int = 86_400
-) -> str:
+def novelty_by_day_sql(pages_cte: str, day_sec: int = 86_400) -> str:
     """DuckDB twin of :func:`novelty_by_day` (``pages_cte`` exposes
-    ``({ts_col}, text)``)."""
+    ``(ts_sec, text)``)."""
     return rf"""
 WITH p AS ({pages_cte}),
-h AS (SELECT {ts_col} // {int(day_sec)} AS day, md5(text) AS h FROM p),
+h AS (SELECT ts_sec // {int(day_sec)} AS day, md5(text) AS h FROM p),
 first AS (SELECT h, MIN(day) AS first_day FROM h GROUP BY 1)
 SELECT day,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -165,12 +158,7 @@ FROM h JOIN first USING (h)
 GROUP BY 1"""
 
 
-def snapshot_change_stats(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "ts_sec",
-    text_col: str = "text",
-) -> DataFrame:
+def snapshot_change_stats(pages: DataFrame) -> DataFrame:
     """Per-canonical-URL change history over crawl snapshots: order each
     URL's snapshots by (ts, doc_id), compare consecutive content
     fingerprints (functions/text.fingerprint — the cross-engine md5, so
@@ -187,13 +175,13 @@ def snapshot_change_stats(
     window — zero extra exchange)."""
     from rio_cogeo_spark.functions.text import canonical_url
 
-    w = Window.partitionBy("canon_url").orderBy(ts_col, "doc_id")
+    w = Window.partitionBy("canon_url").orderBy("ts_sec", "doc_id")
     versioned = (
         pages.select(
-            canonical_url(F.col(url_col)).alias("canon_url"),
+            canonical_url(F.col("url")).alias("canon_url"),
             "doc_id",
-            F.col(ts_col),
-            fingerprint(F.col(text_col)).alias("fp"),
+            F.col("ts_sec"),
+            fingerprint(F.col("text")).alias("fp"),
         )
         .withColumn(
             "changed",
@@ -203,25 +191,19 @@ def snapshot_change_stats(
     return versioned.groupBy("canon_url").agg(
         F.count(F.lit(1)).alias("n_snapshots"),
         F.sum(F.col("changed").cast("long")).alias("n_changes"),
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
-        F.max(F.when(F.col("changed"), F.col(ts_col))).alias("last_change_ts"),
+        F.min("ts_sec").alias("first_ts"),
+        F.max("ts_sec").alias("last_ts"),
+        F.max(F.when(F.col("changed"), F.col("ts_sec"))).alias("last_change_ts"),
     )
 
 
-def mirror_docs(
-    pages: DataFrame,
-    min_hosts: int = 2,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def mirror_docs(pages: DataFrame, min_hosts: int = 2) -> DataFrame:
     """Cross-host mirror/template detection: documents whose content
     fingerprint appears on at least ``min_hosts`` DISTINCT hosts —
     mirrors, scraped re-posts, and templated boilerplate sites, the
     duplication class same-URL dedup can't see and per-host boilerplate
     removal can't either (each host has only one copy). Returns one row
-    per affected document: ``(id_col, host, fp, n_hosts, n_copies)``.
+    per affected document: ``(doc_id, host, fp, n_hosts, n_copies)``.
 
     Scale design (100 TB): the distinct-host count per fingerprint is
     dropDuplicates(fp, host) + a map-side-combinable count — never a
@@ -232,9 +214,9 @@ def mirror_docs(
     from rio_cogeo_spark.functions.text import host_col
 
     tagged = pages.select(
-        F.col(id_col),
-        host_col(F.col(url_col)).alias("host"),
-        fingerprint(F.col(text_col)).alias("fp"),
+        F.col("doc_id"),
+        host_col(F.col("url")).alias("host"),
+        fingerprint(F.col("text")).alias("fp"),
     )
     by_host = (
         tagged.select("fp", "host")
@@ -247,18 +229,11 @@ def mirror_docs(
     return (
         tagged.join(by_host, "fp")
         .join(copies, "fp")
-        .select(id_col, "host", "fp", "n_hosts", "n_copies")
+        .select("doc_id", "host", "fp", "n_hosts", "n_copies")
     )
 
 
-def snapshot_paragraph_diff(
-    pages: DataFrame,
-    sep: str = "\n\n",
-    url_col: str = "url",
-    ts_col: str = "ts_sec",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def snapshot_paragraph_diff(pages: DataFrame, sep: str = "\n\n") -> DataFrame:
     """Paragraph-granularity diff between consecutive snapshots of each
     canonical URL — :func:`snapshot_change_stats` says *whether* a page
     changed; this says *how much*: per snapshot (from the 2nd on), how
@@ -284,11 +259,11 @@ def snapshot_paragraph_diff(
     from rio_cogeo_spark.functions.text import canonical_url
 
     pat = "\\Q" + sep + "\\E"
-    w = Window.partitionBy("canon_url").orderBy(ts_col, id_col)
+    w = Window.partitionBy("canon_url").orderBy("ts_sec", "doc_id")
     snaps = (
         pages.select(
-            canonical_url(F.col(url_col)).alias("canon_url"),
-            F.col(id_col), F.col(ts_col), F.col(text_col).alias("__text"),
+            canonical_url(F.col("url")).alias("canon_url"),
+            F.col("doc_id"), F.col("ts_sec"), F.col("text").alias("__text"),
         )
         .withColumn("snap_idx", F.row_number().over(w))
     )
@@ -317,7 +292,7 @@ def snapshot_paragraph_diff(
         F.col("n_paras").alias("n_prev"),
     )
     cur = snaps.filter(F.col("snap_idx") >= 2).select(
-        "canon_url", "snap_idx", id_col, F.col(ts_col).alias("ts")
+        "canon_url", "snap_idx", "doc_id", F.col("ts_sec").alias("ts")
     )
     keys = ["canon_url", "snap_idx"]
     return (
@@ -325,7 +300,7 @@ def snapshot_paragraph_diff(
         .join(prev_totals, keys, "left")
         .join(common, keys, "left")
         .select(
-            "canon_url", "snap_idx", id_col, "ts",
+            "canon_url", "snap_idx", "doc_id", "ts",
             F.coalesce("n_paras", F.lit(0)).alias("n_paras"),
             (F.coalesce("n_paras", F.lit(0))
              - F.coalesce("n_common", F.lit(0))).alias("n_added"),
@@ -340,8 +315,6 @@ def snapshot_paragraph_diff_sql(
     base_cte: str,
     sep: str = "\n\n",
     url_expr: str = None,
-    ts_col: str = "ts_sec",
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`snapshot_paragraph_diff`. ``base_cte`` must
     define a relation ``snapfix(doc_id, url, ts_sec, text)``; the twin
@@ -351,9 +324,9 @@ def snapshot_paragraph_diff_sql(
     canon = url_expr or CANONICAL_URL_SQL
     sep_lit = sep.replace("'", "''")
     return rf"""{base_cte}
-, snaps AS (SELECT {canon} AS canon_url, {id_col}, {ts_col}, text,
+, snaps AS (SELECT {canon} AS canon_url, doc_id, ts_sec, text,
                    CAST(row_number() OVER (PARTITION BY {canon}
-                        ORDER BY {ts_col}, {id_col}) AS INT) AS snap_idx
+                        ORDER BY ts_sec, doc_id) AS INT) AS snap_idx
             FROM snapfix),
 exploded AS (SELECT canon_url, snap_idx,
                     unnest(string_split(text, '{sep_lit}')) AS para
@@ -370,9 +343,9 @@ adj AS (SELECT canon_url, snap_idx FROM (
         WHERE snap_idx = prev_idx + 1),
 common AS (SELECT canon_url, snap_idx, COUNT(*) AS n_common
            FROM adj GROUP BY 1, 2),
-cur AS (SELECT canon_url, snap_idx, {id_col}, {ts_col} AS ts
+cur AS (SELECT canon_url, snap_idx, doc_id, ts_sec AS ts
         FROM snaps WHERE snap_idx >= 2)
-SELECT c.canon_url, c.snap_idx, c.{id_col}, c.ts,
+SELECT c.canon_url, c.snap_idx, c.doc_id, c.ts,
        CAST(COALESCE(t.n_paras, 0) AS BIGINT) AS n_paras,
        CAST(COALESCE(t.n_paras, 0) - COALESCE(m.n_common, 0) AS BIGINT)
            AS n_added,
@@ -544,8 +517,6 @@ def pair_verify(
     docs: DataFrame,
     pairs: DataFrame,
     prefix_len: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact edit-distance VERIFICATION of near-dup candidate pairs —
     the confirm stage of the dedup cascade (LSH/shingle candidates are
@@ -572,12 +543,12 @@ def pair_verify(
     own df_cap/banding guards.
     """
     ta = docs.select(
-        F.col(id_col).alias("doc_a"),
-        F.substring(F.col(text_col), 1, int(prefix_len)).alias("ta"),
+        F.col("doc_id").alias("doc_a"),
+        F.substring(F.col("text"), 1, int(prefix_len)).alias("ta"),
     )
     tb = docs.select(
-        F.col(id_col).alias("doc_b"),
-        F.substring(F.col(text_col), 1, int(prefix_len)).alias("tb"),
+        F.col("doc_id").alias("doc_b"),
+        F.substring(F.col("text"), 1, int(prefix_len)).alias("tb"),
     )
     return (
         pairs.select("doc_a", "doc_b")
@@ -1389,8 +1360,6 @@ def dedup_keep_best(
     docs: DataFrame,
     pairs: DataFrame,
     score: Optional[Column] = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     src: str = "doc_a",
     dst: str = "doc_b",
 ) -> DataFrame:
@@ -1402,7 +1371,7 @@ def dedup_keep_best(
     :func:`dedup_components`' keep-min-id rule when members differ
     (truncated mirrors, print views, AMP pages).
 
-    Returns ``(id_col, component, score, is_keeper)`` for every doc in
+    Returns ``(doc_id, component, score, is_keeper)`` for every doc in
     a pair — singletons are trivially keepers and stay omitted, so the
     output is bounded by the duplicate population.
 
@@ -1415,10 +1384,10 @@ def dedup_keep_best(
     must be exact-integer for cross-engine hashing; floats rank but
     won't hash-compare.
     """
-    score_col = score if score is not None else token_count(F.col(text_col))
+    score_col = score if score is not None else token_count(F.col("text"))
     comp = connected_components(pairs, src, dst)
     scored = comp.join(
-        docs.select(F.col(id_col), score_col.alias("score")), id_col
+        docs.select(F.col("doc_id"), score_col.alias("score")), "doc_id"
     )
     # struct-min over (-score, doc_id): highest score, then lowest id —
     # partial-aggregates per input partition (skew-safe argmax)
@@ -1426,7 +1395,7 @@ def dedup_keep_best(
         scored.groupBy("component")
         .agg(
             F.min(
-                F.struct((-F.col("score")).alias("ns"), F.col(id_col).alias("kid"))
+                F.struct((-F.col("score")).alias("ns"), F.col("doc_id").alias("kid"))
             ).alias("best")
         )
         .select("component", F.col("best.kid").alias("__keeper"))
@@ -1434,8 +1403,8 @@ def dedup_keep_best(
     return (
         scored.join(keepers, "component")
         .select(
-            id_col, "component", "score",
-            (F.col(id_col) == F.col("__keeper")).alias("is_keeper"),
+            "doc_id", "component", "score",
+            (F.col("doc_id") == F.col("__keeper")).alias("is_keeper"),
         )
     )
 
@@ -1522,12 +1491,7 @@ def connected_components_star(
     return roots.unionByName(singles)
 
 
-def paragraph_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n\n",
-) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, sep: str = "\n\n") -> DataFrame:
     """Corpus-wide paragraph-level exact dedup (the C4 preprocessing
     primitive: boilerplate headers/footers/navigation repeat across a
     site's pages and must be dropped corpus-wide, keeping ONE copy).
@@ -1537,7 +1501,7 @@ def paragraph_dedup(
     paragraph order. Documents left with zero paragraphs (pure
     boilerplate / exact whole-text dups) drop from the output.
 
-    Returns ``(id_col, text, n_kept, n_total)``.
+    Returns ``(doc_id, text, n_kept, n_total)``.
 
     Scale design: the keeper per paragraph hash is a map-side-combinable
     ``min_by`` — NOT a row_number window, because hot boilerplate
@@ -1554,25 +1518,25 @@ def paragraph_dedup(
     pat = "\\Q" + sep + "\\E"
     paras = (
         docs.select(
-            F.col(id_col),
-            F.posexplode(F.split(F.col(text_col), pat)).alias("idx", "para"),
+            F.col("doc_id"),
+            F.posexplode(F.split(F.col("text"), pat)).alias("idx", "para"),
         )
         .filter(F.length(F.trim(F.col("para"))) > 0)
         .withColumn("ph", F.md5(F.col("para")))
     )
     keepers = paras.groupBy("ph").agg(
         F.min_by(
-            F.struct(F.col(id_col), F.col("idx")),
-            F.struct(F.col(id_col), F.col("idx")),
+            F.struct(F.col("doc_id"), F.col("idx")),
+            F.struct(F.col("doc_id"), F.col("idx")),
         ).alias("keep")
     )
     kept = paras.join(keepers, "ph").filter(
-        (F.col(id_col) == F.col(f"keep.{id_col}"))
+        (F.col("doc_id") == F.col("keep.doc_id"))
         & (F.col("idx") == F.col("keep.idx"))
     )
-    totals = paras.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_total"))
+    totals = paras.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_total"))
     return (
-        kept.groupBy(id_col)
+        kept.groupBy("doc_id")
         .agg(
             F.concat_ws(
                 sep,
@@ -1585,8 +1549,8 @@ def paragraph_dedup(
             ).alias("text"),
             F.count(F.lit(1)).alias("n_kept"),
         )
-        .join(totals, id_col)
-        .select(id_col, "text", "n_kept", "n_total")
+        .join(totals, "doc_id")
+        .select("doc_id", "text", "n_kept", "n_total")
     )
 
 
@@ -1624,12 +1588,7 @@ def crawl_priority(
     )
 
 
-def corpus_overlap(
-    a: DataFrame,
-    b: DataFrame,
-    text_col: str = "text",
-    k: int = 256,
-) -> DataFrame:
+def corpus_overlap(a: DataFrame, b: DataFrame, k: int = 256) -> DataFrame:
     """KMV (k-minimum-values) corpus-overlap sketch — estimated exact-text
     Jaccard between two crawl snapshots WITHOUT joining the corpora
     (Bar-Yossef et al. "Counting distinct elements in a data stream",
@@ -1661,12 +1620,12 @@ def corpus_overlap(
     from rio_cogeo_spark.functions.text import md5_60
 
     ha = a.select(
-        md5_60(F.col(text_col)).alias("h"),
+        md5_60(F.col("text")).alias("h"),
         F.lit(1).alias("ia"),
         F.lit(0).alias("ib"),
     )
     hb = b.select(
-        md5_60(F.col(text_col)).alias("h"),
+        md5_60(F.col("text")).alias("h"),
         F.lit(0).alias("ia"),
         F.lit(1).alias("ib"),
     )
@@ -1686,14 +1645,12 @@ def corpus_overlap(
     )
 
 
-def corpus_overlap_sql(
-    a_cte: str, b_cte: str, text_col: str = "text", k: int = 256
-) -> str:
+def corpus_overlap_sql(a_cte: str, b_cte: str, k: int = 256) -> str:
     """DuckDB twin of :func:`corpus_overlap` (each CTE exposes
-    ``{text_col}``)."""
+    ``text``)."""
     from rio_cogeo_spark.functions.text import MD5_60_SQL
 
-    h = MD5_60_SQL.format(c=text_col)
+    h = MD5_60_SQL.format(c="text")
     return rf"""
 WITH a AS ({a_cte}), b AS ({b_cte}),
 hh AS (SELECT {h} AS h, 1 AS ia, 0 AS ib FROM a
@@ -1736,13 +1693,7 @@ def _gram_hash_col(text: Column, k: int) -> Column:
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 3,
-    w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, "Local
     algorithms for document fingerprinting", SIGMOD 2003 — the MOSS
     algorithm): hash every ORDERED token k-gram, then keep the minimum
@@ -1772,8 +1723,8 @@ def winnow_fingerprints(
     if w < 1:
         raise ValueError(f"w must be >= 1, got {w}")
     g_df = docs.select(
-        F.col(id_col).alias("doc_id"),
-        _gram_hash_col(F.col(text_col), k).alias("g"),
+        F.col("doc_id"),
+        _gram_hash_col(F.col("text"), k).alias("g"),
     )
     g = F.col("g")
     mw = F.size(g) - (w - 1)
@@ -2076,12 +2027,7 @@ SELECT CAST(bucket_ppm AS BIGINT) AS bucket_ppm,
 FROM jt_h"""
 
 
-def continuation_pairs(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def continuation_pairs(docs: DataFrame, k: int = 8) -> DataFrame:
     """Pagination / article-continuation detection: pairs where doc A's
     LAST ``k`` tokens equal doc B's FIRST ``k`` tokens — the crawl
     reassembly problem (one article served as /page-1, /page-2: whole-
@@ -2108,17 +2054,17 @@ def continuation_pairs(
     """
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     base = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         toks.alias("_t"),
     ).filter(F.size("_t") >= k + 1)
     heads = base.select(
-        F.col(id_col).alias("doc_b"),
+        F.col("doc_id").alias("doc_b"),
         F.array_join(F.slice("_t", 1, k), " ").alias("boundary"),
     )
     tails = base.select(
-        F.col(id_col).alias("doc_a"),
+        F.col("doc_id").alias("doc_a"),
         F.array_join(F.slice("_t", -k, k), " ").alias("boundary"),
     )
     max_fanout = 64
@@ -2159,8 +2105,6 @@ def mirror_host_pairs(
     pages: DataFrame,
     min_shared: int = 2,
     max_hosts_per_fp: int = 32,
-    url_col: str = "url",
-    text_col: str = "text",
 ) -> DataFrame:
     """Mirror-SITE discovery — the host-pair rollup of
     :func:`mirror_docs` (which flags mirrored DOCUMENTS): for every
@@ -2185,8 +2129,8 @@ def mirror_host_pairs(
     from rio_cogeo_spark.functions.text import host_col
 
     fh = pages.select(
-        host_col(F.col(url_col)).alias("host"),
-        fingerprint(F.col(text_col)).alias("fp"),
+        host_col(F.col("url")).alias("host"),
+        fingerprint(F.col("text")).alias("fp"),
     ).dropDuplicates(["fp", "host"])
     grouped = (
         fh.groupBy("fp")

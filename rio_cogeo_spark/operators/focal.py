@@ -28,6 +28,11 @@ most ``zoom`` rounds, each ONE window shuffle over a set that shrinks 4x
 per round, with no joins (full quads are detected by a sibling count
 over the parent key and the parent set is re-derived from the same
 frame, so no driver collect and no broadcast).
+
+Column names are fixed: tiles key on ``tile_x``/``tile_y`` and carry
+``page_count`` (some operators also read ``lang``, ``ts_sec``, ``cls``
+or ``t_bucket``). Only :func:`focal_stats` and :func:`morans_i` take
+the value column as a parameter.
 """
 
 from __future__ import annotations
@@ -42,8 +47,7 @@ def _offsets(radius: int):
 
 
 def _neighbor_rows(
-    tiles: DataFrame, zoom: int, radius: int, x_col: str, y_col: str,
-    extra=(),
+    tiles: DataFrame, zoom: int, radius: int, extra=(),
 ) -> DataFrame:
     """Explode each tile row into its (2r+1)^2 in-bounds neighbor keys.
 
@@ -60,8 +64,8 @@ def _neighbor_rows(
         ])
     ).alias("off")
     rows = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
         *[F.col(c) for c in extra],
         off,
     ).select(
@@ -75,13 +79,7 @@ def _neighbor_rows(
     )
 
 
-def dilate_tiles(
-    tiles: DataFrame,
-    zoom: int,
-    radius: int = 1,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def dilate_tiles(tiles: DataFrame, zoom: int, radius: int = 1) -> DataFrame:
     """Morphological dilation of the occupied-tile set.
 
     Output ``(tile_x, tile_y)`` distinct — every grid cell within
@@ -93,7 +91,7 @@ def dilate_tiles(
     if radius < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
     return (
-        _neighbor_rows(tiles, zoom, radius, x_col, y_col)
+        _neighbor_rows(tiles, zoom, radius)
         .groupBy(F.col("nx").alias("tile_x"), F.col("ny").alias("tile_y"))
         .agg(F.count(F.lit(1)).alias("_n"))
         .drop("_n")
@@ -105,8 +103,6 @@ def focal_stats(
     zoom: int,
     value_col: str = "page_count",
     radius: int = 1,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Edge-clipped focal (moving-window) sum and mean over the grid.
 
@@ -126,10 +122,10 @@ def focal_stats(
         raise ValueError(f"radius must be >= 1, got {radius}")
     contrib = _neighbor_rows(
         tiles.select(
-            F.col(x_col), F.col(y_col),
+            F.col("tile_x"), F.col("tile_y"),
             F.col(value_col).cast("long").alias("_v"),
         ),
-        zoom, radius, x_col, y_col, extra=("_v",),
+        zoom, radius, extra=("_v",),
     )
     edge = F.lit(2 ** zoom - 1)
     r = F.lit(radius)
@@ -150,14 +146,7 @@ def focal_stats(
     )
 
 
-def hotspots(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    radius: int = 1,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def hotspots(tiles: DataFrame, zoom: int, radius: int = 1) -> DataFrame:
     """Getis-Ord Gi* hotspot z-scores over the FULL grid.
 
     The standard local spatial statistic for density hotspots: for each
@@ -190,10 +179,10 @@ def hotspots(
     corpus-sized, so the checkpoint is safe at any corpus scale).
     """
     n_grid = float(4 ** zoom)
-    tiles = tiles.select(
-        F.col(x_col), F.col(y_col), F.col(value_col)
-    ).localCheckpoint(eager=True)
-    vals = tiles.select(F.col(value_col).cast("double").alias("_v"))
+    tiles = tiles.select("tile_x", "tile_y", "page_count").localCheckpoint(
+        eager=True
+    )
+    vals = tiles.select(F.col("page_count").cast("double").alias("_v"))
     # two exact moments (integer-valued doubles: sums are order-independent),
     # std derived afterwards with plain * and sqrt so the DuckDB oracle twin
     # reproduces the identical IEEE expression tree bit-for-bit
@@ -201,7 +190,7 @@ def hotspots(
         (F.sum("_v") / F.lit(n_grid)).alias("g_mean"),
         (F.sum(F.col("_v") * F.col("_v")) / F.lit(n_grid)).alias("g_ex2"),
     )
-    foc = focal_stats(tiles, zoom, value_col, radius, x_col, y_col)
+    foc = focal_stats(tiles, zoom, "page_count", radius)
     w = F.col("n_cells").cast("double")
     g_std = F.sqrt(F.col("g_ex2") - F.col("g_mean") * F.col("g_mean"))
     denom = g_std * F.sqrt(
@@ -216,13 +205,7 @@ def hotspots(
     )
 
 
-def compact_tiles(
-    tiles: DataFrame,
-    zoom: int,
-    min_zoom: int = 0,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def compact_tiles(tiles: DataFrame, zoom: int, min_zoom: int = 0) -> DataFrame:
     """Quadtree compaction: the minimal mixed-zoom cover of a tile set.
 
     H3 ``compact`` semantics on the quad grid (and the sparse-COG
@@ -254,8 +237,8 @@ def compact_tiles(
         raise ValueError(f"need 0 <= min_zoom <= zoom, got {min_zoom}..{zoom}")
     K = zoom - min_zoom
     cur = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
     ).distinct()
     anc = cur.select(
         F.explode(
@@ -290,24 +273,18 @@ def compact_tiles(
     )
 
 
-def uncompact_tiles(
-    compacted: DataFrame,
-    zoom: int,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    zoom_col: str = "zoom",
-) -> DataFrame:
+def uncompact_tiles(compacted: DataFrame, zoom: int) -> DataFrame:
     """Inverse of :func:`compact_tiles`: expand a mixed-zoom cover back
     to the uniform ``zoom`` grid (each cell at z' → its 4^(zoom-z')
     descendants).  One sequence explode per zoom delta — a projection,
     no shuffle; row inflation equals the true descendant count, which
     compaction already bounded by the original input size.
     """
-    d = f"(CAST({zoom} AS INT) - CAST({zoom_col} AS INT))"
+    d = f"(CAST({zoom} AS INT) - CAST(zoom AS INT))"
     return (
         compacted.select(
-            F.expr(f"shiftleft(CAST({x_col} AS BIGINT), {d})").alias("_bx"),
-            F.expr(f"shiftleft(CAST({y_col} AS BIGINT), {d})").alias("_by"),
+            F.expr(f"shiftleft(CAST(tile_x AS BIGINT), {d})").alias("_bx"),
+            F.expr(f"shiftleft(CAST(tile_y AS BIGINT), {d})").alias("_by"),
             F.expr(f"CAST(shiftleft(1, {d}) AS BIGINT)").alias("_k"),
         )
         .select(
@@ -342,9 +319,6 @@ def assemble_viewport(
     zoom: int,
     bbox,
     min_zoom: int = 0,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    zoom_col: str = "zoom",
 ) -> DataFrame:
     """LOD viewport assembly over a mixed-zoom cover.
 
@@ -381,9 +355,9 @@ def assemble_viewport(
         "req_x long, req_y long, anc_zoom int, anc_x long, anc_y long",
     )
     hits = available.select(
-        F.col(zoom_col).cast("int").alias("anc_zoom"),
-        F.col(x_col).cast("long").alias("anc_x"),
-        F.col(y_col).cast("long").alias("anc_y"),
+        F.col("zoom").cast("int").alias("anc_zoom"),
+        F.col("tile_x").cast("long").alias("anc_x"),
+        F.col("tile_y").cast("long").alias("anc_y"),
     ).join(F.broadcast(anc), ["anc_zoom", "anc_x", "anc_y"])
     deepest = (
         hits.groupBy("req_x", "req_y")
@@ -397,14 +371,7 @@ def assemble_viewport(
     )
 
 
-def focal_mode(
-    tiles: DataFrame,
-    zoom: int,
-    class_col: str = "cls",
-    radius: int = 1,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def focal_mode(tiles: DataFrame, zoom: int, radius: int = 1) -> DataFrame:
     """Focal MAJORITY filter — the categorical companion to
     :func:`focal_stats` (GDAL/ArcGIS majority filter: smooth a
     classified raster by assigning each cell the modal class of its
@@ -434,9 +401,9 @@ def focal_mode(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(class_col).alias("_cls"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("cls").alias("_cls"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -475,9 +442,6 @@ def focal_mode(
 def class_crosstab(
     a: DataFrame,
     b: DataFrame,
-    class_col: str = "cls",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
     absent: str = "(absent)",
 ) -> DataFrame:
     """Classification CONFUSION MATRIX between two tile classifications
@@ -498,12 +462,12 @@ def class_crosstab(
     the share join is a 1-row broadcast total, never a window.
     """
     sa = a.select(
-        F.col(x_col).alias("_x"), F.col(y_col).alias("_y"),
-        F.col(class_col).cast("string").alias("cls_a"),
+        F.col("tile_x").alias("_x"), F.col("tile_y").alias("_y"),
+        F.col("cls").cast("string").alias("cls_a"),
     )
     sb = b.select(
-        F.col(x_col).alias("_x"), F.col(y_col).alias("_y"),
-        F.col(class_col).cast("string").alias("cls_b"),
+        F.col("tile_x").alias("_x"), F.col("tile_y").alias("_y"),
+        F.col("cls").cast("string").alias("cls_b"),
     )
     both = sa.join(sb, ["_x", "_y"], "full_outer").select(
         F.coalesce("cls_a", F.lit(absent)).alias("cls_a"),
@@ -524,13 +488,7 @@ def _tanh_sqlish(u: str) -> str:
     return f"((exp(2.0 * ({u})) - 1.0) / (exp(2.0 * ({u})) + 1.0))"
 
 
-def area_weighted_density(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def area_weighted_density(tiles: DataFrame, zoom: int) -> DataFrame:
     """TRUE-AREA density correction for mercator tile grids — the
     cartographic fix every tile-density choropleth needs: a z8 tile at
     60°N covers ~1/4 the ground area of an equatorial one, so raw
@@ -539,7 +497,7 @@ def area_weighted_density(
     is ``(tanh(y_top/R) - tanh(y_bot/R)) / 2`` (of the web-mercator
     world band), and columns within a row split it equally.
 
-    Output ``(tile_x, tile_y, <value_col>, area_pptr, density_ppm)``:
+    Output ``(tile_x, tile_y, page_count, area_pptr, density_ppm)``:
     ``area_pptr`` = the tile's world-area share in parts-per-trillion
     (floor(x+0.5) — the engine-independent rounding over a textually
     identical exp pipeline), ``density_ppm`` = value per ppm of world
@@ -555,11 +513,11 @@ def area_weighted_density(
     r = grid.EARTH_RADIUS
     span = 2.0 * origin
     y_top = (
-        f"(CAST({origin!r} AS DOUBLE) - CAST({y_col} AS DOUBLE) * "
+        f"(CAST({origin!r} AS DOUBLE) - CAST(tile_y AS DOUBLE) * "
         f"CAST({span!r} AS DOUBLE) / CAST({n} AS DOUBLE))"
     )
     y_bot = (
-        f"(CAST({origin!r} AS DOUBLE) - (CAST({y_col} AS DOUBLE) + 1.0) * "
+        f"(CAST({origin!r} AS DOUBLE) - (CAST(tile_y AS DOUBLE) + 1.0) * "
         f"CAST({span!r} AS DOUBLE) / CAST({n} AS DOUBLE))"
     )
     share = (
@@ -569,20 +527,16 @@ def area_weighted_density(
     )
     area = f"CAST(floor({share} * 1000000000000.0 + 0.5) AS BIGINT)"
     return tiles.select(
-        F.col(x_col), F.col(y_col), F.col(value_col),
+        F.col("tile_x"), F.col("tile_y"), F.col("page_count"),
         F.expr(area).alias("area_pptr"),
         F.expr(
-            f"({value_col} * 1000000) div "
+            "(page_count * 1000000) div "
             f"greatest({area} div 1000000, 1)"
         ).alias("density_ppm"),
     )
 
 
-def area_weighted_density_sql(
-    tiles_cte: str,
-    zoom: int,
-    value_col: str = "page_count",
-) -> str:
+def area_weighted_density_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`area_weighted_density` — the identical
     exp pipeline and floor(x+0.5) pin."""
     from rio_cogeo_spark import grid
@@ -607,9 +561,9 @@ def area_weighted_density_sql(
     area = f"CAST(floor({share} * 1000000000000.0 + 0.5) AS BIGINT)"
     return f"""
 WITH awd AS ({tiles_cte})
-SELECT tile_x, tile_y, {value_col},
+SELECT tile_x, tile_y, page_count,
        {area} AS area_pptr,
-       CAST(({value_col} * 1000000) //
+       CAST((page_count * 1000000) //
             greatest({area} // 1000000, 1) AS BIGINT) AS density_ppm
 FROM awd"""
 
@@ -617,12 +571,9 @@ FROM awd"""
 def hillshade(
     tiles: DataFrame,
     zoom: int,
-    value_col: str = "page_count",
     azimuth_deg: float = 315.0,
     altitude_deg: float = 45.0,
     z_factor: float = 1.0,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Analytical hillshading of the density grid (GDAL ``gdaldem
     hillshade`` semantics, Horn '81 gradients) — the cartographic
@@ -664,9 +615,9 @@ def hillshade(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("double").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("double").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -725,7 +676,6 @@ def hillshade(
 def hillshade_sql(
     tiles_cte: str,
     zoom: int,
-    value_col: str = "page_count",
     azimuth_deg: float = 315.0,
     altitude_deg: float = 45.0,
     z_factor: float = 1.0,
@@ -771,7 +721,7 @@ def hillshade_sql(
 WITH hs_t AS ({tiles_cte}),
 hs_v AS (SELECT t.tile_x + o1.dx AS nx, t.tile_y + o2.dy AS ny,
                 -o1.dx AS rx, -o2.dy AS ry,
-                CAST({value_col} AS DOUBLE) AS v
+                CAST(page_count AS DOUBLE) AS v
          FROM hs_t t,
               (VALUES (-1), (0), (1)) o1(dx),
               (VALUES (-1), (0), (1)) o2(dy)
@@ -789,8 +739,6 @@ def morans_i(
     tiles: DataFrame,
     zoom: int,
     value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Global Moran's I spatial autocorrelation over the FULL ``4^zoom``
     grid with binary queen (8-neighbor, edge-clipped) weights — one row
@@ -824,10 +772,10 @@ def morans_i(
     n_grid = 4 ** zoom
     w_total = 4 * (n_side - 1) * (2 * n_side - 1)
     base = tiles.select(
-        F.col(x_col).alias("tile_x"), F.col(y_col).alias("tile_y"),
+        F.col("tile_x"), F.col("tile_y"),
         F.col(value_col).cast("long").alias("_x"),
     )
-    foc = focal_stats(base, zoom, "_x", 1, "tile_x", "tile_y")
+    foc = focal_stats(base, zoom, "_x", 1)
     edge = F.lit(n_side - 1)
     w_i = (
         (F.lit(1) + F.least(F.col("tile_x"), F.lit(1))
@@ -915,13 +863,7 @@ SELECT CAST({n_grid} AS BIGINT) AS n_grid,
 FROM mi_f"""
 
 
-def aspect8(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def aspect8(tiles: DataFrame, zoom: int) -> DataFrame:
     """8-way aspect classification of the density surface (the
     ``gdaldem aspect`` sibling of :func:`hillshade`, reference CLI
     surface rio_cogeo exposes via GDAL): per occupied cell, the compass
@@ -960,9 +902,9 @@ def aspect8(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -1060,14 +1002,7 @@ SELECT tile_x, tile_y, CAST(gx8 AS BIGINT) AS gx8,
 FROM a8_grad"""
 
 
-def contour_cells(
-    tiles: DataFrame,
-    zoom: int,
-    threshold: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def contour_cells(tiles: DataFrame, zoom: int, threshold: int) -> DataFrame:
     """Marching-squares contour extraction over the density grid (the
     ``gdal_contour`` analog): for iso-level ``threshold``, every 2×2
     corner block the contour passes through, with its marching-squares
@@ -1103,9 +1038,9 @@ def contour_cells(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("bx"),
@@ -1145,13 +1080,7 @@ FROM mc_votes GROUP BY 1, 2
 HAVING SUM(bit) BETWEEN 1 AND 14"""
 
 
-def d8_flow(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def d8_flow(tiles: DataFrame, zoom: int) -> DataFrame:
     """D8 steepest-descent flow direction over the density surface (the
     hydrology ``gdaldem``/TauDEM analog, density-as-elevation): per
     occupied cell ``(tile_x, tile_y, d8, rcv_x, rcv_y)`` where ``d8 ∈
@@ -1184,9 +1113,9 @@ def d8_flow(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -1325,7 +1254,6 @@ def flow_accumulation(
     tiles: DataFrame,
     zoom: int,
     rounds: int = 4,
-    value_col: str = "page_count",
 ) -> DataFrame:
     """k-round D8 flow accumulation: ``(tile_x, tile_y, acc)`` where
     ``acc`` counts the upstream cells within ``rounds`` flow steps
@@ -1349,7 +1277,7 @@ def flow_accumulation(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     d8 = (
-        d8_flow(tiles, zoom, value_col)
+        d8_flow(tiles, zoom)
         .select("tile_x", "tile_y", "rcv_x", "rcv_y")
         .localCheckpoint(eager=True)
     )
@@ -1408,13 +1336,7 @@ def flow_accumulation_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
     return "".join(parts)
 
 
-def terrain_rugged(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def terrain_rugged(tiles: DataFrame, zoom: int) -> DataFrame:
     """Terrain-ruggedness report over the density surface — the
     ``gdaldem TRI`` / ``gdaldem TPI`` / ``gdaldem roughness`` trio the
     reference's GDAL backend exposes beside hillshade/aspect (reference
@@ -1448,9 +1370,9 @@ def terrain_rugged(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -1532,12 +1454,7 @@ SELECT nx AS tile_x, ny AS tile_y,
 FROM tr_g WHERE occ = 1"""
 
 
-def viewshed_rows(
-    tiles: DataFrame,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def viewshed_rows(tiles: DataFrame) -> DataFrame:
     """Row-wise west-edge viewshed over the density surface — the
     1-D line-of-sight core of ``gdal_viewshed`` (observer at each
     row's west edge at height 0, density as elevation): a cell is
@@ -1553,10 +1470,10 @@ def viewshed_rows(
     the corpus size; the corpus folds to the occupied-cell table
     before the window runs.
     """
-    v = F.col(value_col).cast("long")
+    v = F.col("page_count").cast("long")
     return tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
         v.alias("page_count"),
     ).select(
         "tile_x", "tile_y", "page_count",
@@ -1590,14 +1507,7 @@ SELECT tile_x, tile_y, page_count, west_max,
 FROM vs"""
 
 
-def proximity(
-    tiles: DataFrame,
-    zoom: int,
-    rounds: int = 3,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def proximity(tiles: DataFrame, zoom: int, rounds: int = 3) -> DataFrame:
     """Grid distance transform — the ``gdal_proximity.py`` analog
     (reference delegates all raster utilities to GDAL): for every cell
     within Chebyshev distance ``rounds`` of an occupied cell, the EXACT
@@ -1619,8 +1529,8 @@ def proximity(
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     n = F.lit(2 ** zoom)
     prox = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
         F.lit(0).cast("long").alias("dist"),
     )
     off = F.explode(
@@ -1682,9 +1592,6 @@ def sieve_components(
     zoom: int,
     rounds: int = 4,
     min_size: int = 3,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Grid connected components + small-patch flag — the
     ``gdal_sieve.py`` analog (flag patches below ``min_size`` cells;
@@ -1711,11 +1618,11 @@ def sieve_components(
         raise ValueError(f"min_size must be >= 1, got {min_size}")
     n = F.lit(2 ** zoom)
     labels = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        (F.col(y_col).cast("long") * F.lit(2 ** zoom)
-         + F.col(x_col).cast("long")).alias("label"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        (F.col("tile_y").cast("long") * F.lit(2 ** zoom)
+         + F.col("tile_x").cast("long")).alias("label"),
+        F.col("page_count").cast("long").alias("v"),
     )
     off = F.explode(
         F.array(*[
@@ -1790,13 +1697,7 @@ FROM sv_{rounds}""")
     return "".join(parts)
 
 
-def geary_c(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def geary_c(tiles: DataFrame, zoom: int) -> DataFrame:
     """Global Geary's C spatial autocorrelation over the FULL ``4^zoom``
     grid with binary queen weights — the local-contrast companion to
     :func:`morans_i` (Moran correlates deviations, Geary squares the
@@ -1821,10 +1722,10 @@ def geary_c(
     n_grid = 4 ** zoom
     w_total = 4 * (n_side - 1) * (2 * n_side - 1)
     base = tiles.select(
-        F.col(x_col).alias("tile_x"), F.col(y_col).alias("tile_y"),
-        F.col(value_col).cast("long").alias("_x"),
+        F.col("tile_x"), F.col("tile_y"),
+        F.col("page_count").cast("long").alias("_x"),
     )
-    foc = focal_stats(base, zoom, "_x", 1, "tile_x", "tile_y")
+    foc = focal_stats(base, zoom, "_x", 1)
     edge = F.lit(n_side - 1)
     w_i = (
         (F.lit(1) + F.least(F.col("tile_x"), F.lit(1))
@@ -1912,13 +1813,7 @@ SELECT CAST({n_grid} AS BIGINT) AS n_grid,
 FROM gc_f"""
 
 
-def local_moran(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def local_moran(tiles: DataFrame, zoom: int) -> DataFrame:
     """Local Moran's I (Anselin's LISA, 1995) per PRESENT cell over the
     FULL-grid mean (absent cells are value 0 and shape the mean,
     variance and neighbor sums exactly; only occupied cells are
@@ -1945,10 +1840,10 @@ def local_moran(
     n_side = 2 ** zoom
     n_grid = 4 ** zoom
     base = tiles.select(
-        F.col(x_col).alias("tile_x"), F.col(y_col).alias("tile_y"),
-        F.col(value_col).cast("long").alias("_x"),
+        F.col("tile_x"), F.col("tile_y"),
+        F.col("page_count").cast("long").alias("_x"),
     )
-    foc = focal_stats(base, zoom, "_x", 1, "tile_x", "tile_y")
+    foc = focal_stats(base, zoom, "_x", 1)
     totals = base.agg(
         F.sum(F.col("_x").cast("decimal(38,0)")).alias("_s"),
         F.sum(F.col("_x").cast("decimal(38,0)") * F.col("_x")).alias("_q"),
@@ -2042,14 +1937,7 @@ SELECT tile_x, tile_y, x, nbrsum, w_i,
 FROM lm_j"""
 
 
-def fillnodata(
-    tiles: DataFrame,
-    zoom: int,
-    rounds: int = 3,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def fillnodata(tiles: DataFrame, zoom: int, rounds: int = 3) -> DataFrame:
     """Nodata fill — the ``gdal_fillnodata.py`` analog (the reference
     delegates raster utilities to GDAL): every cell within Chebyshev
     distance ``rounds`` of an occupied cell takes the value of its
@@ -2075,11 +1963,11 @@ def fillnodata(
     n = F.lit(2 ** zoom)
     n_grid = 4 ** zoom
     st = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        (F.col(y_col).cast("long") * F.lit(2 ** zoom)
-         + F.col(x_col).cast("long")).alias("pack"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        (F.col("tile_y").cast("long") * F.lit(2 ** zoom)
+         + F.col("tile_x").cast("long")).alias("pack"),
+        F.col("page_count").cast("long").alias("v"),
     )
     off = F.explode(
         F.array(*[
@@ -2145,14 +2033,7 @@ FROM fn_{rounds}""")
     return "".join(parts)
 
 
-def polygonize(
-    tiles: DataFrame,
-    zoom: int,
-    rounds: int = 4,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def polygonize(tiles: DataFrame, zoom: int, rounds: int = 4) -> DataFrame:
     """Equal-value connected components — the ``gdal_polygonize.py``
     analog: rook-adjacent cells with the SAME value merge into one
     region (the raster→vector region extraction); regions are labeled
@@ -2178,11 +2059,11 @@ def polygonize(
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     n = F.lit(2 ** zoom)
     labels = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("v"),
-        (F.col(y_col).cast("long") * F.lit(2 ** zoom)
-         + F.col(x_col).cast("long")).alias("label"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.col("page_count").cast("long").alias("v"),
+        (F.col("tile_y").cast("long") * F.lit(2 ** zoom)
+         + F.col("tile_x").cast("long")).alias("label"),
     )
     off = F.explode(
         F.array(*[
@@ -2244,13 +2125,7 @@ FROM pg_{rounds}""")
     return "".join(parts)
 
 
-def curvature(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def curvature(tiles: DataFrame, zoom: int) -> DataFrame:
     """Discrete Laplacian curvature of the density surface — the
     second-derivative sibling of :func:`aspect8`/:func:`hillshade`
     (gdaldem's curvature analog; GDAL exposes it through the TPI
@@ -2278,9 +2153,9 @@ def curvature(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -2330,14 +2205,7 @@ SELECT CAST(nx AS BIGINT) AS tile_x, CAST(ny AS BIGINT) AS tile_y,
 FROM cv_a WHERE occ = 1"""
 
 
-def semivariogram(
-    tiles: DataFrame,
-    zoom: int,
-    max_lag: int = 4,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def semivariogram(tiles: DataFrame, zoom: int, max_lag: int = 4) -> DataFrame:
     """Experimental (Matheron) semivariogram of the density surface
     over axis-aligned rook directions, lags ``1..max_lag`` — the
     spatial-continuity profile geostatistics fits a kriging model to
@@ -2377,9 +2245,9 @@ def semivariogram(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.kdx")).alias("px"),
@@ -2445,14 +2313,7 @@ SELECT lag, CAST(n_pairs AS BIGINT) AS n_pairs,
 FROM sv_a"""
 
 
-def join_counts(
-    tiles: DataFrame,
-    zoom: int,
-    threshold: int = 2,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def join_counts(tiles: DataFrame, zoom: int, threshold: int = 2) -> DataFrame:
     """Join-count statistics (Cliff-Ord BB/BW/WW) of the binarized
     density grid under rook adjacency over the FULL ``2^zoom`` grid —
     the categorical sibling of :func:`morans_i`/:func:`geary_c`: a
@@ -2473,7 +2334,7 @@ def join_counts(
     """
     n = 2 ** zoom
     j_total = 2 * n * (n - 1)
-    b = (F.col(value_col).cast("long") >= F.lit(threshold)).cast("long")
+    b = (F.col("page_count").cast("long") >= F.lit(threshold)).cast("long")
     off = F.explode(
         F.array(*[
             F.struct(F.lit(kdx).alias("kdx"), F.lit(kdy).alias("kdy"),
@@ -2484,8 +2345,8 @@ def join_counts(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
         b.alias("_b"),
         off,
     ).select(
@@ -2629,13 +2490,7 @@ def _terrain_stage2(intdiv: str) -> list[str]:
     ]
 
 
-def terrain_indices(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def terrain_indices(tiles: DataFrame, zoom: int) -> DataFrame:
     """gdaldem TRI / TPI / roughness over the density grid — the three
     remaining ``gdaldem`` modes beside :func:`hillshade`,
     :func:`aspect8` and the slope/color-relief ops (GDAL
@@ -2672,9 +2527,9 @@ def terrain_indices(
         ])
     ).alias("off")
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -2707,9 +2562,7 @@ def terrain_indices(
     )
 
 
-def terrain_indices_sql(
-    tiles_cte: str, zoom: int, value_col: str = "page_count",
-) -> str:
+def terrain_indices_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`terrain_indices` — identical slot folds and
     textually identical stage-1/stage-2 reductions (int-div token ``//``
     on the non-negative TRI quotient only)."""
@@ -2724,7 +2577,7 @@ def terrain_indices_sql(
 WITH ti_t AS ({tiles_cte}),
 ti_v AS (SELECT t.tile_x + o1.dx AS nx, t.tile_y + o2.dy AS ny,
                 -o1.dx AS rx, -o2.dy AS ry,
-                CAST({value_col} AS BIGINT) AS v
+                CAST(page_count AS BIGINT) AS v
          FROM ti_t t,
               (VALUES (-1), (0), (1)) o1(dx),
               (VALUES (-1), (0), (1)) o2(dy)
@@ -2808,12 +2661,7 @@ _KNOX_FINAL = [
 ]
 
 
-def knox_stat(
-    points: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    t_col: str = "t_bucket",
-) -> DataFrame:
+def knox_stat(points: DataFrame) -> DataFrame:
     """Knox space-time interaction statistic over point features on an
     integer (cell, time-bucket) lattice — the classic epidemiology /
     crawl-burst test: do events cluster in space AND time together
@@ -2841,8 +2689,8 @@ def knox_stat(
     (utils.py:125-140); time buckets play the band role.
     """
     ctd = points.groupBy(
-        F.col(x_col).alias("cx"), F.col(y_col).alias("cy"),
-        F.col(t_col).alias("ct"),
+        F.col("tile_x").alias("cx"), F.col("tile_y").alias("cy"),
+        F.col("t_bucket").alias("ct"),
     ).agg(F.count(F.lit(1)).alias("n"))
     cells = ctd.groupBy("cx", "cy").agg(F.sum("n").alias("n"))
     buckets = ctd.groupBy("ct").agg(F.sum("n").alias("n"))
@@ -2856,14 +2704,9 @@ def knox_stat(
     )
 
 
-def knox_stat_sql(
-    points_cte: str,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    t_col: str = "t_bucket",
-) -> str:
+def knox_stat_sql(points_cte: str) -> str:
     """DuckDB twin of :func:`knox_stat` — ``points_cte`` is a SELECT
-    exposing one row per point with ``x_col, y_col, t_col``; the final
+    exposing one row per point with ``tile_x, tile_y, t_bucket``; the final
     projection is textually identical to the Spark side."""
 
     def block(src: str, keys, tag: str, out: str) -> str:
@@ -2889,7 +2732,7 @@ def knox_stat_sql(
 
     final = ",\n       ".join(_KNOX_FINAL)
     return f"""WITH kx_pts AS ({points_cte}),
-kx_c AS (SELECT {x_col} AS cx, {y_col} AS cy, {t_col} AS ct,
+kx_c AS (SELECT tile_x AS cx, tile_y AS cy, t_bucket AS ct,
                 COUNT(*) AS n
          FROM kx_pts GROUP BY 1, 2, 3),
 ks_c AS (SELECT cx, cy, SUM(n) AS n FROM kx_c GROUP BY 1, 2),
@@ -2922,12 +2765,7 @@ def _centro_final(intdiv: str) -> list[str]:
     ]
 
 
-def centrography(
-    tiles: DataFrame,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def centrography(tiles: DataFrame) -> DataFrame:
     """Centrographic summary of the density surface — the classic
     point-pattern first moments (mean center + standard distance,
     weighted by cell density): one row ``(n_cells, w_total,
@@ -2945,9 +2783,9 @@ def centrography(
     zooms ≤ 20 at 10^12 pages).
     """
     d = "decimal(38,0)"
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    w = F.col(value_col).cast("long")
+    x = F.col("tile_x").cast("long")
+    y = F.col("tile_y").cast("long")
+    w = F.col("page_count").cast("long")
     agg = tiles.agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.sum(w).cast(d).alias("w_total"),
@@ -2959,18 +2797,18 @@ def centrography(
     return agg.selectExpr(*_centro_final("div"))
 
 
-def centrography_sql(tiles_cte: str, value_col: str = "page_count") -> str:
+def centrography_sql(tiles_cte: str) -> str:
     """DuckDB twin of :func:`centrography` — ``tiles_cte`` is a SELECT
-    exposing ``tile_x, tile_y, {value_col}``; final projection
+    exposing ``tile_x, tile_y, page_count``; final projection
     textually identical (int-div token ``//``)."""
     final = ",\n       ".join(_centro_final("//"))
     return f"""WITH cg_t AS ({tiles_cte}),
 cg_a AS (SELECT COUNT(*) AS n_cells,
-                CAST(SUM({value_col}) AS HUGEINT) AS w_total,
-                SUM(CAST({value_col} AS HUGEINT) * tile_x) AS swx,
-                SUM(CAST({value_col} AS HUGEINT) * tile_y) AS swy,
-                SUM(CAST({value_col} AS HUGEINT) * tile_x * tile_x) AS sxx,
-                SUM(CAST({value_col} AS HUGEINT) * tile_y * tile_y) AS syy
+                CAST(SUM(page_count) AS HUGEINT) AS w_total,
+                SUM(CAST(page_count AS HUGEINT) * tile_x) AS swx,
+                SUM(CAST(page_count AS HUGEINT) * tile_y) AS swy,
+                SUM(CAST(page_count AS HUGEINT) * tile_x * tile_x) AS sxx,
+                SUM(CAST(page_count AS HUGEINT) * tile_y * tile_y) AS syy
          FROM cg_t)
 SELECT {final}
 FROM cg_a"""
@@ -3005,13 +2843,7 @@ def _nn_final(intdiv: str) -> list[str]:
     ]
 
 
-def nn_index(
-    tiles: DataFrame,
-    zoom: int,
-    max_ring: int = 3,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def nn_index(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     """Grid-adapted Clark-Evans nearest-neighbor index of the occupied
     cells: per occupied cell, the EXACT Chebyshev distance to the
     nearest OTHER occupied cell, searched out to ``max_ring`` (cells
@@ -3040,8 +2872,8 @@ def nn_index(
             for dx, dy in _ring_offsets(k)
         ]
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
         F.explode(F.array(*entries)).alias("off"),
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("kx"),
@@ -3107,13 +2939,7 @@ def _ripley_final(max_r: int, grid_n: int) -> list[str]:
     ]
 
 
-def ripley_k(
-    points: DataFrame,
-    zoom: int,
-    max_r: int = 4,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def ripley_k(points: DataFrame, zoom: int, max_r: int = 4) -> DataFrame:
     """Grid-adapted Ripley's K of the point pattern (one row per cell
     per point is fine — multiplicities count) at Chebyshev radii
     ``1..max_r``: per radius, the EXACT number of unordered distinct
@@ -3132,8 +2958,8 @@ def ripley_k(
     if max_r < 1:
         raise ValueError(f"max_r must be >= 1, got {max_r}")
     counts = points.groupBy(
-        F.col(x_col).cast("long").alias("cx"),
-        F.col(y_col).cast("long").alias("cy"),
+        F.col("tile_x").cast("long").alias("cx"),
+        F.col("tile_y").cast("long").alias("cy"),
     ).agg(F.count(F.lit(1)).alias("n"))
     entries = [F.struct(F.lit(0).alias("r"), F.lit(0).alias("dx"),
                         F.lit(0).alias("dy"))]
@@ -3179,10 +3005,7 @@ def ripley_k(
     return per_r.selectExpr(*_ripley_final(max_r, 2 ** zoom))
 
 
-def ripley_k_sql(
-    points_cte: str, zoom: int, max_r: int = 4,
-    x_col: str = "tile_x", y_col: str = "tile_y",
-) -> str:
+def ripley_k_sql(points_cte: str, zoom: int, max_r: int = 4) -> str:
     """DuckDB twin of :func:`ripley_k` — identical disc offsets,
     conditional ring sums and final projection (the per-radius rows
     come from the same bounded UNION via UNPIVOT-free UNION ALL)."""
@@ -3206,7 +3029,7 @@ def ripley_k_sql(
     )
     final = ",\n       ".join(_ripley_final(max_r, 2 ** zoom))
     return f"""WITH rk_pts AS ({points_cte}),
-rk_c AS (SELECT {x_col} AS cx, {y_col} AS cy, COUNT(*) AS n
+rk_c AS (SELECT tile_x AS cx, tile_y AS cy, COUNT(*) AS n
          FROM rk_pts GROUP BY 1, 2),
 rk_v AS (SELECT c.cx + o.dx AS kx, c.cy + o.dy AS ky, o.r, c.n
          FROM rk_c c, (VALUES {", ".join(vals)}) o(r, dx, dy)),
@@ -3222,11 +3045,7 @@ SELECT {final}
 FROM rk_u"""
 
 
-def quadrat_test(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-) -> DataFrame:
+def quadrat_test(tiles: DataFrame, zoom: int) -> DataFrame:
     """Quadrat-count dispersion test of the point pattern — the
     variance-to-mean ratio of per-cell counts over the FULL ``4^zoom``
     grid (absent cells are zero-count quadrats), FULLY exact integer:
@@ -3245,7 +3064,7 @@ def quadrat_test(
     """
     c = 4 ** zoom
     d = "decimal(38,0)"
-    v = F.col(value_col).cast("long")
+    v = F.col("page_count").cast("long")
     agg = tiles.agg(
         F.count(F.lit(1)).alias("n_occupied"),
         F.sum(v).cast(d).alias("s"),
@@ -3261,15 +3080,13 @@ def quadrat_test(
     )
 
 
-def quadrat_test_sql(
-    tiles_cte: str, zoom: int, value_col: str = "page_count"
-) -> str:
+def quadrat_test_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`quadrat_test` (int-div ``//``)."""
     c = 4 ** zoom
     return f"""WITH qt_t AS ({tiles_cte}),
 qt_a AS (SELECT COUNT(*) AS n_occupied,
-                CAST(SUM({value_col}) AS HUGEINT) AS s,
-                SUM(CAST({value_col} AS HUGEINT) * {value_col}) AS q
+                CAST(SUM(page_count) AS HUGEINT) AS s,
+                SUM(CAST(page_count AS HUGEINT) * page_count) AS q
          FROM qt_t)
 SELECT CAST({c} AS BIGINT) AS n_quadrats,
        CAST(n_occupied AS BIGINT) AS n_occupied,
@@ -3280,13 +3097,7 @@ SELECT CAST({c} AS BIGINT) AS n_quadrats,
 FROM qt_a"""
 
 
-def general_g(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def general_g(tiles: DataFrame, zoom: int) -> DataFrame:
     """Getis-Ord General G — the GLOBAL hot-spot statistic (the global
     sibling of :func:`hotspots`' Gi*): with queen radius-1 weights over
     the occupied cells (absent cells are zero and contribute nothing
@@ -3314,9 +3125,9 @@ def general_g(
         for dx, dy in _offsets(1) if (dx, dy) != (0, 0)
     ]
     base = tiles.select(
-        F.col(x_col).cast("long").alias("cx"),
-        F.col(y_col).cast("long").alias("cy"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("tile_x").cast("long").alias("cx"),
+        F.col("tile_y").cast("long").alias("cy"),
+        F.col("page_count").cast("long").alias("v"),
     )
     g = base.select(
         "cx", "cy", "v", F.explode(F.array(*entries)).alias("off")
@@ -3352,16 +3163,14 @@ def general_g(
     )
 
 
-def general_g_sql(
-    tiles_cte: str, zoom: int, value_col: str = "page_count"
-) -> str:
+def general_g_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`general_g` (int-div ``//``; identical
     8-offset votes)."""
     nb = [o for o in _offsets(1) if o != (0, 0)]
     vals = ", ".join(["(0, 0, 0)"]
                      + [f"(1, {dx}, {dy})" for dx, dy in nb])
     return f"""WITH gg_t AS (SELECT tile_x AS cx, tile_y AS cy,
-                     CAST({value_col} AS BIGINT) AS v
+                     CAST(page_count AS BIGINT) AS v
               FROM ({tiles_cte})),
 gg_v AS (SELECT t.cx + o.dx AS kx, t.cy + o.dy AS ky, o.r, t.v
          FROM gg_t t, (VALUES {vals}) o(r, dx, dy)),
@@ -3386,10 +3195,7 @@ SELECT CAST(n_cells AS BIGINT) AS n_cells,
 FROM gg_a, gg_n"""
 
 
-def gini_concentration(
-    tiles: DataFrame,
-    value_col: str = "page_count",
-) -> DataFrame:
+def gini_concentration(tiles: DataFrame) -> DataFrame:
     """Gini coefficient of crawl concentration over the OCCUPIED units
     (cells, hosts, …) — the inequality gauge of the density surface,
     FULLY exact integer: with values ranked ascending (any order among
@@ -3405,7 +3211,7 @@ def gini_concentration(
     host-bounded, never the corpus) + one fold.
     """
     d = "decimal(38,0)"
-    ranked = tiles.select(F.col(value_col).cast("long").alias("v")).withColumn(
+    ranked = tiles.select(F.col("page_count").cast("long").alias("v")).withColumn(
         "i", F.row_number().over(Window.orderBy(F.col("v").asc()))
     )
     agg = ranked.agg(
@@ -3422,12 +3228,12 @@ def gini_concentration(
     )
 
 
-def gini_concentration_sql(units_cte: str, value_col: str = "v") -> str:
+def gini_concentration_sql(units_cte: str) -> str:
     """DuckDB twin of :func:`gini_concentration` — ``units_cte``
-    exposes one row per unit with ``{value_col}``."""
+    exposes one row per unit with ``v``."""
     return f"""WITH gi_u AS ({units_cte}),
-gi_r AS (SELECT CAST({value_col} AS BIGINT) AS v,
-                ROW_NUMBER() OVER (ORDER BY {value_col} ASC) AS i
+gi_r AS (SELECT CAST(v AS BIGINT) AS v,
+                ROW_NUMBER() OVER (ORDER BY v ASC) AS i
          FROM gi_u),
 gi_a AS (SELECT COUNT(*) AS n, CAST(SUM(v) AS HUGEINT) AS s,
                 SUM(CAST(i AS HUGEINT) * v) AS ws
@@ -3455,7 +3261,6 @@ def _scan_final(intdiv: str, top_k: int) -> list[str]:
 def scan_stat(
     tiles: DataFrame,
     zoom: int,
-    value_col: str = "page_count",
     radius: int = 1,
     top_k: int = 20,
 ) -> DataFrame:
@@ -3475,13 +3280,13 @@ def scan_stat(
     onto it, one top-K window over the grid-bounded candidate table.
     """
     d = "decimal(38,0)"
-    fs = focal_stats(tiles, zoom, value_col, radius).select(
+    fs = focal_stats(tiles, zoom, "page_count", radius).select(
         "tile_x", "tile_y",
         F.col("focal_sum").cast(d).alias("focal_sum"),
         F.col("n_cells").cast(d).alias("win_area"),
     )
     tot = tiles.agg(
-        F.sum(F.col(value_col).cast("long")).cast(d).alias("total"),
+        F.sum(F.col("page_count").cast("long")).cast(d).alias("total"),
         F.lit(4 ** zoom).cast(d).alias("n_quadrats"),
     )
     ranked = fs.crossJoin(F.broadcast(tot)).withColumn(
@@ -3501,7 +3306,6 @@ def scan_stat(
 def scan_stat_sql(
     tiles_cte: str,
     zoom: int,
-    value_col: str = "page_count",
     radius: int = 1,
     top_k: int = 20,
 ) -> str:
@@ -3512,7 +3316,7 @@ def scan_stat_sql(
     r = radius
     return f"""WITH sc_t AS ({tiles_cte}),
 sc_v AS (SELECT t.tile_x + o.dx AS nx, t.tile_y + o.dy AS ny,
-                CAST(t.{value_col} AS BIGINT) AS v
+                CAST(t.page_count AS BIGINT) AS v
          FROM sc_t t, (VALUES {offs}) o(dx, dy)
          WHERE t.tile_x + o.dx BETWEEN 0 AND {edge}
            AND t.tile_y + o.dy BETWEEN 0 AND {edge}),
@@ -3522,7 +3326,7 @@ sc_f AS (SELECT nx AS tile_x, ny AS tile_y,
                    * (1 + LEAST(ny, {r}) + LEAST({edge} - ny, {r}))
                    AS HUGEINT) AS win_area
          FROM sc_v GROUP BY 1, 2),
-sc_g AS (SELECT CAST(SUM({value_col}) AS HUGEINT) AS total,
+sc_g AS (SELECT CAST(SUM(page_count) AS HUGEINT) AS total,
                 CAST({4 ** zoom} AS HUGEINT) AS n_quadrats
          FROM sc_t),
 sc_r AS (SELECT f.*, g.total, g.n_quadrats,
@@ -3535,13 +3339,7 @@ SELECT {", ".join(_scan_final("//", top_k))}
 FROM sc_r WHERE _rk <= {int(top_k)}"""
 
 
-def g_function(
-    tiles: DataFrame,
-    zoom: int,
-    max_ring: int = 3,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def g_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     """Diggle's G function — the nearest-neighbor distance CDF of the
     occupied cells (the distributional refinement of
     :func:`nn_index`'s mean): one row per Chebyshev distance ``k =
@@ -3566,8 +3364,8 @@ def g_function(
             for dx, dy in _ring_offsets(k)
         ]
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
         F.explode(F.array(*entries)).alias("off"),
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("kx"),
@@ -3631,12 +3429,7 @@ SELECT CAST(k AS BIGINT) AS k,
 FROM gf_c, gf_n"""
 
 
-def lang_adjacency(
-    cells: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def lang_adjacency(cells: DataFrame) -> DataFrame:
     """Spatial label adjacency — the segregation gauge of a labeled
     grid (cells labeled by majority language): one row per unordered
     label pair ``(lang_a ≤ lang_b, n_pairs)`` counting queen-adjacent
@@ -3661,9 +3454,9 @@ def lang_adjacency(
         for i, (dx, dy) in enumerate(dirs)
     ]
     votes = cells.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
-        F.col(label_col).alias("_l"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
+        F.col("lang").alias("_l"),
         F.explode(F.array(*entries)).alias("off"),
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("px"),
@@ -3686,7 +3479,7 @@ def lang_adjacency(
     )
 
 
-def lang_adjacency_sql(cells_cte: str, label_col: str = "lang") -> str:
+def lang_adjacency_sql(cells_cte: str) -> str:
     """DuckDB twin of :func:`lang_adjacency` — identical canonical
     directions and pair fold."""
     dirs = [(1, 0), (0, 1), (1, 1), (1, -1)]
@@ -3696,7 +3489,7 @@ def lang_adjacency_sql(cells_cte: str, label_col: str = "lang") -> str:
     )
     return f"""WITH la_t AS ({cells_cte}),
 la_v AS (SELECT t.tile_x + o.dx AS px, t.tile_y + o.dy AS py,
-                o.d, o.role, t.{label_col} AS l
+                o.d, o.role, t.lang AS l
          FROM la_t t, (VALUES {vals}) o(d, role, dx, dy)),
 la_p AS (SELECT px, py, d,
                 MAX(CASE WHEN role = 'L' THEN l END) AS la,
@@ -3746,12 +3539,7 @@ def _ellipse_final(intdiv: str) -> list[str]:
     ]
 
 
-def sd_ellipse(
-    tiles: DataFrame,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def sd_ellipse(tiles: DataFrame) -> DataFrame:
     """Standard deviational ellipse of the density surface — the
     directional refinement of :func:`centrography`'s standard distance
     (Lefever 1926; the classic point-pattern dispersion ellipse): one
@@ -3772,9 +3560,9 @@ def sd_ellipse(
     :func:`centrography` envelope squared once, documented there).
     """
     d = "decimal(38,0)"
-    x = F.col(x_col).cast("long")
-    y = F.col(y_col).cast("long")
-    w = F.col(value_col).cast("long")
+    x = F.col("tile_x").cast("long")
+    y = F.col("tile_y").cast("long")
+    w = F.col("page_count").cast("long")
     agg = tiles.agg(
         F.count(F.lit(1)).alias("n_cells"),
         F.sum(w).cast(d).alias("w_total"),
@@ -3787,30 +3575,24 @@ def sd_ellipse(
     return agg.selectExpr(*_ellipse_final("div"))
 
 
-def sd_ellipse_sql(tiles_cte: str, value_col: str = "page_count") -> str:
+def sd_ellipse_sql(tiles_cte: str) -> str:
     """DuckDB twin of :func:`sd_ellipse` — identical fold and final
     projection (int-div token ``//``)."""
     final = ",\n       ".join(_ellipse_final("//"))
     return f"""WITH se_t AS ({tiles_cte}),
 se_a AS (SELECT COUNT(*) AS n_cells,
-                CAST(SUM({value_col}) AS HUGEINT) AS w_total,
-                SUM(CAST({value_col} AS HUGEINT) * tile_x) AS swx,
-                SUM(CAST({value_col} AS HUGEINT) * tile_y) AS swy,
-                SUM(CAST({value_col} AS HUGEINT) * tile_x * tile_x) AS sxx,
-                SUM(CAST({value_col} AS HUGEINT) * tile_y * tile_y) AS syy,
-                SUM(CAST({value_col} AS HUGEINT) * tile_x * tile_y) AS sxy
+                CAST(SUM(page_count) AS HUGEINT) AS w_total,
+                SUM(CAST(page_count AS HUGEINT) * tile_x) AS swx,
+                SUM(CAST(page_count AS HUGEINT) * tile_y) AS swy,
+                SUM(CAST(page_count AS HUGEINT) * tile_x * tile_x) AS sxx,
+                SUM(CAST(page_count AS HUGEINT) * tile_y * tile_y) AS syy,
+                SUM(CAST(page_count AS HUGEINT) * tile_x * tile_y) AS sxy
          FROM se_t)
 SELECT {final}
 FROM se_a"""
 
 
-def f_function(
-    tiles: DataFrame,
-    zoom: int,
-    max_ring: int = 3,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def f_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     """Diggle's F function (the EMPTY-SPACE function) — the CDF of the
     distance from an empty grid cell to its nearest OCCUPIED cell: one
     row per Chebyshev distance ``k = 1..max_ring`` with the exact count
@@ -3843,8 +3625,8 @@ def f_function(
             for dx, dy in _ring_offsets(k)
         ]
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
         F.explode(F.array(*entries)).alias("off"),
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("kx"),
@@ -3916,13 +3698,7 @@ SELECT CAST(k AS BIGINT) AS k,
 FROM ff_c, ff_n"""
 
 
-def j_function(
-    tiles: DataFrame,
-    zoom: int,
-    max_ring: int = 3,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def j_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     """Van Lieshout & Baddeley's J function — ``J(k) = (1 − G(k)) /
     (1 − F(k))``, the single-number CSR diagnostic combining the
     nearest-neighbor CDF (:func:`g_function`) and the empty-space CDF
@@ -3953,8 +3729,8 @@ def j_function(
             for dx, dy in _ring_offsets(k)
         ]
     votes = tiles.select(
-        F.col(x_col).cast("long").alias("_sx"),
-        F.col(y_col).cast("long").alias("_sy"),
+        F.col("tile_x").cast("long").alias("_sx"),
+        F.col("tile_y").cast("long").alias("_sy"),
         F.explode(F.array(*entries)).alias("off"),
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("kx"),
@@ -4068,14 +3844,7 @@ def _ring_w_total(n: int, k: int) -> int:
     )
 
 
-def correlogram(
-    tiles: DataFrame,
-    zoom: int,
-    max_lag: int = 3,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
     """Moran spatial correlogram — global Moran's I at Chebyshev lag
     EXACTLY ``k`` for ``k = 1..max_lag`` (binary ring-k weights over
     the full ``4^zoom`` grid, absent cells value 0): the
@@ -4105,9 +3874,9 @@ def correlogram(
     n_grid = 4 ** zoom
     d = "decimal(38,0)"
     base = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_x"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.col("page_count").cast("long").alias("_x"),
     )
     entries = []
     for k in range(1, max_lag + 1):
@@ -4286,9 +4055,6 @@ def emerging_hotspots(
     top_k: int = 50,
     min_buckets: int = 3,
     bucket_sec: int = 3600,
-    ts_col: str = "ts_sec",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Emerging/declining hot spots — the space-time-cube trend scan:
     per occupied cell, the EXACT Mann-Kendall S statistic of its
@@ -4309,9 +4075,9 @@ def emerging_hotspots(
     if min_buckets < 2:
         raise ValueError(f"min_buckets must be >= 2, got {min_buckets}")
     cb = pts.groupBy(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.floor(F.col(ts_col).cast("long") / F.lit(int(bucket_sec)))
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.floor(F.col("ts_sec").cast("long") / F.lit(int(bucket_sec)))
         .cast("long").alias("bkt"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     cells = cb.groupBy("tile_x", "tile_y").agg(
@@ -4362,7 +4128,6 @@ def emerging_hotspots_sql(
     top_k: int = 50,
     min_buckets: int = 3,
     bucket_sec: int = 3600,
-    ts_col: str = "ts_sec",
 ) -> str:
     """DuckDB twin of :func:`emerging_hotspots` — within-cell pair
     self-join over observed buckets (int-div ``//``)."""
@@ -4370,7 +4135,7 @@ def emerging_hotspots_sql(
         raise ValueError(f"min_buckets must be >= 2, got {min_buckets}")
     return f"""WITH eh_p AS ({pts_cte}),
 eh_c AS (SELECT tile_x, tile_y,
-                CAST({ts_col} AS BIGINT) // {int(bucket_sec)} AS bkt,
+                CAST(ts_sec AS BIGINT) // {int(bucket_sec)} AS bkt,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM eh_p GROUP BY 1, 2, 3),
 eh_n AS (SELECT tile_x, tile_y, CAST(COUNT(*) AS BIGINT) AS n_buckets
@@ -4397,13 +4162,7 @@ ORDER BY ABS(s.s_stat) DESC, s.s_stat DESC, n.tile_x ASC, n.tile_y ASC
 LIMIT {int(top_k)}"""
 
 
-def rank_size(
-    tiles: DataFrame,
-    top_k: int = 50,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def rank_size(tiles: DataFrame, top_k: int = 50) -> DataFrame:
     """Rank-size rule over the density surface — the Zipf's-law-for-
     cities diagnostic applied to crawl cells: the ``top_k`` cells by
     page count with their rank, the Zipf product ``rank·count``
@@ -4418,9 +4177,9 @@ def rank_size(
     """
     top = (
         tiles.select(
-            F.col(x_col).cast("long").alias("tile_x"),
-            F.col(y_col).cast("long").alias("tile_y"),
-            F.col(value_col).cast("long").alias("cnt"),
+            F.col("tile_x").cast("long").alias("tile_x"),
+            F.col("tile_y").cast("long").alias("tile_y"),
+            F.col("page_count").cast("long").alias("cnt"),
         )
         .orderBy(
             F.col("cnt").desc(), F.col("tile_x").asc(),
@@ -4474,9 +4233,6 @@ def colocation_quotient(
     cells: DataFrame,
     zoom: int,
     max_ring: int = 3,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
 ) -> DataFrame:
     """Leslie–Kronenfeld colocation quotient (CLQ) between every
     ordered label pair over the occupied-cell pattern — ``CLQ_{a→b} =
@@ -4507,9 +4263,9 @@ def colocation_quotient(
     n_side = 2 ** zoom
     d = "decimal(38,0)"
     base = cells.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.col(label_col).alias("_l"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.col("lang").alias("_l"),
     )
     entries = []
     for k in range(1, max_ring + 1):
@@ -4584,7 +4340,7 @@ def colocation_quotient(
 
 
 def colocation_quotient_sql(
-    cells_cte: str, zoom: int, max_ring: int = 3, label_col: str = "lang"
+    cells_cte: str, zoom: int, max_ring: int = 3
 ) -> str:
     """DuckDB twin of :func:`colocation_quotient` (int-div ``//``)."""
     if max_ring < 1:
@@ -4596,7 +4352,7 @@ def colocation_quotient_sql(
     return f"""WITH cq_t AS ({cells_cte}),
 cq_b AS (SELECT CAST(tile_x AS BIGINT) AS tile_x,
                 CAST(tile_y AS BIGINT) AS tile_y,
-                {label_col} AS l
+                lang AS l
          FROM cq_t),
 cq_v AS (SELECT b.tile_x AS sx, b.tile_y AS sy, b.l AS sl,
                 b.tile_x + o.dx AS vx, b.tile_y + o.dy AS vy, o.k
@@ -4635,14 +4391,7 @@ JOIN cq_l a ON a.l = s.lang_a
 JOIN cq_l b ON b.l = s.lang_b, cq_n n"""
 
 
-def cross_moran(
-    tiles: DataFrame,
-    zoom: int,
-    x_value_col: str = "x_count",
-    y_value_col: str = "y_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def cross_moran(tiles: DataFrame, zoom: int) -> DataFrame:
     """Bivariate (cross) Moran's I between two density surfaces over
     the full ``4^zoom`` grid with binary queen weights — does variable
     X cluster where variable Y's NEIGHBORHOOD is high (e.g. one
@@ -4670,10 +4419,10 @@ def cross_moran(
     w_total = 4 * (n_side - 1) * (2 * n_side - 1)
     d = "decimal(38,0)"
     base = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.col(x_value_col).cast("long").alias("_x"),
-        F.col(y_value_col).cast("long").alias("_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.col("x_count").cast("long").alias("_x"),
+        F.col("y_count").cast("long").alias("_y"),
     )
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
             if (dx, dy) != (0, 0)]
@@ -4822,13 +4571,7 @@ _DENSITY_CLS = ("CASE WHEN {c} >= 8 THEN 'peak' WHEN {c} >= 4 THEN 'high'"
                 " WHEN {c} >= 2 THEN 'mid' ELSE 'low' END")
 
 
-def cell_transitions(
-    pts: DataFrame,
-    bucket_sec: int = 3600,
-    ts_col: str = "ts_sec",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def cell_transitions(pts: DataFrame, bucket_sec: int = 3600) -> DataFrame:
     """Space-time density-class transition matrix (the Markov view of
     the space-time cube, Rey's spatial-dynamics staple): over
     consecutive time buckets, how often an EVER-OCCUPIED cell moves
@@ -4846,9 +4589,9 @@ def cell_transitions(
     broadcast 1-row totals; no Python.
     """
     cb = pts.groupBy(
-        F.col(x_col).cast("long").alias("cx"),
-        F.col(y_col).cast("long").alias("cy"),
-        F.floor(F.col(ts_col).cast("long") / F.lit(int(bucket_sec)))
+        F.col("tile_x").cast("long").alias("cx"),
+        F.col("tile_y").cast("long").alias("cy"),
+        F.floor(F.col("ts_sec").cast("long") / F.lit(int(bucket_sec)))
         .cast("long").alias("bkt"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     cls = _DENSITY_CLS.format(c="cnt")
@@ -4911,14 +4654,12 @@ def cell_transitions(
     ).unionByName(ee)
 
 
-def cell_transitions_sql(
-    pts_cte: str, bucket_sec: int = 3600, ts_col: str = "ts_sec"
-) -> str:
+def cell_transitions_sql(pts_cte: str, bucket_sec: int = 3600) -> str:
     """DuckDB twin of :func:`cell_transitions` (int-div ``//``)."""
     cls = _DENSITY_CLS.format(c="cnt")
     return f"""WITH ct_p AS ({pts_cte}),
 ct_c AS (SELECT tile_x AS cx, tile_y AS cy,
-                CAST({ts_col} AS BIGINT) // {int(bucket_sec)} AS bkt,
+                CAST(ts_sec AS BIGINT) // {int(bucket_sec)} AS bkt,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM ct_p GROUP BY 1, 2, 3),
 ct_k AS (SELECT cx, cy, bkt, {cls} AS cls FROM ct_c),
@@ -4948,13 +4689,7 @@ UNION ALL
 SELECT cls_from, cls_to, n_trans FROM ct_e WHERE n_trans > 0"""
 
 
-def moran_quadrants(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def moran_quadrants(tiles: DataFrame, zoom: int) -> DataFrame:
     """Moran-scatterplot quadrant census over the OCCUPIED cells — the
     categorical companion of :func:`local_moran`: each occupied cell
     lands in HH / HL / LH / LL by comparing its value and its spatial
@@ -4974,9 +4709,9 @@ def moran_quadrants(
     n_grid = 4 ** zoom
     d = "decimal(38,0)"
     base = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_x"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.col("page_count").cast("long").alias("_x"),
     )
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
             if (dx, dy) != (0, 0)]
@@ -5091,11 +4826,7 @@ FROM (VALUES ('HH'), ('HL'), ('LH'), ('LL')) s(quadrant)
 LEFT JOIN mq_c c ON c.quadrant = s.quadrant"""
 
 
-def compactness(
-    tiles: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def compactness(tiles: DataFrame) -> DataFrame:
     """Shape compactness of the occupied footprint — perimeter, rook
     adjacency count, and the isoperimetric quotient (1 for a disc,
     → 0 for filaments/archipelagos): one row ``(n_cells, rook_pairs,
@@ -5112,8 +4843,8 @@ def compactness(
     one 1-row combine.  No Python, nothing O(grid).
     """
     base = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
     )
     votes = (
         base.select(
@@ -5175,14 +4906,7 @@ SELECT n_cells, rook_pairs,
 FROM cp_n, cp_e"""
 
 
-def diurnal(
-    pts: DataFrame,
-    top_k: int = 50,
-    min_pages: int = 8,
-    ts_col: str = "ts_sec",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def diurnal(pts: DataFrame, top_k: int = 50, min_pages: int = 8) -> DataFrame:
     """Diurnal periodicity scan — per cell, the EXACT chi-square
     statistic of its hour-of-day activity histogram against the
     uniform 24-hour profile (crawl-scheduler artifacts and regional
@@ -5206,9 +4930,9 @@ def diurnal(
         raise ValueError(f"min_pages must be >= 1, got {min_pages}")
     d = "decimal(38,0)"
     ch = pts.groupBy(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        ((F.col(ts_col).cast("long") / F.lit(3600)).cast("long") % 24)
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        ((F.col("ts_sec").cast("long") / F.lit(3600)).cast("long") % 24)
         .alias("hour"),
     ).agg(F.count(F.lit(1)).cast("long").alias("o"))
     ch_t = ch.withColumn(
@@ -5239,16 +4963,13 @@ def diurnal(
     ).limit(int(top_k))
 
 
-def diurnal_sql(
-    pts_cte: str, top_k: int = 50, min_pages: int = 8,
-    ts_col: str = "ts_sec",
-) -> str:
+def diurnal_sql(pts_cte: str, top_k: int = 50, min_pages: int = 8) -> str:
     """DuckDB twin of :func:`diurnal` (int-div ``//``)."""
     if min_pages < 1:
         raise ValueError(f"min_pages must be >= 1, got {min_pages}")
     return f"""WITH di_p AS ({pts_cte}),
 di_h AS (SELECT tile_x, tile_y,
-                (CAST({ts_col} AS BIGINT) // 3600) % 24 AS hour,
+                (CAST(ts_sec AS BIGINT) // 3600) % 24 AS hour,
                 CAST(COUNT(*) AS BIGINT) AS o
          FROM di_p GROUP BY 1, 2, 3),
 di_w AS (SELECT *, SUM(o) OVER (PARTITION BY tile_x, tile_y) AS t
@@ -5278,13 +4999,7 @@ _D8 = [
 ]
 
 
-def flow_dir(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def flow_dir(tiles: DataFrame, zoom: int) -> DataFrame:
     """D8 flow-direction census over the density surface (the
     hydrology member of the gdaldem family: where does mass 'drain'?):
     each OCCUPIED cell points at the steepest-DESCENT neighbor among
@@ -5303,9 +5018,9 @@ def flow_dir(
     """
     n_side = 2 ** zoom
     base = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
+        F.col("page_count").cast("long").alias("_v"),
     )
     votes = (
         base.select(
@@ -5360,8 +5075,8 @@ def flow_dir(
                     F.col("nv").isNotNull() & (F.col("nv") < F.col("_v")),
                     F.struct(
                         (F.col("nv") - F.col("_v")).alias("neg_drop"),
-                        F.col("idx").alias("idx"),
-                        F.col("dir").alias("dir"),
+                        F.col("idx"),
+                        F.col("dir"),
                     ),
                 )
             ).alias("occ_best"),
@@ -5484,9 +5199,6 @@ def lacunarity(
     tiles: DataFrame,
     zoom: int,
     box_sizes: "tuple[int, ...]" = (1, 2, 4),
-    value_col: str = "page_count",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Grid-aligned lacunarity profile — the multi-scale gappiness /
     texture gauge of the density surface (Λ(r) → 1 for translation-
@@ -5512,9 +5224,9 @@ def lacunarity(
             raise ValueError(f"box size {r} must divide {n_side}")
         n_boxes = (n_side // r) ** 2
         boxes = tiles.groupBy(
-            F.floor(F.col(x_col).cast("long") / F.lit(r)).alias("bx"),
-            F.floor(F.col(y_col).cast("long") / F.lit(r)).alias("by"),
-        ).agg(F.sum(F.col(value_col).cast("long")).alias("sv"))
+            F.floor(F.col("tile_x").cast("long") / F.lit(r)).alias("bx"),
+            F.floor(F.col("tile_y").cast("long") / F.lit(r)).alias("by"),
+        ).agg(F.sum(F.col("page_count").cast("long")).alias("sv"))
         agg = boxes.agg(
             F.sum(F.col("sv").cast(d)).alias("s"),
             F.sum(F.col("sv").cast(d) * F.col("sv")).alias("q"),
@@ -5564,8 +5276,6 @@ def pair_correlation(
     tiles: DataFrame,
     zoom: int,
     max_ring: int = 3,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Pair-correlation function g(k) — the ring-wise (non-cumulative)
     sibling of Ripley's K: for each Chebyshev distance ``k``, the
@@ -5590,8 +5300,8 @@ def pair_correlation(
     n_grid = 4 ** zoom
     d = "decimal(38,0)"
     base = tiles.select(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
     )
     entries = []
     for k in range(1, max_ring + 1):

@@ -5,9 +5,9 @@ utility around the COG pipeline — ``gdalinfo -hist``, ``gdal_translate
 -scale``, ``gdallocationinfo``, ``gdal_merge.py``, ``gdaldem
 color-relief`` (reference cogeo.py delegates to rasterio dataset reads,
 utils.py:125-140 to the block grid). These are their Spark-first forms
-over the ``(tile_x, tile_y, value)`` grid: exact integer contracts,
-broadcast-only small sides, and the corpus-facing fold pinned so it
-never runs twice.
+over the fixed ``(tile_x, tile_y, page_count)`` grid: exact integer
+contracts, broadcast-only small sides, and the corpus-facing fold
+pinned so it never runs twice.
 """
 
 from __future__ import annotations
@@ -16,11 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def raster_hist(
-    tiles: DataFrame,
-    n_buckets: int = 16,
-    value_col: str = "page_count",
-) -> DataFrame:
+def raster_hist(tiles: DataFrame, n_buckets: int = 16) -> DataFrame:
     """Value histogram of the tile grid — the ``gdalinfo -hist`` analog
     (GDAL reports a bucketed pixel-value histogram per band). Buckets
     are ``n_buckets`` equal-width integer bins over the OBSERVED
@@ -41,7 +37,7 @@ def raster_hist(
     spark = tiles.sparkSession
     # the bounds aggregate and the bucket fold both read this
     vals = tiles.select(
-        F.col(value_col).cast("long").alias("v")
+        F.col("page_count").cast("long").alias("v")
     ).localCheckpoint(eager=False)
     bounds = vals.agg(
         F.min("v").alias("vmin"), F.max("v").alias("vmax")
@@ -78,13 +74,11 @@ def raster_hist(
     )
 
 
-def raster_hist_sql(
-    base_cte: str, n_buckets: int = 16, value_col: str = "page_count"
-) -> str:
+def raster_hist_sql(base_cte: str, n_buckets: int = 16) -> str:
     """DuckDB twin of :func:`raster_hist` — ``base_cte`` exposes
-    ``base`` with ``value_col`` (WITH included)."""
+    ``base`` with ``page_count`` (WITH included)."""
     return f"""{base_cte}
-, rh_v AS (SELECT CAST({value_col} AS BIGINT) AS v FROM base)
+, rh_v AS (SELECT CAST(page_count AS BIGINT) AS v FROM base)
 , rh_b AS (SELECT MIN(v) AS vmin, MAX(v) AS vmax FROM rh_v)
 , rh_o AS (SELECT least({n_buckets - 1},
                         ((v - vmin) * {n_buckets}) // (vmax - vmin + 1))
@@ -102,12 +96,7 @@ SELECT CAST(s.bucket AS BIGINT) AS bucket,
 FROM rh_s s LEFT JOIN rh_o o ON s.bucket = o.bucket"""
 
 
-def scale_bytes(
-    tiles: DataFrame,
-    value_col: str = "page_count",
-    lo: int = 0,
-    hi: int = 255,
-) -> DataFrame:
+def scale_bytes(tiles: DataFrame, lo: int = 0, hi: int = 255) -> DataFrame:
     """Linear rescale of the tile values onto ``[lo, hi]`` — the
     ``gdal_translate -scale`` analog (GDAL maps src min/max onto the
     dst range; the classic byte-ification before visual tiling).
@@ -124,7 +113,7 @@ def scale_bytes(
     base = tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("page_count").cast("long").alias("v"),
     ).localCheckpoint(eager=False)
     bounds = base.agg(F.min("v").alias("vmin"), F.max("v").alias("vmax"))
     return base.crossJoin(F.broadcast(bounds)).select(
@@ -135,12 +124,10 @@ def scale_bytes(
     )
 
 
-def scale_bytes_sql(
-    base_cte: str, value_col: str = "page_count", lo: int = 0, hi: int = 255
-) -> str:
+def scale_bytes_sql(base_cte: str, lo: int = 0, hi: int = 255) -> str:
     """DuckDB twin of :func:`scale_bytes`."""
     return f"""{base_cte}
-, sb_v AS (SELECT tile_x, tile_y, CAST({value_col} AS BIGINT) AS v
+, sb_v AS (SELECT tile_x, tile_y, CAST(page_count AS BIGINT) AS v
            FROM base)
 , sb_b AS (SELECT MIN(v) AS vmin, MAX(v) AS vmax FROM sb_v)
 SELECT tile_x, tile_y, v,
@@ -149,12 +136,7 @@ SELECT tile_x, tile_y, v,
 FROM sb_v CROSS JOIN sb_b"""
 
 
-def locationinfo(
-    tiles: DataFrame,
-    points: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-) -> DataFrame:
+def locationinfo(tiles: DataFrame, points: DataFrame, zoom: int) -> DataFrame:
     """Point query against the tile grid — the ``gdallocationinfo``
     analog: for each named (lon, lat) point, the value of the tile it
     falls in (NULL when the tile is absent — GDAL's nodata report).
@@ -176,7 +158,7 @@ def locationinfo(
     hits = tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("value"),
+        F.col("page_count").cast("long").alias("value"),
     ).join(F.broadcast(pts), ["tile_x", "tile_y"], "inner")
     return (
         pts.join(F.broadcast(hits.select("name", "value")), "name", "left")
@@ -189,7 +171,6 @@ def locationinfo_sql(
     points_values: str,
     tx_sql: str,
     ty_sql: str,
-    value_col: str = "page_count",
 ) -> str:
     """DuckDB twin of :func:`locationinfo`. ``points_values`` is a SQL
     VALUES list ``(name, lon, lat)``; ``tx_sql``/``ty_sql`` are the
@@ -199,15 +180,11 @@ def locationinfo_sql(
 , li_p AS (SELECT name, {tx_sql} AS tile_x, {ty_sql} AS tile_y
            FROM (VALUES {points_values}) pts(name, lon, lat))
 SELECT p.name AS name, p.tile_x, p.tile_y,
-       CAST(b.{value_col} AS BIGINT) AS value
+       CAST(b.page_count AS BIGINT) AS value
 FROM li_p p LEFT JOIN base b USING (tile_x, tile_y)"""
 
 
-def mosaic(
-    a: DataFrame,
-    b: DataFrame,
-    value_col: str = "page_count",
-) -> DataFrame:
+def mosaic(a: DataFrame, b: DataFrame) -> DataFrame:
     """Priority mosaic of two tile grids — the ``gdal_merge.py`` analog
     (last-listed wins in GDAL; here grid ``a`` wins where both are
     present, the documented priority). Returns ``(tile_x, tile_y,
@@ -220,12 +197,12 @@ def mosaic(
     pa = a.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_va"),
+        F.col("page_count").cast("long").alias("_va"),
     )
     pb = b.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_vb"),
+        F.col("page_count").cast("long").alias("_vb"),
     )
     return pa.join(pb, ["tile_x", "tile_y"], "full_outer").select(
         "tile_x", "tile_y",
@@ -235,15 +212,15 @@ def mosaic(
     )
 
 
-def mosaic_sql(a_cte: str, b_cte: str, value_col: str = "page_count") -> str:
+def mosaic_sql(a_cte: str, b_cte: str) -> str:
     """DuckDB twin of :func:`mosaic`. ``a_cte``/``b_cte`` are SELECTs
-    exposing ``(tile_x, tile_y, value_col)``."""
+    exposing ``(tile_x, tile_y, page_count)``."""
     return f"""
 WITH mo_a AS ({a_cte}), mo_b AS ({b_cte})
 SELECT COALESCE(a.tile_x, b.tile_x) AS tile_x,
        COALESCE(a.tile_y, b.tile_y) AS tile_y,
-       CAST(COALESCE(a.{value_col}, b.{value_col}) AS BIGINT) AS value,
-       CASE WHEN a.{value_col} IS NOT NULL THEN 'a' ELSE 'b' END AS src
+       CAST(COALESCE(a.page_count, b.page_count) AS BIGINT) AS value,
+       CASE WHEN a.page_count IS NOT NULL THEN 'a' ELSE 'b' END AS src
 FROM mo_a a FULL OUTER JOIN mo_b b
   ON a.tile_x = b.tile_x AND a.tile_y = b.tile_y"""
 
@@ -251,7 +228,6 @@ FROM mo_a a FULL OUTER JOIN mo_b b
 def color_relief(
     tiles: DataFrame,
     breaks: "list[tuple[int, str]]",
-    value_col: str = "page_count",
 ) -> DataFrame:
     """Classified relief of the tile values — the ``gdaldem
     color-relief`` analog in its EXACT-class form (GDAL's default
@@ -274,15 +250,11 @@ def color_relief(
     return tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("page_count").cast("long").alias("v"),
     ).withColumn("cls", expr)
 
 
-def color_relief_sql(
-    base_cte: str,
-    breaks: "list[tuple[int, str]]",
-    value_col: str = "page_count",
-) -> str:
+def color_relief_sql(base_cte: str, breaks: "list[tuple[int, str]]") -> str:
     """DuckDB twin of :func:`color_relief`."""
     if not breaks:
         raise ValueError("breaks must be non-empty")
@@ -290,16 +262,12 @@ def color_relief_sql(
         f"WHEN v >= {t} THEN '{label}'" for t, label in reversed(breaks)
     )
     return f"""{base_cte}
-SELECT tile_x, tile_y, CAST({value_col} AS BIGINT) AS v,
+SELECT tile_x, tile_y, CAST(page_count AS BIGINT) AS v,
        CASE {cases} ELSE 'below' END AS cls
 FROM base"""
 
 
-def equalize(
-    tiles: DataFrame,
-    levels: int = 256,
-    value_col: str = "page_count",
-) -> DataFrame:
+def equalize(tiles: DataFrame, levels: int = 256) -> DataFrame:
     """Histogram equalization of the tile values — the classic CDF
     remap GDAL users reach via ``gdal_translate -scale`` pipelines and
     QGIS's "equalize" contrast enhancement: ``eq = ((cdf(v) − cdf_min)
@@ -321,7 +289,7 @@ def equalize(
     base = tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("page_count").cast("long").alias("v"),
     ).localCheckpoint(eager=False)
     freq = base.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.orderBy("v").rowsBetween(
@@ -342,12 +310,10 @@ def equalize(
     )
 
 
-def equalize_sql(
-    base_cte: str, levels: int = 256, value_col: str = "page_count"
-) -> str:
+def equalize_sql(base_cte: str, levels: int = 256) -> str:
     """DuckDB twin of :func:`equalize`."""
     return f"""{base_cte}
-, eq_v AS (SELECT tile_x, tile_y, CAST({value_col} AS BIGINT) AS v
+, eq_v AS (SELECT tile_x, tile_y, CAST(page_count AS BIGINT) AS v
            FROM base)
 , eq_f AS (SELECT v, COUNT(*) AS cnt FROM eq_v GROUP BY v)
 , eq_c AS (SELECT v, SUM(cnt) OVER (ORDER BY v) AS cum FROM eq_f)
@@ -364,7 +330,6 @@ def clip(
     tiles: DataFrame,
     zoom: int,
     bbox: "tuple[float, float, float, float]",
-    value_col: str = "page_count",
 ) -> DataFrame:
     """Crop the tile grid to a geographic window — the ``gdalwarp -te
     west south east north`` analog (reference cog_translate crops via
@@ -390,7 +355,7 @@ def clip(
     return tiles.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("value"),
+        F.col("page_count").cast("long").alias("value"),
     ).filter(
         (F.col("tile_x") >= tx0) & (F.col("tile_x") <= tx1)
         & (F.col("tile_y") >= ty0) & (F.col("tile_y") <= ty1)
@@ -416,11 +381,7 @@ def clip_window(
     return int(tx0), int(ty0), int(tx1), int(ty1)
 
 
-def clip_sql(
-    base_cte: str,
-    window: "tuple[int, int, int, int]",
-    value_col: str = "page_count",
-) -> str:
+def clip_sql(base_cte: str, window: "tuple[int, int, int, int]") -> str:
     """DuckDB twin of :func:`clip` — ``window`` from
     :func:`clip_window`."""
     tx0, ty0, tx1, ty1 = window
@@ -428,17 +389,13 @@ def clip_sql(
 SELECT tile_x, tile_y,
        CAST(tile_x - {tx0} AS BIGINT) AS col_off,
        CAST(tile_y - {ty0} AS BIGINT) AS row_off,
-       CAST({value_col} AS BIGINT) AS value
+       CAST(page_count AS BIGINT) AS value
 FROM base
 WHERE tile_x BETWEEN {tx0} AND {tx1}
   AND tile_y BETWEEN {ty0} AND {ty1}"""
 
 
-def upsample(
-    tiles: DataFrame,
-    factor: int = 2,
-    value_col: str = "page_count",
-) -> DataFrame:
+def upsample(tiles: DataFrame, factor: int = 2) -> DataFrame:
     """Nearest-neighbor upsample of the tile grid by an integer factor
     — the ``gdal_translate -outsize 200% 200%`` analog (and the inverse
     of one overview decimation step): every tile becomes its
@@ -458,7 +415,7 @@ def upsample(
     return tiles.select(
         F.col("tile_x").cast("long").alias("_tx"),
         F.col("tile_y").cast("long").alias("_ty"),
-        F.col(value_col).cast("long").alias("value"),
+        F.col("page_count").cast("long").alias("value"),
         off,
     ).select(
         (F.col("_tx") * factor + F.col("off.i")).cast("long")
@@ -469,14 +426,12 @@ def upsample(
     )
 
 
-def upsample_sql(
-    base_cte: str, factor: int = 2, value_col: str = "page_count"
-) -> str:
+def upsample_sql(base_cte: str, factor: int = 2) -> str:
     """DuckDB twin of :func:`upsample`."""
     return f"""{base_cte}
 SELECT CAST(b.tile_x * {factor} + o1.range AS BIGINT) AS tile_x,
        CAST(b.tile_y * {factor} + o2.range AS BIGINT) AS tile_y,
-       CAST(b.{value_col} AS BIGINT) AS value
+       CAST(b.page_count AS BIGINT) AS value
 FROM base b CROSS JOIN range({factor}) o1 CROSS JOIN range({factor}) o2"""
 
 
@@ -489,12 +444,7 @@ _CALC_OPS = {
 }
 
 
-def raster_calc(
-    a: DataFrame,
-    b: DataFrame,
-    op: str = "sub",
-    value_col: str = "page_count",
-) -> DataFrame:
+def raster_calc(a: DataFrame, b: DataFrame, op: str = "sub") -> DataFrame:
     """Cell-wise algebra between two aligned tile grids — the
     ``gdal_calc.py -A .. -B .. --calc`` analog. A cell absent from one
     grid contributes 0 (the density-grid convention: an unmaterialized
@@ -511,12 +461,12 @@ def raster_calc(
     pa = a.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_va"),
+        F.col("page_count").cast("long").alias("_va"),
     )
     pb = b.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_vb"),
+        F.col("page_count").cast("long").alias("_vb"),
     )
     return (
         pa.join(pb, ["tile_x", "tile_y"], "full_outer")
@@ -529,30 +479,24 @@ def raster_calc(
     )
 
 
-def raster_calc_sql(
-    a_cte: str, b_cte: str, op: str = "sub", value_col: str = "page_count"
-) -> str:
+def raster_calc_sql(a_cte: str, b_cte: str, op: str = "sub") -> str:
     """DuckDB twin of :func:`raster_calc`. ``a_cte``/``b_cte`` are
-    SELECTs exposing ``(tile_x, tile_y, value_col)``."""
+    SELECTs exposing ``(tile_x, tile_y, page_count)``."""
     if op not in _CALC_OPS:
         raise ValueError(f"op must be one of {sorted(_CALC_OPS)}, got {op!r}")
     return f"""
 WITH rc_a AS ({a_cte}), rc_b AS ({b_cte})
 , rc_j AS (SELECT COALESCE(a.tile_x, b.tile_x) AS tile_x,
                   COALESCE(a.tile_y, b.tile_y) AS tile_y,
-                  CAST(COALESCE(a.{value_col}, 0) AS BIGINT) AS va,
-                  CAST(COALESCE(b.{value_col}, 0) AS BIGINT) AS vb
+                  CAST(COALESCE(a.page_count, 0) AS BIGINT) AS va,
+                  CAST(COALESCE(b.page_count, 0) AS BIGINT) AS vb
            FROM rc_a a FULL OUTER JOIN rc_b b
              ON a.tile_x = b.tile_x AND a.tile_y = b.tile_y)
 SELECT tile_x, tile_y, va, vb, CAST({_CALC_OPS[op]} AS BIGINT) AS res
 FROM rc_j"""
 
 
-def raster_compare(
-    a: DataFrame,
-    b: DataFrame,
-    value_col: str = "page_count",
-) -> DataFrame:
+def raster_compare(a: DataFrame, b: DataFrame) -> DataFrame:
     """Structural diff of two tile grids — the ``gdalcompare.py``
     analog (GDAL reports band checksum/pixel differences; this is the
     grid-shaped summary a regression harness wants). ONE row:
@@ -566,12 +510,12 @@ def raster_compare(
     pa = a.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_va"),
+        F.col("page_count").cast("long").alias("_va"),
     )
     pb = b.select(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
-        F.col(value_col).cast("long").alias("_vb"),
+        F.col("page_count").cast("long").alias("_vb"),
     )
     j = pa.join(pb, ["tile_x", "tile_y"], "full_outer")
     both = F.col("_va").isNotNull() & F.col("_vb").isNotNull()
@@ -599,14 +543,12 @@ def raster_compare(
     )
 
 
-def raster_compare_sql(
-    a_cte: str, b_cte: str, value_col: str = "page_count"
-) -> str:
+def raster_compare_sql(a_cte: str, b_cte: str) -> str:
     """DuckDB twin of :func:`raster_compare`."""
     return f"""
 WITH cp_a AS ({a_cte}), cp_b AS ({b_cte})
-, cp_j AS (SELECT CAST(a.{value_col} AS BIGINT) AS va,
-                  CAST(b.{value_col} AS BIGINT) AS vb
+, cp_j AS (SELECT CAST(a.page_count AS BIGINT) AS va,
+                  CAST(b.page_count AS BIGINT) AS vb
            FROM cp_a a FULL OUTER JOIN cp_b b
              ON a.tile_x = b.tile_x AND a.tile_y = b.tile_y)
 SELECT CAST(COALESCE(SUM(CASE WHEN va IS NOT NULL AND vb IS NULL
@@ -642,11 +584,7 @@ SLOPE_PCT_MIL = (
 )
 
 
-def slope_pct(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-) -> DataFrame:
+def slope_pct(tiles: DataFrame, zoom: int) -> DataFrame:
     """Percent slope of the density surface — the ``gdaldem slope -p``
     analog completing the gdaldem family (hillshade / aspect / TRI /
     TPI / roughness / color-relief are siblings). Horn '81 gradients
@@ -662,7 +600,7 @@ def slope_pct(
     """
     from .focal import aspect8
 
-    return aspect8(tiles, zoom, value_col=value_col).select(
+    return aspect8(tiles, zoom).select(
         "tile_x", "tile_y", "gx8", "gy8", "slope_sq",
         F.expr(SLOPE_PCT_MIL).alias("slope_pct_mil"),
     )
@@ -757,12 +695,7 @@ def _idw_weights(radius: int) -> "dict[int, int]":
     return {d: lcm // (d * d) for d in range(1, radius + 1)}
 
 
-def idw(
-    tiles: DataFrame,
-    zoom: int,
-    radius: int = 2,
-    value_col: str = "page_count",
-) -> DataFrame:
+def idw(tiles: DataFrame, zoom: int, radius: int = 2) -> DataFrame:
     """Inverse-distance-weighted interpolation — the ``gdal_grid
     invdist`` analog with the EXACT-integer kernel: weights are
     ``lcm{d²}/d²`` over Chebyshev distance ``d ≤ radius`` (the scaled
@@ -798,7 +731,7 @@ def idw(
     votes = tiles.select(
         F.col("tile_x").cast("long").alias("_sx"),
         F.col("tile_y").cast("long").alias("_sy"),
-        F.col(value_col).cast("long").alias("_v"),
+        F.col("page_count").cast("long").alias("_v"),
         off,
     ).select(
         (F.col("_sx") + F.col("off.dx")).alias("nx"),
@@ -834,10 +767,7 @@ def idw(
     )
 
 
-def idw_sql(
-    base_cte: str, zoom: int, radius: int = 2,
-    value_col: str = "page_count",
-) -> str:
+def idw_sql(base_cte: str, zoom: int, radius: int = 2) -> str:
     """DuckDB twin of :func:`idw`."""
     w = _idw_weights(radius)
     edge = 2 ** zoom - 1
@@ -849,7 +779,7 @@ def idw_sql(
     )
     return f"""{base_cte}
 , iw_v AS (SELECT b.tile_x + o.dx AS nx, b.tile_y + o.dy AS ny,
-                  o.wt, CAST(b.{value_col} AS BIGINT) AS v
+                  o.wt, CAST(b.page_count AS BIGINT) AS v
            FROM base b, (VALUES {rows}) o(dx, dy, wt)
            WHERE b.tile_x + o.dx BETWEEN 0 AND {edge}
              AND b.tile_y + o.dy BETWEEN 0 AND {edge})
@@ -870,11 +800,7 @@ SELECT CAST(nx AS BIGINT) AS tile_x, CAST(ny AS BIGINT) AS tile_y,
 FROM iw_a"""
 
 
-def tindex(
-    tiles: DataFrame,
-    zoom: int,
-    value_col: str = "page_count",
-) -> DataFrame:
+def tindex(tiles: DataFrame, zoom: int) -> DataFrame:
     """Tile-bounds index — the ``gdaltindex`` analog (GDAL emits a
     vector layer with one bbox feature per raster; here one row per
     tile with its EPSG:3857 bounds). Bounds are pinned doubles floored
@@ -903,13 +829,11 @@ def tindex(
         .cast("long").alias("east_mm"),
         F.floor((os_l - ty * sp_l) * F.lit(1000.0)).cast("long")
         .alias("north_mm"),
-        F.col(value_col).cast("long").alias("value"),
+        F.col("page_count").cast("long").alias("value"),
     )
 
 
-def tindex_sql(
-    base_cte: str, zoom: int, value_col: str = "page_count"
-) -> str:
+def tindex_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`tindex` — the same driver-computed
     literals, the same IEEE expression tree."""
     from ..grid import ORIGIN_SHIFT
@@ -926,5 +850,5 @@ SELECT tile_x, tile_y,
                   * 1000.0) AS BIGINT) AS east_mm,
        CAST(FLOOR(({os_r} - CAST(tile_y AS DOUBLE) * {sp_r}) * 1000.0)
             AS BIGINT) AS north_mm,
-       CAST({value_col} AS BIGINT) AS value
+       CAST(page_count AS BIGINT) AS value
 FROM base"""

@@ -42,6 +42,9 @@ Scale design (100 TB / 10^8-host graph):
   for long chains (localCheckpoint cuts the recursive plan);
 * no step collects: degrees, ranks, and the final ordering are all
   DataFrames.
+
+Column names are fixed: edge tables carry ``src``/``dst``, host tables
+key on ``host``.
 """
 
 from __future__ import annotations
@@ -52,9 +55,7 @@ from pyspark.sql import functions as F
 SCALE = 1_000_000_000
 
 
-def host_degrees(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def host_degrees(edges: DataFrame) -> DataFrame:
     """Per-host in/out degree over a distinct edge list.
 
     Returns ``(host, out_deg, in_deg)`` for every host appearing as
@@ -62,11 +63,11 @@ def host_degrees(
     map-side-combinable aggregates, then a node-bounded outer merge.
     """
     out_d = (
-        edges.groupBy(F.col(src_col).alias("host"))
+        edges.groupBy(F.col("src").alias("host"))
         .agg(F.count(F.lit(1)).alias("out_deg"))
     )
     in_d = (
-        edges.groupBy(F.col(dst_col).alias("host"))
+        edges.groupBy(F.col("dst").alias("host"))
         .agg(F.count(F.lit(1)).alias("in_deg"))
     )
     return (
@@ -83,8 +84,6 @@ def host_pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
     checkpoint_every: int = 0,
 ) -> DataFrame:
     """Fixed-point damped PageRank over a host edge list.
@@ -106,9 +105,7 @@ def host_pagerank(
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     base = ((100 - damping_pct) * SCALE) // 100
 
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    )
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("host"))
         .union(e.select(F.col("dst").alias("host")))
@@ -196,9 +193,6 @@ def host_distance(
     edges: DataFrame,
     seeds: DataFrame,
     max_hops: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "host",
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """BFS hop distance from a seed host set — crawl-frontier DEPTH (how
@@ -225,8 +219,8 @@ def host_distance(
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    dist = seeds.select(F.col(seed_col).alias("host")).distinct().select(
+    e = edges.select("src", "dst")
+    dist = seeds.select("host").distinct().select(
         "host", F.lit(0).cast("int").alias("hops")
     )
     for it in range(max_hops):
@@ -270,9 +264,7 @@ def host_distance_sql(
     return f"{body}\nSELECT host, hops FROM d{max_hops}"
 
 
-def reciprocal_links(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def reciprocal_links(edges: DataFrame) -> DataFrame:
     """Per-host link reciprocity — the classic link-farm / link-exchange
     spam signal (organic web linking is strongly asymmetric; hosts whose
     out-links are mostly reciprocated are trading links): for each host
@@ -290,7 +282,7 @@ def reciprocal_links(
     rows.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -340,9 +332,6 @@ def crawl_frontier(
     seeds: DataFrame,
     max_hops: int = 4,
     iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "host",
 ) -> DataFrame:
     """The graph suite's flagship composition — the crawl-frontier
     priority table (Cho/Garcia-Molina/Page WWW'98 combine importance
@@ -365,7 +354,7 @@ def crawl_frontier(
     co-partitioned joins.
     """
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -376,7 +365,7 @@ def crawl_frontier(
     # table). Without the pin, the sf0.01 `frontier` query on 4 cores
     # took 2.5 s instead of 1.6 s.
     e = e.localCheckpoint(eager=True)
-    d = host_distance(e, seeds, max_hops=max_hops, seed_col=seed_col)
+    d = host_distance(e, seeds, max_hops=max_hops)
     r = host_pagerank(e, iterations=iterations)
     rec = reciprocal_links(e)
     return (
@@ -398,9 +387,6 @@ def host_trustrank(
     seeds: DataFrame,
     iterations: int = 3,
     damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "host",
 ) -> DataFrame:
     """Seeded TrustRank over a host edge list — the classic web-spam
     demotion complement to PageRank (Gyongyi/Garcia-Molina/Pedersen,
@@ -437,8 +423,8 @@ def host_trustrank(
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     base = ((100 - damping_pct) * SCALE) // 100
 
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    s = seeds.select(F.col(seed_col).alias("host")).distinct()
+    e = edges.select("src", "dst")
+    s = seeds.select("host").distinct()
     nodes = (
         e.select(F.col("src").alias("host"))
         .union(e.select(F.col("dst").alias("host")))
@@ -516,12 +502,7 @@ def host_trustrank_sql(
     return f"{body}\nSELECT host, trust AS trust_ppb FROM t{iterations}"
 
 
-def apportion_budget(
-    weights: DataFrame,
-    budget: int,
-    key_col: str = "host",
-    weight_col: str = "weight",
-) -> DataFrame:
+def apportion_budget(weights: DataFrame, budget: int) -> DataFrame:
     """EXACT integer crawl-budget apportionment by the largest-remainder
     (Hamilton) method: split ``budget`` fetch slots across hosts
     proportionally to ``weight`` (e.g. change rate x priority from
@@ -551,8 +532,8 @@ def apportion_budget(
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
     w = weights.select(
-        F.col(key_col).alias("k"),
-        F.col(weight_col).cast("long").alias("w"),
+        F.col("host").alias("k"),
+        F.col("weight").cast("long").alias("w"),
     )
     tot = w.agg(
         F.expr("CAST(SUM(w) AS DECIMAL(38,0))").alias("tw"),
@@ -579,8 +560,8 @@ def apportion_budget(
     r_left = int(agg["R"] or 0)
     if r_left == 0:
         return based.select(
-            F.col("k").alias(key_col),
-            F.col("w").alias(weight_col),
+            F.col("k").alias("host"),
+            F.col("w").alias("weight"),
             F.col("base").alias("alloc"),
         )
     # the R-th (rem DESC, k ASC) row is the +1 threshold; strict total
@@ -608,8 +589,8 @@ def apportion_budget(
     return (
         based.crossJoin(F.broadcast(thr))
         .select(
-            F.col("k").alias(key_col),
-            F.col("w").alias(weight_col),
+            F.col("k").alias("host"),
+            F.col("w").alias("weight"),
             (
                 F.col("base")
                 + F.when(
@@ -625,18 +606,15 @@ def apportion_budget(
     )
 
 
-def apportion_budget_sql(
-    weights_cte: str, budget: int, key_col: str = "host",
-    weight_col: str = "weight",
-) -> str:
+def apportion_budget_sql(weights_cte: str, budget: int) -> str:
     """DuckDB twin of :func:`apportion_budget` (``weights_cte`` exposes
-    ``({key_col}, {weight_col})``). The oracle uses a window rank for
+    ``(host, weight)``). The oracle uses a window rank for
     the remainder election — value-identical to the engine's
     threshold form."""
     b = int(budget)
     return rf"""
 WITH ab_in AS ({weights_cte}),
-ab_w AS (SELECT {key_col} AS k, CAST({weight_col} AS BIGINT) AS w
+ab_w AS (SELECT host AS k, CAST(weight AS BIGINT) AS w
          FROM ab_in),
 ab_t AS (SELECT greatest(CAST(SUM(w) AS HUGEINT), CAST(1 AS HUGEINT))
              AS tw FROM ab_w),
@@ -648,18 +626,13 @@ ab_r AS (SELECT {b} - COALESCE(SUM(base), 0) AS leftover FROM ab_based),
 ab_ranked AS (SELECT k, w, base, rem,
                   row_number() OVER (ORDER BY rem DESC, k ASC) AS rn
               FROM ab_based)
-SELECT k AS {key_col}, w AS {weight_col},
+SELECT k AS host, w AS weight,
        CAST(base + (CASE WHEN rn <= (SELECT leftover FROM ab_r)
                          THEN 1 ELSE 0 END) AS BIGINT) AS alloc
 FROM ab_ranked"""
 
 
-def host_hits(
-    edges: DataFrame,
-    iterations: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def host_hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """HITS hubs & authorities over a host edge list (Kleinberg,
     "Authoritative sources in a hyperlinked environment", JACM 1999) —
     the directional complement to :func:`host_pagerank`: an AUTHORITY
@@ -690,7 +663,7 @@ def host_hits(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
 
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = edges.select("src", "dst")
     nodes = (
         e.select(F.col("src").alias("host"))
         .union(e.select(F.col("dst").alias("host")))
@@ -809,9 +782,7 @@ def host_hits_sql(edges_cte: str, iterations: int = 2) -> str:
     )
 
 
-def triangle_count(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-host triangle participation + exact-ppm local clustering
     coefficient over the UNDIRECTED host graph — the link-farm /
     tight-community detector beside :func:`reciprocal_links` (a link
@@ -836,9 +807,7 @@ def triangle_count(
     co-partitioned on edge-unique keys; counts are map-side-combinable;
     no windows, nothing collects.
     """
-    raw = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
+    raw = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     # undirected canonical edge list (u < v), deduped
     und = (
         raw.select(
@@ -934,8 +903,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-round k-core peel over the undirected host graph — the
@@ -965,7 +932,7 @@ def k_core(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     und = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
@@ -1024,11 +991,7 @@ def k_core_sql(edges_cte: str, k: int, rounds: int = 3) -> str:
     )
 
 
-def degree_assortativity(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Directed out-in degree assortativity of the host graph — do
     high-fanout hosts link to high-fanin hosts? (Newman 2002: the
     Pearson correlation, over EDGES, of the source's out-degree with
@@ -1054,15 +1017,15 @@ def degree_assortativity(
     table is ~1.6 GB), then ONE combinable moment fold. Nothing
     collects, no window, no Python.
     """
-    out_d = F.broadcast(edges.groupBy(F.col(src_col).alias("__s")).agg(
+    out_d = F.broadcast(edges.groupBy(F.col("src").alias("__s")).agg(
         F.count(F.lit(1)).alias("x")
     ))
-    in_d = F.broadcast(edges.groupBy(F.col(dst_col).alias("__t")).agg(
+    in_d = F.broadcast(edges.groupBy(F.col("dst").alias("__t")).agg(
         F.count(F.lit(1)).alias("y")
     ))
     xy = (
-        edges.join(out_d, F.col(src_col) == F.col("__s"), "inner")
-        .join(in_d, F.col(dst_col) == F.col("__t"), "inner")
+        edges.join(out_d, F.col("src") == F.col("__s"), "inner")
+        .join(in_d, F.col("dst") == F.col("__t"), "inner")
         .select("x", "y")
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")
@@ -1200,17 +1163,14 @@ GROUP BY 1, 2
 HAVING COUNT(*) >= {int(min_common)}"""
 
 
-def host_majority_lang(
-    docs: DataFrame, n_hosts: int = 97, id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
+def host_majority_lang(docs: DataFrame, n_hosts: int = 97) -> DataFrame:
     """Majority language per host over the deterministic ``id % n``
     host space — deterministic ties (count DESC, lang ASC).  One
     corpus fold + one window over the host-bounded count table."""
     from pyspark.sql import Window
 
     hl = docs.selectExpr(
-        f"{id_col} % {int(n_hosts)} AS host", f"{lang_col} AS lang"
+        f"doc_id % {int(n_hosts)} AS host", "lang AS lang"
     ).groupBy("host", "lang").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("host").orderBy(
         F.col("cnt").desc(), F.col("lang").asc()
@@ -1222,15 +1182,12 @@ def host_majority_lang(
     )
 
 
-def host_majority_lang_sql(
-    docs_select: str, n_hosts: int = 97, id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> str:
+def host_majority_lang_sql(docs_select: str, n_hosts: int = 97) -> str:
     """DuckDB twin of :func:`host_majority_lang` (standalone SELECT)."""
     return f"""SELECT host, lang FROM (
   SELECT host, lang, ROW_NUMBER() OVER
          (PARTITION BY host ORDER BY cnt DESC, lang ASC) AS _rk
-  FROM (SELECT {id_col} % {int(n_hosts)} AS host, {lang_col} AS lang,
+  FROM (SELECT doc_id % {int(n_hosts)} AS host, lang AS lang,
                COUNT(*) AS cnt
         FROM ({docs_select}) GROUP BY 1, 2))
 WHERE _rk = 1"""

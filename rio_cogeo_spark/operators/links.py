@@ -33,18 +33,14 @@ from rio_cogeo_spark.functions.text import HOST_SQL, host_col
 LINK_PATTERN = r'<a href="([^"]*)">([^<]*)</a>'
 
 
-def extract_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
+def extract_links(pages: DataFrame) -> DataFrame:
     """Per-page hyperlink table ``(src_url, pos, dst_url, anchor)``:
     every ``<a href="...">anchor</a>`` in the UTF-8 html binary, in
     document order (``pos`` is the 0-based link index). Pure JVM
     expressions: decode → two group extractions of the SAME pattern
     (href, anchor — equal lengths by construction) → struct zip →
     posexplode. DuckDB twin :func:`extract_links_sql`."""
-    s = F.decode(F.col(html_col), "utf-8")
+    s = F.decode(F.col("html"), "utf-8")
     hrefs = F.regexp_extract_all(s, F.lit(LINK_PATTERN), 1)
     anchors = F.regexp_extract_all(s, F.lit(LINK_PATTERN), 2)
     pairs = F.zip_with(
@@ -53,7 +49,7 @@ def extract_links(
         lambda h, a: F.struct(h.alias("dst_url"), a.alias("anchor")),
     )
     return pages.select(
-        F.col(url_col).alias("src_url"), F.posexplode(pairs)
+        F.col("url").alias("src_url"), F.posexplode(pairs)
     ).select(
         "src_url",
         F.col("pos").cast("int").alias("pos"),
@@ -151,17 +147,13 @@ WHERE top.rn = 1"""
 META_PATTERN = r'<meta name="([^"]*)" content="([^"]*)">'
 
 
-def extract_meta(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
+def extract_meta(pages: DataFrame) -> DataFrame:
     """Per-page meta-tag table ``(url, pos, name, content)`` — every
     ``<meta name="..." content="...">`` in document order. The generic
     form of the geotag parse (functions/text.geotag_from_html): one
     codegen projection, same two-group extraction shape as
     :func:`extract_links`. DuckDB twin :func:`extract_meta_sql`."""
-    s = F.decode(F.col(html_col), "utf-8")
+    s = F.decode(F.col("html"), "utf-8")
     names = F.regexp_extract_all(s, F.lit(META_PATTERN), 1)
     contents = F.regexp_extract_all(s, F.lit(META_PATTERN), 2)
     pairs = F.zip_with(
@@ -169,7 +161,7 @@ def extract_meta(
         contents,
         lambda n, c: F.struct(n.alias("name"), c.alias("content")),
     )
-    return pages.select(F.col(url_col).alias("url"), F.posexplode(pairs)).select(
+    return pages.select(F.col("url"), F.posexplode(pairs)).select(
         "url",
         F.col("pos").cast("int").alias("pos"),
         F.col("col.name").alias("name"),
@@ -201,11 +193,7 @@ FROM ix"""
 _ROBOTS_SPLIT = r"[,\s]+"
 
 
-def meta_robots_noindex(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
+def meta_robots_noindex(pages: DataFrame) -> DataFrame:
     """Respect ``<meta name="robots">``: returns ``pages`` WITHOUT the
     documents whose robots directives include the token ``noindex`` or
     ``none`` (case-insensitive; any one of multiple robots tags
@@ -218,7 +206,7 @@ def meta_robots_noindex(
     shuffle); Catalyst keeps it one codegen filter. DuckDB twin
     :func:`meta_robots_noindex_sql`.
     """
-    s = F.decode(F.col(html_col), "utf-8")
+    s = F.decode(F.col("html"), "utf-8")
     contents = F.regexp_extract_all(s, F.lit(META_PATTERN), 2)
     names = F.regexp_extract_all(s, F.lit(META_PATTERN), 1)
     robots = F.zip_with(
@@ -264,11 +252,7 @@ HREFLANG_PATTERN = (
 )
 
 
-def extract_hreflang(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
+def extract_hreflang(pages: DataFrame) -> DataFrame:
     """Per-page hreflang alternate table ``(url, hreflang, alt_url)``:
     every ``<link rel="alternate" hreflang="..." href="...">`` —
     the publisher-declared translation graph (the seed signal ParaCrawl
@@ -276,7 +260,7 @@ def extract_hreflang(
     are high-precision parallel-page candidates). Same codegen
     extraction shape as :func:`extract_links`. DuckDB twin
     :func:`extract_hreflang_sql`."""
-    s = F.decode(F.col(html_col), "utf-8")
+    s = F.decode(F.col("html"), "utf-8")
     langs = F.regexp_extract_all(s, F.lit(HREFLANG_PATTERN), 1)
     hrefs = F.regexp_extract_all(s, F.lit(HREFLANG_PATTERN), 2)
     pairs = F.zip_with(
@@ -284,7 +268,7 @@ def extract_hreflang(
         hrefs,
         lambda l, h: F.struct(l.alias("hreflang"), h.alias("alt_url")),
     )
-    return pages.select(F.col(url_col).alias("url"), F.explode(pairs)).select(
+    return pages.select(F.col("url"), F.explode(pairs)).select(
         "url",
         F.col("col.hreflang").alias("hreflang"),
         F.col("col.alt_url").alias("alt_url"),
@@ -368,7 +352,6 @@ SITEMAP_LOC_PATTERN = r"<loc>([^<]*)</loc>"
 
 def extract_sitemap_urls(
     sitemaps: DataFrame,
-    xml_col: str = "xml",
     host_col_name: str = "host",
 ) -> DataFrame:
     """Per-host sitemap URL table ``(host, pos, loc_url)``: every
@@ -379,7 +362,7 @@ def extract_sitemap_urls(
     shape as :func:`extract_links`. DuckDB twin
     :func:`extract_sitemap_urls_sql`."""
     locs = F.regexp_extract_all(
-        F.col(xml_col), F.lit(SITEMAP_LOC_PATTERN), 1
+        F.col("xml"), F.lit(SITEMAP_LOC_PATTERN), 1
     )
     return sitemaps.select(
         F.col(host_col_name).alias("host"), F.posexplode(locs)
@@ -407,7 +390,6 @@ FROM ix"""
 def frontier_discovery(
     sitemap_urls: DataFrame,
     crawled: DataFrame,
-    url_col: str = "url",
 ) -> DataFrame:
     """New-URL discovery: distinct canonicalized sitemap URLs NOT yet
     in the crawled set — the fetch-queue feed. Both sides canonicalize
@@ -431,7 +413,7 @@ def frontier_discovery(
         canonical_url(F.col("loc_url")).alias("canon_url"),
     ).distinct()
     seen = crawled.select(
-        canonical_url(F.col(url_col)).alias("canon_url")
+        canonical_url(F.col("url")).alias("canon_url")
     ).distinct()
     return sm.join(seen, "canon_url", "left_anti").select(
         "host", "canon_url"

@@ -43,9 +43,6 @@ def pack_chunks(
     docs: DataFrame,
     context_tokens: int = 2048,
     n_shards: int | str = "auto",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ntokens_col: str | None = None,
 ) -> DataFrame:
     """Assign every document to its pack span.
 
@@ -58,9 +55,6 @@ def pack_chunks(
     n_tokens``; per-pack ``sum(pack_tokens) == context_tokens`` for all
     but each shard's final pack; offsets tile each pack exactly.
 
-    ``ntokens_col`` lets callers reuse a precomputed token count (e.g.
-    from ``token_stats``) instead of re-tokenizing.
-
     ``n_shards`` bounds each window partition at corpus/n_shards rows,
     so it must GROW with the corpus: the default ``'auto'`` derives it
     from the cluster (``defaultParallelism * 16`` with a floor of 64) —
@@ -69,7 +63,7 @@ def pack_chunks(
     cross-engine-reproducible pack ids (the shard hash is part of the
     output key).
 
-    Documents with a NULL text (or NULL ``ntokens_col``) are EXCLUDED
+    Documents with a NULL text are EXCLUDED
     from the packing — an explicit filter, not silent NULL propagation:
     a NULL has no tokens to assign, so the 'every document's tokens are
     fully assigned' invariant is scoped to non-null documents (the
@@ -82,15 +76,11 @@ def pack_chunks(
             64, docs.sparkSession.sparkContext.defaultParallelism * 16
         )
     C = int(context_tokens)
-    ntok = (
-        F.col(ntokens_col)
-        if ntokens_col is not None
-        else token_count(F.col(text_col))
-    )
+    ntok = token_count(F.col("text"))
     base = (
         docs.select(
-            F.col(id_col),
-            md5_60(F.col(id_col).cast("string")).alias("h"),
+            F.col("doc_id"),
+            md5_60(F.col("doc_id").cast("string")).alias("h"),
             ntok.cast("long").alias("n_tokens"),
         )
         # loud NULL policy (see docstring): NULL text would otherwise
@@ -104,7 +94,7 @@ def pack_chunks(
     # knob that keeps this executor-memory-safe at any corpus size.
     w = (
         Window.partitionBy("shard")
-        .orderBy("h", id_col)
+        .orderBy("h", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     spans = (
@@ -118,13 +108,13 @@ def pack_chunks(
     p = F.col("pack_idx")
     start = F.greatest(F.col("prev"), p * C)
     return spans.select(
-        id_col,
+        "doc_id",
         "shard",
         F.explode(F.sequence("first_pack", "last_pack")).alias("pack_idx"),
         "prev",
         "cum",
     ).select(
-        id_col,
+        "doc_id",
         "shard",
         p.cast("long").alias("pack_idx"),
         (start - p * C).cast("long").alias("pack_offset"),
@@ -138,32 +128,31 @@ def pack_chunks_sql(
     table: str = "documents",
     context_tokens: int = 2048,
     n_shards: int = 64,
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`pack_chunks` — same integer math, so the
     assignment is bit-identical."""
     from rio_cogeo_spark.functions.text import MD5_60_SQL, TOKEN_COUNT_SQL
 
     C = int(context_tokens)
-    h = MD5_60_SQL.format(c=f"CAST({id_col} AS VARCHAR)")
+    h = MD5_60_SQL.format(c="CAST(doc_id AS VARCHAR)")
     return rf"""
 WITH b AS (
-  SELECT {id_col}, {h} AS h,
+  SELECT doc_id, {h} AS h,
          CAST({TOKEN_COUNT_SQL} AS BIGINT) AS n_tokens
   FROM {table}
 ), s AS (
-  SELECT {id_col}, CAST(h % {n_shards} AS INT) AS shard, n_tokens,
+  SELECT doc_id, CAST(h % {n_shards} AS INT) AS shard, n_tokens,
          CAST(SUM(n_tokens) OVER (PARTITION BY h % {n_shards}
-                                  ORDER BY h, {id_col}
+                                  ORDER BY h, doc_id
                                   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
   FROM b
 ), sp AS (
-  SELECT {id_col}, shard, cum, cum - n_tokens AS prev,
+  SELECT doc_id, shard, cum, cum - n_tokens AS prev,
          (cum - n_tokens) // {C} AS first_pack,
          (cum - 1) // {C} AS last_pack
   FROM s
 )
-SELECT {id_col}, shard, CAST(p AS BIGINT) AS pack_idx,
+SELECT doc_id, shard, CAST(p AS BIGINT) AS pack_idx,
        CAST(greatest(prev, p * {C}) - p * {C} AS BIGINT) AS pack_offset,
        CAST(least(cum, (p + 1) * {C}) - greatest(prev, p * {C}) AS BIGINT)
          AS pack_tokens

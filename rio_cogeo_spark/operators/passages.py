@@ -78,8 +78,6 @@ def repeated_ngram_spans(
     docs: DataFrame,
     n: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     broadcast_hot: "bool | str" = "auto",
     broadcast_hot_max_rows: int = 5_000_000,
 ) -> DataFrame:
@@ -109,9 +107,9 @@ def repeated_ngram_spans(
     if n < 1 or min_count < 2:
         raise ValueError("need n >= 1 and min_count >= 2")
     grams = docs.select(
-        F.col(id_col),
-        F.posexplode(ngrams_col(F.col(text_col), n)).alias("pos", "gram"),
-    ).select(id_col, "pos", F.md5(F.encode(F.col("gram"), "utf-8")).alias("h"))
+        F.col("doc_id"),
+        F.posexplode(ngrams_col(F.col("text"), n)).alias("pos", "gram"),
+    ).select("doc_id", "pos", F.md5(F.encode(F.col("gram"), "utf-8")).alias("h"))
 
     hot = (
         grams.groupBy("h")
@@ -129,9 +127,9 @@ def repeated_ngram_spans(
         hot = hot.persist(StorageLevel.MEMORY_AND_DISK)
         broadcast_hot = hot.count() <= broadcast_hot_max_rows
     hot = F.broadcast(hot) if broadcast_hot else hot
-    hits = grams.join(hot, "h").select(id_col, "pos")
+    hits = grams.join(hot, "h").select("doc_id", "pos")
 
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     flagged = hits.withColumn(
         "new_span",
         F.when(
@@ -143,19 +141,14 @@ def repeated_ngram_spans(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    return flagged.groupBy(id_col, "span_id").agg(
+    return flagged.groupBy("doc_id", "span_id").agg(
         F.min("pos").cast("long").alias("span_start"),
         (F.max("pos") + n).cast("long").alias("span_end"),
         F.count(F.lit(1)).alias("n_hits"),
     ).drop("span_id")
 
 
-def cut_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cut_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """Apply a :func:`repeated_ngram_spans` cut list: drop every token
     covered by a span, rebuild whitespace-normalized text. Output:
     ``(doc_id, clean_text, n_tokens_removed)``.
@@ -168,18 +161,18 @@ def cut_spans(
     the spans table before calling this (the cut list is data, not
     policy).
     """
-    cuts = spans.groupBy(id_col).agg(
+    cuts = spans.groupBy("doc_id").agg(
         F.collect_list(
             F.struct(
                 F.col("span_start").alias("s"), F.col("span_end").alias("e")
             )
         ).alias("cuts")
     )
-    joined = docs.join(cuts, id_col, "left").withColumn(
+    joined = docs.join(cuts, "doc_id", "left").withColumn(
         "cuts",
         F.coalesce(F.col("cuts"), F.array().cast("array<struct<s:long,e:long>>")),
     )
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     kept = F.filter(
         toks,
         lambda t, i: ~F.exists(
@@ -187,43 +180,41 @@ def cut_spans(
         ),
     )
     return joined.select(
-        id_col,
+        "doc_id",
         F.array_join(kept, " ").alias("clean_text"),
         (F.size(toks) - F.size(kept)).cast("long").alias("n_tokens_removed"),
     )
 
 
-def _spans_parts(
-    table: str, n: int, min_count: int, id_col: str
-) -> tuple[str, str]:
+def _spans_parts(table: str, n: int, min_count: int) -> tuple[str, str]:
     """(CTE chain, final SELECT) of the DuckDB spans pipeline — split so
     :func:`cut_spans_sql` can keep composing CTEs after the chain."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     ctes = rf"""
-WITH t AS (SELECT {id_col}, {TOKENS_SQL} AS toks FROM {table}),
-g AS (SELECT {id_col},
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {table}),
+g AS (SELECT doc_id,
              unnest(list_transform(
                  generate_series(1, greatest(len(toks) - {n - 1}, 0)),
                  i -> {{'pos': i - 1,
                         'h': md5(array_to_string(toks[i:i+{n - 1}], ' '))}}))
                AS pg
       FROM t),
-e AS (SELECT {id_col}, pg.pos AS pos, pg.h AS h FROM g),
+e AS (SELECT doc_id, pg.pos AS pos, pg.h AS h FROM g),
 hot AS (SELECT h FROM e GROUP BY h HAVING COUNT(*) >= {min_count}),
-hits AS (SELECT {id_col}, pos FROM e JOIN hot USING (h)),
-f AS (SELECT {id_col}, pos,
+hits AS (SELECT doc_id, pos FROM e JOIN hot USING (h)),
+f AS (SELECT doc_id, pos,
              CASE WHEN pos - lag(pos) OVER w <= {n} THEN 0 ELSE 1 END
                AS new_span
-      FROM hits WINDOW w AS (PARTITION BY {id_col} ORDER BY pos)),
-s AS (SELECT {id_col}, pos,
-             SUM(new_span) OVER (PARTITION BY {id_col} ORDER BY pos
+      FROM hits WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+s AS (SELECT doc_id, pos,
+             SUM(new_span) OVER (PARTITION BY doc_id ORDER BY pos
                                  ROWS UNBOUNDED PRECEDING) AS span_id
       FROM f)"""
-    final = rf"""SELECT {id_col}, CAST(MIN(pos) AS BIGINT) AS span_start,
+    final = rf"""SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
        CAST(MAX(pos) + {n} AS BIGINT) AS span_end,
        COUNT(*) AS n_hits
-FROM s GROUP BY {id_col}, span_id"""
+FROM s GROUP BY doc_id, span_id"""
     return ctes, final
 
 
@@ -231,11 +222,10 @@ def repeated_ngram_spans_sql(
     table: str = "documents",
     n: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`repeated_ngram_spans` (same hash, same
     merge rule — bit-identical spans)."""
-    ctes, final = _spans_parts(table, n, min_count, id_col)
+    ctes, final = _spans_parts(table, n, min_count)
     return f"{ctes}\n{final}"
 
 
@@ -243,26 +233,25 @@ def cut_spans_sql(
     table: str = "documents",
     n: int = 8,
     min_count: int = 2,
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of the spans → :func:`cut_spans` composition (same
     tokenizer, same 0-based span predicate — bit-identical text)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
-    ctes, final = _spans_parts(table, n, min_count, id_col)
+    ctes, final = _spans_parts(table, n, min_count)
     return rf"""{ctes},
 spans AS ({final}),
-cuts AS (SELECT {id_col}, list({{'s': span_start, 'e': span_end}}) AS cuts
-         FROM spans GROUP BY {id_col}),
-src AS (SELECT d.{id_col}, {TOKENS_SQL} AS toks,
+cuts AS (SELECT doc_id, list({{'s': span_start, 'e': span_end}}) AS cuts
+         FROM spans GROUP BY doc_id),
+src AS (SELECT d.doc_id, {TOKENS_SQL} AS toks,
                coalesce(c.cuts, []) AS cuts
-        FROM {table} d LEFT JOIN cuts c USING ({id_col})),
-k AS (SELECT {id_col}, toks,
+        FROM {table} d LEFT JOIN cuts c USING (doc_id)),
+k AS (SELECT doc_id, toks,
              list_filter(toks, (x, i) ->
                NOT len(list_filter(cuts,
                      c -> (i - 1) >= c.s AND (i - 1) < c.e)) > 0) AS kept
       FROM src)
-SELECT {id_col},
+SELECT doc_id,
        -- DuckDB's array_to_string([]) is NULL; Spark's array_join is ''
        coalesce(array_to_string(kept, ' '), '') AS clean_text,
        CAST(len(toks) - len(kept) AS BIGINT) AS n_tokens_removed

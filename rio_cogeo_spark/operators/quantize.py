@@ -23,6 +23,9 @@ similarity.py as the scale path — quantization composes with either
 
 All-zero corpora have no scale (amax = 0 → NaN components); quantizing
 nothing is not meaningful input and is not defended.
+
+Column names are fixed (``vec_id``, ``label``); the vector column is
+``col``.
 """
 
 from __future__ import annotations
@@ -38,11 +41,10 @@ from rio_cogeo_spark.functions.vector import as_double_array
 def quantize_embeddings(
     emb: DataFrame,
     col: str = "embedding",
-    id_col: str = "vec_id",
     extra_cols: tuple = (),
     amax: float = None,
 ) -> DataFrame:
-    """→ ``(id_col, [extra_cols...], q_embedding array<long>, amax double)``.
+    """→ ``(vec_id, [extra_cols...], q_embedding array<long>, amax double)``.
 
     One global absmax aggregate, broadcast back as a 1-row cross join
     (BroadcastNestedLoop of one row), then a pure ``transform``
@@ -71,7 +73,7 @@ def quantize_embeddings(
         ).cast("long"),
     )
     return emb.crossJoin(F.broadcast(amax_df)).select(
-        F.col(id_col), *[F.col(c) for c in extra_cols],
+        F.col("vec_id"), *[F.col(c) for c in extra_cols],
         qv.alias("q_embedding"), "amax",
     )
 
@@ -90,7 +92,6 @@ def ann_int8_topk(
     k: int = 10,
     n_queries: int = 5,
     col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Brute-force top-k by int8 dot product, queries drawn from the
     corpus (``vec_id < n_queries``), self-matches excluded.
@@ -98,26 +99,26 @@ def ann_int8_topk(
     Output ``(query_id, vec_id, rank, qdot)`` — all integers, so the
     oracle comparison is exact, not rounded. Ties break by vec_id.
     """
-    q = quantize_embeddings(emb, col, id_col)
+    q = quantize_embeddings(emb, col)
     queries = F.broadcast(
-        q.filter(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("query_id"),
+        q.filter(F.col("vec_id") < n_queries).select(
+            F.col("vec_id").alias("query_id"),
             F.col("q_embedding").alias("q_vec"),
         )
     )
-    pairs = q.crossJoin(queries).filter(F.col(id_col) != F.col("query_id"))
+    pairs = q.crossJoin(queries).filter(F.col("vec_id") != F.col("query_id"))
     scored = pairs.select(
         "query_id",
-        F.col(id_col),
+        F.col("vec_id"),
         int_dot(F.col("q_embedding"), F.col("q_vec")).alias("qdot"),
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("qdot"), F.asc(id_col)
+        F.desc("qdot"), F.asc("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "qdot")
+        .select("query_id", "vec_id", "rank", "qdot")
     )
 
 
@@ -143,12 +144,12 @@ def ann_int8_topk(
 # hash-identical cross-engine with no rounding crutch.
 
 
-def _subvectors(q: DataFrame, m: int, sd: int, id_col: str, extra=()):
+def _subvectors(q: DataFrame, m: int, sd: int, extra=()):
     """Explode a quantized table into (id, [extra...], subv, qsub)."""
     j = F.explode(F.array(*[F.lit(i) for i in range(m)])).alias("subv")
-    out = q.select(F.col(id_col), *[F.col(c) for c in extra], j, "q_embedding")
+    out = q.select(F.col("vec_id"), *[F.col(c) for c in extra], j, "q_embedding")
     return out.select(
-        F.col(id_col), *[F.col(c) for c in extra], "subv",
+        F.col("vec_id"), *[F.col(c) for c in extra], "subv",
         F.slice(F.col("q_embedding"), F.col("subv") * sd + 1, sd).alias("qsub"),
     )
 
@@ -163,9 +164,7 @@ def _emb_dim(emb: DataFrame, col: str) -> int:
 def pq_codebooks(
     emb: DataFrame,
     m: int = 4,
-    label_col: str = "label",
     col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Train the m sub-codebooks: ``(subv, code, centroid array<long>)``,
     one int8 centroid per (subquantizer, label).
@@ -178,20 +177,20 @@ def pq_codebooks(
     if m < 1 or dim % m != 0:
         raise ValueError(f"m={m} must divide the embedding dim {dim}")
     sd = dim // m
-    q = quantize_embeddings(emb, col, id_col, extra_cols=(label_col,))
-    subs = _subvectors(q, m, sd, id_col, extra=(label_col,))
+    q = quantize_embeddings(emb, col, extra_cols=("label",))
+    subs = _subvectors(q, m, sd, extra=("label",))
     pose = subs.select(
-        label_col, "subv", F.posexplode("qsub").alias("pos", "val")
+        "label", "subv", F.posexplode("qsub").alias("pos", "val")
     )
-    cent = pose.groupBy(label_col, "subv", "pos").agg(
+    cent = pose.groupBy("label", "subv", "pos").agg(
         F.sum("val").alias("s"), F.count(F.lit(1)).alias("c")
     ).select(
-        label_col, "subv", "pos",
+        "label", "subv", "pos",
         F.floor(F.col("s").cast("double") / F.col("c") + F.lit(0.5))
         .cast("long").alias("cval"),
     )
     return (
-        cent.groupBy("subv", F.col(label_col).alias("code"))
+        cent.groupBy("subv", F.col("label").alias("code"))
         .agg(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("pos", "cval"))),
@@ -206,9 +205,8 @@ def pq_encode(
     codebooks: DataFrame,
     m: int = 4,
     col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
-    """Assign each vector its m code words: ``(id_col, subv, code)`` —
+    """Assign each vector its m code words: ``(vec_id, subv, code)`` —
     argmin exact squared int distance per subquantizer, ties to the
     smallest code. Long-form output IS the PQ store shape (8-32x
     smaller than the vectors); the codebook broadcasts, the corpus
@@ -216,8 +214,8 @@ def pq_encode(
     are thin (id, subv, dist, code)."""
     dim = _emb_dim(emb, col)
     sd = dim // m
-    q = quantize_embeddings(emb, col, id_col)
-    subs = _subvectors(q, m, sd, id_col)
+    q = quantize_embeddings(emb, col)
+    subs = _subvectors(q, m, sd)
     joined = subs.join(F.broadcast(codebooks), "subv")
     dist = F.aggregate(
         F.zip_with(F.col("qsub"), F.col("centroid"),
@@ -226,10 +224,10 @@ def pq_encode(
         lambda acc, x: acc + x,
     )
     return (
-        joined.select(F.col(id_col), "subv", "code", dist.alias("d2"))
-        .groupBy(id_col, "subv")
+        joined.select(F.col("vec_id"), "subv", "code", dist.alias("d2"))
+        .groupBy("vec_id", "subv")
         .agg(F.min(F.struct("d2", "code")).alias("mn"))
-        .select(id_col, "subv", F.col("mn.code").alias("code"))
+        .select("vec_id", "subv", F.col("mn.code").alias("code"))
     )
 
 
@@ -238,9 +236,7 @@ def ann_pq_topk(
     m: int = 4,
     k: int = 10,
     n_queries: int = 5,
-    label_col: str = "label",
     col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """End-to-end PQ ANN: train codebooks, encode the corpus, score
     ``vec_id < n_queries`` by asymmetric distance (exact int dot of the
@@ -254,27 +250,27 @@ def ann_pq_topk(
     """
     dim = _emb_dim(emb, col)
     sd = dim // m
-    cb = pq_codebooks(emb, m, label_col, col, id_col)
-    codes = pq_encode(emb, cb, m, col, id_col)
-    q = quantize_embeddings(emb, col, id_col)
+    cb = pq_codebooks(emb, m, col)
+    codes = pq_encode(emb, cb, m, col)
+    q = quantize_embeddings(emb, col)
     qsubs = _subvectors(
-        q.filter(F.col(id_col) < n_queries), m, sd, id_col
-    ).select(F.col(id_col).alias("query_id"), "subv", "qsub")
+        q.filter(F.col("vec_id") < n_queries), m, sd
+    ).select(F.col("vec_id").alias("query_id"), "subv", "qsub")
     lut = qsubs.join(cb, "subv").select(
         "query_id", "subv", "code",
         int_dot(F.col("qsub"), F.col("centroid")).alias("dot"),
     )
     scored = (
         codes.join(F.broadcast(lut), ["subv", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", id_col)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
         .agg(F.sum("dot").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "score")
+        .select("query_id", "vec_id", "rank", "score")
     )
 
 
@@ -404,11 +400,10 @@ def ann_pq_query_with_index(
     path: str,
     k: int = 10,
     col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Query a persisted PQ index: ``codes`` is the stored
-    ``(id_col, subv, code)`` table from :func:`pq_encode`, ``queries``
-    is ``(id_col, embedding)`` raw query vectors. Loads the codebooks +
+    ``(vec_id, subv, code)`` table from :func:`pq_encode`, ``queries``
+    is ``(vec_id, embedding)`` raw query vectors. Loads the codebooks +
     the TRAINING amax from the manifest (queries quantize at the index
     scale — a pure projection, no corpus aggregate), builds the ADC
     lookup table, scores, ranks. Output matches :func:`ann_pq_topk`.
@@ -421,9 +416,9 @@ def ann_pq_query_with_index(
             f"query dim {qdim} != index dim {dim} (param manifest mismatch)"
         )
     sd = dim // m
-    q = quantize_embeddings(queries, col, id_col, amax=amax)
-    qsubs = _subvectors(q, m, sd, id_col).select(
-        F.col(id_col).alias("query_id"), "subv", "qsub"
+    q = quantize_embeddings(queries, col, amax=amax)
+    qsubs = _subvectors(q, m, sd).select(
+        F.col("vec_id").alias("query_id"), "subv", "qsub"
     )
     lut = qsubs.join(cb, "subv").select(
         "query_id", "subv", "code",
@@ -431,15 +426,15 @@ def ann_pq_query_with_index(
     )
     scored = (
         codes.join(F.broadcast(lut), ["subv", "code"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .groupBy("query_id", id_col)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
         .agg(F.sum("dot").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "score")
+        .select("query_id", "vec_id", "rank", "score")
     )
 
 
@@ -449,11 +444,9 @@ def ann_ivfpq_topk(
     k: int = 10,
     n_queries: int = 5,
     n_probe: int = 3,
-    list_col: str = "label",
     lloyd_iters: int = 0,
     n_lists: int = None,
     col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVFPQ — the composition that IS the production 10^12-vector
     index (faiss IndexIVFPQ): IVF coarse routing shrinks candidates to
@@ -476,7 +469,7 @@ def ann_ivfpq_topk(
     dim = _emb_dim(emb, col)
     sd = dim // m
     centroids = ivf_build_centroids(
-        emb, col, list_col, lloyd_iters=lloyd_iters, n_lists=n_lists
+        emb, col, lloyd_iters=lloyd_iters, n_lists=n_lists
     )
     norm_c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
     indexed = ivf_assign_lists(emb, centroids)
@@ -489,40 +482,40 @@ def ann_ivfpq_topk(
         order = np.argsort(-(mtx @ norm_c.T), axis=1, kind="stable")[:, :np_]
         return pd.Series([row.astype(np.int32).tolist() for row in order])
 
-    cb = pq_codebooks(emb, m, list_col, col, id_col)
-    codes = pq_encode(emb, cb, m, col, id_col).join(
-        indexed.select(id_col, "ivf_list"), id_col
+    cb = pq_codebooks(emb, m, col)
+    codes = pq_encode(emb, cb, m, col).join(
+        indexed.select("vec_id", "ivf_list"), "vec_id"
     )
 
-    raw_q = emb.filter(F.col(id_col) < n_queries)
+    raw_q = emb.filter(F.col("vec_id") < n_queries)
     probes = raw_q.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.explode(_probe_lists(F.col(col))).alias("ivf_list"),
     )
     # queries quantize at the CORPUS scale (the codebooks' training
     # amax) — quantizing the filtered query set alone would rescale
     # every LUT dot (the pq_save_index manifest rule)
-    q = quantize_embeddings(emb, col, id_col).filter(
-        F.col(id_col) < n_queries
+    q = quantize_embeddings(emb, col).filter(
+        F.col("vec_id") < n_queries
     )
-    qsubs = _subvectors(q, m, sd, id_col).select(
-        F.col(id_col).alias("query_id"), "subv", "qsub"
+    qsubs = _subvectors(q, m, sd).select(
+        F.col("vec_id").alias("query_id"), "subv", "qsub"
     )
     lut = qsubs.join(cb, "subv").select(
         "query_id", "subv", "code",
         int_dot(F.col("qsub"), F.col("centroid")).alias("dot"),
     )
     cands = codes.join(F.broadcast(probes), ["ivf_list"]).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     scored = (
         cands.join(F.broadcast(lut), ["query_id", "subv", "code"])
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", "vec_id")
         .agg(F.sum("dot").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "score")
+        .select("query_id", "vec_id", "rank", "score")
     )

@@ -34,6 +34,8 @@ Scale design (100 TB):
 * the final per-doc fold shuffles the (doc, term, tf) postings, whose
   volume is already tf-collapsed — bounded by distinct terms per doc,
   not doc length.
+
+Column names are fixed: ``doc_id``, ``text``, ``lang`` and ``url``.
 """
 
 from __future__ import annotations
@@ -50,21 +52,19 @@ _PPM = 1_000_000
 def token_rarity(
     docs: DataFrame,
     rare_cnt: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Score every document against the corpus unigram distribution.
 
-    Returns ``(id_col, n_tokens, mean_tok_freq_ppb, rare_frac_ppm)``;
+    Returns ``(doc_id, n_tokens, mean_tok_freq_ppb, rare_frac_ppm)``;
     zero-token documents are absent (they have no distribution to
     score). Lower ``mean_tok_freq_ppb`` = rarer vocabulary; high
     ``rare_frac_ppm`` = noise/OCR-garbage candidate.
     """
     from rio_cogeo_spark.functions.text import tokens_col
 
-    toks = tokens_col(F.col(text_col))
-    tf = build_postings(docs, id_col=id_col, text_col=text_col)
+    toks = tokens_col(F.col("text"))
+    tf = build_postings(docs)
     # r06 (guide §1.2): the vocab and grand-total branches each re-ran
     # the postings lineage (3 corpus explodes per query). The vocab now
     # aggregates the exploded tokens directly (one agg instead of the
@@ -86,7 +86,7 @@ def token_rarity(
         .withColumn("freq_ppb", F.expr(f"(cnt * {_PPB}) div total"))
     )
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             F.expr("sum(tf * freq_ppb) div sum(tf)").alias("mean_tok_freq_ppb"),
@@ -95,24 +95,20 @@ def token_rarity(
                 f" * {_PPM}) div sum(tf)"
             ).alias("rare_frac_ppm"),
         )
-        .select(id_col, "n_tokens", "mean_tok_freq_ppb", "rare_frac_ppm")
+        .select("doc_id", "n_tokens", "mean_tok_freq_ppb", "rare_frac_ppm")
     )
 
 
-def token_rarity_sql(
-    table: str = "documents",
-    rare_cnt: int = 2,
-    id_col: str = "doc_id",
-) -> str:
+def token_rarity_sql(table: str = "documents", rare_cnt: int = 2) -> str:
     """DuckDB twin of :func:`token_rarity` (same exact-BIGINT formulas)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT {id_col}, unnest({TOKENS_SQL}) AS term FROM {table}),
-tf AS (SELECT {id_col}, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
+WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM {table}),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 vocab AS (SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1),
 tot AS (SELECT SUM(cnt) AS total FROM vocab)
-SELECT {id_col},
+SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_tokens,
        CAST(SUM(tf * ((cnt * {_PPB}) // total)) // SUM(tf) AS BIGINT)
            AS mean_tok_freq_ppb,
@@ -122,18 +118,13 @@ FROM tf JOIN vocab USING (term) CROSS JOIN tot
 GROUP BY 1"""
 
 
-def lang_mix(
-    docs: DataFrame,
-    sep: str = "\n\n",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lang_mix(docs: DataFrame, sep: str = "\n\n") -> DataFrame:
     """Per-document language-mix report over paragraphs — the
     mC4/CCNet mixed-language page filter: pages whose paragraphs
     disagree on language (embedded widgets, comment sections, scraped
     mashups) are low-quality for monolingual training mixes. Each
     paragraph gets the shared marker-based :func:`functions.text.lang_id`;
-    the report is ``(id_col, n_paras, n_langs, major_lang,
+    the report is ``(doc_id, n_paras, n_langs, major_lang,
     major_frac_ppm)`` with the majority fraction in exact ppm ints
     (ties on the paragraph-language count break to the
     lexicographically smallest language, so results hash cross-engine).
@@ -151,20 +142,20 @@ def lang_mix(
     pat = "\\Q" + sep + "\\E"
     paras = (
         docs.select(
-            F.col(id_col),
-            F.explode(F.split(F.col(text_col), pat)).alias("para"),
+            F.col("doc_id"),
+            F.explode(F.split(F.col("text"), pat)).alias("para"),
         )
         .filter(F.length(F.trim(F.col("para"))) > 0)
     )
     counts = (
         paras.select(
-            id_col, lang_id(F.col("para").alias("text")).alias("plang")
+            "doc_id", lang_id(F.col("para").alias("text")).alias("plang")
         )
-        .groupBy(id_col, "plang")
+        .groupBy("doc_id", "plang")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return (
-        counts.groupBy(id_col)
+        counts.groupBy("doc_id")
         .agg(
             F.sum("n").alias("n_paras"),
             F.count(F.lit(1)).alias("n_langs"),
@@ -173,37 +164,33 @@ def lang_mix(
             ).alias("best"),
         )
         .select(
-            id_col, "n_paras", "n_langs",
+            "doc_id", "n_paras", "n_langs",
             F.col("best.plang").alias("major_lang"),
             F.expr("(-best.nn * 1000000) div n_paras").alias("major_frac_ppm"),
         )
     )
 
 
-def lang_mix_sql(
-    table: str = "documents",
-    sep: str = "\n\n",
-    id_col: str = "doc_id",
-) -> str:
+def lang_mix_sql(table: str = "documents", sep: str = "\n\n") -> str:
     """DuckDB twin of :func:`lang_mix` (LANG_ID_SQL reads a column
     literally named ``text``, so the paragraph aliases to it)."""
     from rio_cogeo_spark.functions.text import LANG_ID_SQL
 
     sep_lit = sep.replace("'", "''")
     return rf"""
-WITH paras AS (SELECT {id_col},
+WITH paras AS (SELECT doc_id,
                       unnest(string_split(text, '{sep_lit}')) AS para
                FROM {table}),
-pl AS (SELECT {id_col}, {LANG_ID_SQL.replace('text', 'para')} AS plang
-       FROM (SELECT {id_col}, para FROM paras
+pl AS (SELECT doc_id, {LANG_ID_SQL.replace('text', 'para')} AS plang
+       FROM (SELECT doc_id, para FROM paras
              WHERE length(trim(para)) > 0)),
-cnt AS (SELECT {id_col}, plang, COUNT(*) AS n FROM pl GROUP BY 1, 2),
-agg AS (SELECT {id_col},
+cnt AS (SELECT doc_id, plang, COUNT(*) AS n FROM pl GROUP BY 1, 2),
+agg AS (SELECT doc_id,
                CAST(SUM(n) AS BIGINT) AS n_paras,
                CAST(COUNT(*) AS BIGINT) AS n_langs,
                MIN(STRUCT_PACK(nn := -n, plang := plang)) AS best
         FROM cnt GROUP BY 1)
-SELECT {id_col}, n_paras, n_langs,
+SELECT doc_id, n_paras, n_langs,
        best.plang AS major_lang,
        CAST((-best.nn * 1000000) // n_paras AS BIGINT) AS major_frac_ppm
 FROM agg"""
@@ -212,8 +199,6 @@ FROM agg"""
 def bigram_lm(
     docs: DataFrame,
     novel_cnt: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     broadcast_model: bool = True,
 ) -> DataFrame:
     """Bigram-LM predictability score — the conditional-probability form
@@ -232,7 +217,7 @@ def bigram_lm(
     * ``novel_frac_ppm`` — the fraction of the doc's bigram occurrences
       whose bigram appears ≤ ``novel_cnt`` times corpus-wide.
 
-    Returns ``(id_col, n_bigrams, mean_pred_ppm, novel_frac_ppm)``;
+    Returns ``(doc_id, n_bigrams, mean_pred_ppm, novel_frac_ppm)``;
     docs with fewer than 2 tokens emit no row (no bigram to score).
     All arithmetic is exact BIGINT (``div`` only), so results hash
     identically across engines and partitionings. Envelope: with the
@@ -264,10 +249,10 @@ def bigram_lm(
     # from being re-evaluated by every slice inside the n-gram zip
     # (CollapseProject leaves multi-referenced non-cheap aliases alone).
     base = docs.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
+        F.col("doc_id"), tokens_col(F.col("text")).alias("_toks")
     )
     bg = base.select(
-        id_col, F.explode(ngrams_from_tokens(F.col("_toks"), 2)).alias("bigram")
+        "doc_id", F.explode(ngrams_from_tokens(F.col("_toks"), 2)).alias("bigram")
     )
 
     if not broadcast_model:
@@ -280,16 +265,16 @@ def bigram_lm(
         wb = Window.partitionBy("bigram")
         ww = Window.partitionBy("w1")
         s1 = bg.withColumn("cnt2", F.count(F.lit(1)).over(wb)).select(
-            id_col,
+            "doc_id",
             F.substring_index("bigram", " ", 1).alias("w1"),
             "cnt2",
         )
         s2 = s1.withColumn("cnt1", F.count(F.lit(1)).over(ww)).select(
-            id_col, "cnt2",
+            "doc_id", "cnt2",
             F.expr(f"(cnt2 * {_PPM}) div cnt1").alias("pred_ppm"),
         )
         return (
-            s2.groupBy(id_col)
+            s2.groupBy("doc_id")
             .agg(
                 F.count(F.lit(1)).alias("n_bigrams"),
                 F.expr("sum(pred_ppm) div count(1)").alias("mean_pred_ppm"),
@@ -298,10 +283,10 @@ def bigram_lm(
                     f" * {_PPM}) div count(1)"
                 ).alias("novel_frac_ppm"),
             )
-            .select(id_col, "n_bigrams", "mean_pred_ppm", "novel_frac_ppm")
+            .select("doc_id", "n_bigrams", "mean_pred_ppm", "novel_frac_ppm")
         )
 
-    tf = bg.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("tf"))
+    tf = bg.groupBy("doc_id", "bigram").agg(F.count(F.lit(1)).alias("tf"))
     bgc = tf.groupBy("bigram").agg(F.sum("tf").alias("cnt2"))
     pfx = (
         bgc.groupBy(F.substring_index("bigram", " ", 1).alias("w1"))
@@ -318,7 +303,7 @@ def bigram_lm(
     )
     joined = tf.join(F.broadcast(model), "bigram")
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_bigrams"),
             F.expr("sum(tf * pred_ppm) div sum(tf)").alias("mean_pred_ppm"),
@@ -327,34 +312,30 @@ def bigram_lm(
                 f" * {_PPM}) div sum(tf)"
             ).alias("novel_frac_ppm"),
         )
-        .select(id_col, "n_bigrams", "mean_pred_ppm", "novel_frac_ppm")
+        .select("doc_id", "n_bigrams", "mean_pred_ppm", "novel_frac_ppm")
     )
 
 
-def bigram_lm_sql(
-    table: str = "documents",
-    novel_cnt: int = 1,
-    id_col: str = "doc_id",
-) -> str:
+def bigram_lm_sql(table: str = "documents", novel_cnt: int = 1) -> str:
     """DuckDB twin of :func:`bigram_lm` (same positional bigram build —
     inclusive 1-based list slice, as in passages._spans_parts — and the
     same exact-BIGINT formulas)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH t AS (SELECT {id_col}, {TOKENS_SQL} AS toks FROM {table}),
-bg AS (SELECT {id_col},
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {table}),
+bg AS (SELECT doc_id,
               unnest(list_transform(
                   generate_series(1, greatest(len(toks) - 1, 0)),
                   i -> array_to_string(toks[i:i+1], ' '))) AS bigram
        FROM t),
-tf AS (SELECT {id_col}, bigram, COUNT(*) AS tf FROM bg GROUP BY 1, 2),
+tf AS (SELECT doc_id, bigram, COUNT(*) AS tf FROM bg GROUP BY 1, 2),
 bgc AS (SELECT bigram, SUM(tf) AS cnt2 FROM tf GROUP BY 1),
 pfx AS (SELECT split_part(bigram, ' ', 1) AS w1, SUM(cnt2) AS cnt1
         FROM bgc GROUP BY 1),
 model AS (SELECT bigram, cnt2, (cnt2 * {_PPM}) // cnt1 AS pred_ppm
           FROM bgc JOIN pfx ON split_part(bgc.bigram, ' ', 1) = pfx.w1)
-SELECT {id_col},
+SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_bigrams,
        CAST(SUM(tf * pred_ppm) // SUM(tf) AS BIGINT) AS mean_pred_ppm,
        CAST((SUM(CASE WHEN cnt2 <= {int(novel_cnt)} THEN tf ELSE 0 END)
@@ -367,7 +348,6 @@ def collocations(
     docs: DataFrame,
     min_cnt: int = 5,
     topk: int = 100,
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus collocation mining — the top-``topk`` bigrams by lift
     (the exact-integer PMI analog), the signal a curation pipeline uses
@@ -400,7 +380,7 @@ def collocations(
     from rio_cogeo_spark.operators.passages import ngrams_col
 
     bgc = (
-        docs.select(F.explode(ngrams_col(F.col(text_col), 2)).alias("bigram"))
+        docs.select(F.explode(ngrams_col(F.col("text"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("cnt2"))
     )
@@ -467,18 +447,15 @@ LIMIT {int(topk)}"""
 def ccnet_buckets(
     docs: DataFrame,
     n_buckets: int = 3,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
     broadcast_model: bool = True,
 ) -> DataFrame:
     """CCNet-style per-language perplexity bucketing: score every page
     with the corpus bigram LM (:func:`bigram_lm`) and split each
     language into ``n_buckets`` equal-count bands — CCNet's
     head/middle/tail split, which downstream mixes sample from at
-    different rates. NTILE over (``mean_pred_ppm`` DESC, ``id_col``)
+    different rates. NTILE over (``mean_pred_ppm`` DESC, ``doc_id``)
     gives an exact, total order, so bucket assignment is deterministic
-    and hash-identical cross-engine. Returns ``(id_col, lang_col,
+    and hash-identical cross-engine. Returns ``(doc_id, lang,
     mean_pred_ppm, bucket, bucket_name)``; bucket 1 = most predictable
     ("head"), bucket ``n`` = least ("tail"). Docs with <2 tokens are
     absent (unscorable by a bigram LM).
@@ -495,16 +472,15 @@ def ccnet_buckets(
     from pyspark.sql import Window
 
     scores = bigram_lm(
-        docs, id_col=id_col, text_col=text_col,
-        broadcast_model=broadcast_model,
-    ).select(id_col, "mean_pred_ppm")
-    w = Window.partitionBy(lang_col).orderBy(
-        F.col("mean_pred_ppm").desc(), F.col(id_col)
+        docs, broadcast_model=broadcast_model,
+    ).select("doc_id", "mean_pred_ppm")
+    w = Window.partitionBy("lang").orderBy(
+        F.col("mean_pred_ppm").desc(), F.col("doc_id")
     )
     n = int(n_buckets)
     return (
-        docs.select(id_col, lang_col)
-        .join(scores, id_col)
+        docs.select("doc_id", "lang")
+        .join(scores, "doc_id")
         .withColumn("bucket", F.ntile(n).over(w))
         .withColumn(
             "bucket_name",
@@ -513,38 +489,29 @@ def ccnet_buckets(
                 f"THEN 'tail' ELSE 'middle' END"
             ),
         )
-        .select(id_col, lang_col, "mean_pred_ppm", "bucket", "bucket_name")
+        .select("doc_id", "lang", "mean_pred_ppm", "bucket", "bucket_name")
     )
 
 
-def ccnet_buckets_sql(
-    table: str = "documents",
-    n_buckets: int = 3,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> str:
+def ccnet_buckets_sql(table: str = "documents", n_buckets: int = 3) -> str:
     """DuckDB twin of :func:`ccnet_buckets` (bigram-LM CTEs +
     the same NTILE window)."""
-    lm = bigram_lm_sql(table, id_col=id_col).strip()
+    lm = bigram_lm_sql(table).strip()
     n = int(n_buckets)
     return rf"""
 WITH lm AS ({lm})
-SELECT d.{id_col}, d.{lang_col}, lm.mean_pred_ppm,
-       CAST(NTILE({n}) OVER (PARTITION BY d.{lang_col}
-            ORDER BY lm.mean_pred_ppm DESC, d.{id_col}) AS INT) AS bucket,
-       CASE WHEN NTILE({n}) OVER (PARTITION BY d.{lang_col}
-            ORDER BY lm.mean_pred_ppm DESC, d.{id_col}) = 1 THEN 'head'
-            WHEN NTILE({n}) OVER (PARTITION BY d.{lang_col}
-            ORDER BY lm.mean_pred_ppm DESC, d.{id_col}) = {n} THEN 'tail'
+SELECT d.doc_id, d.lang, lm.mean_pred_ppm,
+       CAST(NTILE({n}) OVER (PARTITION BY d.lang
+            ORDER BY lm.mean_pred_ppm DESC, d.doc_id) AS INT) AS bucket,
+       CASE WHEN NTILE({n}) OVER (PARTITION BY d.lang
+            ORDER BY lm.mean_pred_ppm DESC, d.doc_id) = 1 THEN 'head'
+            WHEN NTILE({n}) OVER (PARTITION BY d.lang
+            ORDER BY lm.mean_pred_ppm DESC, d.doc_id) = {n} THEN 'tail'
             ELSE 'middle' END AS bucket_name
-FROM {table} d JOIN lm ON d.{id_col} = lm.{id_col}"""
+FROM {table} d JOIN lm ON d.doc_id = lm.doc_id"""
 
 
-def lexical_diversity(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Per-document lexical diversity — the type-token-ratio family of
     quality signals (a low TTR marks keyword-stuffing / template spam;
     an implausibly high hapax share marks OCR noise and word-salad):
@@ -565,9 +532,9 @@ def lexical_diversity(
     """
     from rio_cogeo_spark.operators.search import build_postings
 
-    tf = build_postings(docs, id_col=id_col, text_col=text_col)
+    tf = build_postings(docs)
     return (
-        tf.groupBy(id_col)
+        tf.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             F.count(F.lit(1)).alias("n_types"),
@@ -577,20 +544,18 @@ def lexical_diversity(
                 f" div count(1)"
             ).alias("hapax_frac_ppm"),
         )
-        .select(id_col, "n_tokens", "n_types", "ttr_ppm", "hapax_frac_ppm")
+        .select("doc_id", "n_tokens", "n_types", "ttr_ppm", "hapax_frac_ppm")
     )
 
 
-def lexical_diversity_sql(
-    table: str = "documents", id_col: str = "doc_id"
-) -> str:
+def lexical_diversity_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`lexical_diversity`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT {id_col}, unnest({TOKENS_SQL}) AS term FROM {table}),
-tf AS (SELECT {id_col}, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2)
-SELECT {id_col},
+WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM {table}),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2)
+SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_tokens,
        CAST(COUNT(*) AS BIGINT) AS n_types,
        CAST((COUNT(*) * {_PPM}) // SUM(tf) AS BIGINT) AS ttr_ppm,
@@ -599,18 +564,14 @@ SELECT {id_col},
 FROM tf GROUP BY 1"""
 
 
-def vocab_stats(
-    docs: DataFrame,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_stats(docs: DataFrame) -> DataFrame:
     """Per-group corpus vocabulary report — the Heaps-law diagnostic a
     curation pipeline tracks per language/source slice (vocabulary size
     vs corpus size, singleton share): a slice whose hapax share climbs
     across snapshots is accumulating noise; one whose TTR collapses is
     accumulating boilerplate.
 
-    Returns ``(group_col, n_tokens, n_types, hapax_types, ttr_ppm,
+    Returns ``(lang, n_tokens, n_types, hapax_types, ttr_ppm,
     hapax_frac_ppm)`` in exact BIGINT.
 
     Scale design: one explode + one map-side-combinable (group, term)
@@ -621,14 +582,14 @@ def vocab_stats(
 
     cnt = (
         docs.select(
-            F.col(group_col),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            F.col("lang"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
-        .groupBy(group_col, "term")
+        .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     return (
-        cnt.groupBy(group_col)
+        cnt.groupBy("lang")
         .agg(
             F.sum("cnt").alias("n_tokens"),
             F.count(F.lit(1)).alias("n_types"),
@@ -642,22 +603,20 @@ def vocab_stats(
             ).alias("hapax_frac_ppm"),
         )
         .select(
-            group_col, "n_tokens", "n_types", "hapax_types",
+            "lang", "n_tokens", "n_types", "hapax_types",
             "ttr_ppm", "hapax_frac_ppm",
         )
     )
 
 
-def vocab_stats_sql(
-    table: str = "documents", group_col: str = "lang"
-) -> str:
+def vocab_stats_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`vocab_stats`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT {group_col}, unnest({TOKENS_SQL}) AS term FROM {table}),
-cnt AS (SELECT {group_col}, term, COUNT(*) AS cnt FROM tok GROUP BY 1, 2)
-SELECT {group_col},
+WITH tok AS (SELECT lang, unnest({TOKENS_SQL}) AS term FROM {table}),
+cnt AS (SELECT lang, term, COUNT(*) AS cnt FROM tok GROUP BY 1, 2)
+SELECT lang,
        CAST(SUM(cnt) AS BIGINT) AS n_tokens,
        CAST(COUNT(*) AS BIGINT) AS n_types,
        CAST(SUM(CASE WHEN cnt = 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -670,8 +629,6 @@ FROM cnt GROUP BY 1"""
 
 def host_lang_purity(
     pages: DataFrame,
-    url_col: str = "url",
-    lang_col: str = "lang",
     min_docs: int = 5,
     purity_ppm: int = 600_000,
 ) -> DataFrame:
@@ -699,8 +656,8 @@ def host_lang_purity(
 
     counts = (
         pages.select(
-            host_col(F.col(url_col)).alias("host"),
-            F.col(lang_col).alias("lang"),
+            host_col(F.col("url")).alias("host"),
+            F.col("lang"),
         )
         .groupBy("host", "lang")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -760,9 +717,6 @@ FROM hp_agg"""
 
 def host_quality_trend(
     pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "ts_sec",
-    text_col: str = "text",
     day_sec: int = 86_400,
     drop_ppm: int = 100_000,
 ) -> DataFrame:
@@ -786,11 +740,11 @@ def host_quality_trend(
     """
     from rio_cogeo_spark.functions.text import gopher_gate, host_col
 
-    gg = gopher_gate(F.col(text_col))
+    gg = gopher_gate(F.col("text"))
     per_day = (
         pages.select(
-            host_col(F.col(url_col)).alias("host"),
-            F.expr(f"{ts_col} div {int(day_sec)}").alias("day"),
+            host_col(F.col("url")).alias("host"),
+            F.expr(f"ts_sec div {int(day_sec)}").alias("day"),
             gg["gopher_pass"].cast("long").alias("p"),
         )
         .groupBy("host", "day")

@@ -301,12 +301,7 @@ def build_pixel_pyramid(
     return out
 
 
-def rle_encode_tiles(
-    tiles: DataFrame,
-    pixels_col: str = "pixels",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def rle_encode_tiles(tiles: DataFrame) -> DataFrame:
     """Run-length encoding of per-tile pixel arrays — the declarative
     form of the reference's block compression step (COG blocks deflate
     per tile, cogeo.py profile ``compress=``; for the sparse integer
@@ -324,10 +319,10 @@ def rle_encode_tiles(
     deflate has), never by corpus or grid size; the final fold is a
     combinable count/min per (tile, run).
     """
-    w = Window.partitionBy(x_col, y_col).orderBy("pos")
+    w = Window.partitionBy("tile_x", "tile_y").orderBy("pos")
     ex = tiles.select(
-        F.col(x_col), F.col(y_col),
-        F.posexplode(F.col(pixels_col)).alias("pos", "value"),
+        F.col("tile_x"), F.col("tile_y"),
+        F.posexplode(F.col("pixels")).alias("pos", "value"),
     )
     runs = (
         ex.withColumn(
@@ -343,14 +338,14 @@ def rle_encode_tiles(
         ))
     )
     return (
-        runs.groupBy(x_col, y_col, "_run_id")
+        runs.groupBy("tile_x", "tile_y", "_run_id")
         .agg(
             F.min("pos").alias("_start"),
             F.first("value").alias("value"),
             F.count(F.lit(1)).alias("run_len"),
         )
         .select(
-            x_col, y_col,
+            "tile_x", "tile_y",
             (F.col("_run_id") - 1).cast("long").alias("run_idx"),
             F.col("value").cast("long").alias("value"),
             F.col("run_len").cast("long").alias("run_len"),
@@ -358,14 +353,14 @@ def rle_encode_tiles(
     )
 
 
-def rle_encode_tiles_sql(tiles_cte: str, pixels_col: str = "pixels") -> str:
+def rle_encode_tiles_sql(tiles_cte: str) -> str:
     """DuckDB twin of :func:`rle_encode_tiles` (``tiles_cte`` exposes
     ``(tile_x, tile_y, pixels)``)."""
     return f"""
 WITH rle_t AS ({tiles_cte}),
 rle_e AS (SELECT tile_x, tile_y, u.i - 1 AS pos, u.v AS value
           FROM rle_t,
-               unnest(list_transform({pixels_col},
+               unnest(list_transform(pixels,
                       (x, i) -> struct_pack(i := i, v := x))) AS t(u)),
 rle_b AS (SELECT tile_x, tile_y, pos, value,
                  CASE WHEN lag(value) OVER w IS NULL
@@ -386,21 +381,17 @@ SELECT tile_x, tile_y,
 FROM rle_r GROUP BY tile_x, tile_y, run_id"""
 
 
-def rle_decode_tiles(
-    runs: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def rle_decode_tiles(runs: DataFrame) -> DataFrame:
     """Inverse of :func:`rle_encode_tiles`: rebuild ``(tile_x, tile_y,
     pixels)`` from the run table. Each run explodes into its pixels via
     a ``sequence`` (zero-shuffle projection) and the block reassembles
     with one per-tile sorted fold (bounded by the block pixel count,
     as the encoder's windows are)."""
     w_runs = runs.select(
-        F.col(x_col), F.col(y_col), "run_idx", "value", "run_len"
+        F.col("tile_x"), F.col("tile_y"), "run_idx", "value", "run_len"
     )
     # absolute start offset of each run = sum of earlier runs' lengths
-    w = Window.partitionBy(x_col, y_col).orderBy("run_idx").rowsBetween(
+    w = Window.partitionBy("tile_x", "tile_y").orderBy("run_idx").rowsBetween(
         Window.unboundedPreceding, -1
     )
     ex = (
@@ -408,7 +399,7 @@ def rle_decode_tiles(
             "_start", F.coalesce(F.sum("run_len").over(w), F.lit(0))
         )
         .select(
-            x_col, y_col, "value",
+            "tile_x", "tile_y", "value",
             F.explode(
                 F.sequence(
                     F.col("_start"), F.col("_start") + F.col("run_len") - 1
@@ -417,7 +408,7 @@ def rle_decode_tiles(
         )
     )
     return (
-        ex.groupBy(x_col, y_col)
+        ex.groupBy("tile_x", "tile_y")
         .agg(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("pos", "value"))),

@@ -11,6 +11,12 @@ the corpus is read once, the only shuffles are (a) the vocab count's
 combinable; the per-slice medians are computed over the VALUE-frequency
 table (one row per distinct value per group — bounded by the value
 range, never the corpus), so no corpus-wide sort anywhere.
+
+Column names are fixed (``lang``, ``text``, ``n_chars``, ``ts_sec``,
+``host``, ``tile_x``/``tile_y``). The paired statistics (e.g.
+:func:`ks_statistic`, :func:`kendall_tau`) take the columns they
+compare, and :func:`group_median`/:func:`cusum_days` take their group
+or timestamp column.
 """
 
 from __future__ import annotations
@@ -21,12 +27,7 @@ from pyspark.sql import functions as F
 _PPM = 1_000_000
 
 
-def corpus_info(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def corpus_info(docs: DataFrame) -> DataFrame:
     """One-row corpus dashboard: ``(n_docs, n_langs, n_tokens, n_types,
     sum_chars, avg_chars, dup_docs, dup_frac_ppm)``.
 
@@ -44,11 +45,11 @@ def corpus_info(
 
     base = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct(lang_col).alias("n_langs"),
-        F.sum(F.length(text_col)).alias("sum_chars"),
+        F.countDistinct("lang").alias("n_langs"),
+        F.sum(F.length("text")).alias("sum_chars"),
     )
     vocab = (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("term"))
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .agg(
@@ -57,7 +58,7 @@ def corpus_info(
         )
     )
     dups = (
-        docs.groupBy(F.md5(F.col(text_col)).alias("h"))
+        docs.groupBy(F.md5(F.col("text")).alias("h"))
         .agg(F.count(F.lit(1)).alias("cnt"))
         .agg(
             F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(F.lit(0)))
@@ -76,13 +77,13 @@ def corpus_info(
     )
 
 
-def corpus_info_sql(table: str = "documents", lang_col: str = "lang") -> str:
+def corpus_info_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`corpus_info`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
 WITH base AS (SELECT COUNT(*) AS n_docs,
-                     COUNT(DISTINCT {lang_col}) AS n_langs,
+                     COUNT(DISTINCT lang) AS n_langs,
                      SUM(length(text)) AS sum_chars FROM {table}),
 vocab AS (SELECT SUM(cnt) AS n_tokens, COUNT(*) AS n_types FROM
           (SELECT term, COUNT(*) AS cnt FROM
@@ -100,11 +101,7 @@ SELECT CAST(n_docs AS BIGINT) AS n_docs,
 FROM base CROSS JOIN vocab CROSS JOIN dups"""
 
 
-def group_median(
-    docs: DataFrame,
-    value_col: str = "n_chars",
-    group_col: str = "lang",
-) -> DataFrame:
+def group_median(docs: DataFrame, group_col: str = "lang") -> DataFrame:
     """Exact per-group integer median — the lower median (element at
     1-based position ``(n+1) div 2`` of the sorted values), all-int and
     deterministic (no interpolated doubles, unlike percentile_cont).
@@ -119,7 +116,7 @@ def group_median(
 
     Returns ``(group_col, n, median)``.
     """
-    freq = docs.groupBy(group_col, F.col(value_col).alias("v")).agg(
+    freq = docs.groupBy(group_col, F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
     w = (
@@ -146,15 +143,11 @@ def group_median(
     )
 
 
-def group_median_sql(
-    table: str = "documents",
-    value_col: str = "n_chars",
-    group_col: str = "lang",
-) -> str:
+def group_median_sql(table: str = "documents", group_col: str = "lang") -> str:
     """DuckDB twin of :func:`group_median` (same value-frequency
     cumulative fold)."""
     return rf"""
-WITH freq AS (SELECT {group_col}, {value_col} AS v, COUNT(*) AS cnt
+WITH freq AS (SELECT {group_col}, n_chars AS v, COUNT(*) AS cnt
               FROM {table} GROUP BY 1, 2),
 cum AS (SELECT {group_col}, v, cnt,
                SUM(cnt) OVER (PARTITION BY {group_col} ORDER BY v
@@ -170,8 +163,6 @@ GROUP BY 1"""
 
 def group_quantiles(
     docs: DataFrame,
-    value_col: str = "n_chars",
-    group_col: str = "lang",
     quantiles: "tuple[tuple[int, int], ...]" = ((1, 4), (1, 2), (3, 4)),
     labels: "tuple[str, ...]" = ("p25", "p50", "p75"),
 ) -> DataFrame:
@@ -185,23 +176,23 @@ def group_quantiles(
     ONE pass over the same value-frequency + cumulative-count table as
     the median (distinct-value-bounded, never a corpus sort); each
     quantile is a conditional MIN over that table, so adding quantiles
-    adds columns, not passes. Returns ``(group_col, n, *labels)``.
+    adds columns, not passes. Returns ``(lang, n, *labels)``.
     """
     if len(quantiles) != len(labels):
         raise ValueError("quantiles and labels must pair up")
-    freq = docs.groupBy(group_col, F.col(value_col).alias("v")).agg(
+    freq = docs.groupBy("lang", F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
     w = (
-        Window.partitionBy(group_col)
+        Window.partitionBy("lang")
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = freq.select(
-        group_col, "v",
+        "lang", "v",
         F.sum("cnt").over(w).alias("cum"),
         F.sum("cnt").over(
-            Window.partitionBy(group_col).orderBy("v").rowsBetween(
+            Window.partitionBy("lang").orderBy("v").rowsBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
         ).alias("n"),
@@ -215,13 +206,11 @@ def group_quantiles(
                 )
             ).alias(lab)
         )
-    return cum.groupBy(group_col).agg(*aggs)
+    return cum.groupBy("lang").agg(*aggs)
 
 
 def group_quantiles_sql(
     table: str = "documents",
-    value_col: str = "n_chars",
-    group_col: str = "lang",
     quantiles: "tuple[tuple[int, int], ...]" = ((1, 4), (1, 2), (3, 4)),
     labels: "tuple[str, ...]" = ("p25", "p50", "p75"),
 ) -> str:
@@ -232,14 +221,14 @@ def group_quantiles_sql(
         for (num, den), lab in zip(quantiles, labels)
     )
     return rf"""
-WITH freq AS (SELECT {group_col}, {value_col} AS v, COUNT(*) AS cnt
+WITH freq AS (SELECT lang, n_chars AS v, COUNT(*) AS cnt
               FROM {table} GROUP BY 1, 2),
-cum AS (SELECT {group_col}, v,
-               SUM(cnt) OVER (PARTITION BY {group_col} ORDER BY v
+cum AS (SELECT lang, v,
+               SUM(cnt) OVER (PARTITION BY lang ORDER BY v
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-               SUM(cnt) OVER (PARTITION BY {group_col}) AS n
+               SUM(cnt) OVER (PARTITION BY lang) AS n
         FROM freq)
-SELECT {group_col},
+SELECT lang,
        CAST(MAX(n) AS BIGINT) AS n,
        {sels}
 FROM cum GROUP BY 1"""
@@ -493,11 +482,7 @@ def data_checks_sql(table: str, rules: list) -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-def volume_anomaly(
-    pages: DataFrame,
-    window_days: int = 7,
-    ts_col: str = "ts_sec",
-) -> DataFrame:
+def volume_anomaly(pages: DataFrame, window_days: int = 7) -> DataFrame:
     """Crawl-volume anomaly detection: per UTC day, the page count and
     its z-score against the TRAILING ``window_days`` fully-observed
     days (current day excluded — the alarm must not mask itself).
@@ -518,7 +503,7 @@ def volume_anomaly(
     if window_days < 2:
         raise ValueError(f"window_days must be >= 2, got {window_days}")
     days = pages.select(
-        F.expr(f"{ts_col} div 86400").alias("day")
+        F.expr("ts_sec div 86400").alias("day")
     ).groupBy("day").agg(F.count(F.lit(1)).alias("n_pages"))
     w = (
         Window.orderBy("day")
@@ -544,14 +529,12 @@ def volume_anomaly(
     )
 
 
-def volume_anomaly_sql(
-    pages_cte: str, window_days: int = 7, ts_col: str = "ts_sec"
-) -> str:
+def volume_anomaly_sql(pages_cte: str, window_days: int = 7) -> str:
     """DuckDB twin of :func:`volume_anomaly` (``pages_cte`` exposes the
     timestamp column)."""
     return f"""
 WITH va_p AS ({pages_cte}),
-va_d AS (SELECT {ts_col} // 86400 AS day, COUNT(*) AS n_pages
+va_d AS (SELECT ts_sec // 86400 AS day, COUNT(*) AS n_pages
          FROM va_p GROUP BY 1),
 va_w AS (SELECT day, n_pages,
                 COUNT(*) OVER tw AS k,
@@ -665,10 +648,7 @@ SELECT CAST(n AS BIGINT) AS n, CAST(agree AS BIGINT) AS agree,
 FROM ck_p"""
 
 
-def host_concentration(
-    df: DataFrame,
-    key_col: str = "host",
-) -> DataFrame:
+def host_concentration(df: DataFrame) -> DataFrame:
     """Corpus concentration report over a grouping key (host, source,
     lang): one row ``(n_keys, n_rows, top_share_ppm, hhi_ppm,
     gini_ppm)``.
@@ -691,7 +671,7 @@ def host_concentration(
     combinable); the rank window and all three measures run over that
     key-bounded table (#hosts, never #rows). Nothing collects.
     """
-    counts = df.groupBy(F.col(key_col).alias("k")).agg(
+    counts = df.groupBy(F.col("host").alias("k")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
     w = Window.orderBy(F.col("cnt").asc(), F.col("k").asc())
@@ -726,11 +706,11 @@ def host_concentration(
     )
 
 
-def host_concentration_sql(inner_cte: str, key_col: str = "host") -> str:
+def host_concentration_sql(inner_cte: str) -> str:
     """DuckDB twin of :func:`host_concentration` (HUGEINT staging)."""
     return f"""
 WITH hc_src AS ({inner_cte}),
-hc_c AS (SELECT {key_col} AS k, COUNT(*) AS cnt FROM hc_src GROUP BY 1),
+hc_c AS (SELECT host AS k, COUNT(*) AS cnt FROM hc_src GROUP BY 1),
 hc_r AS (SELECT cnt,
                 ROW_NUMBER() OVER (ORDER BY cnt ASC, k ASC) AS i
          FROM hc_c),
@@ -861,11 +841,7 @@ FROM x2_t CROSS JOIN x2_d
 GROUP BY n_a, n_b"""
 
 
-def zipf_slope(
-    docs: DataFrame,
-    text_col: str = "text",
-    top_k: int = 500,
-) -> DataFrame:
+def zipf_slope(docs: DataFrame, top_k: int = 500) -> DataFrame:
     """Zipf's-law fit over the term-frequency distribution: OLS slope of
     ``ln(freq)`` on ``ln(rank)`` for the top-``top_k`` terms — one row
     ``(k, n_tokens, slope_mil, r2_mil)``. A healthy natural-language
@@ -894,7 +870,7 @@ def zipf_slope(
     from rio_cogeo_spark.functions.text import tokens_col
 
     tf = (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("term"))
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("term").asc())
@@ -1104,7 +1080,6 @@ FROM ks_d"""
 def term_shift(
     docs_a: DataFrame,
     docs_b: DataFrame,
-    text_col: str = "text",
     top_k: int = 500,
 ) -> DataFrame:
     """Term-distribution shift between two corpus slices (yesterday's
@@ -1134,7 +1109,7 @@ def term_shift(
 
     def tf(docs: DataFrame, name: str) -> DataFrame:
         return (
-            docs.select(F.explode(tokens_col(F.col(text_col))).alias("term"))
+            docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias(name))
         )
@@ -1231,12 +1206,7 @@ SELECT CAST(k AS BIGINT) AS k, CAST(na AS BIGINT) AS na,
 FROM ts_m GROUP BY k, na, nb"""
 
 
-def heaps_fit(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_points: int = 8,
-) -> DataFrame:
+def heaps_fit(docs: DataFrame, n_points: int = 8) -> DataFrame:
     """Heaps'-law fit: vocabulary growth ``V(n) ≈ K·n^β`` across a
     geometric ladder of corpus prefixes — one row ``(n_points,
     beta_mil, ln_k_mil)`` plus the per-point table folded in
@@ -1262,11 +1232,11 @@ def heaps_fit(
     """
     from rio_cogeo_spark.functions.text import tokens_col
 
-    max_df = docs.agg(F.max(F.col(id_col)).alias("mx"))
+    max_df = docs.agg(F.max(F.col("doc_id")).alias("mx"))
     term_first = (
         docs.select(
-            F.col(id_col).alias("d"),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            F.col("doc_id").alias("d"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
         .groupBy("term")
         .agg(F.min("d").alias("first_d"), F.count(F.lit(1)).alias("cnt_all"))
@@ -1275,8 +1245,8 @@ def heaps_fit(
     # which the (term) fold can't carry exactly — use a second fold over
     # (d) instead: per-doc token counts, then conditional sums per point.
     doc_tok = docs.select(
-        F.col(id_col).alias("d"),
-        F.size(tokens_col(F.col(text_col))).alias("ntok"),
+        F.col("doc_id").alias("d"),
+        F.size(tokens_col(F.col("text"))).alias("ntok"),
     )
     pts = []
     for j in range(n_points):
@@ -1349,12 +1319,7 @@ def heaps_fit(
     )
 
 
-def heaps_fit_sql(
-    table: str,
-    tokens_sql: str,
-    id_col: str = "doc_id",
-    n_points: int = 8,
-) -> str:
+def heaps_fit_sql(table: str, tokens_sql: str, n_points: int = 8) -> str:
     """DuckDB twin of :func:`heaps_fit`."""
     pts = [(j, 2 ** (n_points - 1 - j)) for j in range(n_points)]
     tok_cols = ", ".join(
@@ -1370,10 +1335,10 @@ def heaps_fit_sql(
         for j, _ in pts
     )
     return f"""
-WITH hp_mx AS (SELECT MAX({id_col}) AS mx FROM {table}),
-hp_dt AS (SELECT {id_col} AS d, len({tokens_sql}) AS ntok FROM {table}),
+WITH hp_mx AS (SELECT MAX(doc_id) AS mx FROM {table}),
+hp_dt AS (SELECT doc_id AS d, len({tokens_sql}) AS ntok FROM {table}),
 hp_tf AS (SELECT term, MIN(d) AS first_d
-          FROM (SELECT {id_col} AS d, unnest({tokens_sql}) AS term
+          FROM (SELECT doc_id AS d, unnest({tokens_sql}) AS term
                 FROM {table}) GROUP BY 1),
 hp_tok AS (SELECT {tok_cols} FROM hp_dt CROSS JOIN hp_mx),
 hp_typ AS (SELECT {typ_cols} FROM hp_tf CROSS JOIN hp_mx),
@@ -1408,11 +1373,7 @@ SELECT CAST(k AS BIGINT) AS n_points,
 FROM hp_f"""
 
 
-def lang_entropy(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def lang_entropy(docs: DataFrame) -> DataFrame:
     """Per-language token-distribution Shannon entropy — one row per
     language ``(lang, n_tokens, n_types, h_nano, h_max_nano)`` with
     ``H = −Σ p_t ln p_t`` in nano-nats. Low entropy relative to
@@ -1437,8 +1398,8 @@ def lang_entropy(
 
     tf = (
         docs.select(
-            F.col(lang_col).alias("lang"),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            F.col("lang"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1472,15 +1433,11 @@ def lang_entropy(
     )
 
 
-def lang_entropy_sql(
-    table: str,
-    tokens_sql: str,
-    lang_col: str = "lang",
-) -> str:
+def lang_entropy_sql(table: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`lang_entropy`."""
     return f"""
 WITH le_tf AS (SELECT lang, term, COUNT(*) AS cnt
-               FROM (SELECT {lang_col} AS lang,
+               FROM (SELECT lang AS lang,
                             unnest({tokens_sql}) AS term FROM {table})
                GROUP BY 1, 2),
 le_w AS (SELECT lang, cnt,
@@ -1507,10 +1464,7 @@ BENFORD_PPM = (301029, 176091, 124938, 96910, 79181,
                66946, 57991, 51152, 45757)
 
 
-def benford(
-    df: DataFrame,
-    key_col: str = "host",
-) -> DataFrame:
+def benford(df: DataFrame) -> DataFrame:
     """Benford's-law first-digit audit over a per-key count
     distribution (pages per host): the classic forensic test for
     synthetic/bot-inflated crawl segments — organic host sizes follow
@@ -1533,7 +1487,7 @@ def benford(
     spark = df.sparkSession
     # the digit fold and the key total both read this fold; pin it so
     # the corpus folds ONCE
-    counts = df.groupBy(F.col(key_col).alias("k")).agg(
+    counts = df.groupBy(F.col("host").alias("k")).agg(
         F.count(F.lit(1)).alias("cnt")
     ).localCheckpoint(eager=False)
     obs = counts.select(
@@ -1565,14 +1519,14 @@ def benford(
     )
 
 
-def benford_sql(inner_cte: str, key_col: str = "host") -> str:
+def benford_sql(inner_cte: str) -> str:
     """DuckDB twin of :func:`benford`."""
     exp_rows = ", ".join(
         f"({d + 1}, {p})" for d, p in enumerate(BENFORD_PPM)
     )
     return f"""
 WITH bf_src AS ({inner_cte}),
-bf_c AS (SELECT {key_col} AS k, COUNT(*) AS cnt FROM bf_src GROUP BY 1),
+bf_c AS (SELECT host AS k, COUNT(*) AS cnt FROM bf_src GROUP BY 1),
 bf_o AS (SELECT CAST(substr(CAST(cnt AS VARCHAR), 1, 1) AS INT) AS digit,
                 COUNT(*) AS n_obs
          FROM bf_c GROUP BY 1),
@@ -1800,11 +1754,7 @@ SELECT CAST(n AS BIGINT) AS n, CAST(su AS BIGINT) AS su,
 FROM sp_a"""
 
 
-def volume_acf(
-    pages: DataFrame,
-    max_lag: int = 7,
-    ts_col: str = "ts_sec",
-) -> DataFrame:
+def volume_acf(pages: DataFrame, max_lag: int = 7) -> DataFrame:
     """Autocorrelation of the daily crawl volume at lags ``1…max_lag``
     — the seasonality read behind :func:`volume_anomaly` (a weekly
     crawl shows a spike at lag 7; a bot flood shows none). Lags are
@@ -1830,7 +1780,7 @@ def volume_acf(
     # the (N, S) totals and the lag table both read the day fold; pin
     # it so the corpus folds ONCE
     days = pages.select(
-        F.expr(f"{ts_col} div 86400").alias("day")
+        F.expr("ts_sec div 86400").alias("day")
     ).groupBy("day").agg(F.count(F.lit(1)).alias("y")).localCheckpoint(eager=False)
     totals = days.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("_n"),
@@ -1875,9 +1825,7 @@ def volume_acf(
     ).orderBy("lag")
 
 
-def volume_acf_sql(
-    pages_cte: str, max_lag: int = 7, ts_col: str = "ts_sec"
-) -> str:
+def volume_acf_sql(pages_cte: str, max_lag: int = 7) -> str:
     """DuckDB twin of :func:`volume_acf`."""
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
@@ -1892,7 +1840,7 @@ def volume_acf_sql(
     )
     return f"""
 WITH ac_p AS ({pages_cte}),
-ac_d AS (SELECT {ts_col} // 86400 AS day, COUNT(*) AS y
+ac_d AS (SELECT ts_sec // 86400 AS day, COUNT(*) AS y
          FROM ac_p GROUP BY 1),
 ac_t AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n,
                 CAST(SUM(y) AS HUGEINT) AS s
@@ -1914,11 +1862,7 @@ SELECT CAST(lag AS INT) AS lag, CAST(n_pairs AS BIGINT) AS n_pairs,
 FROM ac_a ORDER BY lag"""
 
 
-def group_boxplot(
-    docs: DataFrame,
-    value_col: str = "n_chars",
-    group_col: str = "lang",
-) -> DataFrame:
+def group_boxplot(docs: DataFrame) -> DataFrame:
     """Per-group Tukey box-plot summary with EXACT integer fences —
     the outlier dashboard over :func:`group_quantiles`: quartiles, the
     1.5·IQR fences, and how many rows fall outside each. Returns
@@ -1938,7 +1882,7 @@ def group_boxplot(
     """
     # quantile probe and outlier count both read this fold
     freq = docs.groupBy(
-        F.col(group_col).alias("grp"), F.col(value_col).cast("long").alias("v")
+        F.col("lang").alias("grp"), F.col("n_chars").cast("long").alias("v")
     ).agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint(eager=False)
     w = (
         Window.partitionBy("grp").orderBy("v")
@@ -1967,21 +1911,17 @@ def group_boxplot(
               .otherwise(F.lit(0))).cast("long").alias("n_high"),
     )
     return qs.join(F.broadcast(out), "grp").select(
-        F.col("grp").alias(group_col), "n", "q1", "med", "q3",
+        F.col("grp").alias("lang"), "n", "q1", "med", "q3",
         F.col("lo_fence2").cast("long").alias("lo_fence2"),
         F.col("hi_fence2").cast("long").alias("hi_fence2"),
         "n_low", "n_high",
     )
 
 
-def group_boxplot_sql(
-    table: str = "documents",
-    value_col: str = "n_chars",
-    group_col: str = "lang",
-) -> str:
+def group_boxplot_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`group_boxplot`."""
     return f"""
-WITH bx_f AS (SELECT {group_col} AS grp, CAST({value_col} AS BIGINT) AS v,
+WITH bx_f AS (SELECT lang AS grp, CAST(n_chars AS BIGINT) AS v,
                      COUNT(*) AS cnt
               FROM {table} GROUP BY 1, 2),
 bx_c AS (SELECT grp, v, cnt,
@@ -2004,18 +1944,14 @@ bx_o AS (SELECT f.grp,
                 SUM(CASE WHEN 2 * f.v > q.hi_fence2 THEN f.cnt
                          ELSE 0 END) AS n_high
          FROM bx_f f JOIN bx_qf q USING (grp) GROUP BY 1)
-SELECT q.grp AS {group_col}, q.n, q.q1, q.med, q.q3,
+SELECT q.grp AS lang, q.n, q.q1, q.med, q.q3,
        CAST(q.lo_fence2 AS BIGINT) AS lo_fence2,
        CAST(q.hi_fence2 AS BIGINT) AS hi_fence2,
        CAST(o.n_low AS BIGINT) AS n_low, CAST(o.n_high AS BIGINT) AS n_high
 FROM bx_qf q JOIN bx_o o USING (grp)"""
 
 
-def kruskal_wallis(
-    docs: DataFrame,
-    value_col: str = "n_chars",
-    group_col: str = "lang",
-) -> DataFrame:
+def kruskal_wallis(docs: DataFrame) -> DataFrame:
     """Kruskal-Wallis H — the k-group extension of
     :func:`mann_whitney` ("do document lengths differ across
     languages?"). ONE row ``(k, n, t_ties, h_mil, hc_mil)``:
@@ -2038,8 +1974,8 @@ def kruskal_wallis(
     both tables are frequency-bounded), then two tiny folds.
     """
     gv = docs.groupBy(
-        F.col(group_col).alias("grp"),
-        F.col(value_col).cast("long").alias("v"),
+        F.col("lang").alias("grp"),
+        F.col("n_chars").cast("long").alias("v"),
     ).agg(F.count(F.lit(1)).alias("f"))
     gv = gv.localCheckpoint(eager=False)  # value fold + group fold read it
     vf = gv.groupBy("v").agg(F.sum("f").alias("fv"))
@@ -2106,15 +2042,11 @@ def kruskal_wallis(
     )
 
 
-def kruskal_wallis_sql(
-    table: str = "documents",
-    value_col: str = "n_chars",
-    group_col: str = "lang",
-) -> str:
+def kruskal_wallis_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`kruskal_wallis` — the identical pinned
     double expression tree."""
     return f"""
-WITH kw_gv AS (SELECT {group_col} AS grp, CAST({value_col} AS BIGINT) AS v,
+WITH kw_gv AS (SELECT lang AS grp, CAST(n_chars AS BIGINT) AS v,
                       COUNT(*) AS f
                FROM {table} GROUP BY 1, 2),
 kw_vf AS (SELECT v, SUM(f) AS fv FROM kw_gv GROUP BY v),
@@ -2381,10 +2313,7 @@ SELECT n, conc, disc, tie_x2, tie_y2, tie_xy2,
 FROM kt_f"""
 
 
-def theil_sen_days(
-    pages: DataFrame,
-    ts_col: str = "ts_sec",
-) -> DataFrame:
+def theil_sen_days(pages: DataFrame) -> DataFrame:
     """Theil-Sen robust trend of the daily crawl volume — the median
     of all pairwise day-slopes (breakdown point 29%: immune to the
     surge days that drag an OLS fit; the robust companion of
@@ -2408,7 +2337,7 @@ def theil_sen_days(
     Python, nothing touches corpus rows twice.
     """
     days = (
-        pages.select(F.expr(f"{ts_col} div 86400").alias("d"))
+        pages.select(F.expr("ts_sec div 86400").alias("d"))
         .groupBy("d").agg(F.count(F.lit(1)).alias("y"))
         .localCheckpoint(eager=True)
     )
@@ -2451,14 +2380,12 @@ def theil_sen_days(
     )
 
 
-def theil_sen_days_sql(
-    pages_cte: str, ts_col: str = "ts_sec", table: str = "pages",
-) -> str:
+def theil_sen_days_sql(pages_cte: str, table: str = "pages") -> str:
     """DuckDB twin of :func:`theil_sen_days` — ``pages_cte`` exposes
     ``{table}`` (WITH included). DuckDB's ``//`` on integers truncates
     like Spark's ``div``, so the same adjust-CASE applies."""
     return f"""{pages_cte}
-, ts_d AS (SELECT {ts_col} // 86400 AS d, COUNT(*) AS y
+, ts_d AS (SELECT ts_sec // 86400 AS d, COUNT(*) AS y
            FROM {table} GROUP BY 1)
 , ts_p AS (SELECT CAST((b.y - a.y) AS HUGEINT) * 10000000000 AS num,
                   CAST(b.d - a.d AS HUGEINT) AS den
@@ -2487,10 +2414,7 @@ SELECT CAST(n_days AS BIGINT) AS n_days,
 FROM ts_m, ts_n"""
 
 
-def mann_kendall_days(
-    pages: DataFrame,
-    ts_col: str = "ts_sec",
-) -> DataFrame:
+def mann_kendall_days(pages: DataFrame) -> DataFrame:
     """Mann-Kendall trend SIGNIFICANCE test on daily crawl volume —
     the hypothesis-test companion of :func:`theil_sen_days` (which
     estimates the slope; this one asks whether a monotone trend exists
@@ -2517,7 +2441,7 @@ def mann_kendall_days(
     no per-row Python, nothing O(corpus²).
     """
     days = (
-        pages.select(F.expr(f"{ts_col} div 86400").alias("d"))
+        pages.select(F.expr("ts_sec div 86400").alias("d"))
         .groupBy("d").agg(F.count(F.lit(1)).alias("y"))
         .localCheckpoint(eager=True)
     )
@@ -2570,14 +2494,12 @@ def mann_kendall_days(
     )
 
 
-def mann_kendall_days_sql(
-    pages_cte: str, ts_col: str = "ts_sec", table: str = "pages",
-) -> str:
+def mann_kendall_days_sql(pages_cte: str, table: str = "pages") -> str:
     """DuckDB twin of :func:`mann_kendall_days` — ``pages_cte`` exposes
     ``{table}`` (WITH included). HUGEINT staging; the z expression is
     the byte-identical pinned double."""
     return f"""{pages_cte}
-, mk_d AS (SELECT {ts_col} // 86400 AS d, COUNT(*) AS y
+, mk_d AS (SELECT ts_sec // 86400 AS d, COUNT(*) AS y
            FROM {table} GROUP BY 1)
 , mk_s AS (SELECT CAST(COALESCE(SUM(CASE WHEN b.y > a.y THEN 1
                                          WHEN b.y < a.y THEN -1
@@ -2604,12 +2526,7 @@ SELECT n_days, s_stat, tie_term, var18,
 FROM mk_v"""
 
 
-def term_burstiness(
-    docs: DataFrame,
-    text_col: str = "text",
-    bucket_col: str = "t_bucket",
-    top_k: int = 50,
-) -> DataFrame:
+def term_burstiness(docs: DataFrame, top_k: int = 50) -> DataFrame:
     """Temporal burstiness of the ``top_k`` corpus terms — the
     variance-to-mean ratio (index of dispersion) of each term's count
     series over the FULL observed bucket calendar (absent buckets are
@@ -2635,15 +2552,15 @@ def term_burstiness(
 
     tb = (
         docs.select(
-            F.col(bucket_col).cast("long").alias("b"),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            F.col("t_bucket").cast("long").alias("b"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
         .groupBy("term", "b")
         .agg(F.count(F.lit(1)).alias("x"))
     )
     cal = docs.agg(
-        (F.max(F.col(bucket_col).cast("long"))
-         - F.min(F.col(bucket_col).cast("long")) + F.lit(1)).alias("d_span")
+        (F.max(F.col("t_bucket").cast("long"))
+         - F.min(F.col("t_bucket").cast("long")) + F.lit(1)).alias("d_span")
     )
     d = "decimal(38,0)"
     per = tb.groupBy("term").agg(
@@ -2669,18 +2586,17 @@ def term_burstiness(
 def term_burstiness_sql(
     docs_select: str,
     tokens_sql: str,
-    bucket_col: str = "t_bucket",
     top_k: int = 50,
 ) -> str:
     """DuckDB twin of :func:`term_burstiness` — ``docs_select`` exposes
-    ``(text, {bucket_col})``; identical fold shapes, int-div ``//``."""
+    ``(text, t_bucket)``; identical fold shapes, int-div ``//``."""
     return f"""WITH tb_docs AS ({docs_select}),
 tb_tb AS (SELECT term, b, COUNT(*) AS x
-          FROM (SELECT CAST({bucket_col} AS BIGINT) AS b,
+          FROM (SELECT CAST(t_bucket AS BIGINT) AS b,
                        unnest({tokens_sql}) AS term FROM tb_docs)
           GROUP BY 1, 2),
-tb_cal AS (SELECT MAX(CAST({bucket_col} AS BIGINT))
-                  - MIN(CAST({bucket_col} AS BIGINT)) + 1 AS d_span
+tb_cal AS (SELECT MAX(CAST(t_bucket AS BIGINT))
+                  - MIN(CAST(t_bucket AS BIGINT)) + 1 AS d_span
            FROM tb_docs),
 tb_per AS (SELECT term, CAST(SUM(x) AS HUGEINT) AS s,
                   SUM(CAST(x AS HUGEINT) * x) AS q,
@@ -2697,11 +2613,7 @@ SELECT term,
 FROM tb_rk WHERE _rk <= {int(top_k)}"""
 
 
-def lang_vocab_overlap(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def lang_vocab_overlap(docs: DataFrame) -> DataFrame:
     """Cross-language vocabulary overlap — exact Jaccard between every
     unordered language pair's token vocabularies, the cross-lingual
     contamination / loanword gauge: one row per pair ``(lang_a,
@@ -2720,8 +2632,8 @@ def lang_vocab_overlap(
     from rio_cogeo_spark.functions.text import tokens_col
 
     vocab = docs.select(
-        F.col(lang_col).alias("lang"),
-        F.explode(tokens_col(F.col(text_col))).alias("term"),
+        F.col("lang"),
+        F.explode(tokens_col(F.col("text"))).alias("term"),
     ).distinct()
     langs = vocab.select("lang").distinct().withColumn(
         "lid",
@@ -2770,16 +2682,12 @@ def lang_vocab_overlap(
     )
 
 
-def lang_vocab_overlap_sql(
-    docs_select: str,
-    tokens_sql: str,
-    lang_col: str = "lang",
-) -> str:
+def lang_vocab_overlap_sql(docs_select: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`lang_vocab_overlap` — identical bitmask
     folds (int-div ``//``)."""
     return f"""WITH lv_docs AS ({docs_select}),
 lv_vocab AS (SELECT DISTINCT lang, term
-             FROM (SELECT {lang_col} AS lang,
+             FROM (SELECT lang AS lang,
                           unnest({tokens_sql}) AS term FROM lv_docs)),
 lv_langs AS (SELECT lang,
                     DENSE_RANK() OVER (ORDER BY lang ASC) - 1 AS lid
@@ -2831,13 +2739,7 @@ def _term_geo_final(intdiv: str) -> list[str]:
     ]
 
 
-def term_localization(
-    pages: DataFrame,
-    text_col: str = "text",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    top_k: int = 50,
-) -> DataFrame:
+def term_localization(pages: DataFrame, top_k: int = 50) -> DataFrame:
     """Geographic localization of the ``top_k`` corpus terms — per-term
     centrography over the cells of the pages that mention it (each
     mention one unit-weight point): one row per term ``(term,
@@ -2861,9 +2763,9 @@ def term_localization(
     y = F.col("y")
     per = (
         pages.select(
-            F.col(x_col).cast("long").alias("x"),
-            F.col(y_col).cast("long").alias("y"),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            F.col("tile_x").cast("long").alias("x"),
+            F.col("tile_y").cast("long").alias("y"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
         .groupBy("term")
         .agg(
@@ -2910,12 +2812,7 @@ SELECT {final}
 FROM tg_rk WHERE _rk <= {int(top_k)}"""
 
 
-def cell_diversity(
-    pages: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    lang_col: str = "lang",
-) -> DataFrame:
+def cell_diversity(pages: DataFrame) -> DataFrame:
     """Spatial language-diversity map — per grid cell, the Shannon
     entropy of its page-language distribution in per-term-pinned
     nano-nats (the cell-keyed sibling of :func:`lang_entropy`, the
@@ -2935,9 +2832,9 @@ def cell_diversity(
     """
     cl = (
         pages.select(
-            F.col(x_col).cast("long").alias("tile_x"),
-            F.col(y_col).cast("long").alias("tile_y"),
-            F.col(lang_col).alias("lang"),
+            F.col("tile_x").cast("long").alias("tile_x"),
+            F.col("tile_y").cast("long").alias("tile_y"),
+            F.col("lang"),
         )
         .groupBy("tile_x", "tile_y", "lang")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2970,11 +2867,11 @@ def cell_diversity(
     )
 
 
-def cell_diversity_sql(pages_select: str, lang_col: str = "lang") -> str:
+def cell_diversity_sql(pages_select: str) -> str:
     """DuckDB twin of :func:`cell_diversity` — ``pages_select`` exposes
-    ``(tile_x, tile_y, {lang_col})``."""
+    ``(tile_x, tile_y, lang)``."""
     return f"""WITH cd_p AS ({pages_select}),
-cd_cl AS (SELECT tile_x, tile_y, {lang_col} AS lang, COUNT(*) AS cnt
+cd_cl AS (SELECT tile_x, tile_y, lang AS lang, COUNT(*) AS cnt
           FROM cd_p GROUP BY 1, 2, 3),
 cd_w AS (SELECT tile_x, tile_y, cnt,
                 SUM(cnt) OVER (PARTITION BY tile_x, tile_y) AS n_pages,
@@ -2994,11 +2891,7 @@ SELECT tile_x, tile_y,
 FROM cd_c GROUP BY tile_x, tile_y, n_pages, n_langs"""
 
 
-def hapax_ratio(
-    docs: DataFrame,
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> DataFrame:
+def hapax_ratio(docs: DataFrame) -> DataFrame:
     """Hapax-legomena profile per language — the fraction of the
     vocabulary appearing EXACTLY once (the classic productivity /
     OCR-noise gauge next to heaps/zipf; a high ratio flags noisy or
@@ -3014,8 +2907,8 @@ def hapax_ratio(
 
     tf = (
         docs.select(
-            F.col(lang_col).alias("lang"),
-            F.explode(tokens_col(F.col(text_col))).alias("term"),
+            F.col("lang"),
+            F.explode(tokens_col(F.col("text"))).alias("term"),
         )
         .groupBy("lang", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -3038,12 +2931,10 @@ def hapax_ratio(
     )
 
 
-def hapax_ratio_sql(
-    table: str, tokens_sql: str, lang_col: str = "lang"
-) -> str:
+def hapax_ratio_sql(table: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`hapax_ratio` (int-div ``//``)."""
     return f"""WITH hx_tf AS (SELECT lang, term, COUNT(*) AS cnt
-               FROM (SELECT {lang_col} AS lang,
+               FROM (SELECT lang AS lang,
                             unnest({tokens_sql}) AS term FROM {table})
                GROUP BY 1, 2),
 hx_p AS (SELECT lang, SUM(cnt) AS n_tokens, COUNT(*) AS n_types,
@@ -3230,12 +3121,7 @@ def _dissim_final(intdiv: str) -> list[str]:
     ]
 
 
-def dissimilarity_index(
-    pts: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def dissimilarity_index(pts: DataFrame) -> DataFrame:
     """Duncan & Duncan index of dissimilarity between every unordered
     label pair over the cell grid — the classic evenness/segregation
     measure (D = ½·Σ_i |aᵢ/A − bᵢ/B|; 0 = identical spatial
@@ -3255,9 +3141,9 @@ def dissimilarity_index(
     """
     cl = (
         pts.groupBy(
-            F.col(x_col).alias("cx"),
-            F.col(y_col).alias("cy"),
-            F.col(label_col).alias("_l"),
+            F.col("tile_x").alias("cx"),
+            F.col("tile_y").alias("cy"),
+            F.col("lang").alias("_l"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
@@ -3310,15 +3196,13 @@ def dissimilarity_index(
     return agg.selectExpr(*_dissim_final("div"))
 
 
-def dissimilarity_index_sql(
-    pts_cte: str, label_col: str = "lang"
-) -> str:
+def dissimilarity_index_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`dissimilarity_index` — ``pts_cte`` exposes
-    ``tile_x, tile_y, {label_col}``; identical pair expansion and exact
+    ``tile_x, tile_y, lang``; identical pair expansion and exact
     arithmetic (int-div ``//``)."""
     final = ",\n       ".join(_dissim_final("//"))
     return f"""WITH di_p AS ({pts_cte}),
-di_c AS (SELECT tile_x AS cx, tile_y AS cy, {label_col} AS l,
+di_c AS (SELECT tile_x AS cx, tile_y AS cy, lang AS l,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM di_p GROUP BY 1, 2, 3),
 di_t AS (SELECT l, SUM(cnt) AS total FROM di_c GROUP BY 1),
@@ -3344,12 +3228,7 @@ SELECT {final}
 FROM di_g"""
 
 
-def location_quotient(
-    pts: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def location_quotient(pts: DataFrame) -> DataFrame:
     """Location quotient per (cell, label) — the classic regional-
     concentration measure ``LQ = (aᵢ/tᵢ) / (A/T)`` (cell share of the
     label over the label's global share): one row per occupied
@@ -3365,11 +3244,9 @@ def location_quotient(
     back.  No sort-merge join, no Python.
     """
     d = "decimal(38,0)"
-    cl = pts.groupBy(
-        F.col(x_col).alias("tile_x"),
-        F.col(y_col).alias("tile_y"),
-        F.col(label_col).alias("lang"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    cl = pts.groupBy("tile_x", "tile_y", "lang").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt")
+    )
     w = Window.partitionBy("tile_x", "tile_y")
     cl = cl.withColumn("cell_total", F.sum("cnt").over(w))
     lt = cl.groupBy("lang").agg(F.sum("cnt").alias("lang_total"))
@@ -3391,10 +3268,10 @@ def location_quotient(
     )
 
 
-def location_quotient_sql(pts_cte: str, label_col: str = "lang") -> str:
+def location_quotient_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`location_quotient` (int-div ``//``)."""
     return f"""WITH lq_p AS ({pts_cte}),
-lq_c AS (SELECT tile_x, tile_y, {label_col} AS lang,
+lq_c AS (SELECT tile_x, tile_y, lang AS lang,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM lq_p GROUP BY 1, 2, 3),
 lq_w AS (SELECT *, SUM(cnt) OVER (PARTITION BY tile_x, tile_y)
@@ -3414,12 +3291,7 @@ SELECT CAST(w.tile_x AS BIGINT) AS tile_x,
 FROM lq_w w JOIN lq_l l ON l.lang = w.lang, lq_t t"""
 
 
-def exposure_index(
-    pts: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def exposure_index(pts: DataFrame) -> DataFrame:
     """Bell/Shevky exposure (P*) matrix between every ORDERED label
     pair over the cell grid — ``ₐP*_b = Σᵢ (aᵢ/A)·(bᵢ/tᵢ)``, the
     probability that a random member of ``a`` shares its cell with a
@@ -3439,9 +3311,9 @@ def exposure_index(
     """
     d = "decimal(38,0)"
     cl = pts.groupBy(
-        F.col(x_col).alias("cx"),
-        F.col(y_col).alias("cy"),
-        F.col(label_col).alias("_l"),
+        F.col("tile_x").alias("cx"),
+        F.col("tile_y").alias("cy"),
+        F.col("lang").alias("_l"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     cells = cl.groupBy("cx", "cy").agg(
         F.collect_list(F.struct("_l", "cnt")).alias("ls"),
@@ -3486,12 +3358,12 @@ def exposure_index(
     )
 
 
-def exposure_index_sql(pts_cte: str, label_col: str = "lang") -> str:
+def exposure_index_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`exposure_index` — the pair expansion is a
     within-cell self-join (same values as the explode; int-div
     ``//``)."""
     return f"""WITH ex_p AS ({pts_cte}),
-ex_c AS (SELECT tile_x AS cx, tile_y AS cy, {label_col} AS l,
+ex_c AS (SELECT tile_x AS cx, tile_y AS cy, lang AS l,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM ex_p GROUP BY 1, 2, 3),
 ex_t AS (SELECT cx, cy, SUM(cnt) AS t FROM ex_c GROUP BY 1, 2),
@@ -3520,8 +3392,6 @@ def host_spread(
     min_pages: int = 2,
     top_k: int = 50,
     host_col_name: str = "host",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Geographic footprint per host — which sites publish from (or
     about) everywhere vs one place: per host with ≥ ``min_pages``
@@ -3547,8 +3417,8 @@ def host_spread(
     d = "decimal(38,0)"
     hc = pts.groupBy(
         F.col(host_col_name).alias("host"),
-        F.col(x_col).cast("long").alias("cx"),
-        F.col(y_col).cast("long").alias("cy"),
+        F.col("tile_x").cast("long").alias("cx"),
+        F.col("tile_y").cast("long").alias("cy"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     per_host = hc.groupBy("host").agg(
         F.sum("cnt").cast("long").alias("n_pages"),
@@ -3611,12 +3481,7 @@ ORDER BY n_cells DESC, n_pages DESC, host ASC
 LIMIT {int(top_k)}"""
 
 
-def morisita_horn(
-    pts: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def morisita_horn(pts: DataFrame) -> DataFrame:
     """Morisita–Horn overlap between every unordered label pair's
     spatial distribution — ``MH = 2·Σaᵢbᵢ / ((Σaᵢ²/A² + Σbᵢ²/B²)·A·B)``
     (1 = identical cell mix, 0 = disjoint; the abundance-weighted
@@ -3639,9 +3504,9 @@ def morisita_horn(
     """
     d = "decimal(38,0)"
     cl = pts.groupBy(
-        F.col(x_col).alias("cx"),
-        F.col(y_col).alias("cy"),
-        F.col(label_col).alias("_l"),
+        F.col("tile_x").alias("cx"),
+        F.col("tile_y").alias("cy"),
+        F.col("lang").alias("_l"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     moments = cl.groupBy("_l").agg(
         F.sum("cnt").cast(d).alias("total"),
@@ -3691,7 +3556,7 @@ def morisita_horn(
     )
 
 
-def morisita_horn_sql(pts_cte: str, label_col: str = "lang") -> str:
+def morisita_horn_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`morisita_horn` — within-cell self-join for
     the cross products, identical pinned-double final tree."""
     num = ("(CAST(2 AS DOUBLE) * CAST(sab AS DOUBLE)"
@@ -3700,7 +3565,7 @@ def morisita_horn_sql(pts_cte: str, label_col: str = "lang") -> str:
            " + CAST(sbb AS DOUBLE) * CAST(ta AS DOUBLE)"
            " * CAST(ta AS DOUBLE))")
     return f"""WITH mh_p AS ({pts_cte}),
-mh_c AS (SELECT tile_x AS cx, tile_y AS cy, {label_col} AS l,
+mh_c AS (SELECT tile_x AS cx, tile_y AS cy, lang AS l,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM mh_p GROUP BY 1, 2, 3),
 mh_m AS (SELECT l, CAST(SUM(cnt) AS HUGEINT) AS total,
@@ -3722,12 +3587,7 @@ JOIN mh_m ma ON ma.l = s.lang_a
 JOIN mh_m mb ON mb.l = s.lang_b"""
 
 
-def lang_range(
-    pts: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def lang_range(pts: DataFrame) -> DataFrame:
     """Geographic range profile per label — the species-range analog
     for languages on the web: per label, exact page count, occupied-
     cell count, bounding box, and box occupancy ``occ_mil = n_cells ·
@@ -3739,9 +3599,9 @@ def lang_range(
     ``(label, cell)`` → label); no window, no join, no Python.
     """
     cl = pts.groupBy(
-        F.col(label_col).alias("lang"),
-        F.col(x_col).cast("long").alias("cx"),
-        F.col(y_col).cast("long").alias("cy"),
+        F.col("lang"),
+        F.col("tile_x").cast("long").alias("cx"),
+        F.col("tile_y").cast("long").alias("cy"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     return (
         cl.groupBy("lang")
@@ -3763,10 +3623,10 @@ def lang_range(
     )
 
 
-def lang_range_sql(pts_cte: str, label_col: str = "lang") -> str:
+def lang_range_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`lang_range` (int-div ``//``)."""
     return f"""WITH lr_p AS ({pts_cte}),
-lr_c AS (SELECT {label_col} AS lang, tile_x AS cx, tile_y AS cy,
+lr_c AS (SELECT lang AS lang, tile_x AS cx, tile_y AS cy,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM lr_p GROUP BY 1, 2, 3),
 lr_g AS (SELECT lang,
@@ -3783,13 +3643,7 @@ SELECT lang, n_pages, n_cells,
 FROM lr_g"""
 
 
-def cell_novelty(
-    pts: DataFrame,
-    ts_col: str = "ts_sec",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    day_sec: int = 86_400,
-) -> DataFrame:
+def cell_novelty(pts: DataFrame, day_sec: int = 86_400) -> DataFrame:
     """Geographic crawl novelty per UTC day — how fast the crawl's
     spatial frontier expands: per day, the number of cells FIRST
     occupied that day (``new_cells``) plus the cumulative distinct-cell
@@ -3802,9 +3656,9 @@ def cell_novelty(
     days-bounded table.  No join, no Python.
     """
     cell_first = pts.groupBy(
-        F.col(x_col).alias("cx"), F.col(y_col).alias("cy")
+        F.col("tile_x").alias("cx"), F.col("tile_y").alias("cy")
     ).agg(
-        F.floor(F.min(F.col(ts_col).cast("long")) / F.lit(int(day_sec)))
+        F.floor(F.min(F.col("ts_sec").cast("long")) / F.lit(int(day_sec)))
         .cast("long").alias("day")
     )
     daily = cell_first.groupBy("day").agg(
@@ -3821,13 +3675,11 @@ def cell_novelty(
     )
 
 
-def cell_novelty_sql(
-    pts_cte: str, ts_col: str = "ts_sec", day_sec: int = 86_400
-) -> str:
+def cell_novelty_sql(pts_cte: str, day_sec: int = 86_400) -> str:
     """DuckDB twin of :func:`cell_novelty` (int-div ``//``)."""
     return f"""WITH cn_p AS ({pts_cte}),
 cn_c AS (SELECT tile_x AS cx, tile_y AS cy,
-                CAST(MIN({ts_col}) AS BIGINT) // {int(day_sec)} AS day
+                CAST(MIN(ts_sec) AS BIGINT) // {int(day_sec)} AS day
          FROM cn_p GROUP BY 1, 2),
 cn_d AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS new_cells
          FROM cn_c GROUP BY 1)
@@ -3839,12 +3691,7 @@ SELECT CAST(day AS BIGINT) AS day,
 FROM cn_d"""
 
 
-def theil_h(
-    pts: DataFrame,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-    label_col: str = "lang",
-) -> DataFrame:
+def theil_h(pts: DataFrame) -> DataFrame:
     """Theil's multigroup entropy segregation index H over the cell
     grid — ``H = Σᵢ tᵢ·(E − Eᵢ) / (T·E)`` (0 = every cell mirrors the
     global language mix, 1 = complete segregation); the MULTIGROUP
@@ -3868,9 +3715,9 @@ def theil_h(
     """
     d = "decimal(38,0)"
     cl = pts.groupBy(
-        F.col(x_col).alias("cx"),
-        F.col(y_col).alias("cy"),
-        F.col(label_col).alias("_l"),
+        F.col("tile_x").alias("cx"),
+        F.col("tile_y").alias("cy"),
+        F.col("lang").alias("_l"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     w = Window.partitionBy("cx", "cy")
     contrib = (
@@ -3931,11 +3778,11 @@ def theil_h(
     )
 
 
-def theil_h_sql(pts_cte: str, label_col: str = "lang") -> str:
+def theil_h_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`theil_h` (int-div ``//``; identical pinned
     entropy terms and sign split)."""
     return f"""WITH th_p AS ({pts_cte}),
-th_c AS (SELECT tile_x AS cx, tile_y AS cy, {label_col} AS l,
+th_c AS (SELECT tile_x AS cx, tile_y AS cy, lang AS l,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM th_p GROUP BY 1, 2, 3),
 th_w AS (SELECT *, SUM(cnt) OVER (PARTITION BY cx, cy) AS t FROM th_c),
@@ -3972,13 +3819,7 @@ SELECT CAST(n_cells AS BIGINT) AS n_cells,
 FROM th_a"""
 
 
-def syndication(
-    pts: DataFrame,
-    top_k: int = 50,
-    fp_col: str = "fp",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
-) -> DataFrame:
+def syndication(pts: DataFrame, top_k: int = 50) -> DataFrame:
     """Spatially replicated content — syndication/mirror geography:
     per content fingerprint occupying ≥ 2 distinct cells, the exact
     page/cell counts, the bounding box of its cells, and the Chebyshev
@@ -3993,9 +3834,9 @@ def syndication(
     TakeOrdered.  No join, no explode, no Python.
     """
     fc = pts.groupBy(
-        F.col(fp_col).alias("fp"),
-        F.col(x_col).cast("long").alias("cx"),
-        F.col(y_col).cast("long").alias("cy"),
+        F.col("fp"),
+        F.col("tile_x").cast("long").alias("cx"),
+        F.col("tile_y").cast("long").alias("cy"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     grp = (
         fc.groupBy("fp")
@@ -4049,9 +3890,6 @@ def city_langs(
     cities: DataFrame,
     box_deg: float = 0.6,
     top_k: int = 3,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    label_col: str = "lang",
 ) -> DataFrame:
     """Language profile per megacity — per city, the top ``top_k``
     languages inside its ±``box_deg``° box with exact share
@@ -4067,13 +3905,13 @@ def city_langs(
     """
     tagged = pts.join(
         F.broadcast(cities),
-        (F.col(lat_col) >= F.col("c_lat") - float(box_deg))
-        & (F.col(lat_col) <= F.col("c_lat") + float(box_deg))
-        & (F.col(lon_col) >= F.col("c_lon") - float(box_deg))
-        & (F.col(lon_col) <= F.col("c_lon") + float(box_deg)),
+        (F.col("lat") >= F.col("c_lat") - float(box_deg))
+        & (F.col("lat") <= F.col("c_lat") + float(box_deg))
+        & (F.col("lon") >= F.col("c_lon") - float(box_deg))
+        & (F.col("lon") <= F.col("c_lon") + float(box_deg)),
     )
     cl = tagged.groupBy(
-        "city", F.col(label_col).alias("lang")
+        "city", F.col("lang")
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     wt = Window.partitionBy("city")
     wr = Window.partitionBy("city").orderBy(
@@ -4099,12 +3937,11 @@ def city_langs_sql(
     cities_sql: str,
     box_deg: float = 0.6,
     top_k: int = 3,
-    label_col: str = "lang",
 ) -> str:
     """DuckDB twin of :func:`city_langs` (int-div ``//``)."""
     return f"""WITH cl_p AS ({pts_cte}),
 cl_c AS ({cities_sql}),
-cl_t AS (SELECT c.city, p.{label_col} AS lang,
+cl_t AS (SELECT c.city, p.lang AS lang,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM cl_p p JOIN cl_c c
            ON p.lat BETWEEN c.c_lat - CAST({box_deg} AS DOUBLE)
@@ -4126,10 +3963,7 @@ SELECT city,
 FROM cl_w WHERE rank <= {int(top_k)}"""
 
 
-def zoom_entropy(
-    tiles: DataFrame,
-    value_col: str = "page_count",
-) -> DataFrame:
+def zoom_entropy(tiles: DataFrame) -> DataFrame:
     """Batty's spatial entropy profile across the pyramid — per zoom
     level, the Shannon entropy of the page-count distribution over its
     occupied cells in per-term-pinned nano-nats (the
@@ -4147,7 +3981,7 @@ def zoom_entropy(
     return (
         tiles.select(
             F.col("zoom"),
-            F.col(value_col).cast("long").alias("cnt"),
+            F.col("page_count").cast("long").alias("cnt"),
         )
         .withColumn("total", F.sum("cnt").over(w))
         .withColumn("n_cells", F.count(F.lit(1)).over(w))
@@ -4198,8 +4032,6 @@ FROM ze_c GROUP BY zoom, n_cells, total"""
 def urban_gradient(
     pts: DataFrame,
     city_cells: "list[tuple[str, int, int]]",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Core–periphery density gradient — page counts by Chebyshev
     cell distance to the NEAREST urban center (the urban-gradient
@@ -4227,8 +4059,8 @@ def urban_gradient(
         "city string, cx long, cy long",
     )
     cells = pts.groupBy(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     near = (
         cells.crossJoin(F.broadcast(cities))
@@ -4286,8 +4118,6 @@ FROM ug_n, ug_t t GROUP BY d, t.tot"""
 def city_catchment(
     pts: DataFrame,
     city_cells: "list[tuple[str, int, int]]",
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
 ) -> DataFrame:
     """Voronoi-style catchments on the Chebyshev cell metric — per
     urban center, the exact page/cell counts of the region for which
@@ -4308,8 +4138,8 @@ def city_catchment(
         "idx int, city string, cx long, cy long",
     )
     cells = pts.groupBy(
-        F.col(x_col).cast("long").alias("tile_x"),
-        F.col(y_col).cast("long").alias("tile_y"),
+        F.col("tile_x").cast("long").alias("tile_x"),
+        F.col("tile_y").cast("long").alias("tile_y"),
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     assigned = (
         cells.crossJoin(F.broadcast(cities))
@@ -4320,8 +4150,8 @@ def city_catchment(
                     F.abs(F.col("tile_x") - F.col("cx")),
                     F.abs(F.col("tile_y") - F.col("cy")),
                 ).alias("d"),
-                F.col("idx").alias("idx"),
-                F.col("city").alias("city"),
+                F.col("idx"),
+                F.col("city"),
             ).alias("s"),
         )
         .groupBy("tile_x", "tile_y", "n")

@@ -11,6 +11,10 @@ or a backfill produces byte-identical samples.
 The hash is the md5-prefix construction shared with
 ``rolling_fingerprint`` (functions/text.py): identical in Spark and
 DuckDB, so every op here has an exact SQL twin.
+
+Column names are fixed (``doc_id``, ``lang``, ``text``, ``split``),
+except the key, group and score columns that :func:`split_assign`,
+:func:`cap_per_group` and :func:`curriculum_interleave` take.
 """
 
 from __future__ import annotations
@@ -43,19 +47,17 @@ def uniform_hash_sql(key: str) -> str:
 def sample_stratified(
     docs: DataFrame,
     rates: Dict[str, float],
-    strata_col: str = "lang",
-    key_col: str = "doc_id",
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Per-stratum deterministic sampling: keep a row iff its uniform
     hash < the stratum's rate — the training-mix primitive ("3x en,
     0.5x the tail"). Rows in strata absent from ``rates`` keep with
     ``default_rate``. Pure projection + filter: scales linearly, prunes
-    at the scan when ``strata_col`` is a partition column."""
-    u = uniform_hash(F.col(key_col))
+    at the scan when ``lang`` is a partition column."""
+    u = uniform_hash(F.col("doc_id"))
     rate = F.lit(float(default_rate))
     for stratum, r in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == stratum, F.lit(float(r))).otherwise(
+        rate = F.when(F.col("lang") == stratum, F.lit(float(r))).otherwise(
             rate
         )
     return docs.filter(u < rate)
@@ -65,7 +67,6 @@ def split_assign(
     docs: DataFrame,
     weights: Optional[List[Tuple[str, float]]] = None,
     key_col: str = "doc_id",
-    out_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment: cumulative-weight bins
     over the uniform hash. Weights need not sum to 1 (normalized).
@@ -81,14 +82,12 @@ def split_assign(
         conds.append((name, acc))
     for name, bound in reversed(conds):
         expr = F.when(u < F.lit(bound), F.lit(name)).otherwise(expr)
-    return docs.withColumn(out_col, expr)
+    return docs.withColumn("split", expr)
 
 
 def temperature_mix(
     docs: DataFrame,
     target_ppm: int = 250_000,
-    domain_col: str = "lang",
-    key_col: str = "doc_id",
     alpha: float = 0.5,
     weight_scale: int = 1000,
     broadcast_rates: bool = True,
@@ -121,7 +120,7 @@ def temperature_mix(
     slightly toward the head, as in the published recipe.
 
     NULL-domain rows are EXCLUDED from the output: the rate join is an
-    inner join on ``domain_col`` and SQL equality never matches NULL, so
+    inner join on ``lang`` and SQL equality never matches NULL, so
     a row without a domain has no sampling rate (the DuckDB twin
     behaves identically). Coalesce NULL domains into a sentinel bucket
     upstream if they should participate in the mix.
@@ -132,7 +131,7 @@ def temperature_mix(
     power = (
         F.sqrt(c) if alpha == 0.5 else F.pow(c, F.lit(float(alpha)))
     )
-    counts = docs.groupBy(domain_col).agg(F.count("*").alias("c"))
+    counts = docs.groupBy("lang").agg(F.count("*").alias("c"))
     weighted = counts.withColumn(
         "w", F.floor(power * weight_scale).cast("long")
     )
@@ -149,14 +148,14 @@ def temperature_mix(
             ),
         ),
     )
-    h = md5_60(F.col(key_col).cast("string"))
-    rates = rates.select(domain_col, "rate_ppm")
+    h = md5_60(F.col("doc_id").cast("string"))
+    rates = rates.select("lang", "rate_ppm")
     # broadcast_rates=False: for very-high-cardinality domains (e.g.
     # 10^8 URL hosts) the rate table exceeds broadcast size — shuffle
     # join on the domain key instead (identical result)
     rates = F.broadcast(rates) if broadcast_rates else rates
     return (
-        docs.join(rates, domain_col)
+        docs.join(rates, "lang")
         .filter((h % _U_MOD) < F.col("rate_ppm"))
         .drop("rate_ppm")
     )
@@ -165,27 +164,25 @@ def temperature_mix(
 def temperature_mix_sql(
     table: str = "documents",
     target_ppm: int = 250_000,
-    domain_col: str = "lang",
-    key_col: str = "doc_id",
     select: str = "doc_id, lang",
     weight_scale: int = 1000,
 ) -> str:
     """DuckDB twin of :func:`temperature_mix` (alpha = 0.5)."""
-    h = MD5_60_SQL.format(c=f"CAST(d.{key_col} AS VARCHAR)")
+    h = MD5_60_SQL.format(c="CAST(d.doc_id AS VARCHAR)")
     return rf"""
-WITH c AS (SELECT {domain_col}, COUNT(*) AS c FROM {table} GROUP BY 1),
-w AS (SELECT {domain_col}, c,
+WITH c AS (SELECT lang, COUNT(*) AS c FROM {table} GROUP BY 1),
+w AS (SELECT lang, c,
              CAST(floor(sqrt(c) * {weight_scale}) AS BIGINT) AS w
       FROM c),
 t AS (SELECT CAST(SUM(c) AS HUGEINT) AS tot,
              CAST(SUM(w) AS HUGEINT) AS totw FROM w),
-r AS (SELECT {domain_col},
+r AS (SELECT lang,
              least(1000000,
                    CAST(CAST({int(target_ppm)} AS HUGEINT) * tot * w
                         // (CAST(c AS HUGEINT) * totw) AS BIGINT))
                AS rate_ppm
       FROM w, t)
-SELECT {select} FROM {table} d JOIN r USING ({domain_col})
+SELECT {select} FROM {table} d JOIN r USING (lang)
 WHERE {h} % {_U_MOD} < r.rate_ppm"""
 
 
@@ -213,7 +210,6 @@ def cap_per_group(
     df: DataFrame,
     group_cols: List[str],
     k: int,
-    id_col: str = "doc_id",
     n_salts: int = 16,
 ) -> DataFrame:
     """Diversity cap: keep at most ``k`` rows per group, selected as the
@@ -231,12 +227,12 @@ def cap_per_group(
     (phase 1 can never evict a global top-k row), which is what the
     oracle twin uses. Salt derives from the same hash as the rank, so
     reruns are byte-identical."""
-    rk = md5_60(F.col(id_col).cast("string"))
+    rk = md5_60(F.col("doc_id").cast("string"))
     salted = df.withColumn("_rk", rk).withColumn(
         "_salt", (F.col("_rk") % n_salts).cast("int")
     )
-    w1 = Window.partitionBy(*group_cols, "_salt").orderBy("_rk", id_col)
-    w2 = Window.partitionBy(*group_cols).orderBy("_rk", id_col)
+    w1 = Window.partitionBy(*group_cols, "_salt").orderBy("_rk", "doc_id")
+    w2 = Window.partitionBy(*group_cols).orderBy("_rk", "doc_id")
     return (
         salted.withColumn("_rn", F.row_number().over(w1))
         .filter(F.col("_rn") <= k)
@@ -246,31 +242,27 @@ def cap_per_group(
     )
 
 
-def cap_per_host(
-    pages: DataFrame, k: int, url_col: str = "url", id_col: str = "doc_id",
-    n_salts: int = 16,
-) -> DataFrame:
+def cap_per_host(pages: DataFrame, k: int, n_salts: int = 16) -> DataFrame:
     """``cap_per_group`` keyed by the canonical URL host (adds a
     ``host`` column)."""
     from rio_cogeo_spark.functions.text import host_col
 
     return cap_per_group(
-        pages.withColumn("host", host_col(F.col(url_col))),
-        ["host"], k, id_col=id_col, n_salts=n_salts,
+        pages.withColumn("host", host_col(F.col("url"))),
+        ["host"], k, n_salts=n_salts,
     )
 
 
 def cap_per_group_sql(
-    table: str, group_cols: List[str], k: int, id_col: str = "doc_id",
-    select: str = "*",
+    table: str, group_cols: List[str], k: int, select: str = "*",
 ) -> str:
     """DuckDB twin: the equivalent single-window selection."""
-    h = MD5_60_SQL.format(c=f"CAST({id_col} AS VARCHAR)")
+    h = MD5_60_SQL.format(c="CAST(doc_id AS VARCHAR)")
     g = ", ".join(group_cols)
     return f"""
 SELECT {select} FROM (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY {g}
-                               ORDER BY {h}, {id_col}) AS _rn
+                               ORDER BY {h}, doc_id) AS _rn
   FROM {table}) WHERE _rn <= {k}"""
 
 
@@ -278,8 +270,6 @@ def split_assign_leakage_safe(
     docs: DataFrame,
     pairs: DataFrame,
     weights=None,
-    key_col: str = "doc_id",
-    out_col: str = "split",
     src: str = "doc_a",
     dst: str = "doc_b",
 ) -> DataFrame:
@@ -301,25 +291,23 @@ def split_assign_leakage_safe(
     from rio_cogeo_spark.operators.dedup import connected_components
 
     comp = connected_components(pairs, src, dst).select(
-        F.col("doc_id").alias(key_col), "component"
+        F.col("doc_id"), "component"
     )
-    keyed = docs.join(comp, key_col, "left").withColumn(
-        "__split_key", F.coalesce(F.col("component"), F.col(key_col))
+    keyed = docs.join(comp, "doc_id", "left").withColumn(
+        "__split_key", F.coalesce(F.col("component"), F.col("doc_id"))
     )
-    out = split_assign(keyed, weights, key_col="__split_key", out_col=out_col)
+    out = split_assign(keyed, weights, key_col="__split_key")
     return out.drop("__split_key", "component")
 
 
 def filter_by_group_quantile(
     docs: DataFrame,
     q: float = 0.25,
-    value_col: str = "n_chars",
-    group_col: str = "lang",
     exact: bool = True,
     accuracy: int = 10_000,
 ) -> DataFrame:
     """Quantile-threshold filtering — the quality-cutoff stage ("drop
-    the bottom quartile per language"): keep rows whose ``value_col``
+    the bottom quartile per language"): keep rows whose ``n_chars``
     is at or above their group's q-quantile.
 
     ``exact=True`` uses the exact interpolated percentile (matches
@@ -334,15 +322,15 @@ def filter_by_group_quantile(
     group) broadcast back; the corpus side is scan → broadcast-join →
     filter — it never shuffles."""
     if exact:
-        cut = F.round(F.expr(f"percentile({value_col}, {float(q)})"), 6)
+        cut = F.round(F.expr(f"percentile(n_chars, {float(q)})"), 6)
     else:
         cut = F.expr(
-            f"approx_percentile({value_col}, {float(q)}, {int(accuracy)})"
+            f"approx_percentile(n_chars, {float(q)}, {int(accuracy)})"
         )
-    cuts = docs.groupBy(group_col).agg(cut.alias("__cut"))
+    cuts = docs.groupBy("lang").agg(cut.alias("__cut"))
     return (
-        docs.join(F.broadcast(cuts), group_col)
-        .filter(F.col(value_col) >= F.col("__cut"))
+        docs.join(F.broadcast(cuts), "lang")
+        .filter(F.col("n_chars") >= F.col("__cut"))
         .drop("__cut")
     )
 
@@ -350,8 +338,6 @@ def filter_by_group_quantile(
 def importance_weights(
     docs: DataFrame,
     target_pred: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     broadcast_model: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weighting (Xie et al., "Data Selection for
@@ -372,7 +358,7 @@ def importance_weights(
     (Laplace denominators). The staged div order is the cross-engine
     contract (no associativity assumed). Per doc the occurrence-weighted
     mean: ``dsir_ppm = sum(tf * lr_ppm) div sum(tf)`` — > 10^6 means
-    "more target-like than the raw average". Returns ``(id_col,
+    "more target-like than the raw average". Returns ``(doc_id,
     n_bigrams, dsir_ppm)``; docs with <2 tokens are absent.
 
     Exact-int envelope: ``(t_cnt+1)·10^6`` fits int64 to ~9.2e12
@@ -396,11 +382,11 @@ def importance_weights(
     flagged = docs.withColumn("__is_t", F.expr(f"({target_pred})"))
     tf = (
         flagged.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__is_t"),
-            F.explode(ngrams_col(F.col(text_col), 2)).alias("bigram"),
+            F.explode(ngrams_col(F.col("text"), 2)).alias("bigram"),
         )
-        .groupBy(id_col, "__is_t", "bigram")
+        .groupBy("doc_id", "__is_t", "bigram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     model = tf.groupBy("bigram").agg(
@@ -428,33 +414,32 @@ def importance_weights(
         F.broadcast(weights) if broadcast_model else weights, "bigram"
     )
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_bigrams"),
             F.expr("sum(tf * lr_ppm) div sum(tf)").alias("dsir_ppm"),
         )
-        .select(id_col, "n_bigrams", "dsir_ppm")
+        .select("doc_id", "n_bigrams", "dsir_ppm")
     )
 
 
 def importance_weights_sql(
     table: str = "documents",
     target_pred: str = "lang = 'en'",
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`importance_weights` (same positional bigram
     build and the same staged exact-BIGINT ratio)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH t0 AS (SELECT {id_col}, ({target_pred}) AS is_t,
+WITH t0 AS (SELECT doc_id, ({target_pred}) AS is_t,
                    {TOKENS_SQL} AS toks FROM {table}),
-bg AS (SELECT {id_col}, is_t,
+bg AS (SELECT doc_id, is_t,
               unnest(list_transform(
                   generate_series(1, greatest(len(toks) - 1, 0)),
                   i -> array_to_string(toks[i:i+1], ' '))) AS bigram
        FROM t0),
-tf AS (SELECT {id_col}, is_t, bigram, COUNT(*) AS tf FROM bg GROUP BY 1, 2, 3),
+tf AS (SELECT doc_id, is_t, bigram, COUNT(*) AS tf FROM bg GROUP BY 1, 2, 3),
 model AS (SELECT bigram, SUM(tf) AS r_cnt,
                  SUM(CASE WHEN is_t THEN tf ELSE 0 END) AS t_cnt
           FROM tf GROUP BY 1),
@@ -463,19 +448,14 @@ w AS (SELECT bigram,
              ((((t_cnt + 1) * 1000000) // (r_cnt + 1)) * (R + V)) // (T + V)
                  AS lr_ppm
       FROM model CROSS JOIN tot)
-SELECT {id_col},
+SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_bigrams,
        CAST(SUM(tf * lr_ppm) // SUM(tf) AS BIGINT) AS dsir_ppm
 FROM tf JOIN w USING (bigram)
 GROUP BY 1"""
 
 
-def curriculum_interleave(
-    docs: DataFrame,
-    group_col: str = "lang",
-    score_col=None,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def curriculum_interleave(docs: DataFrame, score_col=None) -> DataFrame:
     """Deterministic balanced training order — round-robin interleave
     across groups so no group clusters at one end of the training run
     (the data-ordering half of multilingual curriculum / temperature
@@ -501,25 +481,25 @@ def curriculum_interleave(
     """
     from pyspark.sql import Window as W
 
-    order = [F.col(id_col).asc()]
+    order = [F.col("doc_id").asc()]
     if score_col is not None:
-        order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    w = W.partitionBy(group_col).orderBy(*order)
+        order = [F.col(score_col).desc(), F.col("doc_id").asc()]
+    w = W.partitionBy("lang").orderBy(*order)
     gidx = (
-        docs.select(group_col).distinct()
+        docs.select("lang").distinct()
         .withColumn(
             "_gidx",
             F.row_number().over(
-                W.partitionBy(F.lit(1)).orderBy(F.col(group_col).asc())
+                W.partitionBy(F.lit(1)).orderBy(F.col("lang").asc())
             ).cast("long") - 1,
         )
     )
     n_groups = gidx.count()
     return (
         docs.withColumn("rank_in_group", F.row_number().over(w).cast("long"))
-        .join(F.broadcast(gidx), group_col)
+        .join(F.broadcast(gidx), "lang")
         .select(
-            id_col, group_col, "rank_in_group",
+            "doc_id", "lang", "rank_in_group",
             (F.col("rank_in_group") * F.lit(n_groups) + F.col("_gidx"))
             .alias("curriculum_key"),
         )
@@ -528,26 +508,24 @@ def curriculum_interleave(
 
 def curriculum_interleave_sql(
     table: str = "documents",
-    group_col: str = "lang",
     score_expr: str = None,
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`curriculum_interleave`."""
-    order = f"{id_col} ASC"
+    order = "doc_id ASC"
     if score_expr is not None:
-        order = f"{score_expr} DESC, {id_col} ASC"
+        order = f"{score_expr} DESC, doc_id ASC"
     return f"""
-WITH ci_r AS (SELECT {id_col}, {group_col},
-                     CAST(row_number() OVER (PARTITION BY {group_col}
+WITH ci_r AS (SELECT doc_id, lang,
+                     CAST(row_number() OVER (PARTITION BY lang
                                              ORDER BY {order}) AS BIGINT)
                          AS rank_in_group
               FROM {table}),
-ci_g AS (SELECT {group_col},
-                CAST(row_number() OVER (ORDER BY {group_col} ASC) AS BIGINT)
+ci_g AS (SELECT lang,
+                CAST(row_number() OVER (ORDER BY lang ASC) AS BIGINT)
                     - 1 AS gidx
-         FROM (SELECT DISTINCT {group_col} FROM {table})),
+         FROM (SELECT DISTINCT lang FROM {table})),
 ci_n AS (SELECT COUNT(*) AS n_groups FROM ci_g)
-SELECT r.{id_col}, r.{group_col}, r.rank_in_group,
+SELECT r.doc_id, r.lang, r.rank_in_group,
        CAST(r.rank_in_group * n.n_groups + g.gidx AS BIGINT)
            AS curriculum_key
-FROM ci_r r JOIN ci_g g USING ({group_col}) CROSS JOIN ci_n n"""
+FROM ci_r r JOIN ci_g g USING (lang) CROSS JOIN ci_n n"""

@@ -21,6 +21,8 @@ Scoring is tf × idf with an INTEGER-SCALED idf:
 BIGINT arithmetic in both Spark and DuckDB, so scores are bit-identical
 regardless of summation order (a float tf-idf sum is associativity-
 dependent and cannot be hash-compared across engines).
+
+Column names are fixed: ``doc_id``, ``text`` and ``ts_sec``.
 """
 
 from __future__ import annotations
@@ -35,26 +37,19 @@ from rio_cogeo_spark.functions.text import tokens_col
 _IDF_SCALE = 1_000_000
 
 
-def build_postings(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def build_postings(docs: DataFrame) -> DataFrame:
     """Postings table ``(term, doc_id, tf)`` — one explode + one
     map-side-combinable groupBy."""
     return (
         docs.select(
-            F.col(id_col), F.explode(tokens_col(F.col(text_col))).alias("term")
+            F.col("doc_id"), F.explode(tokens_col(F.col("text"))).alias("term")
         )
-        .groupBy("term", id_col)
+        .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
 
 
-def search_topk(
-    docs: DataFrame,
-    terms: List[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def search_topk(docs: DataFrame, terms: List[str], k: int = 10) -> DataFrame:
     """Top-k documents for a bag-of-terms query, scored by
     ``sum(tf · floor(N·10^6 / df))`` (exact-integer tf-idf; higher =
     better). Ties break on ascending doc id. Returns
@@ -67,11 +62,11 @@ def search_topk(
     # filter(explode(toks), p).
     from rio_cogeo_spark.functions.text import tokens_col
 
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     matched = F.filter(toks, lambda t: t.isin(*list(terms)))
     postings = (
-        docs.select(F.col(id_col), F.explode(matched).alias("term"))
-        .groupBy("term", id_col)
+        docs.select(F.col("doc_id"), F.explode(matched).alias("term"))
+        .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     # (no materialization: the df branch and the scoring branch share
@@ -90,7 +85,7 @@ def search_topk(
         .withColumn(
             "w", F.col("tf") * F.expr(f"(n_total * {_IDF_SCALE}) div df")
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("w").alias("score"),
             F.count(F.lit(1)).alias("n_terms_hit"),
@@ -99,8 +94,8 @@ def search_topk(
     # distributed top-k (TakeOrderedAndProject), then rank over the k
     # survivors only — an unpartitioned row_number window would funnel
     # EVERY candidate row through one partition
-    topk = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(w))
 
 
@@ -109,27 +104,20 @@ def topk_per_group(
     group_cols: List[str],
     order_col: str,
     k: int,
-    tie_col: str = "doc_id",
     ascending: bool = False,
 ) -> DataFrame:
     """Generic per-group top-k (window + row_number ≤ k): 'best k pages
     per domain', 'longest k docs per language'. One shuffle on the group
     key; rank is emitted as ``rank``."""
     direction = F.asc(order_col) if ascending else F.desc(order_col)
-    w = Window.partitionBy(*group_cols).orderBy(direction, F.asc(tie_col))
+    w = Window.partitionBy(*group_cols).orderBy(direction, F.asc("doc_id"))
     return (
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    terms: List[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, terms: List[str], k: int = 10) -> DataFrame:
     """Top-k documents under BM25 with k1=1.2, b=0.75 and the
     exact-integer ``N/df`` idf (same scaled-idf family as
     :func:`search_topk` — the Robertson log-idf is float-only and its
@@ -159,12 +147,12 @@ def bm25_topk(
     window. Returns ``(doc_id, score, n_terms_hit, rank)``.
     """
     toks = docs.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("toks")
+        F.col("doc_id"), tokens_col(F.col("text")).alias("toks")
     ).withColumn("dl", F.size("toks"))
     postings = (
-        toks.select(id_col, "dl", F.explode("toks").alias("term"))
+        toks.select("doc_id", "dl", F.explode("toks").alias("term"))
         .filter(F.col("term").isin(list(terms)))
-        .groupBy("term", id_col, "dl")
+        .groupBy("term", "doc_id", "dl")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_by_term = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -182,24 +170,18 @@ def bm25_topk(
                 "(tf * 10 * avgdl_s + 3 * avgdl_s + 9 * dl * 1000)"
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("w").alias("score"),
             F.count(F.lit(1)).alias("n_terms_hit"),
         )
     )
-    topk = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc(id_col))
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(w))
 
 
-def phrase_topk(
-    docs: DataFrame,
-    phrase: List[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def phrase_topk(docs: DataFrame, phrase: List[str], k: int = 10) -> DataFrame:
     """Top-k documents by EXACT-PHRASE frequency — the positional-index
     query ("table table" matches only adjacent occurrences, in order).
 
@@ -241,34 +223,29 @@ def phrase_topk(
     )
     pos = (
         docs.select(
-            F.col(id_col),
-            F.posexplode(tokens_col(F.col(text_col))).alias("p", "term"),
+            F.col("doc_id"),
+            F.posexplode(tokens_col(F.col("text"))).alias("p", "term"),
         )
         .filter(F.col("term").isin(list(slots)))
     )
     votes = (
-        pos.select(F.col(id_col), "p", F.explode(slot_map[F.col("term")]).alias("i"))
+        pos.select(F.col("doc_id"), "p", F.explode(slot_map[F.col("term")]).alias("i"))
         .withColumn("a", F.col("p") - F.col("i"))
         .filter(F.col("a") >= 0)
     )
     hits = (
-        votes.groupBy(id_col, "a")
+        votes.groupBy("doc_id", "a")
         .agg(F.count(F.lit(1)).alias("n_slots"))
         .filter(F.col("n_slots") == m)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    topk = hits.orderBy(F.desc("tf"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("tf"), F.asc(id_col))
+    topk = hits.orderBy(F.desc("tf"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("tf"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(w))
 
 
-def phrase_topk_sql(
-    table: str,
-    phrase: List[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-) -> str:
+def phrase_topk_sql(table: str, phrase: List[str], k: int = 10) -> str:
     """DuckDB twin of :func:`phrase_topk` (same anchor decomposition)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
@@ -280,20 +257,20 @@ def phrase_topk_sql(
         for i, t in enumerate(phrase)
     )
     return rf"""
-WITH t AS (SELECT {id_col}, {TOKENS_SQL} AS toks FROM {table}),
-e AS (SELECT {id_col},
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {table}),
+e AS (SELECT doc_id,
              unnest(list_transform(toks, (x, i) -> {{'p': i - 1, 'term': x}})) AS pt
       FROM t),
-f AS (SELECT {id_col}, pt.p AS p, pt.term AS term FROM e
+f AS (SELECT doc_id, pt.p AS p, pt.term AS term FROM e
       WHERE pt.term IN ({in_list})),
 s(term, i) AS (VALUES {slot_rows}),
-votes AS (SELECT f.{id_col}, f.p - s.i AS a FROM f JOIN s ON f.term = s.term
+votes AS (SELECT f.doc_id, f.p - s.i AS a FROM f JOIN s ON f.term = s.term
           WHERE f.p - s.i >= 0),
-hit AS (SELECT {id_col}, a FROM votes GROUP BY 1, 2 HAVING COUNT(*) = {m}),
-tfq AS (SELECT {id_col}, COUNT(*) AS tf FROM hit GROUP BY 1),
-topk AS (SELECT {id_col}, tf FROM tfq ORDER BY tf DESC, {id_col} LIMIT {k})
-SELECT {id_col}, tf,
-       CAST(row_number() OVER (ORDER BY tf DESC, {id_col}) AS INT) AS rank
+hit AS (SELECT doc_id, a FROM votes GROUP BY 1, 2 HAVING COUNT(*) = {m}),
+tfq AS (SELECT doc_id, COUNT(*) AS tf FROM hit GROUP BY 1),
+topk AS (SELECT doc_id, tf FROM tfq ORDER BY tf DESC, doc_id LIMIT {k})
+SELECT doc_id, tf,
+       CAST(row_number() OVER (ORDER BY tf DESC, doc_id) AS INT) AS rank
 FROM topk"""
 
 
@@ -301,8 +278,6 @@ def trending_terms(
     docs: DataFrame,
     window_sec: int = 3600,
     k: int = 5,
-    ts_col: str = "ts_sec",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-time-window trending terms: bucket documents into
     ``window_sec`` event-time windows, count token occurrences, keep
@@ -318,10 +293,10 @@ def trending_terms(
     # `div` is exact 64-bit integer division (float-divide-then-cast
     # would round through doubles)
     win = F.expr(
-        f"({ts_col} div {int(window_sec)}) * {int(window_sec)}"
+        f"(ts_sec div {int(window_sec)}) * {int(window_sec)}"
     ).alias("window_start")
     counts = (
-        docs.select(win, F.explode(tokens_col(F.col(text_col))).alias("term"))
+        docs.select(win, F.explode(tokens_col(F.col("text"))).alias("term"))
         .groupBy("window_start", "term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -332,17 +307,12 @@ def trending_terms(
     )
 
 
-def trending_terms_sql(
-    table: str,
-    window_sec: int = 3600,
-    k: int = 5,
-    ts_col: str = "ts_sec",
-) -> str:
+def trending_terms_sql(table: str, window_sec: int = 3600, k: int = 5) -> str:
     """DuckDB twin of :func:`trending_terms`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT (CAST({ts_col} AS BIGINT) // {int(window_sec)})
+WITH tok AS (SELECT (CAST(ts_sec AS BIGINT) // {int(window_sec)})
                         * {int(window_sec)} AS window_start,
                     unnest({TOKENS_SQL}) AS term
              FROM {table}),
@@ -354,12 +324,7 @@ rnk AS (SELECT window_start, term, n,
 SELECT window_start, term, n, rank FROM rnk WHERE rank <= {int(k)}"""
 
 
-def tfidf_keywords(
-    docs: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_keywords(docs: DataFrame, k: int = 5) -> DataFrame:
     """Per-document top-k keyword extraction by exact-integer tf-idf —
     the pipeline primitive behind topic tagging, corpus browsing, and
     weak-label generation (extract each page's most distinctive terms).
@@ -368,7 +333,7 @@ def tfidf_keywords(
     document-frequency family as :func:`search_topk` (exact BIGINT, so
     results hash identically across engines; envelope ``N ≤ ~9e12``
     docs before ``N * 10^6`` overflows int64). Ties break on ascending
-    term. Returns ``(id_col, term, tf, score, rank)`` with ``rank ≤ k``.
+    term. Returns ``(doc_id, term, tf, score, rank)`` with ``rank ≤ k``.
 
     Scale design (100 TB): the postings build is the one corpus-width
     explode (map-side-combinable groupBy); document frequencies are a
@@ -377,7 +342,7 @@ def tfidf_keywords(
     document's DISTINCT terms (bounded by doc vocabulary, never the
     corpus), so no partition outgrows memory at any corpus size.
     """
-    postings = build_postings(docs, id_col, text_col)
+    postings = build_postings(docs)
     df_by_term = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_total = docs.agg(F.count(F.lit(1)).alias("n_total"))
     scored = (
@@ -387,32 +352,30 @@ def tfidf_keywords(
             "score", F.col("tf") * F.expr(f"(n_total * {_IDF_SCALE}) div df")
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "score", "rank")
+        .select("doc_id", "term", "tf", "score", "rank")
     )
 
 
-def tfidf_keywords_sql(
-    table: str = "documents", k: int = 5, id_col: str = "doc_id"
-) -> str:
+def tfidf_keywords_sql(table: str = "documents", k: int = 5) -> str:
     """DuckDB twin of :func:`tfidf_keywords` (same exact-BIGINT score)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT {id_col}, unnest({TOKENS_SQL}) AS term FROM {table}),
-tf AS (SELECT {id_col}, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
+WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM {table}),
+tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 dfx AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
 tot AS (SELECT COUNT(*) AS n_total FROM {table}),
-sc AS (SELECT tf.{id_col}, tf.term, tf.tf,
+sc AS (SELECT tf.doc_id, tf.term, tf.tf,
               CAST(tf.tf * ((tot.n_total * {_IDF_SCALE}) // dfx.df)
                    AS BIGINT) AS score
        FROM tf JOIN dfx USING (term) CROSS JOIN tot),
-rnk AS (SELECT *, CAST(row_number() OVER (PARTITION BY {id_col}
+rnk AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
              ORDER BY score DESC, term) AS INT) AS rank FROM sc)
-SELECT {id_col}, term, CAST(tf AS BIGINT) AS tf, score, rank
+SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score, rank
 FROM rnk WHERE rank <= {int(k)}"""
 
 
@@ -420,8 +383,6 @@ def lexical_cosine_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
     df_cap: "Optional[int | str]" = "auto",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Related-document pairs by SPARSE tf-idf cosine over the inverted
     index — the lexical complement to the embedding near-dup suite
@@ -458,8 +419,8 @@ def lexical_cosine_pairs(
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
-    postings = build_postings(docs, id_col, text_col)
-    n_docs = docs.select(F.col(id_col)).distinct().agg(
+    postings = build_postings(docs)
+    n_docs = docs.select("doc_id").distinct().agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     dfs = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -474,7 +435,7 @@ def lexical_cosine_pairs(
         .crossJoin(F.broadcast(n_docs))
         .select(
             "term",
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             F.expr("tf * ((n_docs * 1000) div df)").alias("w"),
         )
     )
@@ -521,20 +482,18 @@ def lexical_cosine_pairs(
     )
 
 
-def lexical_cosine_pairs_sql(
-    docs_cte: str, threshold: float = 0.5, id_col: str = "doc_id"
-) -> str:
+def lexical_cosine_pairs_sql(docs_cte: str, threshold: float = 0.5) -> str:
     """DuckDB twin of :func:`lexical_cosine_pairs` with ``df_cap=None``
-    (``docs_cte`` exposes ``({id_col}, text)``)."""
+    (``docs_cte`` exposes ``(doc_id, text)``)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
 WITH lc_docs AS ({docs_cte}),
-lc_p AS (SELECT {id_col} AS doc, unnest({TOKENS_SQL}) AS term
+lc_p AS (SELECT doc_id AS doc, unnest({TOKENS_SQL}) AS term
          FROM lc_docs),
 lc_tf AS (SELECT term, doc, COUNT(*) AS tf FROM lc_p GROUP BY 1, 2),
 lc_df AS (SELECT term, COUNT(*) AS df FROM lc_tf GROUP BY 1),
-lc_n AS (SELECT COUNT(DISTINCT {id_col}) AS n_docs FROM lc_docs),
+lc_n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM lc_docs),
 lc_w AS (SELECT t.term, t.doc,
                 t.tf * ((n.n_docs * 1000) // d.df) AS w
          FROM lc_tf t JOIN lc_df d USING (term) CROSS JOIN lc_n n),

@@ -7,6 +7,10 @@ the big side never shuffles and top-k folds map-side via the window's
 partial rank... at true 10^12-vector scale the LSH variant buckets both
 sides by random-hyperplane sign bits so each query only scans its bucket
 ring; recall is tested against brute force at sandbox scale.
+
+Column names are fixed (``vec_id``, ``embedding``, ``label``), except
+the vector column of :func:`ivf_build_centroids` and
+:func:`ivf_assign_lists`, which :mod:`quantize` sets.
 """
 
 from __future__ import annotations
@@ -85,7 +89,6 @@ def _kmeanspp_sample_seed(
     embeddings: DataFrame,
     n_lists: int,
     vec_col: str,
-    id_col: str,
     sample_rows: int,
     seed: int,
 ) -> np.ndarray:
@@ -96,7 +99,7 @@ def _kmeanspp_sample_seed(
     a fixed RNG. Only sample_rows x dim doubles ever reach the driver."""
     rows = (
         embeddings.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
+        .orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(seed)))
         .limit(int(sample_rows))
         .collect()
     )
@@ -148,10 +151,8 @@ def _kmeanspp_sample_seed(
 
 
 def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
-                        list_col: str = "label",
                         lloyd_iters: int = 0,
                         n_lists: int = None,
-                        id_col: str = "vec_id",
                         sample_rows: int = 4096,
                         seed: int = 13) -> np.ndarray:
     """IVF coarse quantizer. Two seeding modes:
@@ -159,7 +160,7 @@ def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
     * ``n_lists`` given — k-means++ over a deterministic hash-ordered
       sample (:func:`_kmeanspp_sample_seed`); the corpus needs NO label
       column and the list count is an explicit knob, as in any IVF index.
-    * ``n_lists`` None — one centroid per distinct ``list_col`` value,
+    * ``n_lists`` None — one centroid per distinct ``label`` value,
       seeded from the partition means (useful when a meaningful grouping
       column already exists).
 
@@ -173,10 +174,10 @@ def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
     (the standard empty-cluster rule), so n_lists is stable."""
     if n_lists is not None:
         cent = _kmeanspp_sample_seed(
-            embeddings, int(n_lists), vec_col, id_col, sample_rows, seed
+            embeddings, int(n_lists), vec_col, sample_rows, seed
         )
     else:
-        by_list = _component_means(embeddings, list_col, vec_col)
+        by_list = _component_means(embeddings, "label", vec_col)
         labels = sorted(by_list)
         dim = max(max(d) for d in by_list.values()) + 1
         cent = np.array(
@@ -215,13 +216,12 @@ def ann_ivf_topk(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 3,
-    list_col: str = "label",
     include_self: bool = False,
     lloyd_iters: int = 0,
     n_lists: int = None,
 ) -> DataFrame:
     """IVF ANN: vectors are re-assigned to their nearest coarse centroid
-    (seeded from ``list_col`` means, optionally Lloyd-refined with
+    (seeded from ``label`` means, optionally Lloyd-refined with
     ``lloyd_iters`` distributed k-means rounds); each query probes only its
     ``n_probe`` nearest inverted lists, then exact cosine + rank within
     them. Candidates shrink from |corpus| to ~n_probe/n_lists of it —
@@ -238,7 +238,7 @@ def ann_ivf_topk(
     sample seed (see :func:`ivf_build_centroids`) — the right mode for a
     corpus without a meaningful grouping column."""
     centroids = ivf_build_centroids(
-        embeddings, "embedding", list_col, lloyd_iters=lloyd_iters,
+        embeddings, "embedding", lloyd_iters=lloyd_iters,
         n_lists=n_lists,
     )
     norm_c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
@@ -403,8 +403,6 @@ def semantic_dedup_pairs(
     embeddings: DataFrame,
     centroids: np.ndarray,
     threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
     near-dup pairs found CLUSTER-LOCALLY: assign every vector to its
@@ -426,10 +424,10 @@ def semantic_dedup_pairs(
     that sorts the same table twice (ROUND5.md §9); the final verify is
     the shared JVM ``cosine_rounded`` expression, bit-identical to the
     DuckDB twin."""
-    assigned = ivf_assign_lists(embeddings, centroids, vec_col)
+    assigned = ivf_assign_lists(embeddings, centroids, "embedding")
     grouped = (
         assigned.groupBy("ivf_list")
-        .agg(F.collect_list(id_col).alias("ids"))
+        .agg(F.collect_list("vec_id").alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     # posexplode + tail-slice: s(s-1)/2 rows, not the filtered s²
@@ -447,14 +445,14 @@ def semantic_dedup_pairs(
             F.greatest("_x", "_y").alias("vec_b"),
         )
     )
-    vt = embeddings.select(F.col(id_col), F.col(vec_col))
+    vt = embeddings.select("vec_id", "embedding")
     pairs = (
         cands.join(
-            vt.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("ea")),
+            vt.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")),
             "vec_a",
         )
         .join(
-            vt.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("eb")),
+            vt.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")),
             "vec_b",
         )
         .withColumn("cosine", cosine_rounded(F.col("ea"), F.col("eb")))
@@ -463,19 +461,14 @@ def semantic_dedup_pairs(
     return pairs.select("vec_a", "vec_b", "cosine")
 
 
-def pool_embeddings(
-    vecs: DataFrame,
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pool_embeddings(vecs: DataFrame) -> DataFrame:
     """Deterministic mean-pooling of embeddings per group — the
     chunk-embeddings→document-embedding (or class-centroid) fold every
     embedding pipeline needs before doc-level ANN / clustering.
 
-    Emitted LONG: ``(group_col, dim, n_vecs, mean_val)`` with ``dim``
+    Emitted LONG: ``(label, dim, n_vecs, mean_val)`` with ``dim``
     1-based. ``mean_val`` is computed by a SEQUENTIAL left fold over the
-    group's values sorted by ``id_col`` (float32 → float64 first, so
+    group's values sorted by ``vec_id`` (float32 → float64 first, so
     every add is one IEEE-754 double op in a fixed order): both engines
     execute the identical operation sequence, making the doubles
     BIT-identical cross-engine — no rounding crutch. A plain ``SUM``
@@ -493,54 +486,49 @@ def pool_embeddings(
     caller controls.
     """
     ex = vecs.select(
-        F.col(group_col),
-        F.col(id_col),
-        F.posexplode(F.col(vec_col)).alias("dim0", "val0"),
+        F.col("label"),
+        F.col("vec_id"),
+        F.posexplode(F.col("embedding")).alias("dim0", "val0"),
     ).select(
-        group_col,
-        id_col,
+        "label",
+        "vec_id",
         (F.col("dim0") + 1).alias("dim"),
         F.col("val0").cast("double").alias("val"),
     )
     return (
-        ex.groupBy(group_col, "dim")
+        ex.groupBy("label", "dim")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.aggregate(
                 F.array_sort(
-                    F.collect_list(F.struct(F.col(id_col), F.col("val")))
+                    F.collect_list(F.struct(F.col("vec_id"), F.col("val")))
                 ),
                 F.lit(0.0),
                 lambda acc, x: acc + x["val"],
             ).alias("tot"),
         )
         .select(
-            group_col, "dim", "n_vecs",
+            "label", "dim", "n_vecs",
             (F.col("tot") / F.col("n_vecs")).alias("mean_val"),
         )
     )
 
 
-def pool_embeddings_sql(
-    table: str = "embeddings",
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
+def pool_embeddings_sql(table: str = "embeddings") -> str:
     """DuckDB twin of :func:`pool_embeddings` — the same
     sorted-by-id sequential double fold (list_reduce is a left fold;
     the 0.0-seeded Spark fold adds one exact 0.0+x step, which cannot
     round), so the doubles are bit-identical."""
     return rf"""
 WITH ex AS (
-  SELECT {group_col}, {id_col}, u.i AS dim, CAST(u.v AS DOUBLE) AS val
+  SELECT label, vec_id, u.i AS dim, CAST(u.v AS DOUBLE) AS val
   FROM {table},
-       unnest(list_transform({vec_col},
+       unnest(list_transform(embedding,
               (x, i) -> struct_pack(i := i, v := x))) AS t(u)
 )
-SELECT {group_col}, dim,
+SELECT label, dim,
        CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       list_reduce(list(val ORDER BY {id_col}), (a, b) -> a + b)
+       list_reduce(list(val ORDER BY vec_id), (a, b) -> a + b)
            / COUNT(*) AS mean_val
 FROM ex GROUP BY 1, 2"""
 
@@ -552,7 +540,6 @@ def bitext_mine(
     margin_threshold_ppm: int = 1_000_000,
     src_id: str = "src_id",
     tgt_id: str = "tgt_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk, ACL 2019 — the
     LASER / CCMatrix / ParaCrawl parallel-corpus miner): for every
@@ -599,8 +586,8 @@ def bitext_mine(
         )
     from rio_cogeo_spark.functions.vector import cosine_rounded
 
-    s = src.select(F.col(src_id), F.col(vec_col).alias("_sv"))
-    t = tgt.select(F.col(tgt_id), F.col(vec_col).alias("_tv"))
+    s = src.select(F.col(src_id), F.col("embedding").alias("_sv"))
+    t = tgt.select(F.col(tgt_id), F.col("embedding").alias("_tv"))
     pairs = s.crossJoin(F.broadcast(t)).select(
         src_id,
         tgt_id,
@@ -667,13 +654,12 @@ def bitext_mine_sql(
     margin_threshold_ppm: int = 1_000_000,
     src_id: str = "src_id",
     tgt_id: str = "tgt_id",
-    vec_col: str = "embedding",
 ) -> str:
     """DuckDB twin of :func:`bitext_mine` (each CTE exposes
-    ``({src,tgt}_id, {vec_col})``)."""
+    ``({src,tgt}_id, embedding)``)."""
     from rio_cogeo_spark.functions.vector import cosine_sql
 
-    cos = cosine_sql(f"s.{vec_col}", f"t.{vec_col}")
+    cos = cosine_sql("s.embedding", "t.embedding")
     return rf"""
 WITH s AS ({src_cte}), t AS ({tgt_cte}),
 p AS (SELECT s.{src_id}, t.{tgt_id},
@@ -710,9 +696,6 @@ def hard_negatives(
     candidates: DataFrame,
     pairs: DataFrame,
     k: int = 10,
-    query_col: str = "query_id",
-    cand_col: str = "vec_id",
-    score_col: str = "cos",
     src: str = "doc_a",
     dst: str = "doc_b",
 ) -> DataFrame:
@@ -724,13 +707,13 @@ def hard_negatives(
     transitive copies (A~B, B~C ⇒ C must not be A's negative), so the
     exclusion is component-aware.
 
-    ``candidates`` is any mined similarity pool ``(query_col, cand_col,
-    score_col)`` — the output of :func:`ann_bruteforce_topk`,
+    ``candidates`` is any mined similarity pool ``(query_id, vec_id,
+    cos)`` — the output of :func:`ann_bruteforce_topk`,
     :func:`ann_ivf_topk`, or :func:`ann_lsh_topk` with a pool size
     comfortably above ``k`` (excluded dup-mates must not leave holes).
     ``pairs`` is any mined duplicate pair set (minhash / simhash /
-    embedding near-dup). Output: ``(query_col, cand_col, rank,
-    score_col)`` re-ranked by (score DESC, cand ASC).
+    embedding near-dup). Output: ``(query_id, vec_id, rank,
+    cos)`` re-ranked by (score DESC, cand ASC).
 
     Scale design (100 TB): the component table is bounded by the
     DUPLICATE population (never the corpus) and broadcasts twice onto
@@ -743,18 +726,18 @@ def hard_negatives(
 
     comp = connected_components(pairs, src, dst)
     cq = F.broadcast(comp.select(
-        F.col("doc_id").alias(query_col), F.col("component").alias("_q_comp")
+        F.col("doc_id").alias("query_id"), F.col("component").alias("_q_comp")
     ))
     cc = F.broadcast(comp.select(
-        F.col("doc_id").alias(cand_col), F.col("component").alias("_c_comp")
+        F.col("doc_id").alias("vec_id"), F.col("component").alias("_c_comp")
     ))
-    w = Window.partitionBy(query_col).orderBy(
-        F.col(score_col).desc(), F.col(cand_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("vec_id").asc()
     )
     return (
-        candidates.join(cq, query_col, "left")
-        .join(cc, cand_col, "left")
-        .filter(F.col(cand_col) != F.col(query_col))
+        candidates.join(cq, "query_id", "left")
+        .join(cc, "vec_id", "left")
+        .filter(F.col("vec_id") != F.col("query_id"))
         .filter(
             F.col("_q_comp").isNull()
             | F.col("_c_comp").isNull()
@@ -762,17 +745,11 @@ def hard_negatives(
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_col, cand_col, "rank", score_col)
+        .select("query_id", "vec_id", "rank", "cos")
     )
 
 
-def centroid_drift(
-    old: DataFrame,
-    new: DataFrame,
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_drift(old: DataFrame, new: DataFrame) -> DataFrame:
     """Embedding-space drift monitoring between two snapshots: per
     group, the cosine between the OLD and NEW mean centroids plus both
     member counts — the dashboard behind "did the crawl's embedding
@@ -790,17 +767,17 @@ def centroid_drift(
     the join is co-partitioned on (group, dim) and the fold's
     collect_list is dim-bounded (the embedding width).
     """
-    pa = pool_embeddings(old, group_col, id_col, vec_col).select(
-        group_col, "dim", F.col("n_vecs").alias("n_old"),
+    pa = pool_embeddings(old).select(
+        "label", "dim", F.col("n_vecs").alias("n_old"),
         F.col("mean_val").alias("ma"),
     )
-    pb = pool_embeddings(new, group_col, id_col, vec_col).select(
-        group_col, "dim", F.col("n_vecs").alias("n_new"),
+    pb = pool_embeddings(new).select(
+        "label", "dim", F.col("n_vecs").alias("n_new"),
         F.col("mean_val").alias("mb"),
     )
-    j = pa.join(pb, [group_col, "dim"])
+    j = pa.join(pb, ["label", "dim"])
     folded = (
-        j.groupBy(group_col)
+        j.groupBy("label")
         .agg(
             F.max("n_old").alias("n_old"),
             F.max("n_new").alias("n_new"),
@@ -822,7 +799,7 @@ def centroid_drift(
         )
     )
     return folded.select(
-        group_col,
+        "label",
         F.col("n_old").cast("long").alias("n_old"),
         F.col("n_new").cast("long").alias("n_new"),
         F.round(
@@ -833,37 +810,31 @@ def centroid_drift(
     )
 
 
-def centroid_drift_sql(
-    old_cte: str,
-    new_cte: str,
-    group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> str:
+def centroid_drift_sql(old_cte: str, new_cte: str) -> str:
     """DuckDB twin of :func:`centroid_drift`. ``old_cte``/``new_cte``
-    expose ``(group_col, id_col, vec_col)`` with the vector already cast
+    expose ``(label, vec_id, v)`` with the vector already cast
     to DOUBLE elements. The struct-accumulator list_reduce executes the
     same dim-ordered IEEE sequence as the Spark fold."""
 
     def pooled(cte, alias):
         return f"""{alias}0 AS ({cte}),
-{alias}x AS (SELECT {group_col}, {id_col}, u.i AS dim,
+{alias}x AS (SELECT label, vec_id, u.i AS dim,
                     CAST(u.v AS DOUBLE) AS val
              FROM {alias}0,
-                  unnest(list_transform({vec_col},
+                  unnest(list_transform(v,
                          (x, i) -> struct_pack(i := i, v := x))) AS t(u)),
-{alias} AS (SELECT {group_col}, dim, COUNT(*) AS n_vecs,
-                   list_reduce(list(val ORDER BY {id_col}),
+{alias} AS (SELECT label, dim, COUNT(*) AS n_vecs,
+                   list_reduce(list(val ORDER BY vec_id),
                                (a, b) -> a + b) / COUNT(*) AS mean_val
             FROM {alias}x GROUP BY 1, 2)"""
 
     return f"""
 WITH {pooled(old_cte, "cd_a")},
 {pooled(new_cte, "cd_b")},
-cd_j AS (SELECT a.{group_col}, a.dim, a.mean_val AS ma, b.mean_val AS mb,
+cd_j AS (SELECT a.label, a.dim, a.mean_val AS ma, b.mean_val AS mb,
                 a.n_vecs AS n_old, b.n_vecs AS n_new
-         FROM cd_a a JOIN cd_b b USING ({group_col}, dim)),
-cd_f AS (SELECT {group_col},
+         FROM cd_a a JOIN cd_b b USING (label, dim)),
+cd_f AS (SELECT label,
                 MAX(n_old) AS n_old, MAX(n_new) AS n_new,
                 list_reduce(
                     list_prepend(struct_pack(dot := 0.0, a2 := 0.0,
@@ -876,7 +847,7 @@ cd_f AS (SELECT {group_col},
                                             a2 := acc.a2 + x.a2,
                                             b2 := acc.b2 + x.b2)) AS s
          FROM cd_j GROUP BY 1)
-SELECT {group_col},
+SELECT label,
        CAST(n_old AS BIGINT) AS n_old,
        CAST(n_new AS BIGINT) AS n_new,
        round(s.dot / (sqrt(s.a2) * sqrt(s.b2)), 6) AS centroid_cos
@@ -901,8 +872,6 @@ def random_projection(
     emb: DataFrame,
     out_dim: int = 16,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Johnson–Lindenstrauss random projection — the dimensionality
     reduction step in front of ANN/clustering at 100 TB (a 64→16
@@ -913,13 +882,13 @@ def random_projection(
     multiply-add chain, so the doubles are bit-identical cross-engine
     and the 6dp rounding is a formality.
 
-    Output LONG (driver-canonicalizable): ``(id_col, dim, val)`` with
+    Output LONG (driver-canonicalizable): ``(vec_id, dim, val)`` with
     ``dim`` 0-based over the projected components.
 
     Scale design: a pure zero-shuffle projection — in_dim x out_dim
     literal multiply-adds per row, whole-stage codegen, no UDF.
     """
-    in_dim_row = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+    in_dim_row = emb.select(F.size(F.col("embedding")).alias("d")).first()
     if in_dim_row is None:
         raise ValueError("empty embedding table")
     in_dim = int(in_dim_row["d"])
@@ -931,20 +900,20 @@ def random_projection(
     comps = []
     for j in range(out_dim):
         terms = " + ".join(
-            f"CAST(element_at({vec_col}, {i + 1}) AS DOUBLE)"
+            f"CAST(element_at(embedding, {i + 1}) AS DOUBLE)"
             f" * CAST({mat[j][i]!r} AS DOUBLE)"
             for i in range(in_dim)
         )
         comps.append(F.expr(f"round({terms}, 6)").alias(f"_p{j}"))
-    wide = emb.select(F.col(id_col), *comps)
+    wide = emb.select(F.col("vec_id"), *comps)
     stacked = ", ".join(
         f"{j}, _p{j}" for j in range(out_dim)
     )
     return wide.selectExpr(
-        id_col,
+        "vec_id",
         f"stack({out_dim}, {stacked}) AS (dim, val)",
     ).select(
-        id_col, F.col("dim").cast("int").alias("dim"), "val"
+        "vec_id", F.col("dim").cast("int").alias("dim"), "val"
     )
 
 
@@ -953,8 +922,6 @@ def random_projection_sql(
     in_dim: int = 64,
     out_dim: int = 16,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> str:
     """DuckDB twin of :func:`random_projection` — the identical literal
     matrix and the identical left-to-right multiply-add chains."""
@@ -962,12 +929,12 @@ def random_projection_sql(
     selects = []
     for j in range(out_dim):
         terms = " + ".join(
-            f"CAST({vec_col}[{i + 1}] AS DOUBLE)"
+            f"CAST(embedding[{i + 1}] AS DOUBLE)"
             f" * CAST({mat[j][i]!r} AS DOUBLE)"
             for i in range(in_dim)
         )
         selects.append(
-            f"SELECT {id_col}, CAST({j} AS INT) AS dim,"
+            f"SELECT vec_id, CAST({j} AS INT) AS dim,"
             f" round({terms}, 6) AS val FROM {table}"
         )
     return "\nUNION ALL\n".join(selects)

@@ -28,6 +28,7 @@ from typing import Callable, Dict, List, Optional, Tuple
 
 import warnings
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -632,8 +633,13 @@ def tiles_meta(tiles: DataFrame, plan: TileJobPlan) -> DataFrame:
                 i,
             )
         )
+    # built from pandas, so the plan reads it as a JVM local relation and
+    # no action starts a Python worker to scan the rows
     meta = spark.createDataFrame(
-        rows,
+        pd.DataFrame(rows, columns=[
+            "zoom", "level", "width", "height", "blocksize_x", "blocksize_y",
+            "decimation", "write_index",
+        ]),
         "zoom int, level int, width long, height long, blocksize_x int, "
         "blocksize_y int, decimation int, write_index long",
     )

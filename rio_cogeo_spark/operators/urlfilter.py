@@ -48,23 +48,21 @@ DOMAIN_SUFFIXES_SQL = (
 def blocklist_filter(
     pages: DataFrame,
     blocklist: Union[Iterable[str], DataFrame],
-    url_col: str = "url",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Rows of ``pages`` whose URL host matches NO blocklist entry by
     domain suffix. ``blocklist`` is an iterable of domains (literal
     ``arrays_overlap`` path) or a single-column DataFrame of domains
     (join path for lists too big to inline)."""
-    sfx = domain_suffixes(F.col(url_col))
+    sfx = domain_suffixes(F.col("url"))
     if isinstance(blocklist, DataFrame):
         dom = blocklist.columns[0]
         blocked = (
-            pages.select(id_col, F.explode(sfx).alias("_sfx"))
+            pages.select("doc_id", F.explode(sfx).alias("_sfx"))
             .join(blocklist, F.col("_sfx") == F.col(dom), "leftsemi")
-            .select(id_col)
+            .select("doc_id")
             .distinct()
         )
-        return pages.join(blocked, id_col, "left_anti")
+        return pages.join(blocked, "doc_id", "left_anti")
     domains = sorted(set(blocklist))
     if not domains:
         return pages
@@ -72,13 +70,10 @@ def blocklist_filter(
     return pages.filter(~F.arrays_overlap(sfx, lit))
 
 
-def blocklist_filter_sql(
-    table: str, domains: Iterable[str], url_col: str = "url"
-) -> str:
+def blocklist_filter_sql(table: str, domains: Iterable[str]) -> str:
     """DuckDB twin of the literal-list path (suffix semantics
     identical). ``DOMAIN_SUFFIXES_SQL`` reads a column literally named
     ``url``, matching :data:`HOST_SQL`."""
-    assert url_col == "url", "twin is bound to a column named 'url'"
     arr = ", ".join("'" + d.replace("'", "''") + "'" for d in sorted(set(domains)))
     return (
         f"SELECT * FROM {table} WHERE NOT list_has_any("
@@ -89,7 +84,6 @@ def blocklist_filter_sql(
 def path_pattern_filter(
     pages: DataFrame,
     patterns: Iterable[str],
-    url_col: str = "url",
     case_insensitive: bool = True,
 ) -> DataFrame:
     """Rows of ``pages`` whose URL contains NONE of the literal
@@ -110,7 +104,7 @@ def path_pattern_filter(
     pats = sorted(set(patterns))
     if not pats:
         return pages
-    url = F.col(url_col)
+    url = F.col("url")
     if case_insensitive:
         url = F.lower(url)
         pats = [p.lower() for p in pats]
@@ -123,16 +117,15 @@ def path_pattern_filter(
 def path_pattern_filter_sql(
     table: str,
     patterns: Iterable[str],
-    url_col: str = "url",
     case_insensitive: bool = True,
 ) -> str:
     """DuckDB twin of :func:`path_pattern_filter`."""
     pats = sorted(set(patterns))
     if case_insensitive:
         pats = [p.lower() for p in pats]
-        url = f"lower({url_col})"
+        url = "lower(url)"
     else:
-        url = url_col
+        url = "url"
     arr = ", ".join("'" + p.replace("'", "''") + "'" for p in pats)
     return (
         f"SELECT * FROM {table} WHERE len(list_filter([{arr}], "
@@ -203,12 +196,7 @@ def canonical_url_sql(col: str = "url") -> str:
     return f"regexp_replace({pfx} || {rest}, '/$', '', 'g')"
 
 
-def resolve_redirects(
-    redirects: DataFrame,
-    max_hops: int = 16,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def resolve_redirects(redirects: DataFrame, max_hops: int = 16) -> DataFrame:
     """Resolve HTTP redirect chains to their terminal URL by POINTER
     DOUBLING: each round composes the partial map with itself
     (``f ∘ f``), so a chain of length L resolves in ``ceil(log2 L)``
@@ -240,11 +228,11 @@ def resolve_redirects(
 
     rounds = max(1, math.ceil(math.log2(max_hops)))
     f = redirects.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("cur"),
+        F.col("src"),
+        F.col("dst").alias("cur"),
         F.lit(1).cast("long").alias("hops"),
     )
-    keys = redirects.select(F.col(src_col).alias("k")).distinct()
+    keys = redirects.select(F.col("src").alias("k")).distinct()
     for _ in range(rounds):
         nxt = f.select(
             F.col("src").alias("src2"),
@@ -303,11 +291,7 @@ def resolve_redirects_sql(
     )
 
 
-def robots_rules(
-    robots: DataFrame,
-    host_col_name: str = "host",
-    body_col: str = "body",
-) -> DataFrame:
+def robots_rules(robots: DataFrame, host_col_name: str = "host") -> DataFrame:
     """Parse ``robots.txt`` bodies into per-host Disallow rules for the
     wildcard agent: ``(host, prefix)`` — one row per non-empty
     ``Disallow:`` path prefix governed by a ``User-agent`` run that
@@ -329,7 +313,7 @@ def robots_rules(
     """
     lines = robots.select(
         F.col(host_col_name).alias("host"),
-        F.posexplode(F.split(F.col(body_col), "\n")).alias("i", "line"),
+        F.posexplode(F.split(F.col("body"), "\n")).alias("i", "line"),
     ).select("host", "i", F.trim("line").alias("line"))
     low = F.lower(F.col("line"))
     after_colon = F.trim(F.expr("substring(line, instr(line, ':') + 1)"))
@@ -447,11 +431,7 @@ URL_PATH_SQL = (
 )
 
 
-def robots_filter(
-    pages: DataFrame,
-    robots: DataFrame,
-    url_col: str = "url",
-) -> DataFrame:
+def robots_filter(pages: DataFrame, robots: DataFrame) -> DataFrame:
     """Respect ``robots.txt``: drop pages whose URL path starts with
     any of their host's wildcard-agent Disallow prefixes (prefix
     match, the original robots.txt semantics). The crawl-level
@@ -473,8 +453,8 @@ def robots_filter(
         .agg(F.collect_list("prefix").alias("prefixes"))
     )
     tagged = pages.withColumn(
-        "__host", host_col(F.col(url_col))
-    ).withColumn("__path", url_path_col(F.col(url_col)))
+        "__host", host_col(F.col("url"))
+    ).withColumn("__path", url_path_col(F.col("url")))
     kept = (
         tagged.join(
             F.broadcast(rules),

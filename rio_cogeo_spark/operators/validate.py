@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from typing import Dict, List, Optional, Tuple
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -225,7 +226,11 @@ def validate_report(tiles: DataFrame, meta: DataFrame,
     rows += [
         (name, ok, "" if ok else CHECK_MSGS[name]) for name, ok in checks
     ]
-    return spark.createDataFrame(rows, "check_name string, ok boolean, detail string")
+    # built from pandas: a JVM local relation, no Python worker per action
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["check_name", "ok", "detail"]),
+        "check_name string, ok boolean, detail string",
+    )
 
 
 def check_write_order(df_read_back: DataFrame) -> bool:

@@ -35,20 +35,19 @@ from rio_cogeo_spark.operators.join import (
 def zonal_mode(
     pages: DataFrame,
     areas: List[AdminArea],
-    class_col: str = "lang",
     zoom: int = PREFILTER_ZOOM,
 ) -> DataFrame:
     """Per-zone majority class: ``(admin_id, mode_class, mode_count,
     zone_count, mode_ppm)`` for every zone containing at least one
     page."""
     hits = point_in_polygon(pages, areas, zoom, how="inner")
-    counts = hits.groupBy("admin_id", class_col).agg(
+    counts = hits.groupBy("admin_id", "lang").agg(
         F.count(F.lit(1)).alias("n")
     )
     picked = counts.groupBy("admin_id").agg(
         F.min(
             F.struct(
-                (-F.col("n")).alias("neg_n"), F.col(class_col).alias("cls")
+                (-F.col("n")).alias("neg_n"), F.col("lang").alias("cls")
             )
         ).alias("m"),
         F.sum("n").alias("zone_count"),
@@ -62,13 +61,7 @@ def zonal_mode(
     )
 
 
-def nearest_zone(
-    pages: DataFrame,
-    areas: List[AdminArea],
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def nearest_zone(pages: DataFrame, areas: List[AdminArea]) -> DataFrame:
     """Nearest-facility assignment — every page labeled with its nearest
     zone CENTER by squared lon/lat euclid (the kNN distance contract,
     pure arithmetic — oracle-exact), ties to the smallest admin_id: the
@@ -81,17 +74,17 @@ def nearest_zone(
     ``transform`` — a zero-shuffle, zero-join projection over the
     corpus scan (the domain-blocklist literal-path discipline).
 
-    Output ``(id_col, admin_id, dist2)`` with dist2 rounded at 9dp.
+    Output ``(doc_id, admin_id, dist2)`` with dist2 rounded at 9dp.
     """
     if not areas:
         raise ValueError("areas must be non-empty")
     cands = F.array(*[
         F.struct(
             (
-                (F.col(lat_col) - F.lit(sum(a.ring_lat[:4]) / 4.0))
-                * (F.col(lat_col) - F.lit(sum(a.ring_lat[:4]) / 4.0))
-                + (F.col(lon_col) - F.lit(sum(a.ring_lon[:4]) / 4.0))
-                * (F.col(lon_col) - F.lit(sum(a.ring_lon[:4]) / 4.0))
+                (F.col("lat") - F.lit(sum(a.ring_lat[:4]) / 4.0))
+                * (F.col("lat") - F.lit(sum(a.ring_lat[:4]) / 4.0))
+                + (F.col("lon") - F.lit(sum(a.ring_lon[:4]) / 4.0))
+                * (F.col("lon") - F.lit(sum(a.ring_lon[:4]) / 4.0))
             ).alias("d2"),
             F.lit(a.admin_id).alias("admin_id"),
         )
@@ -99,7 +92,7 @@ def nearest_zone(
     ])
     best = F.array_min(cands)
     return pages.select(
-        F.col(id_col),
+        F.col("doc_id"),
         best["admin_id"].alias("admin_id"),
         F.round(best["d2"], 9).alias("dist2"),
     )

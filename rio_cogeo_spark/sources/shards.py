@@ -41,14 +41,12 @@ def write_training_shards(
     df: DataFrame,
     root: str,
     n_shards: int = 16,
-    id_col: str = "doc_id",
-    token_col: str = "n_tokens",
 ) -> dict:
     """Write ``df`` as ``n_shards`` hash-sharded parquet directories
     with an atomically-committed manifest.
 
     The manifest records per-shard ``rows`` and ``tokens`` (summed from
-    ``token_col`` when present, else null) plus grand totals — the
+    ``n_tokens`` when present, else null) plus grand totals — the
     numbers a trainer needs to size epochs/steps without scanning data.
     Returns the manifest dict. Temp-dir + rename + manifest-last: a
     crashed write leaves either nothing or a ``_tmp`` dir, never a
@@ -58,7 +56,7 @@ def write_training_shards(
         raise ValueError(f"n_shards must be >= 1, got {n_shards}")
     spark = df.sparkSession
     tmp = root.rstrip("/") + "_tmp"
-    sharded = df.withColumn("shard", shard_assign(F.col(id_col), n_shards))
+    sharded = df.withColumn("shard", shard_assign(F.col("doc_id"), n_shards))
     (
         sharded.repartition(int(n_shards), "shard")
         .write.mode("overwrite")
@@ -66,10 +64,10 @@ def write_training_shards(
         .parquet(tmp)
     )
     back = spark.read.parquet(tmp)
-    has_tok = token_col in df.columns
+    has_tok = "n_tokens" in df.columns
     aggs = [F.count(F.lit(1)).alias("rows")]
     if has_tok:
-        aggs.append(F.sum(token_col).alias("tokens"))
+        aggs.append(F.sum("n_tokens").alias("tokens"))
     stats = {
         int(r["shard"]): r
         for r in back.groupBy("shard").agg(*aggs).collect()
@@ -91,7 +89,7 @@ def write_training_shards(
     os.rename(tmp, root)
     manifest = {
         "n_shards": n_shards,
-        "id_col": id_col,
+        "id_col": "doc_id",
         "rows": sum(s["rows"] for s in shards),
         "tokens": (
             sum(s["tokens"] or 0 for s in shards) if has_tok else None

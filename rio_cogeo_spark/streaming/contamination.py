@@ -29,9 +29,6 @@ def contamination_stream(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
     watermark: str = "2 hours",
     window: str = "1 hour",
 ) -> DataFrame:
@@ -46,25 +43,25 @@ def contamination_stream(
     """
     bench_sh = (
         benchmark.select(
-            F.explode(shingles_col(F.col(text_col), n)).alias("shingle")
+            F.explode(shingles_col(F.col("text"), n)).alias("shingle")
         )
         .distinct()
     )
     corpus_sh = (
-        corpus.withWatermark(ts_col, watermark)
+        corpus.withWatermark("ts", watermark)
         .select(
-            F.col(id_col),
-            F.col(ts_col),
-            F.explode(shingles_col(F.col(text_col), n)).alias("shingle"),
+            F.col("doc_id"),
+            F.col("ts"),
+            F.explode(shingles_col(F.col("text"), n)).alias("shingle"),
         )
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle", "inner")
-        .groupBy(F.window(ts_col, window).alias("w"), id_col)
+        .groupBy(F.window("ts", window).alias("w"), "doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_sec"),
-            id_col,
+            "doc_id",
             "n_hits",
         )
     )
@@ -74,31 +71,28 @@ def contamination_batch_windowed(
     corpus: DataFrame,
     benchmark: DataFrame,
     n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
     window: str = "1 hour",
 ) -> DataFrame:
     """Batch twin of :func:`contamination_stream` (same plan minus the
     watermark) — the streaming==batch assertion target."""
     bench_sh = (
         benchmark.select(
-            F.explode(shingles_col(F.col(text_col), n)).alias("shingle")
+            F.explode(shingles_col(F.col("text"), n)).alias("shingle")
         )
         .distinct()
     )
     corpus_sh = corpus.select(
-        F.col(id_col),
-        F.col(ts_col),
-        F.explode(shingles_col(F.col(text_col), n)).alias("shingle"),
+        F.col("doc_id"),
+        F.col("ts"),
+        F.explode(shingles_col(F.col("text"), n)).alias("shingle"),
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle", "inner")
-        .groupBy(F.window(ts_col, window).alias("w"), id_col)
+        .groupBy(F.window("ts", window).alias("w"), "doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_sec"),
-            id_col,
+            "doc_id",
             "n_hits",
         )
     )

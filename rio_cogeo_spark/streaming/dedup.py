@@ -21,12 +21,7 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import fingerprint
 
 
-def dedup_stream(
-    docs: DataFrame,
-    ts_col: str = "ts",
-    delay: str = "1 hour",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_stream(docs: DataFrame, delay: str = "1 hour") -> DataFrame:
     """First-seen exact dedup of a streaming DataFrame by content
     fingerprint (md5 of the normalized text — the same fingerprint the
     batch ``exact_dedup`` uses, so a batch backfill and the stream agree
@@ -37,7 +32,7 @@ def dedup_stream(
     ingest rate), not stream length.
     """
     return (
-        docs.withColumn("fp", fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, delay)
+        docs.withColumn("fp", fingerprint(F.col("text")))
+        .withWatermark("ts", delay)
         .dropDuplicatesWithinWatermark(["fp"])
     )

@@ -23,30 +23,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def centroid_stream(
-    vecs: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_stream(vecs: DataFrame) -> DataFrame:
     """Continuously-maintained per-group centroid table:
-    ``(group_col, dim, n_vecs, mean_val)`` with ``dim`` 1-based (the
+    ``(label, dim, n_vecs, mean_val)`` with ``dim`` 1-based (the
     pool_embeddings shape, so the drift join consumes either)."""
     ex = vecs.select(
-        F.col(group_col),
-        F.posexplode(F.col(vec_col)).alias("dim0", "val0"),
+        F.col("label"),
+        F.posexplode(F.col("embedding")).alias("dim0", "val0"),
     ).select(
-        group_col,
+        "label",
         (F.col("dim0") + 1).alias("dim"),
         F.col("val0").cast("double").alias("val"),
     )
     return (
-        ex.groupBy(group_col, "dim")
+        ex.groupBy("label", "dim")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.sum("val").alias("_tot"),
         )
         .select(
-            group_col, "dim", "n_vecs",
+            "label", "dim", "n_vecs",
             (F.col("_tot") / F.col("n_vecs")).alias("mean_val"),
         )
     )

@@ -140,36 +140,30 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """First-order Markov transition table of per-user event types —
     which event follows which (the navigation-model input for crawl
     scheduling and session analysis). One row per observed
     ``(prev_type, curr_type)`` pair:
 
     * ``cnt`` — exact transition count over consecutive per-user events
-      (ordered by ``ts_col`` with ``id_col`` tie-break, so the sequence
+      (ordered by ``ts`` with ``event_id`` tie-break, so the sequence
       is deterministic under equal timestamps);
     * ``p_ppm = (cnt · 10^6) div row_total`` — the row-stochastic
       transition probability in exact ppm (integer division: NO float
       anywhere, the table hashes identically cross-engine).
 
-    Scale design: ONE exchange of the event log by ``user_col`` (the
+    Scale design: ONE exchange of the event log by ``user_id`` (the
     lag window's partitioning — the irreducible movement for any
     per-user sequence op), then a map-side-combinable pair fold; the
     row-normalizing window runs on the TYPE×TYPE table (bounded by the
     event vocabulary, never the log). No per-row Python.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         events.select(
-            F.lag(type_col).over(w).alias("prev_type"),
-            F.col(type_col).alias("curr_type"),
+            F.lag("event_type").over(w).alias("prev_type"),
+            F.col("event_type").alias("curr_type"),
         )
         .filter(F.col("prev_type").isNotNull())
     )

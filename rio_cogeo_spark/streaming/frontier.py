@@ -21,11 +21,7 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.operators.translate import assign_tiles
 
 
-def frontier_stream(
-    pages: DataFrame,
-    zoom: int,
-    ts_col: str = "ts_sec",
-) -> DataFrame:
+def frontier_stream(pages: DataFrame, zoom: int) -> DataFrame:
     """First-seen time per grid cell over a streaming pages frame:
     ``(tile_x, tile_y, first_ts)``, update output mode (each micro-batch
     emits only cells whose min improved; the last emission per cell is
@@ -34,18 +30,14 @@ def frontier_stream(
     cell."""
     assigned = assign_tiles(pages, zoom)
     return assigned.groupBy("tile_x", "tile_y").agg(
-        F.min(F.col(ts_col).cast("long")).alias("first_ts")
+        F.min(F.col("ts_sec").cast("long")).alias("first_ts")
     )
 
 
-def frontier_batch(
-    pages: DataFrame,
-    zoom: int,
-    ts_col: str = "ts_sec",
-) -> DataFrame:
+def frontier_batch(pages: DataFrame, zoom: int) -> DataFrame:
     """Batch twin of :func:`frontier_stream` — identical plan on a
     static frame."""
     assigned = assign_tiles(pages, zoom)
     return assigned.groupBy("tile_x", "tile_y").agg(
-        F.min(F.col(ts_col).cast("long")).alias("first_ts")
+        F.min(F.col("ts_sec").cast("long")).alias("first_ts")
     )

@@ -27,18 +27,13 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import fingerprint, host_col
 
 
-def mirror_stream(
-    pages: DataFrame,
-    min_hosts: int = 2,
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def mirror_stream(pages: DataFrame, min_hosts: int = 2) -> DataFrame:
     """Continuously-maintained mirror registry: one row per content
     fingerprint currently seen on ≥ ``min_hosts`` distinct hosts, with
     the live distinct-host and total-copy counts."""
     tagged = pages.select(
-        host_col(F.col(url_col)).alias("host"),
-        fingerprint(F.col(text_col)).alias("fp"),
+        host_col(F.col("url")).alias("host"),
+        fingerprint(F.col("text")).alias("fp"),
     )
     return (
         tagged.groupBy("fp")

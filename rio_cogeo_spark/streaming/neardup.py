@@ -47,7 +47,7 @@ _OUT_SCHEMA = "doc_a long, doc_b long, hamming int"
 _STATE_SCHEMA = "ids array<long>, hashes array<long>, ts array<long>"
 
 
-def simhash_banded(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_banded(docs: DataFrame) -> DataFrame:
     """(doc_id, ts, simhash) → exploded (doc_id, ts, simhash, band,
     bucket) — the batch operator's banding projection, reused verbatim
     for streams (stateless, JVM-side)."""
@@ -74,12 +74,11 @@ def neardup_pairs_stream(
     docs: DataFrame,
     max_hamming: int = 3,
     horizon_sec: int = 3600,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Streaming simhash near-dup candidate pairs.
 
     Input: a streaming DataFrame with (doc_id long, text string,
-    ``ts_col`` timestamp). Output (append): ``(doc_a, doc_b, hamming)``
+    ts timestamp). Output (append): ``(doc_a, doc_b, hamming)``
     with hamming <= ``max_hamming`` and doc_a the earlier-arriving doc
     (ties by doc_id). Pairs may repeat across colliding bands —
     distinct-ify downstream (stateless).
@@ -92,12 +91,12 @@ def neardup_pairs_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     banded = (
-        simhash_banded(docs, text_col="text")
-        .withWatermark(ts_col, f"{int(horizon_sec)} seconds")
-        .withColumn("ts_sec", F.unix_timestamp(F.col(ts_col)).cast("long"))
+        simhash_banded(docs)
+        .withWatermark("ts", f"{int(horizon_sec)} seconds")
+        .withColumn("ts_sec", F.unix_timestamp(F.col("ts")).cast("long"))
         # the watermarked event-time column must survive into the stateful
         # operator's child plan, or EventTimeTimeout is rejected
-        .select("band", "bucket", "doc_id", "simhash", "ts_sec", ts_col)
+        .select("band", "bucket", "doc_id", "simhash", "ts_sec", "ts")
     )
 
     def fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):

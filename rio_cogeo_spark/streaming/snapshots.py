@@ -51,16 +51,10 @@ _STATE_SCHEMA = (
 )
 
 
-def snapshot_stats_stream(
-    pages: DataFrame,
-    delay_sec: int = 60,
-    ts_col: str = "ts",
-    url_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def snapshot_stats_stream(pages: DataFrame, delay_sec: int = 60) -> DataFrame:
     """Streaming per-canonical-URL change stats. Input: a streaming
-    DataFrame with (doc_id long, ``url_col`` string, ``text_col``
-    string, ``ts_col`` timestamp). Emits the updated
+    DataFrame with (doc_id long, url string, text string, ts
+    timestamp). Emits the updated
     ``(canon_url, n_snapshots, n_changes, first_ts, last_ts,
     last_change_ts)`` row whenever the event-time fold advances;
     semantics match the batch ``snapshot_change_stats`` over every
@@ -68,13 +62,13 @@ def snapshot_stats_stream(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     prepared = (
-        pages.withWatermark(ts_col, f"{int(delay_sec)} seconds")
+        pages.withWatermark("ts", f"{int(delay_sec)} seconds")
         .select(
-            canonical_url(F.col(url_col)).alias("canon_url"),
+            canonical_url(F.col("url")).alias("canon_url"),
             "doc_id",
-            F.unix_timestamp(F.col(ts_col)).cast("long").alias("ts_sec"),
-            fingerprint(F.col(text_col)).alias("fp"),
-            F.col(ts_col),
+            F.unix_timestamp(F.col("ts")).cast("long").alias("ts_sec"),
+            fingerprint(F.col("text")).alias("fp"),
+            F.col("ts"),
         )
     )
 

@@ -28,17 +28,15 @@ def trending_counts_stream(
     docs: DataFrame,
     window_sec: int = 3600,
     watermark_sec: int = 3600,
-    ts_col: str = "ts_sec",
-    text_col: str = "text",
 ) -> DataFrame:
     """Watermarked per-window term counts ``(window_start, term, n)``.
     ``window_start`` matches the batch operator's exact integer
     bucketing (epoch seconds floor-divided by ``window_sec``)."""
     with_ts = docs.withColumn(
-        "__evt", F.col(ts_col).cast("timestamp")
+        "__evt", F.col("ts_sec").cast("timestamp")
     ).withWatermark("__evt", f"{int(watermark_sec)} seconds")
     tok = with_ts.select(
-        "__evt", F.explode(tokens_col(F.col(text_col))).alias("term")
+        "__evt", F.explode(tokens_col(F.col("text"))).alias("term")
     )
     win = F.window("__evt", f"{int(window_sec)} seconds")
     return (

@@ -24,9 +24,7 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import canonical_url
 
 
-def url_latest_stream(
-    pages: DataFrame, url_col: str = "url", ts_col: str = "ts_sec"
-) -> DataFrame:
+def url_latest_stream(pages: DataFrame) -> DataFrame:
     """Continuously-maintained keep-latest per canonical URL.
 
     Same canonicalization and (ts, doc_id) ordering as the batch
@@ -34,16 +32,16 @@ def url_latest_stream(
     the identical table. Returns ``(canon_url, doc_id, ts, n_snapshots)``
     with ``n_snapshots`` counting every snapshot observed for the URL
     (monotonically increasing across updates)."""
-    ordk = F.struct(F.col(ts_col), F.col("doc_id"))
+    ordk = F.struct(F.col("ts_sec"), F.col("doc_id"))
     return (
         pages.select(
-            canonical_url(F.col(url_col)).alias("canon_url"),
+            canonical_url(F.col("url")).alias("canon_url"),
             "doc_id",
-            F.col(ts_col),
+            F.col("ts_sec"),
         )
         .groupBy("canon_url")
         .agg(
-            F.max_by(F.struct(F.col("doc_id"), F.col(ts_col)), ordk).alias(
+            F.max_by(F.struct(F.col("doc_id"), F.col("ts_sec")), ordk).alias(
                 "kept"
             ),
             F.count(F.lit(1)).alias("n_snapshots"),
@@ -51,7 +49,7 @@ def url_latest_stream(
         .select(
             "canon_url",
             F.col("kept.doc_id").alias("doc_id"),
-            F.col(f"kept.{ts_col}").alias(ts_col),
+            F.col("kept.ts_sec").alias("ts_sec"),
             "n_snapshots",
         )
     )

@@ -348,9 +348,7 @@ def main() -> None:
             # graph derives mod 9973 so the node space scales with the
             # corpus, like the pagerank entry above.
             "corpus_info": lambda: corpus_info(docs).count(),
-            "quartiles": lambda: group_quantiles(
-                docs, value_col="n_chars", group_col="lang"
-            ).count(),
+            "quartiles": lambda: group_quantiles(docs).count(),
             "novelty": lambda: DD.novelty_by_day(
                 paged.select("ts_sec", "text")
             ).count(),

@@ -16,9 +16,7 @@ def test_round_robin_order(spark):
         (1, "de", 10), (2, "de", 30), (3, "de", 20),
         (4, "en", 5), (5, "en", 50),
     ]
-    out = curriculum_interleave(
-        _docs(spark, rows), group_col="lang", score_col="score"
-    )
+    out = curriculum_interleave(_docs(spark, rows), score_col="score")
     ordered = [r.doc_id for r in out.orderBy("curriculum_key").collect()]
     # round 1: best de (2, score 30), best en (5, score 50);
     # round 2: de 3, en 4; round 3: de 1 (en exhausted)
@@ -28,7 +26,7 @@ def test_round_robin_order(spark):
 def test_keys_unique_and_groups_alternate(spark):
     rows = [(i, ["a", "b", "c"][i % 3], i * 7 % 13) for i in range(60)]
     out = curriculum_interleave(
-        _docs(spark, rows), group_col="lang", score_col="score"
+        _docs(spark, rows), score_col="score"
     ).orderBy("curriculum_key").collect()
     keys = [r.curriculum_key for r in out]
     assert len(set(keys)) == len(keys)
@@ -40,6 +38,6 @@ def test_keys_unique_and_groups_alternate(spark):
 
 def test_score_none_ranks_by_id(spark):
     rows = [(9, "x", 0), (3, "x", 0)]
-    out = curriculum_interleave(_docs(spark, rows), group_col="lang")
+    out = curriculum_interleave(_docs(spark, rows))
     got = {r.doc_id: r.rank_in_group for r in out.collect()}
     assert got == {3: 1, 9: 2}

@@ -255,7 +255,7 @@ def test_streaming_dedup_first_seen(spark, tmp_path):
 
     stream = spark.readStream.schema(df.schema).parquet(src)
     got = run_stream_to_memory(
-        dedup_stream(stream, ts_col="ts"), "dedup_stream_test",
+        dedup_stream(stream), "dedup_stream_test",
         output_mode="append",
     )
     out = got.collect()
@@ -697,7 +697,7 @@ def test_host_concentration_goldens(spark):
         [(h,) for h in ["a", "a", "b", "b", "c", "c", "d", "d"]],
         "host string",
     )
-    r = host_concentration(eq, "host").collect()[0]
+    r = host_concentration(eq).collect()[0]
     assert (r.n_keys, r.n_rows) == (4, 8)
     assert r.gini_ppm == 0
     assert r.hhi_ppm == 250_000
@@ -707,7 +707,7 @@ def test_host_concentration_goldens(spark):
     one = spark.createDataFrame(
         [("a",)] * 9 + [("b",), ("c",), ("d",)], "host string"
     )
-    r2 = host_concentration(one, "host").collect()[0]
+    r2 = host_concentration(one).collect()[0]
     # counts [1,1,1,9], k=4, n=12: Σ i·c_i = 1+2+3+36 = 42,
     # gini = (2*42 - 5*12)/(4*12) = 24/48 = 0.5
     assert r2.gini_ppm == ((2 * 42 - 60) * 1_000_000) // 48
@@ -765,7 +765,7 @@ def test_zipf_slope_perfect_power_law(spark):
 
     text = " ".join(["a"] * 24 + ["b"] * 12 + ["c"] * 8 + ["d"] * 6)
     docs = spark.createDataFrame([(text,)], "text string")
-    r = zipf_slope(docs, "text", top_k=4).collect()[0]
+    r = zipf_slope(docs, top_k=4).collect()[0]
     assert r.k == 4 and r.n_tokens == 50
     # e6-pinned log coordinates: slope lands within 1 mil of -1000
     assert -1001 <= r.slope_mil <= -999
@@ -881,7 +881,7 @@ def test_benford_goldens(spark):
     # hosts with per-key counts 1, 12, 25, 9 -> first digits 1,1,2,9
     rows = ([("a",)] * 1 + [("b",)] * 12 + [("c",)] * 25 + [("d",)] * 9)
     df = spark.createDataFrame(rows, "host string")
-    got = {r.digit: r for r in benford(df, "host").collect()}
+    got = {r.digit: r for r in benford(df).collect()}
     assert set(got) == set(range(1, 10))  # zero-observed digits present
     assert got[1].n_obs == 2 and got[1].obs_ppm == 500_000
     assert got[2].n_obs == 1 and got[2].obs_ppm == 250_000
@@ -897,7 +897,7 @@ def test_benford_goldens(spark):
         )
     # live SQL twin agrees
     vals = ", ".join(f"('{h}')" for (h,) in rows)
-    sql = benford_sql(f"SELECT host FROM (VALUES {vals}) AS v(host)", "host")
+    sql = benford_sql(f"SELECT host FROM (VALUES {vals}) AS v(host)")
     want = {int(r[0]): r for r in duckdb.sql(sql).fetchall()}
     for d in range(1, 10):
         assert (want[d][1], want[d][2], want[d][4]) == (
@@ -1045,7 +1045,7 @@ def test_group_boxplot_goldens(spark):
     rows = [("a", v) for v in [1, 2, 3, 4, 5, 6, 7, 8, 100]]
     rows += [("b", v) for v in [10, 10, 10]]
     df = spark.createDataFrame(rows, "lang string, n_chars long")
-    out = {r.lang: r for r in group_boxplot(df, "n_chars", "lang").collect()}
+    out = {r.lang: r for r in group_boxplot(df).collect()}
     a = out["a"]
     # n=9: q1 at cum>=ceil(9/4)=3 -> 3; med cum>=ceil(4.5)=5 -> 5;
     # q3 at cum>=ceil(27/4)=7 -> 7
@@ -1064,8 +1064,8 @@ def test_group_boxplot_p50_matches_group_median(spark):
     rows = [("x", (i * 7) % 23) for i in range(40)]
     rows += [("y", (i * 3) % 11) for i in range(25)]
     df = spark.createDataFrame(rows, "lang string, n_chars long")
-    med = {r.lang: r.median for r in group_median(df, "n_chars", "lang").collect()}
-    box = {r.lang: r.med for r in group_boxplot(df, "n_chars", "lang").collect()}
+    med = {r.lang: r.median for r in group_median(df, "lang").collect()}
+    box = {r.lang: r.med for r in group_boxplot(df).collect()}
     assert med == box
 
 
@@ -1096,7 +1096,7 @@ def test_kruskal_two_group_matches_scipy_formula(spark):
 
     rows = [("a", v) for v in [1, 2, 3]] + [("b", v) for v in [4, 5, 6]]
     df = spark.createDataFrame(rows, "lang string, n_chars long")
-    r = kruskal_wallis(df, "n_chars", "lang").collect()[0]
+    r = kruskal_wallis(df).collect()[0]
     assert (r.k, r.n, r.t_ties) == (2, 6, 0)
     assert r.h_mil == 3857
     assert r.hc_mil == 3857
@@ -1109,7 +1109,7 @@ def test_kruskal_identical_groups_h_zero(spark):
 
     rows = [(g, v) for g in ("a", "b", "c") for v in (10, 20, 30)]
     df = spark.createDataFrame(rows, "lang string, n_chars long")
-    r = kruskal_wallis(df, "n_chars", "lang").collect()[0]
+    r = kruskal_wallis(df).collect()[0]
     assert r.k == 3 and r.n == 9
     assert r.t_ties == 3 * (27 - 3)  # three triple-ties
     assert -1 <= r.h_mil <= 0

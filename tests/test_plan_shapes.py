@@ -295,7 +295,7 @@ ROWS = [
         "BroadcastHashJoin Inner": 1, "Exchange": 1, "ObjectHashAggregate": 2},
         lambda c: sampling.filter_by_group_quantile(
             c.docs.withColumn("n_chars", F.length("text")),
-            q=0.25, value_col="n_chars", group_col="lang")),
+            q=0.25)),
     Row("host_pagerank", {"BroadcastExchange": 9, "BroadcastHashJoin Inner": 6,
         "BroadcastHashJoin LeftOuter": 3, "Exchange": 24, "HashAggregate": 48,
         "Union": 4, "partial_sum": 3},
@@ -311,7 +311,7 @@ ROWS = [
         ).select("doc_id", U.canonical_url(F.col("url")).alias("curl"))),
     Row("readability_stats", {r"\* Project": 1},
         lambda c: c.docs.select("doc_id", *(
-            v.alias(k) for k, v in TX.readability_stats("text").items()))),
+            v.alias(k) for k, v in TX.readability_stats().items()))),
     Row("bigram_lm", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
         "Exchange": 7, "Generate": 3, "HashAggregate": 14, "partial_count": 3},
         lambda c: rarity.bigram_lm(c.docs)),
@@ -344,7 +344,7 @@ ROWS = [
         "Window": 1, "partial_count": 1},
         lambda c: RP.group_median(
             c.docs.withColumn("n_chars", F.length("text")),
-            value_col="n_chars", group_col="lang")),
+            group_col="lang")),
     Row("host_distance", {"BroadcastExchange": 1, "BroadcastHashJoin Inner": 1,
         "Exchange": 2, "HashAggregate": 4, "Union": 1, "partial_min": 1},
         lambda c: G.host_distance(
@@ -483,7 +483,7 @@ ROWS = [
             c.rng(500, "id % 29 AS tile_x", "(id * 7) % 29 AS tile_y", "id % 4 AS cls"), 8)),
     Row("curriculum_interleave", {"BroadcastExchange": 1, "BroadcastHashJoin Inner": 1,
         "Exchange": 3, "HashAggregate": 2, "Window": 2},
-        lambda c: sampling.curriculum_interleave(c.docs, group_col="lang", score_col="n_chars")),
+        lambda c: sampling.curriculum_interleave(c.docs, score_col="n_chars")),
     Row("jaccard_threshold_curve", {"BroadcastExchange": 2,
         "BroadcastHashJoin Inner": 2, "Exchange": 10, "Generate": 3, "HashAggregate": 4,
         "ObjectHashAggregate": 2, "Window": 1, "partial_count": 2},
@@ -539,7 +539,7 @@ ROWS = [
     Row("host_concentration", {"Exchange": 2, "HashAggregate": 4, "Window": 1,
         r"partial_count[\s\S]*\n\(\d+\) Window": 1},
         lambda c: RP.host_concentration(
-            c.rng(5000, "cast(id % 97 as string) AS host"), "host")),
+            c.rng(5000, "cast(id % 97 as string) AS host"))),
     Row("chi_square", {"BroadcastExchange": 4, "BroadcastHashJoin LeftOuter": 1,
         "BroadcastNestedLoopJoin Cross": 3, "Exchange": 7, "Expand": 1,
         "HashAggregate": 14},
@@ -548,7 +548,7 @@ ROWS = [
     Row("zipf_slope", {"Exchange": 1, "Generate": 1, "HashAggregate": 4,
         "TakeOrderedAndProject": 1, "Window": 1},
         lambda c: RP.zipf_slope(c.rng(
-            300, "concat('w', cast(id % 37 as string), ' x y') AS text"), "text", top_k=20)),
+            300, "concat('w', cast(id % 37 as string), ' x y') AS text"), top_k=20)),
     Row("ks_statistic", {"BroadcastExchange": 1, "BroadcastNestedLoopJoin Cross": 1,
         "Exchange": 4, "HashAggregate": 8, "Window": 2},
         lambda c: RP.ks_statistic(
@@ -597,7 +597,7 @@ ROWS = [
         lambda c: FC.sieve_components(c.a8_in, 5, rounds=3, min_size=2)),
     Row("benford", {"BroadcastExchange": 2, "BroadcastHashJoin LeftOuter": 1,
         "BroadcastNestedLoopJoin Cross": 1, "Exchange": 2, "HashAggregate": 4},
-        lambda c: RP.benford(c.rng(2000, "concat('h', cast(id % 97 as string)) AS host"), "host")),
+        lambda c: RP.benford(c.rng(2000, "concat('h', cast(id % 97 as string)) AS host"))),
     Row("mann_whitney", {"Exchange": 2, "HashAggregate": 4, "Window": 1},
         lambda c: RP.mann_whitney(c.rng(
             2000, "CASE WHEN id % 3 = 0 THEN 'en' ELSE 'de' END AS lang", "(id * 7) % 200 AS n"),
@@ -640,7 +640,7 @@ ROWS = [
         lambda c: GU.color_relief(c.cr_in, [(1, "lo"), (10, "mid"), (100, "hi")])),
     Row("group_boxplot", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
         "Exchange": 3, "HashAggregate": 6, "Window": 4, "Scan ExistingRDD": 6},
-        lambda c: RP.group_boxplot(c.bx_in, "n_chars", "lang")),
+        lambda c: RP.group_boxplot(c.bx_in)),
     Row("equalize", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 1,
         "BroadcastNestedLoopJoin Cross": 1, "Exchange": 4, "HashAggregate": 6,
         "Window": 2, "Scan ExistingRDD": 6},
@@ -670,7 +670,7 @@ ROWS = [
     Row("kruskal_wallis", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 1,
         "BroadcastNestedLoopJoin Cross": 1, "Exchange": 6, "HashAggregate": 10,
         "Window": 1, "Scan ExistingRDD": 6},
-        lambda c: RP.kruskal_wallis(c.bx_in, "n_chars", "lang")),
+        lambda c: RP.kruskal_wallis(c.bx_in)),
     Row("cusum_days", {"BroadcastExchange": 1, "BroadcastNestedLoopJoin Cross": 1,
         "Exchange": 2, "HashAggregate": 2, "Window": 2, "Scan ExistingRDD": 4},
         lambda c: RP.cusum_days(c.rng(5000, "id * 1728 AS ts_sec"))),

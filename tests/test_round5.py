@@ -1817,7 +1817,7 @@ def test_readability_counts_and_score(spark):
         [(1, "The cat sat. The cat ran! Did it?"), (2, ""), (3, "xyz")],
         "doc_id long, text string",
     )
-    rs = readability_stats("text")
+    rs = readability_stats()
     out = {
         r.doc_id: r
         for r in df.select(
@@ -1855,7 +1855,7 @@ def test_readability_matches_duckdb_twin(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    rs = readability_stats("text")
+    rs = readability_stats()
     got = sorted(
         tuple(r)
         for r in df.select(

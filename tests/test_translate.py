@@ -5,6 +5,7 @@ for the reference)."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from test_plan_shapes import plan_of
 
 from rio_cogeo_spark import grid
 from rio_cogeo_spark.operators.info import cog_info
@@ -13,7 +14,11 @@ from rio_cogeo_spark.operators.translate import (
     tiles_meta,
     write_tiles,
 )
-from rio_cogeo_spark.operators.validate import check_write_order, cog_validate
+from rio_cogeo_spark.operators.validate import (
+    check_write_order,
+    cog_validate,
+    validate_report,
+)
 from rio_cogeo_spark.synth import synth_pages
 
 ZOOM = 8
@@ -109,6 +114,13 @@ def test_validate_and_info(pyramid):
     assert info.GEO.MinZoom == plan.min_zoom
     assert info.Profile.Bands == 3
     assert [i.Decimation for i in info.IFD] == [1] + plan.decimations
+
+    # both small driver-built tables are JVM local relations: no action
+    # on them pipes rows through a Python worker
+    report = validate_report(tiles, meta, {"format": "parquet"})
+    assert report.filter(~F.col("ok")).count() == 0
+    for df in (meta, report):
+        assert "Scan ExistingRDD" not in plan_of(df)
 
 
 def test_validate_catches_bad_structures(spark, pyramid):
