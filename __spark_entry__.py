@@ -283,7 +283,7 @@ def q_mirror_docs(spark, sf_dir):
         ).alias("url"),
         "text",
     )
-    return DD.mirror_docs(pages.unionByName(mirrored), min_hosts=2)
+    return DD.mirror_docs(pages.unionByName(mirrored))
 
 
 def q_snapshot_para_diff(spark, sf_dir):
@@ -366,7 +366,7 @@ def q_boilerplate_cut(spark, sf_dir):
             F.lit("FOOTER "), k,
         ).alias("text"),
     )
-    return boilerplate_lines(pages2, min_frac_ppm=500_000, min_docs=2)
+    return boilerplate_lines(pages2)
 
 
 def q_domain_filter(spark, sf_dir):
@@ -451,7 +451,7 @@ def q_simhash_pairs(spark, sf_dir):
     # so the full simhash (votes → bits → banding → hamming<=3) is
     # oracle-paired; d<=3 output is exact by the 4x15-bit pigeonhole bound.
     return DD.simhash_pairs(
-        _docs_with_dups(spark, sf_dir), max_hamming=3, hasher="md5_60"
+        _docs_with_dups(spark, sf_dir), hasher="md5_60"
     )
 
 
@@ -515,7 +515,7 @@ def q_ann_pq(spark, sf_dir):
     table. Raw BIGINT scores, no rounding crutch anywhere."""
     from rio_cogeo_spark.operators.quantize import ann_pq_topk
 
-    return ann_pq_topk(_embeddings(spark, sf_dir), m=4, k=10, n_queries=5)
+    return ann_pq_topk(_embeddings(spark, sf_dir), m=4)
 
 
 def q_jl_project(spark, sf_dir):
@@ -531,7 +531,7 @@ def q_jl_project(spark, sf_dir):
 def _jl_project_oracle() -> str:
     from rio_cogeo_spark.operators.similarity import random_projection_sql
 
-    return random_projection_sql("embeddings", in_dim=64, out_dim=16)
+    return random_projection_sql()
 
 
 def q_embed_drift(spark, sf_dir):
@@ -565,7 +565,7 @@ def q_ann_ivfpq(spark, sf_dir):
     from rio_cogeo_spark.operators.quantize import ann_ivfpq_topk
 
     return ann_ivfpq_topk(
-        _embeddings(spark, sf_dir), m=4, k=10, n_queries=5, n_probe=10
+        _embeddings(spark, sf_dir), n_probe=10
     )
 
 
@@ -687,7 +687,7 @@ def _volume_anomaly_oracle() -> str:
          1735689600 + 40 * 86400 + doc_id % 3600
   FROM pages WHERE doc_id < 300) va_in"""
     inner = volume_anomaly_sql(
-        "SELECT doc_id, ts_sec FROM va_all", window_days=7
+        "SELECT doc_id, ts_sec FROM va_all"
     ).split("WITH ", 1)[1]
     return f"""{_P}
 , va_all AS ({base}),
@@ -770,7 +770,7 @@ def _zipf_oracle() -> str:
     from rio_cogeo_spark.operators.report import zipf_slope_sql
 
     return zipf_slope_sql(
-        "SELECT text FROM documents", TOKENS_SQL, top_k=500
+        "SELECT text FROM documents", TOKENS_SQL
     )
 
 
@@ -835,7 +835,7 @@ def _heaps_oracle() -> str:
     from rio_cogeo_spark.functions.text import TOKENS_SQL
     from rio_cogeo_spark.operators.report import heaps_fit_sql
 
-    return heaps_fit_sql("documents", TOKENS_SQL, n_points=8)
+    return heaps_fit_sql("documents", TOKENS_SQL)
 
 
 def q_entropy(spark, sf_dir):
@@ -1070,7 +1070,7 @@ def q_containment(spark, sf_dir):
         ).alias("text"),
     )
     both = docs.select("doc_id", "text").unionByName(excerpt)
-    return DD.containment_pairs(both, threshold=0.8, n=3, df_cap=None)
+    return DD.containment_pairs(both, threshold=0.8, df_cap=None)
 
 
 def q_dedup_keep_best(spark, sf_dir):
@@ -1166,7 +1166,7 @@ def q_jaccard_curve(spark, sf_dir):
         "doc_id", F.col("doc_id") + 100000
     )
     return DD.jaccard_threshold_curve(
-        docs.unionByName(dups), n=3, step_ppm=10_000, df_cap=None
+        docs.unionByName(dups), step_ppm=10_000, df_cap=None
     )
 
 
@@ -1209,7 +1209,7 @@ cq_p2 AS (SELECT doc_id + 500000 AS doc_id,
           FROM cq_t WHERE doc_id < 60 AND len(t) >= 9),
 docs2 AS (SELECT doc_id, text FROM cq_t
           UNION ALL SELECT doc_id, text FROM cq_p2),
-{DD.continuation_pairs_sql('docs2', k=8).split('WITH ', 1)[1]}"""
+{DD.continuation_pairs_sql('docs2').split('WITH ', 1)[1]}"""
 
 
 def q_curriculum(spark, sf_dir):
@@ -1226,7 +1226,7 @@ def q_curriculum(spark, sf_dir):
 def _curriculum_oracle() -> str:
     from rio_cogeo_spark.operators.sampling import curriculum_interleave_sql
 
-    return curriculum_interleave_sql("documents", score_expr="n_chars")
+    return curriculum_interleave_sql(score_expr="n_chars")
 
 
 def q_temperature_mix(spark, sf_dir):
@@ -1267,7 +1267,7 @@ def q_rarity_score(spark, sf_dir):
     from rio_cogeo_spark.operators.rarity import token_rarity
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return token_rarity(docs, rare_cnt=2)
+    return token_rarity(docs)
 
 
 def q_lm_score(spark, sf_dir):
@@ -1278,7 +1278,7 @@ def q_lm_score(spark, sf_dir):
     from rio_cogeo_spark.operators.rarity import bigram_lm
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bigram_lm(docs, novel_cnt=1)
+    return bigram_lm(docs)
 
 
 def q_lexdiv(spark, sf_dir):
@@ -1484,7 +1484,7 @@ def q_ccnet_buckets(spark, sf_dir):
     from rio_cogeo_spark.operators.rarity import ccnet_buckets
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return ccnet_buckets(docs, n_buckets=3)
+    return ccnet_buckets(docs)
 
 
 def q_trending(spark, sf_dir):
@@ -1534,7 +1534,7 @@ def q_pagerank(spark, sf_dir):
 def _keywords_oracle() -> str:
     from rio_cogeo_spark.operators.search import tfidf_keywords_sql
 
-    return tfidf_keywords_sql("documents", k=5)
+    return tfidf_keywords_sql()
 
 
 def _pagerank_oracle() -> str:
@@ -1542,7 +1542,6 @@ def _pagerank_oracle() -> str:
 
     return host_pagerank_sql(
         _PR_EDGES,
-        iterations=3,
         extra_ctes=(
             "outd AS (SELECT src AS host, COUNT(*) AS out_deg FROM e GROUP BY 1)",
             "ind AS (SELECT dst AS host, COUNT(*) AS in_deg FROM e GROUP BY 1)",
@@ -1590,7 +1589,7 @@ def q_kcore(spark, sf_dir):
 def _kcore_oracle() -> str:
     from rio_cogeo_spark.operators.graph import k_core_sql
 
-    return k_core_sql(_PR_EDGES, k=4, rounds=3)
+    return k_core_sql(_PR_EDGES, k=4)
 
 
 def q_bitext(spark, sf_dir):
@@ -1617,7 +1616,6 @@ def _bitext_oracle() -> str:
         "SELECT vec_id AS src_id, embedding FROM embeddings WHERE label < 5",
         "SELECT vec_id AS tgt_id, embedding FROM embeddings WHERE label >= 5",
         k=4,
-        margin_threshold_ppm=1_000_000,
     )
 
 
@@ -1669,7 +1667,7 @@ def _winnow_oracle() -> str:
         "SELECT doc_id, text FROM documents UNION ALL "
         "SELECT doc_id + 100000 AS doc_id, text FROM documents "
         "WHERE doc_id < 50",
-        min_shared=2, k=3, w=4,
+        min_shared=2,
     )
 
 
@@ -1685,7 +1683,7 @@ def q_bloom_prefilter(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 97 == 0).select("text")
     corpus = docs.filter(F.col("doc_id") % 97 != 0).select("doc_id", "text")
-    return bloom_prefilter(corpus, bench, n=3, m_bits=1 << 16, n_hashes=4)
+    return bloom_prefilter(corpus, bench, m_bits=1 << 16, n_hashes=4)
 
 
 def _bloom_prefilter_oracle() -> str:
@@ -1694,7 +1692,7 @@ def _bloom_prefilter_oracle() -> str:
     return bloom_prefilter_sql(
         "SELECT doc_id, text FROM documents WHERE doc_id % 97 != 0",
         "SELECT text FROM documents WHERE doc_id % 97 = 0",
-        n=3, m_bits=1 << 16, n_hashes=4,
+        m_bits=1 << 16, n_hashes=4,
     )
 
 
@@ -1912,7 +1910,7 @@ def q_host_langs(spark, sf_dir):
         ).alias("url"),
         F.expr(_HOST_LANG_CASE).alias("lang"),
     )
-    return host_lang_purity(pages, min_docs=5, purity_ppm=600_000)
+    return host_lang_purity(pages)
 
 
 def _host_langs_oracle() -> str:
@@ -1923,7 +1921,6 @@ def _host_langs_oracle() -> str:
         "'.example/p/' || CAST(doc_id AS VARCHAR) AS url, "
         + _HOST_LANG_CASE
         + " AS lang FROM documents",
-        min_docs=5, purity_ppm=600_000,
     )
 
 
@@ -1990,7 +1987,7 @@ def _redirects_oracle() -> str:
     from rio_cogeo_spark.operators.urlfilter import resolve_redirects_sql
 
     return resolve_redirects_sql(
-        _REDIRECTS_CTE.format(st="VARCHAR"), max_hops=16
+        _REDIRECTS_CTE.format(st="VARCHAR")
     )
 
 
@@ -2153,7 +2150,7 @@ def _crawl_plan_oracle() -> str:
     )
     from rio_cogeo_spark.operators.rarity import host_quality_trend_sql
 
-    pr = host_pagerank_sql(_PLAN_EDGES.format(st="VARCHAR"), iterations=3)
+    pr = host_pagerank_sql(_PLAN_EDGES.format(st="VARCHAR"))
     trend = host_quality_trend_sql(_PLAN_PAGES.format(st="VARCHAR"))
     weights_cte = (
         f"SELECT pr.host, (pr.rank_ppb * lt.latest_ppm) // 1000000"
@@ -2311,7 +2308,7 @@ def _winnow_incremental_oracle() -> str:
         "SELECT doc_id, text FROM documents UNION ALL "
         "SELECT doc_id + 100001 AS doc_id, text FROM documents "
         "WHERE doc_id < 50",
-        min_shared=2, k=3, w=4,
+        min_shared=2,
     )
     # re-orient the unordered batch pairs to (indexed=even, new=odd)
     return rf"""
@@ -2360,7 +2357,7 @@ def q_script_mix(spark, sf_dir):
 def _script_mix_oracle() -> str:
     from rio_cogeo_spark.functions.text import script_mix_sql
 
-    s = script_mix_sql("text")
+    s = script_mix_sql()
     return rf"""
 WITH mixed AS (SELECT doc_id, {_SCRIPT_MIX_CASE} AS text FROM documents),
 per_doc AS (SELECT {s['dom_script']} AS dom_script,
@@ -2399,7 +2396,6 @@ def _trustrank_oracle() -> str:
     return host_trustrank_sql(
         _PR_EDGES,
         f"SELECT CAST(h AS BIGINT) AS host FROM {_TRUST_SEEDS}",
-        iterations=3,
     )
 
 
@@ -2447,7 +2443,7 @@ def _url_canonical_oracle() -> str:
     from rio_cogeo_spark.operators.urlfilter import canonical_url_sql
 
     return (
-        f"SELECT doc_id, url, {canonical_url_sql('url')} AS curl\n"
+        f"SELECT doc_id, url, {canonical_url_sql()} AS curl\n"
         f"FROM ({_urlvar_sql('VARCHAR')})"
     )
 
@@ -2890,7 +2886,7 @@ def q_flow_acc(spark, sf_dir):
 def _flow_acc_oracle() -> str:
     from rio_cogeo_spark.operators.focal import flow_accumulation_sql
 
-    return flow_accumulation_sql(_BASE_CTE, ZOOM, rounds=4)
+    return flow_accumulation_sql(_BASE_CTE, ZOOM)
 
 
 def q_geohash(spark, sf_dir):
@@ -2966,7 +2962,7 @@ def q_proximity(spark, sf_dir):
 def _proximity_oracle() -> str:
     from rio_cogeo_spark.operators.focal import proximity_sql
 
-    return proximity_sql(_BASE_CTE, ZOOM, rounds=3)
+    return proximity_sql(_BASE_CTE, ZOOM)
 
 
 def q_sieve(spark, sf_dir):
@@ -2984,7 +2980,7 @@ def q_sieve(spark, sf_dir):
 def _sieve_oracle() -> str:
     from rio_cogeo_spark.operators.focal import sieve_components_sql
 
-    return sieve_components_sql(_BASE_CTE, ZOOM, rounds=4, min_size=3)
+    return sieve_components_sql(_BASE_CTE, ZOOM)
 
 
 def q_benford(spark, sf_dir):
@@ -3072,7 +3068,7 @@ def q_fillnodata(spark, sf_dir):
 def _fillnodata_oracle() -> str:
     from rio_cogeo_spark.operators.focal import fillnodata_sql
 
-    return fillnodata_sql(_BASE_CTE, ZOOM, rounds=3)
+    return fillnodata_sql(_BASE_CTE, ZOOM)
 
 
 def q_polygonize(spark, sf_dir):
@@ -3088,7 +3084,7 @@ def q_polygonize(spark, sf_dir):
 def _polygonize_oracle() -> str:
     from rio_cogeo_spark.operators.focal import polygonize_sql
 
-    return polygonize_sql(_BASE_CTE, ZOOM, rounds=4)
+    return polygonize_sql(_BASE_CTE, ZOOM)
 
 
 def q_spearman(spark, sf_dir):
@@ -3141,7 +3137,7 @@ def _acf_oracle() -> str:
          1735689600 + (doc_id % 6) * (7 * 86400) + doc_id % 1800
   FROM pages WHERE doc_id < 400) ac_in"""
     inner = volume_acf_sql(
-        "SELECT doc_id, ts_sec FROM ac_all", max_lag=7
+        "SELECT doc_id, ts_sec FROM ac_all"
     ).split("WITH ", 1)[1]
     return f"""{_P}
 , ac_all AS ({base}),
@@ -3161,7 +3157,7 @@ def q_raster_hist(spark, sf_dir):
 def _raster_hist_oracle() -> str:
     from rio_cogeo_spark.operators.gdalutil import raster_hist_sql
 
-    return raster_hist_sql(_BASE_CTE, n_buckets=16)
+    return raster_hist_sql(_BASE_CTE)
 
 
 def q_scale_bytes(spark, sf_dir):
@@ -3272,7 +3268,7 @@ def q_boxplot(spark, sf_dir):
 def _boxplot_oracle() -> str:
     from rio_cogeo_spark.operators.report import group_boxplot_sql
 
-    return group_boxplot_sql("documents")
+    return group_boxplot_sql()
 
 
 def q_equalize(spark, sf_dir):
@@ -3317,13 +3313,13 @@ def q_upsample(spark, sf_dir):
     from rio_cogeo_spark.operators.gdalutil import upsample
 
     base = base_tiles(_pages(spark, sf_dir), ZOOM)
-    return upsample(base, factor=2)
+    return upsample(base)
 
 
 def _upsample_oracle() -> str:
     from rio_cogeo_spark.operators.gdalutil import upsample_sql
 
-    return upsample_sql(_BASE_CTE, factor=2)
+    return upsample_sql(_BASE_CTE)
 
 
 def q_raster_calc(spark, sf_dir):
@@ -3350,7 +3346,6 @@ def _raster_calc_oracle() -> str:
         "SELECT tile_x, tile_y, page_count FROM base",
         f"SELECT tile_x + 1 AS tile_x, tile_y, page_count"
         f" FROM base WHERE tile_x < {edge}",
-        op="sub",
     ).split("WITH ", 1)[1]
     return f"""{_BASE_CTE}
 , {inner}"""
@@ -3415,7 +3410,7 @@ def q_footprint(spark, sf_dir):
 def _footprint_oracle() -> str:
     from rio_cogeo_spark.operators.gdalutil import footprint_sql
 
-    return footprint_sql(_BASE_CTE, ZOOM, rounds=4)
+    return footprint_sql(_BASE_CTE, ZOOM)
 
 
 def q_idw(spark, sf_dir):
@@ -3426,13 +3421,13 @@ def q_idw(spark, sf_dir):
     from rio_cogeo_spark.operators.gdalutil import idw
 
     base = base_tiles(_pages(spark, sf_dir), ZOOM)
-    return idw(base, ZOOM, radius=2)
+    return idw(base, ZOOM)
 
 
 def _idw_oracle() -> str:
     from rio_cogeo_spark.operators.gdalutil import idw_sql
 
-    return idw_sql(_BASE_CTE, ZOOM, radius=2)
+    return idw_sql(_BASE_CTE, ZOOM)
 
 
 def q_tindex(spark, sf_dir):
@@ -3506,7 +3501,7 @@ def q_kruskal(spark, sf_dir):
 def _kruskal_oracle() -> str:
     from rio_cogeo_spark.operators.report import kruskal_wallis_sql
 
-    return kruskal_wallis_sql("documents")
+    return kruskal_wallis_sql()
 
 
 def q_cusum(spark, sf_dir):
@@ -3599,7 +3594,7 @@ def q_ann_int8(spark, sf_dir):
     from rio_cogeo_spark.operators.quantize import ann_int8_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ann_int8_topk(emb, k=10, n_queries=5)
+    return ann_int8_topk(emb, k=10)
 
 
 def q_pyramid_stream(spark, sf_dir):
@@ -3618,7 +3613,6 @@ def q_pyramid_stream(spark, sf_dir):
     q = maintain_pyramid(
         read_pages_stream(spark, sf_dir),
         f"{tmp}/store", ZOOM, LEVELS, checkpoint=f"{tmp}/ckpt",
-        available_now=True,
     )
     q.awaitTermination(600)
     return read_pyramid_store(spark, f"{tmp}/store").select(
@@ -3742,7 +3736,7 @@ def q_sessionize(spark, sf_dir):
     from rio_cogeo_spark.streaming.events import sessionize_batch
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize_batch(ev, gap_minutes=30)
+    return sessionize_batch(ev)
 
 
 def q_media_features(spark, sf_dir):
@@ -3792,7 +3786,7 @@ def q_tile_rollup(spark, sf_dir):
     pages = _pages(spark, sf_dir).withColumn(
         "warc_ts", F.timestamp_seconds(F.col("ts_sec"))
     )
-    return tile_rollup_batch(pages, zoom=6, window="1 hour")
+    return tile_rollup_batch(pages, zoom=6)
 
 
 def q_pyramid_web(spark, sf_dir):
@@ -3835,7 +3829,7 @@ def q_media_frames(spark, sf_dir):
     from rio_cogeo_spark.operators.multimodal import attach_media, sample_frames
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return sample_frames(attach_media(docs), every_ms=1000, max_frames=8)
+    return sample_frames(attach_media(docs))
 
 
 def q_rle(spark, sf_dir):
@@ -3909,7 +3903,7 @@ def q_variogram(spark, sf_dir):
 def _variogram_oracle() -> str:
     from rio_cogeo_spark.operators.focal import semivariogram_sql
 
-    return semivariogram_sql(_BASE_CTE, ZOOM, max_lag=4)
+    return semivariogram_sql(_BASE_CTE, ZOOM)
 
 
 def q_join_counts(spark, sf_dir):
@@ -3920,13 +3914,13 @@ def q_join_counts(spark, sf_dir):
     from rio_cogeo_spark.operators.focal import join_counts
 
     base = base_tiles(_pages(spark, sf_dir), ZOOM)
-    return join_counts(base, ZOOM, threshold=2)
+    return join_counts(base, ZOOM)
 
 
 def _join_counts_oracle() -> str:
     from rio_cogeo_spark.operators.focal import join_counts_sql
 
-    return join_counts_sql(_BASE_CTE, ZOOM, threshold=2)
+    return join_counts_sql(_BASE_CTE, ZOOM)
 
 
 def q_kendall(spark, sf_dir):
@@ -4049,7 +4043,7 @@ def q_assortativity(spark, sf_dir):
 def _transitions_oracle() -> str:
     from rio_cogeo_spark.streaming.events import event_transitions_sql
 
-    return event_transitions_sql("events")
+    return event_transitions_sql()
 
 
 def _assortativity_oracle() -> str:
@@ -4174,7 +4168,7 @@ def _burstiness_oracle() -> str:
     inner = term_burstiness_sql(
         f"SELECT text, (ts_sec - {WARC_EPOCH}) // 600 AS t_bucket"
         " FROM pages",
-        TOKENS_SQL, top_k=50,
+        TOKENS_SQL,
     ).split("WITH ", 1)[1]
     return f"{_P},\n{inner}"
 
@@ -4211,7 +4205,7 @@ def q_ripley(spark, sf_dir):
     pts = assign_tiles(_pages(spark, sf_dir), ZOOM).select(
         "tile_x", "tile_y"
     )
-    return ripley_k(pts, ZOOM, max_r=4)
+    return ripley_k(pts, ZOOM)
 
 
 def _ripley_oracle() -> str:
@@ -4219,7 +4213,7 @@ def _ripley_oracle() -> str:
 
     inner = ripley_k_sql(
         f"SELECT {_TX8} AS tile_x, {_TY8} AS tile_y FROM pages",
-        ZOOM, max_r=4,
+        ZOOM,
     ).split("WITH ", 1)[1]
     return f"{_P},\n{inner}"
 
@@ -4234,13 +4228,13 @@ def q_cocitation(spark, sf_dir):
     spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
-    return cocitation(spark.sql(_PR_EDGES), min_common=1)
+    return cocitation(spark.sql(_PR_EDGES))
 
 
 def _cocitation_oracle() -> str:
     from rio_cogeo_spark.operators.graph import cocitation_sql
 
-    return cocitation_sql(_PR_EDGES, min_common=1)
+    return cocitation_sql(_PR_EDGES)
 
 
 def q_term_geo(spark, sf_dir):
@@ -4262,7 +4256,7 @@ def _term_geo_oracle() -> str:
 
     inner = term_localization_sql(
         f"SELECT text, {_TX8} AS tile_x, {_TY8} AS tile_y FROM pages",
-        TOKENS_SQL, top_k=50,
+        TOKENS_SQL,
     ).split("WITH ", 1)[1]
     return f"{_P},\n{inner}"
 
@@ -6396,7 +6390,7 @@ FROM hn_filt QUALIFY rank <= 10"""
 def _ann_pq_oracle() -> str:
     from rio_cogeo_spark.operators.quantize import ann_pq_sql
 
-    return ann_pq_sql(m=4, k=10, n_queries=5, dim=64)
+    return ann_pq_sql()
 
 
 _ANN_INT8_SQL = """
@@ -6741,7 +6735,7 @@ SELECT user_id,
        MIN(CAST(floor(epoch(ts)) AS BIGINT)) AS t_start_sec,
        MAX(CAST(floor(epoch(ts)) AS BIGINT)) AS t_end_sec
 FROM c GROUP BY 1, 2""",
-        "repetition": TX.repetition_sql("documents"),
+        "repetition": TX.repetition_sql(),
         "contamination": f"""
 WITH bench AS (
   SELECT DISTINCT unnest({_SHINGLES}) AS shingle
@@ -7241,7 +7235,7 @@ def _trending_oracle() -> str:
     from rio_cogeo_spark.operators.search import trending_terms_sql
 
     return f"{_P}\n" + trending_terms_sql(
-        "pages", window_sec=21_600, k=5
+        "pages", window_sec=21_600
     ).replace("\nWITH ", "\n, ", 1).replace("WITH tok", ", tok", 1)
 
 
@@ -7260,7 +7254,7 @@ def _lang_mix_oracle() -> str:
 def _bpe_merges_oracle() -> str:
     from rio_cogeo_spark.operators.bpe import bpe_merge_topk_sql
 
-    return bpe_merge_topk_sql("documents", k=30)
+    return bpe_merge_topk_sql(k=30)
 
 
 def _normalize_text_oracle() -> str:
@@ -7278,37 +7272,37 @@ def _normalize_text_oracle() -> str:
 def _rarity_score_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import token_rarity_sql
 
-    return token_rarity_sql("documents", rare_cnt=2)
+    return token_rarity_sql()
 
 
 def _lm_score_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import bigram_lm_sql
 
-    return bigram_lm_sql("documents", novel_cnt=1)
+    return bigram_lm_sql()
 
 
 def _lexdiv_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import lexical_diversity_sql
 
-    return lexical_diversity_sql("documents")
+    return lexical_diversity_sql()
 
 
 def _vocab_stats_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import vocab_stats_sql
 
-    return vocab_stats_sql("documents")
+    return vocab_stats_sql()
 
 
 def _collocations_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import collocations_sql
 
-    return collocations_sql("documents", min_cnt=3, topk=20)
+    return collocations_sql(min_cnt=3, topk=20)
 
 
 def _ccnet_buckets_oracle() -> str:
     from rio_cogeo_spark.operators.rarity import ccnet_buckets_sql
 
-    return ccnet_buckets_sql("documents", n_buckets=3)
+    return ccnet_buckets_sql()
 
 
 def _pair_verify_oracle() -> str:
@@ -7337,7 +7331,7 @@ FROM pr JOIN ta USING (doc_a) JOIN tb USING (doc_b)"""
 def _corpus_info_oracle() -> str:
     from rio_cogeo_spark.operators.report import corpus_info_sql
 
-    return corpus_info_sql("documents")
+    return corpus_info_sql()
 
 
 def _median_chars_oracle() -> str:
@@ -7353,7 +7347,6 @@ def _host_distance_oracle() -> str:
         "SELECT DISTINCT doc_id % 97 AS src, (doc_id * 31 + 7) % 97 AS dst"
         " FROM documents WHERE doc_id % 97 <> (doc_id * 31 + 7) % 97",
         "SELECT * FROM (VALUES (0), (1)) t(host)",
-        max_hops=4,
     )
 
 
@@ -7392,7 +7385,7 @@ def _frontier_oracle() -> str:
         "LEFT JOIN rc ON d.host = rc.host"
     )
     return host_pagerank_sql(
-        edges, iterations=3, extra_ctes=tuple(dist + recip),
+        edges, extra_ctes=tuple(dist + recip),
         final_select=final,
     )
 
@@ -7423,7 +7416,7 @@ FROM win GROUP BY 1"""
 def _quartiles_oracle() -> str:
     from rio_cogeo_spark.operators.report import group_quantiles_sql
 
-    return group_quantiles_sql("documents")
+    return group_quantiles_sql()
 
 
 def _gopher_oracle() -> str:
@@ -7471,13 +7464,13 @@ def _recip_links_oracle() -> str:
 def _embed_pool_oracle() -> str:
     from rio_cogeo_spark.operators.similarity import pool_embeddings_sql
 
-    return pool_embeddings_sql("embeddings")
+    return pool_embeddings_sql()
 
 
 def _dsir_oracle() -> str:
     from rio_cogeo_spark.operators.sampling import importance_weights_sql
 
-    return importance_weights_sql("documents", target_pred="lang = 'en'")
+    return importance_weights_sql()
 
 
 def _search_phrase_oracle() -> str:
@@ -7489,25 +7482,25 @@ def _search_phrase_oracle() -> str:
 def _chunks_sliding_oracle() -> str:
     from rio_cogeo_spark.operators.chunking import chunk_docs_sliding_sql
 
-    return chunk_docs_sliding_sql("documents", chunk_tokens=16, stride=8)
+    return chunk_docs_sliding_sql(chunk_tokens=16, stride=8)
 
 
 def _chunks_oracle() -> str:
     from rio_cogeo_spark.operators.chunking import chunk_docs_sql
 
-    return chunk_docs_sql("documents", chunk_tokens=16)
+    return chunk_docs_sql(chunk_tokens=16)
 
 
 def _pack_chunks_oracle() -> str:
     from rio_cogeo_spark.operators.packing import pack_chunks_sql
 
-    return pack_chunks_sql("documents", context_tokens=64, n_shards=8)
+    return pack_chunks_sql(context_tokens=64, n_shards=8)
 
 
 def _repeated_spans_oracle() -> str:
     from rio_cogeo_spark.operators.passages import repeated_ngram_spans_sql
 
-    sql = repeated_ngram_spans_sql("docs2", n=5, min_count=2)
+    sql = repeated_ngram_spans_sql("docs2", n=5)
     # splice the dup-union CTE in front of the operator's own CTE chain
     return sql.replace("WITH t AS", _DOCS2 + ",\nt AS", 1)
 
@@ -7515,7 +7508,7 @@ def _repeated_spans_oracle() -> str:
 def _passage_cut_oracle() -> str:
     from rio_cogeo_spark.operators.passages import cut_spans_sql
 
-    inner = cut_spans_sql("docs2", n=5, min_count=2).replace(
+    inner = cut_spans_sql("docs2", n=5).replace(
         "WITH t AS", _DOCS2 + ",\nt AS", 1
     )
     return (
@@ -7527,7 +7520,7 @@ def _passage_cut_oracle() -> str:
 def _pii_scrub_oracle() -> str:
     from rio_cogeo_spark.functions.text import pii_scrub_sql
 
-    cols = pii_scrub_sql("text")
+    cols = pii_scrub_sql()
     return f"""
 WITH inj AS (
   SELECT doc_id,
@@ -7812,7 +7805,7 @@ def _temperature_mix_oracle() -> str:
     from rio_cogeo_spark.operators.sampling import temperature_mix_sql
 
     return temperature_mix_sql(
-        "documents", target_ppm=400_000, select="d.doc_id, d.lang"
+        target_ppm=400_000, select="d.doc_id, d.lang"
     )
 
 

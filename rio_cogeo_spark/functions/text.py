@@ -320,13 +320,13 @@ def repetition_stats(text: Column) -> dict[str, Column]:
     }
 
 
-def repetition_sql(table: str = "documents") -> str:
+def repetition_sql() -> str:
     """Full DuckDB twin of :func:`repetition_stats`. Stages toks/bg
     through CTE columns so lambdas reference a materialized list instead
     of re-splitting the text per element (the naive inline form is
     O(L³) splits per row and ~35s on 500 docs; this is milliseconds)."""
     return rf"""
-WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {table}),
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
 b AS (SELECT doc_id,
              list_transform(generate_series(1, greatest(len(toks) - 1, 0)),
                             i -> array_to_string(toks[i:i+1], ' ')) AS bg
@@ -476,10 +476,10 @@ def pii_scrub(df: DataFrame, keep_text: bool = True) -> DataFrame:
     return out.drop("text") if not keep_text else out
 
 
-def pii_scrub_sql(text_expr: str = "text") -> dict:
+def pii_scrub_sql() -> dict:
     """DuckDB twins of :func:`pii_scrub_cols` (same staging order)."""
     cols = {}
-    cur = text_expr
+    cur = "text"
     for name, pattern, token in _PII_STAGES:
         pat = pattern.replace("'", "''")
         cols[name] = f"CAST(len(regexp_extract_all({cur}, '{pat}')) AS INT)"
@@ -628,17 +628,12 @@ def blockword_stats(
     }
 
 
-def blockword_stats_sql(
-    blockwords: "list[str]", case_insensitive: bool = True
-) -> "dict[str, str]":
+def blockword_stats_sql(blockwords: "list[str]") -> "dict[str, str]":
     """DuckDB twins of :func:`blockword_stats` (same token-exact
     semantics; integer division floors like the Spark cast)."""
-    words = sorted({w.lower() if case_insensitive else w for w in blockwords})
+    words = sorted({w.lower() for w in blockwords})
     lst = ", ".join("'" + w.replace("'", "''") + "'" for w in words)
-    probe = (
-        f"list_transform({TOKENS_SQL}, t -> lower(t))"
-        if case_insensitive else TOKENS_SQL
-    )
+    probe = f"list_transform({TOKENS_SQL}, t -> lower(t))"
     hits = f"len(list_filter({probe}, t -> list_contains([{lst}], t)))"
     return {
         "block_hits": f"CAST({hits} AS BIGINT)",
@@ -820,12 +815,12 @@ def script_mix(text: Column) -> "dict[str, Column]":
     }
 
 
-def script_mix_sql(text_expr: str = "text") -> "dict[str, str]":
+def script_mix_sql() -> "dict[str, str]":
     """DuckDB twin of :func:`script_mix` (same election order, same
     integer ppm; RE2 char classes with the same literal BMP ranges)."""
     cnt = {
         name: (
-            f"(length({text_expr}) - length(regexp_replace({text_expr}, "
+            f"(length(text) - length(regexp_replace(text, "
             f"'[{rng}]', '', 'g')))"
         )
         for name, rng in SCRIPT_RANGES

@@ -33,8 +33,8 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_rounded(a: Column, b: Column, digits: int = 6) -> Column:
-    return F.round(cosine(as_double_array(a), as_double_array(b)), digits)
+def cosine_rounded(a: Column, b: Column) -> Column:
+    return F.round(cosine(as_double_array(a), as_double_array(b)), 6)
 
 
 # DuckDB twins (operate on float[] columns; cast-to-double first).
@@ -45,8 +45,8 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-def cosine_sql(a: str, b: str, digits: int = 6) -> str:
+def cosine_sql(a: str, b: str) -> str:
     d = dot_sql(a, b)
     na = f"sqrt({dot_sql(a, a)})"
     nb = f"sqrt({dot_sql(b, b)})"
-    return f"round({d} / ({na} * {nb}), {digits})"
+    return f"round({d} / ({na} * {nb}), 6)"

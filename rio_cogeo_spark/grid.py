@@ -48,12 +48,12 @@ WARP_KERNELS = RIO_KERNELS[:7] + ("sum", "rms")
 ALL_KERNELS = tuple(dict.fromkeys(RIO_KERNELS + WARP_KERNELS + ("min", "max")))
 
 
-def cell_size(zoom: int, tile_px: int = TMS_TILE_PX) -> float:
+def cell_size(zoom: int) -> float:
     """Ground resolution (m/px) of a WebMercatorQuad matrix at ``zoom``.
 
     Mirrors ``tms.matrix(zoom).cellSize`` (utils.py:131).
     """
-    return (2.0 * ORIGIN_SHIFT) / (tile_px * (2.0**zoom))
+    return (2.0 * ORIGIN_SHIFT) / (TMS_TILE_PX * (2.0**zoom))
 
 
 def lonlat_to_mercator(lon, lat):
@@ -100,14 +100,13 @@ def tile_bounds_mercator(tx, ty, zoom: int):
     return west, north - span, west + span, north
 
 
-def _zoom_snap(cs_fn, res: float, max_z: int, zoom_level_strategy: str,
-               min_z: int) -> int:
+def _zoom_snap(cs_fn, res: float, max_z: int, zoom_level_strategy: str) -> int:
     """Shared zoom_for_res core: ``cs_fn(z)`` gives the matrix cellSize.
     Strategy semantics mirror ``morecantile.TileMatrixSet.zoom_for_res``
     (reference utils.py:74-78; cogeo.py:134-140):
 
     * pick the smallest zoom whose cellSize <= res (within 1e-8 rel tol);
-    * ``lower``  → snap one level coarser (never below ``min_z``);
+    * ``lower``  → snap one level coarser (never below zoom 0);
     * ``upper``  → keep the finer level;
     * ``auto``   → snap coarser only when the coarser level's cellSize is
       within 10% above ``res`` (morecantile's auto threshold — ratio
@@ -120,37 +119,29 @@ def _zoom_snap(cs_fn, res: float, max_z: int, zoom_level_strategy: str,
             "Should be one of lower|upper|auto."
         )
 
-    zoom = min_z
-    for zoom in range(min_z, max_z + 1):
+    zoom = 0
+    for zoom in range(max_z + 1):
         matrix_res = cs_fn(zoom)
         if res > matrix_res or abs(res - matrix_res) / matrix_res <= 1e-8:
             break
-    if zoom > min_z:
+    if zoom > 0:
         prev_res = cs_fn(zoom - 1)
         if abs(res - prev_res) / prev_res <= 1e-8:
             zoom -= 1
 
     if strategy == "lower":
-        zoom = max(zoom - 1, min_z)
+        zoom = max(zoom - 1, 0)
     elif strategy == "auto":
-        if zoom > min_z and (cs_fn(zoom - 1) / res) < 1.1:
+        if zoom > 0 and (cs_fn(zoom - 1) / res) < 1.1:
             zoom = zoom - 1
     return zoom
 
 
-def zoom_for_res(
-    res: float,
-    max_z: int = MAX_ZOOM,
-    zoom_level_strategy: str = "auto",
-    min_z: int = 0,
-    tile_px: int = TMS_TILE_PX,
-) -> int:
+def zoom_for_res(res: float, zoom_level_strategy: str = "auto") -> int:
     """Zoom level for a target ground resolution on WebMercatorQuad —
     see :func:`_zoom_snap` for the strategy semantics the reference
     inherits via ``tms.zoom_for_res``."""
-    return _zoom_snap(
-        lambda z: cell_size(z, tile_px), res, max_z, zoom_level_strategy, min_z
-    )
+    return _zoom_snap(cell_size, res, MAX_ZOOM, zoom_level_strategy)
 
 
 def max_overview_level(width: int, height: int, minsize: int = DEFAULT_BLOCKSIZE) -> int:
@@ -211,17 +202,17 @@ class GridSpec:
 
 def web_optimized_grid(
     bounds_lonlat: tuple[float, float, float, float],
-    zoom_level_strategy: str = "auto",
-    zoom_level: int | None = None,
+    zoom_level: int,
     aligned_levels: int | None = None,
-    source_resolution: float | None = None,
 ) -> GridSpec:
     """Compute the aligned output grid for a lon/lat extent — the
     ``get_web_optimized_params`` analog (utils.py:88-147).
 
-    The UL corner snaps to the UL tile at ``base_zoom = max_zoom -
+    The UL corner snaps to the UL tile at ``base_zoom = zoom_level -
     aligned_levels``; width/height use the reference's ``max(1,
-    round((e - w) / res))`` rule (utils.py:139-140).
+    round((e - w) / res))`` rule (utils.py:139-140). The caller picks
+    ``zoom_level`` (``cog_translate`` derives it with
+    ``TileMatrixSet.zoom_for_res``).
     """
     w_lon, s_lat, e_lon, n_lat = bounds_lonlat
     (wx, ex), (sy, ny) = (
@@ -229,20 +220,12 @@ def web_optimized_grid(
         lonlat_to_mercator([w_lon, e_lon], [s_lat, n_lat])[1],
     )
 
-    if zoom_level is None:
-        if source_resolution is None:
-            raise ValueError("source_resolution required when zoom_level is None")
-        max_zoom = zoom_for_res(source_resolution, zoom_level_strategy=zoom_level_strategy)
-    else:
-        max_zoom = zoom_level
-
-    aligned_levels = aligned_levels or 0
-    base_zoom = max(max_zoom - aligned_levels, 0)
+    base_zoom = max(zoom_level - (aligned_levels or 0), 0)
 
     ul_tx, ul_ty = tile_index([w_lon], [n_lat], base_zoom)
     west, _, _, north = tile_bounds_mercator(ul_tx, ul_ty, base_zoom)
 
-    res = cell_size(max_zoom)
+    res = cell_size(zoom_level)
 
     lr_tx, lr_ty = tile_index([e_lon], [s_lat], base_zoom)
     _, south, east, _ = tile_bounds_mercator(lr_tx + 1, lr_ty + 1, base_zoom)
@@ -260,7 +243,7 @@ def web_optimized_grid(
         resolution=res,
         width=int(width),
         height=int(height),
-        max_zoom=max_zoom,
+        max_zoom=zoom_level,
         base_zoom=base_zoom,
     )
 
@@ -394,16 +377,9 @@ class TileMatrixSet:
         north = maxy - ty * span_y
         return west, north - span_y, west + width, north
 
-    def zoom_for_res(
-        self,
-        res: float,
-        max_z: int = MAX_ZOOM,
-        zoom_level_strategy: str = "auto",
-        min_z: int = 0,
-    ) -> int:
-        if self.matrices is not None:
-            max_z = min(max_z, len(self.matrices) - 1)
-        return _zoom_snap(self.cell_size, res, max_z, zoom_level_strategy, min_z)
+    def zoom_for_res(self, res: float, zoom_level_strategy: str = "auto") -> int:
+        max_z = MAX_ZOOM if self.matrices is None else min(MAX_ZOOM, len(self.matrices) - 1)
+        return _zoom_snap(self.cell_size, res, max_z, zoom_level_strategy)
 
 
 # The default TMS — method results are FP-identical to the module-level

@@ -4,8 +4,8 @@ pages — drop a line from every page of a host where it is frequent).
 
 Complementary to :func:`dedup.paragraph_dedup` (corpus-wide keep-first
 at paragraph granularity): here the unit is the LINE, the scope is the
-HOST, and the rule is frequency (a line in ≥ ``min_frac_ppm`` of the
-host's docs AND ≥ ``min_docs`` docs is boilerplate and is dropped from
+HOST, and the rule is frequency (a line in ≥ 50% of the
+host's docs AND ≥ 2 docs is boilerplate and is dropped from
 ALL of them — no copy survives, unlike keep-first dedup).
 
 Scale design (100 TB):
@@ -18,7 +18,7 @@ Scale design (100 TB):
 * the hot-line set joins the exploded lines on (host, line-hash) —
   co-partitioned equi-join, AQE broadcasts it when small;
 * the frequency test is exact integer arithmetic
-  (``n_docs·10^6 ≥ min_frac_ppm·host_docs``) — no float thresholds;
+  (``n_docs·10^6 ≥ 500000·host_docs``) — no float thresholds;
 * reassembly ships only surviving lines, ordered by original position.
 """
 
@@ -30,11 +30,7 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import host_col
 
 
-def boilerplate_lines(
-    pages: DataFrame,
-    min_frac_ppm: int = 500_000,
-    min_docs: int = 2,
-) -> DataFrame:
+def boilerplate_lines(pages: DataFrame) -> DataFrame:
     """Strip host-frequent lines. Returns ``(doc_id, host, text,
     n_kept, n_total)``; documents reduced to zero lines drop from the
     output (their every line was site furniture). Blank lines are
@@ -63,8 +59,8 @@ def boilerplate_lines(
     hot = (
         line_docs.join(host_docs, "host")
         .filter(
-            (F.col("n_docs") * 1_000_000 >= F.lit(int(min_frac_ppm)) * F.col("host_docs"))
-            & (F.col("n_docs") >= int(min_docs))
+            (F.col("n_docs") * 1_000_000 >= F.lit(500_000) * F.col("host_docs"))
+            & (F.col("n_docs") >= 2)
         )
         .select("host", "lh")
     )

@@ -55,12 +55,12 @@ def bpe_merge_topk(docs: DataFrame, k: int = 50) -> DataFrame:
     return topk.withColumn("rank", F.row_number().over(w))
 
 
-def bpe_merge_topk_sql(table: str = "documents", k: int = 50) -> str:
+def bpe_merge_topk_sql(k: int = 50) -> str:
     """DuckDB twin of :func:`bpe_merge_topk` (same vocab-first shape)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT unnest({TOKENS_SQL}) AS word FROM {table}),
+WITH tok AS (SELECT unnest({TOKENS_SQL}) AS word FROM documents),
 vocab AS (SELECT word, COUNT(*) AS n_w FROM tok
           GROUP BY 1 HAVING length(word) >= 2),
 pairs AS (SELECT unnest(list_transform(generate_series(1, length(word) - 1),

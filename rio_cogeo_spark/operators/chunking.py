@@ -128,19 +128,13 @@ def chunk_docs_sliding(
     )
 
 
-def chunk_docs_sliding_sql(
-    table: str = "documents",
-    chunk_tokens: int = 128,
-    stride: int = 64,
-    toks_sql: str = None,
-) -> str:
+def chunk_docs_sliding_sql(chunk_tokens: int = 128, stride: int = 64) -> str:
     """DuckDB twin of :func:`chunk_docs_sliding`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
-    toks = toks_sql or TOKENS_SQL
     C, S = int(chunk_tokens), int(stride)
     return rf"""
-WITH t AS (SELECT doc_id, {toks} AS toks FROM {table}),
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
 nn AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0),
 w AS (SELECT doc_id, toks, n,
              CAST(ceil(CAST(greatest(n - {C}, 0) AS DOUBLE) / {S}) AS INT) + 1
@@ -157,19 +151,14 @@ SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
 FROM e"""
 
 
-def chunk_docs_sql(
-    table: str = "documents",
-    chunk_tokens: int = 128,
-    toks_sql: str = None,
-) -> str:
+def chunk_docs_sql(chunk_tokens: int = 128) -> str:
     """DuckDB twin of :func:`chunk_docs`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
-    toks = toks_sql or TOKENS_SQL
     # (value, index) lambda instead of a lateral generate_series —
     # DuckDB table functions reject lateral column parameters
     return rf"""
-WITH t AS (SELECT doc_id, {toks} AS toks FROM {table}),
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
 e AS (SELECT doc_id,
              unnest(list_transform(toks,
                     (x, i) -> {{'pos': i - 1, 'tok': x}})) AS pt

@@ -69,18 +69,14 @@ def contamination_hits(
     )
 
 
-def contamination_rate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-) -> DataFrame:
+def contamination_rate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Fraction of each contaminated document's shingles that collide
     with the benchmark: ``(doc_id, n_hits, n_shingles, hit_frac)`` —
     the thresholdable form (e.g. drop docs with hit_frac > 0.8)."""
-    hits = contamination_hits(corpus, benchmark, n)
+    hits = contamination_hits(corpus, benchmark, 3)
     sizes = corpus.select(
         F.col("doc_id"),
-        F.size(shingles_col(F.col("text"), n)).alias("n_shingles"),
+        F.size(shingles_col(F.col("text"), 3)).alias("n_shingles"),
     )
     return hits.join(sizes, "doc_id", "inner").withColumn(
         "hit_frac",
@@ -115,7 +111,6 @@ def _bloom_pos_cols(sh: "F.Column", m_bits: int, n_hashes: int):
 def bloom_prefilter(
     corpus: DataFrame,
     benchmark: DataFrame,
-    n: int = 3,
     m_bits: int = 1 << 20,
     n_hashes: int = 4,
 ) -> DataFrame:
@@ -157,7 +152,7 @@ def bloom_prefilter(
 
     bench_pos = (
         benchmark.select(
-            F.explode(shingles_col(F.col("text"), n)).alias("sh")
+            F.explode(shingles_col(F.col("text"), 3)).alias("sh")
         )
         .distinct()
         .select(F.explode(F.array(*_bloom_pos_cols(F.col("sh"), m_bits, n_hashes))).alias("pos"))
@@ -188,7 +183,7 @@ def bloom_prefilter(
         np.add.at(out, np.repeat(np.arange(len(pos_flat)), lens), hit)
         return pd.Series(out)
 
-    sh = shingles_col(F.col("text"), n)
+    sh = shingles_col(F.col("text"), 3)
     probes = corpus.select(
         F.col("doc_id"),
         F.size(sh).alias("n_shingles"),
@@ -209,7 +204,6 @@ def bloom_prefilter(
 def bloom_prefilter_sql(
     corpus_cte: str,
     bench_cte: str,
-    n: int = 3,
     m_bits: int = 1 << 20,
     n_hashes: int = 4,
 ) -> str:

@@ -99,14 +99,17 @@ def url_dedup_latest(pages: DataFrame) -> DataFrame:
     )
 
 
-def novelty_by_day(pages: DataFrame, day_sec: int = 86_400) -> DataFrame:
+_DAY_SEC = 86_400
+
+
+def novelty_by_day(pages: DataFrame) -> DataFrame:
     """Per-day crawl novelty — the cross-time dedup-rate dashboard a
     crawl operator watches: of the pages fetched on day D, how many
     carry exact text already seen on an EARLIER day? A rising stale
     share means the frontier is re-fetching old content; a sudden
     novelty spike means a new seed list (or a spam flood) landed.
 
-    ``day = ts div day_sec``; a page is *stale* when its text hash
+    ``day = ts div 86400``; a page is *stale* when its text hash
     first appeared on a strictly earlier day (same-day duplicates
     count as novel — the first day owns its text). Returns
     ``(day, n_docs, stale_docs, stale_ppm)`` in exact ints.
@@ -119,7 +122,7 @@ def novelty_by_day(pages: DataFrame, day_sec: int = 86_400) -> DataFrame:
     No windows, nothing collects.
     """
     h = pages.select(
-        F.expr(f"ts_sec div {int(day_sec)}").alias("day"),
+        F.expr(f"ts_sec div {_DAY_SEC}").alias("day"),
         F.md5(F.col("text")).alias("h"),
     )
     first = h.groupBy("h").agg(F.min("day").alias("first_day"))
@@ -141,12 +144,12 @@ def novelty_by_day(pages: DataFrame, day_sec: int = 86_400) -> DataFrame:
     )
 
 
-def novelty_by_day_sql(pages_cte: str, day_sec: int = 86_400) -> str:
+def novelty_by_day_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`novelty_by_day` (``pages_cte`` exposes
     ``(ts_sec, text)``)."""
     return rf"""
 WITH p AS ({pages_cte}),
-h AS (SELECT ts_sec // {int(day_sec)} AS day, md5(text) AS h FROM p),
+h AS (SELECT ts_sec // {_DAY_SEC} AS day, md5(text) AS h FROM p),
 first AS (SELECT h, MIN(day) AS first_day FROM h GROUP BY 1)
 SELECT day,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -197,9 +200,9 @@ def snapshot_change_stats(pages: DataFrame) -> DataFrame:
     )
 
 
-def mirror_docs(pages: DataFrame, min_hosts: int = 2) -> DataFrame:
+def mirror_docs(pages: DataFrame) -> DataFrame:
     """Cross-host mirror/template detection: documents whose content
-    fingerprint appears on at least ``min_hosts`` DISTINCT hosts —
+    fingerprint appears on at least 2 DISTINCT hosts —
     mirrors, scraped re-posts, and templated boilerplate sites, the
     duplication class same-URL dedup can't see and per-host boilerplate
     removal can't either (each host has only one copy). Returns one row
@@ -223,7 +226,7 @@ def mirror_docs(pages: DataFrame, min_hosts: int = 2) -> DataFrame:
         .dropDuplicates(["fp", "host"])
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_hosts"))
-        .filter(F.col("n_hosts") >= int(min_hosts))
+        .filter(F.col("n_hosts") >= 2)
     )
     copies = tagged.groupBy("fp").agg(F.count(F.lit(1)).alias("n_copies"))
     return (
@@ -311,17 +314,13 @@ def snapshot_paragraph_diff(pages: DataFrame, sep: str = "\n\n") -> DataFrame:
     )
 
 
-def snapshot_paragraph_diff_sql(
-    base_cte: str,
-    sep: str = "\n\n",
-    url_expr: str = None,
-) -> str:
+def snapshot_paragraph_diff_sql(base_cte: str, sep: str = "\n\n") -> str:
     """DuckDB twin of :func:`snapshot_paragraph_diff`. ``base_cte`` must
     define a relation ``snapfix(doc_id, url, ts_sec, text)``; the twin
     uses the same lag-adjacency overlap formula."""
     from rio_cogeo_spark.functions.text import CANONICAL_URL_SQL
 
-    canon = url_expr or CANONICAL_URL_SQL
+    canon = CANONICAL_URL_SQL
     sep_lit = sep.replace("'", "''")
     return rf"""{base_cte}
 , snaps AS (SELECT {canon} AS canon_url, doc_id, ts_sec, text,
@@ -477,7 +476,6 @@ def _shingle_pair_counts(docs, n, df_cap):
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    n: int = 3,
     df_cap: "Optional[int | str]" = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted shingle index —
@@ -494,7 +492,7 @@ def ngram_jaccard_pairs(
     dropped by design (like stopword shingles), and an uncapped hot
     shingle is quadratic at corpus scale.
     """
-    common, sizes = _shingle_pair_counts(docs, n, df_cap)
+    common, sizes = _shingle_pair_counts(docs, 3, df_cap)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("size_b"))
     jac = (
@@ -570,7 +568,6 @@ def pair_verify(
 def containment_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
-    n: int = 3,
     df_cap: "Optional[int | str]" = "auto",
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT (Broder's other resemblance
@@ -587,7 +584,7 @@ def containment_pairs(
     appear twice, by definition of the directed measure). Same inverted
     shingle index, single-sort pair expansion, and ``df_cap`` hot-
     shingle guard as :func:`ngram_jaccard_pairs` (shared core)."""
-    common, sizes = _shingle_pair_counts(docs, n, df_cap)
+    common, sizes = _shingle_pair_counts(docs, 3, df_cap)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("size_b"))
     joined = common.join(sa, "doc_a").join(sb, "doc_b")
@@ -1026,10 +1023,8 @@ def simhash(docs: DataFrame, bits: int = 64, hasher: str = "xxhash64",
     )
 
 
-def simhash_pairs(
-    docs: DataFrame, max_hamming: int = 3, hasher: str = "xxhash64"
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= max_hamming, candidate-
+def simhash_pairs(docs: DataFrame, hasher: str = "xxhash64") -> DataFrame:
+    """Near-dup pairs with hamming(simhash) <= 3, candidate-
     generated by 4-band equality (16-bit bands for the 64-bit xxhash64
     variant, 15-bit for the 60-bit md5_60 oracle variant): any pair
     within hamming 3 shares at least one exact band — pigeonhole."""
@@ -1072,7 +1067,7 @@ def simhash_pairs(
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
     return (
         cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -1119,8 +1114,10 @@ def _block_matmul_candidates(
         .groupBy("chunk")
         .agg(F.collect_list(F.struct("vec_id", "embedding")).alias("rows"))
     )
+    # from pandas: a JVM local relation, so no Python worker scans it
     pair_idx = spark.createDataFrame(
-        [(i, j) for i in range(n_chunks) for j in range(i, n_chunks)],
+        pd.DataFrame([(i, j) for i in range(n_chunks) for j in range(i, n_chunks)],
+                     columns=["ca", "cb"]),
         "ca int, cb int",
     )
     pa = packed.select(F.col("chunk").alias("ca"), F.col("rows").alias("rows_a"))
@@ -1164,18 +1161,16 @@ def _block_matmul_candidates(
     return joined.mapInPandas(_mm, "vec_a long, vec_b long")
 
 
-def _lsh_candidates(
-    e: DataFrame, n_planes: int, ring: int, seed: int
-) -> DataFrame:
-    """Approximate candidates: LSH sign-bucket equi-join, one side exploded
-    to its hamming<=ring bucket ball. Sub-quadratic, but recall at loose
+def _lsh_candidates(e: DataFrame) -> DataFrame:
+    """Approximate candidates: 8-plane LSH sign-bucket equi-join, one side
+    exploded to its hamming<=2 bucket ball. Sub-quadratic, but recall at loose
     thresholds (e.g. cos 0.4 ~ 66deg) is NOT guaranteed — use for tight
     thresholds (cos >= 0.9) where the collision probability is high."""
     from rio_cogeo_spark.operators.similarity import lsh_bucket
 
     dim = len(e.select("embedding").head()["embedding"])
-    bucketed = lsh_bucket(e, "embedding", dim, n_planes, seed)
-    ball = _hamming_ball(n_planes, ring)
+    bucketed = lsh_bucket(e, "embedding", dim)
+    ball = _hamming_ball(8, 2)
     probe = bucketed.withColumn(
         "bucket",
         F.explode(
@@ -1192,10 +1187,11 @@ def _lsh_candidates(
     )
 
 
-def _auto_n_chunks(e: DataFrame, target_chunk_bytes: int) -> int:
+def _auto_n_chunks(e: DataFrame, target_chunk_bytes: int = 64 * 1024 * 1024) -> int:
     """Derive the block-matmul chunk count from the corpus: a chunk is
-    ~N/n_chunks * dim float64s and MUST fit comfortably in one executor
-    task (two chunks are resident per matmul), so n_chunks grows linearly
+    ~N/n_chunks * dim float64s, about ``target_chunk_bytes`` (64 MiB),
+    and MUST fit comfortably in one executor task (two chunks are
+    resident per matmul), so n_chunks grows linearly
     with total corpus bytes — a fixed constant overflows executor memory
     the moment the corpus outgrows it. Floor: enough chunk PAIRS
     (n*(n+1)/2) to occupy every core."""
@@ -1216,11 +1212,6 @@ def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     candidates: str = "block",
-    n_chunks: "Optional[int]" = None,
-    n_planes: int = 8,
-    ring: int = 2,
-    seed: int = 42,
-    target_chunk_bytes: int = 64 * 1024 * 1024,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (vec_a < vec_b, cos >= threshold).
 
@@ -1230,9 +1221,8 @@ def embedding_neardup_pairs(
     - ``'block'`` (default): blocked-matmul candidates — **exact** at any
       threshold, no BroadcastNestedLoopJoin in the plan (see
       :func:`_block_matmul_candidates` for the 100 TB organization).
-      ``n_chunks=None`` (default) auto-sizes chunks so each holds
-      ~``target_chunk_bytes`` of vectors regardless of corpus size
-      (:func:`_auto_n_chunks`); pass an int to pin it.
+      Chunks are sized so each holds ~64 MiB of vectors regardless of
+      corpus size (:func:`_auto_n_chunks`).
     - ``'lsh'``: sign-LSH bucket ring — sub-quadratic but approximate;
       measured recall at threshold 0.4 on the sandbox embeddings is ~0.4
       (the qualifying pairs sit just above the threshold in otherwise
@@ -1245,11 +1235,9 @@ def embedding_neardup_pairs(
     """
     e = embeddings.select("vec_id", "embedding")
     if candidates == "block":
-        if n_chunks is None:
-            n_chunks = _auto_n_chunks(e, target_chunk_bytes)
-        cand = _block_matmul_candidates(e, threshold, n_chunks)
+        cand = _block_matmul_candidates(e, threshold, _auto_n_chunks(e))
     elif candidates == "lsh":
-        cand = _lsh_candidates(e, n_planes, ring, seed)
+        cand = _lsh_candidates(e)
     elif candidates == "all":
         a, b = e.alias("a"), e.alias("b")
         cand = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
@@ -1269,12 +1257,7 @@ def embedding_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     """Resolve near-dup PAIRS into duplicate GROUPS: for every node in
     the pair graph, ``(doc_id, component)`` where component = min node id
     reachable — the canonical keeper, making "keep one per group" a
@@ -1296,9 +1279,9 @@ def connected_components(
     diameter.
     """
     edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .unionByName(
-            pairs.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
         )
         .distinct()
     )
@@ -1344,13 +1327,12 @@ def connected_components(
     )
 
 
-def dedup_components(pairs: DataFrame,
-                     src: str = "doc_a", dst: str = "doc_b") -> DataFrame:
+def dedup_components(pairs: DataFrame) -> DataFrame:
     """Per-document duplicate-group assignment over a mined pair set:
     ``(doc_id, component, is_keeper)`` for every doc that appears in a
     pair (singletons are trivially their own keeper and are omitted,
     keeping output bounded by the duplicate population)."""
-    comp = connected_components(pairs, src, dst)
+    comp = connected_components(pairs)
     return comp.withColumn(
         "is_keeper", (F.col("doc_id") == F.col("component"))
     )
@@ -1360,8 +1342,6 @@ def dedup_keep_best(
     docs: DataFrame,
     pairs: DataFrame,
     score: Optional[Column] = None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
 ) -> DataFrame:
     """Canonical-document selection per duplicate group: resolve the
     mined pair set into components, then keep the member with the
@@ -1385,7 +1365,7 @@ def dedup_keep_best(
     won't hash-compare.
     """
     score_col = score if score is not None else token_count(F.col("text"))
-    comp = connected_components(pairs, src, dst)
+    comp = connected_components(pairs)
     scored = comp.join(
         docs.select(F.col("doc_id"), score_col.alias("score")), "doc_id"
     )
@@ -1409,12 +1389,7 @@ def dedup_keep_best(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 40,
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SOCC'14) —
     the adversarial-graph-shape variant of :func:`connected_components`:
@@ -1430,7 +1405,7 @@ def connected_components_star(
     """
     # undirected edge set, normalized to a != b
     edges = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
@@ -1554,9 +1529,7 @@ def paragraph_dedup(docs: DataFrame, sep: str = "\n\n") -> DataFrame:
     )
 
 
-def crawl_priority(
-    stats: DataFrame, now_ts: int, horizon_sec: int = 30 * 86400
-) -> DataFrame:
+def crawl_priority(stats: DataFrame, now_ts: int) -> DataFrame:
     """Re-crawl priority from :func:`snapshot_change_stats` output — the
     scheduling read of the change history: pages that change often and
     haven't been fetched recently come first.
@@ -1580,7 +1553,7 @@ def crawl_priority(
             F.expr("(n_changes - 1) * 1000000000 div (last_ts - first_ts)"),
             F.lit(1_000_000_000),
         ),
-    ).otherwise(F.lit(1_000_000_000 // int(horizon_sec)))
+    ).otherwise(F.lit(1_000_000_000 // (30 * 86400)))
     return (
         stats.withColumn("change_rate_ppb", rate)
         .withColumn("age_sec", F.lit(int(now_ts)) - F.col("last_ts"))
@@ -1801,12 +1774,10 @@ def winnow_pairs(
     )
 
 
-def winnow_pairs_sql(
-    docs_cte: str, min_shared: int = 2, k: int = 3, w: int = 4
-) -> str:
+def winnow_pairs_sql(docs_cte: str, min_shared: int = 2) -> str:
     """DuckDB twin of :func:`winnow_pairs` with ``df_cap=None``
     (``docs_cte`` exposes ``(doc_id, text)``)."""
-    kk, ww = int(k), int(w)
+    kk, ww = 3, 4  # shingle length k and winnow window w
     return rf"""
 WITH docs AS ({docs_cte}),
 t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM docs),
@@ -1943,7 +1914,6 @@ def winnow_match_index(
 
 def jaccard_threshold_curve(
     docs: DataFrame,
-    n: int = 3,
     step_ppm: int = 100_000,
     df_cap: "Optional[int | str]" = "auto",
 ) -> DataFrame:
@@ -1968,7 +1938,7 @@ def jaccard_threshold_curve(
     """
     if step_ppm < 1 or step_ppm > 1_000_000:
         raise ValueError(f"step_ppm must be in [1, 1e6], got {step_ppm}")
-    common, sizes = _shingle_pair_counts(docs, n, df_cap)
+    common, sizes = _shingle_pair_counts(docs, 3, df_cap)
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("size_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("size_b"))
     jac_ppm = F.expr(
@@ -1995,18 +1965,14 @@ def jaccard_threshold_curve(
 
 def jaccard_threshold_curve_sql(
     table: str = "documents",
-    toks_sql: str = None,
     step_ppm: int = 100_000,
 ) -> str:
-    """DuckDB twin of :func:`jaccard_threshold_curve` at the default
-    n=3 shingles (df_cap=None — the oracle-exact configuration, as for
-    ngram_jaccard). ``toks_sql`` is the tokenizer expression over the
-    table's text column (functions.text.TOKENS_SQL)."""
-    if toks_sql is None:
-        from rio_cogeo_spark.functions.text import TOKENS_SQL
+    """DuckDB twin of :func:`jaccard_threshold_curve` at n=3 shingles
+    (df_cap=None — the oracle-exact configuration, as for
+    ngram_jaccard), tokenized by functions.text.TOKENS_SQL."""
+    from rio_cogeo_spark.functions.text import TOKENS_SQL
 
-        toks_sql = TOKENS_SQL
-    sh = SHINGLES_SQL.format(toks=toks_sql)
+    sh = SHINGLES_SQL.format(toks=TOKENS_SQL)
     return f"""
 WITH jt_s AS (SELECT doc_id, {sh} AS sh FROM {table}),
 jt_s2 AS (SELECT doc_id, sh, len(sh) AS n_sh FROM jt_s WHERE len(sh) > 0),
@@ -2081,20 +2047,20 @@ def continuation_pairs(docs: DataFrame, k: int = 8) -> DataFrame:
     )
 
 
-def continuation_pairs_sql(table: str = "documents", k: int = 8) -> str:
+def continuation_pairs_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`continuation_pairs` (max_fanout guard
     included — the contract covers the guard, not just the join)."""
     toks = r"string_split_regex(trim(text), '\s+')"
     return f"""
 WITH cp_t AS (SELECT doc_id, {toks} AS t FROM {table}),
-cp_b AS (SELECT doc_id, t, len(t) AS n FROM cp_t WHERE len(t) >= {k} + 1),
+cp_b AS (SELECT doc_id, t, len(t) AS n FROM cp_t WHERE len(t) >= 8 + 1),
 cp_h AS (SELECT doc_id AS doc_b,
-                array_to_string(t[1:{k}], ' ') AS boundary FROM cp_b),
+                array_to_string(t[1:8], ' ') AS boundary FROM cp_b),
 cp_hot AS (SELECT boundary FROM cp_h GROUP BY 1 HAVING COUNT(*) > 64),
 cp_h2 AS (SELECT * FROM cp_h
           WHERE boundary NOT IN (SELECT boundary FROM cp_hot)),
 cp_ta AS (SELECT doc_id AS doc_a,
-                 array_to_string(t[n - {k} + 1 : n], ' ') AS boundary
+                 array_to_string(t[n - 8 + 1 : n], ' ') AS boundary
           FROM cp_b)
 SELECT a.doc_a, h.doc_b, a.boundary
 FROM cp_ta a JOIN cp_h2 h USING (boundary)
@@ -2151,25 +2117,17 @@ def mirror_host_pairs(
     )
 
 
-def mirror_host_pairs_sql(
-    pages_cte: str,
-    min_shared: int = 2,
-    max_hosts_per_fp: int = 32,
-    host_sql: str = None,
-    fp_sql: str = None,
-) -> str:
+def mirror_host_pairs_sql(pages_cte: str, min_shared: int = 2) -> str:
     """DuckDB twin of :func:`mirror_host_pairs` (``pages_cte`` exposes
-    ``(url, text)``; host/fp expressions default to the shared
-    HOST_SQL / FINGERPRINT_SQL contracts)."""
+    ``(url, text)``; host/fp expressions are the shared HOST_SQL /
+    FINGERPRINT_SQL contracts)."""
     from rio_cogeo_spark.functions.text import FINGERPRINT_SQL, HOST_SQL
 
-    host_sql = host_sql or HOST_SQL
-    fp_sql = fp_sql or FINGERPRINT_SQL
     return f"""
 WITH mh_p AS ({pages_cte}),
-mh_f AS (SELECT DISTINCT {host_sql} AS host, {fp_sql} AS fp FROM mh_p),
+mh_f AS (SELECT DISTINCT {HOST_SQL} AS host, {FINGERPRINT_SQL} AS fp FROM mh_p),
 mh_g AS (SELECT fp, COUNT(*) AS nh FROM mh_f GROUP BY 1
-         HAVING COUNT(*) >= 2 AND COUNT(*) <= {max_hosts_per_fp}),
+         HAVING COUNT(*) >= 2 AND COUNT(*) <= 32),
 mh_pairs AS (SELECT a.host AS host_a, b.host AS host_b
              FROM mh_f a JOIN mh_f b
                ON a.fp = b.fp AND a.host < b.host

@@ -9,7 +9,7 @@ raster built from web pages needs before thresholding or publication:
 
 * :func:`dilate_tiles` — morphological dilation (the crawl-coverage
   buffer: every tile within ``radius`` of an occupied tile).
-* :func:`focal_stats` — 3x3 (or (2r+1)^2) focal sum / mean smoothing,
+* :func:`focal_stats` — 3x3 focal sum / mean smoothing,
   edge-clipped like GDAL's ``-of`` focal tools (absent tiles are ZERO,
   not NULL: density semantics).
 * :func:`hotspots` — Getis-Ord Gi* z-scores over the FULL grid
@@ -37,6 +37,7 @@ the value column as a parameter.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -102,7 +103,6 @@ def focal_stats(
     tiles: DataFrame,
     zoom: int,
     value_col: str = "page_count",
-    radius: int = 1,
 ) -> DataFrame:
     """Edge-clipped focal (moving-window) sum and mean over the grid.
 
@@ -118,17 +118,15 @@ def focal_stats(
         n_cells = (1 + min(x, r) + min(2^z-1-x, r))
                 * (1 + min(y, r) + min(2^z-1-y, r))
     """
-    if radius < 1:
-        raise ValueError(f"radius must be >= 1, got {radius}")
     contrib = _neighbor_rows(
         tiles.select(
             F.col("tile_x"), F.col("tile_y"),
             F.col(value_col).cast("long").alias("_v"),
         ),
-        zoom, radius, extra=("_v",),
+        zoom, 1, extra=("_v",),
     )
     edge = F.lit(2 ** zoom - 1)
-    r = F.lit(radius)
+    r = F.lit(1)
     n_cells = (
         (F.lit(1) + F.least(F.col("tile_x"), r)
          + F.least(edge - F.col("tile_x"), r))
@@ -146,7 +144,7 @@ def focal_stats(
     )
 
 
-def hotspots(tiles: DataFrame, zoom: int, radius: int = 1) -> DataFrame:
+def hotspots(tiles: DataFrame, zoom: int) -> DataFrame:
     """Getis-Ord Gi* hotspot z-scores over the FULL grid.
 
     The standard local spatial statistic for density hotspots: for each
@@ -190,7 +188,7 @@ def hotspots(tiles: DataFrame, zoom: int, radius: int = 1) -> DataFrame:
         (F.sum("_v") / F.lit(n_grid)).alias("g_mean"),
         (F.sum(F.col("_v") * F.col("_v")) / F.lit(n_grid)).alias("g_ex2"),
     )
-    foc = focal_stats(tiles, zoom, "page_count", radius)
+    foc = focal_stats(tiles, zoom, "page_count")
     w = F.col("n_cells").cast("double")
     g_std = F.sqrt(F.col("g_ex2") - F.col("g_mean") * F.col("g_mean"))
     denom = g_std * F.sqrt(
@@ -350,8 +348,9 @@ def assemble_viewport(
         for z in range(min_zoom, zoom + 1)
     ]
     spark = available.sparkSession
+    # from pandas: a JVM local relation, so no Python worker scans it
     anc = spark.createDataFrame(
-        anc_rows,
+        pd.DataFrame(anc_rows, columns=["req_x", "req_y", "anc_zoom", "anc_x", "anc_y"]),
         "req_x long, req_y long, anc_zoom int, anc_x long, anc_y long",
     )
     hits = available.select(
@@ -439,18 +438,14 @@ def focal_mode(tiles: DataFrame, zoom: int, radius: int = 1) -> DataFrame:
     )
 
 
-def class_crosstab(
-    a: DataFrame,
-    b: DataFrame,
-    absent: str = "(absent)",
-) -> DataFrame:
+def class_crosstab(a: DataFrame, b: DataFrame) -> DataFrame:
     """Classification CONFUSION MATRIX between two tile classifications
     of the same grid — the categorical change-detection companion to
     the numeric ``incremental.pyramid_subtract`` (GDAL/remote-sensing
     land-cover change matrix): for every (class-in-A, class-in-B)
     combination, the tile count and its exact-ppm share of all tiles
     classified by either side. Tiles present in only one side cross
-    with ``absent`` (coverage gained/lost rows), so the matrix margins
+    with ``"(absent)"`` (coverage gained/lost rows), so the matrix margins
     ARE the coverage report.
 
     Output ``(cls_a, cls_b, n_tiles, share_ppm)`` — classes carried as
@@ -470,8 +465,8 @@ def class_crosstab(
         F.col("cls").cast("string").alias("cls_b"),
     )
     both = sa.join(sb, ["_x", "_y"], "full_outer").select(
-        F.coalesce("cls_a", F.lit(absent)).alias("cls_a"),
-        F.coalesce("cls_b", F.lit(absent)).alias("cls_b"),
+        F.coalesce("cls_a", F.lit("(absent)")).alias("cls_a"),
+        F.coalesce("cls_b", F.lit("(absent)")).alias("cls_b"),
     )
     ct = both.groupBy("cls_a", "cls_b").agg(F.count(F.lit(1)).alias("n_tiles"))
     total = ct.agg(F.sum("n_tiles").alias("_total"))
@@ -568,11 +563,13 @@ SELECT tile_x, tile_y, page_count,
 FROM awd"""
 
 
+_HILLSHADE_ALTITUDE_DEG = 45.0
+
+
 def hillshade(
     tiles: DataFrame,
     zoom: int,
     azimuth_deg: float = 315.0,
-    altitude_deg: float = 45.0,
     z_factor: float = 1.0,
 ) -> DataFrame:
     """Analytical hillshading of the density grid (GDAL ``gdaldem
@@ -601,7 +598,7 @@ def hillshade(
 
     n = F.lit(2 ** zoom)
     az = math.radians(azimuth_deg)
-    alt = math.radians(altitude_deg)
+    alt = math.radians(_HILLSHADE_ALTITUDE_DEG)
     # light vector (x east, y north, z up); repr() keeps full precision
     lx = repr(math.cos(alt) * math.sin(az))
     ly = repr(math.cos(alt) * math.cos(az))
@@ -673,21 +670,15 @@ def hillshade(
     )
 
 
-def hillshade_sql(
-    tiles_cte: str,
-    zoom: int,
-    azimuth_deg: float = 315.0,
-    altitude_deg: float = 45.0,
-    z_factor: float = 1.0,
-) -> str:
+def hillshade_sql(tiles_cte: str, zoom: int, z_factor: float = 1.0) -> str:
     """DuckDB twin of :func:`hillshade` — identical slot folds and the
     textually identical shade expression (same driver-side light
     constants)."""
     import math
 
     edge = 2 ** zoom - 1
-    az = math.radians(azimuth_deg)
-    alt = math.radians(altitude_deg)
+    az = math.radians(315.0)
+    alt = math.radians(_HILLSHADE_ALTITUDE_DEG)
     lx = repr(math.cos(alt) * math.sin(az))
     ly = repr(math.cos(alt) * math.cos(az))
     sin_alt = repr(math.sin(alt))
@@ -775,7 +766,7 @@ def morans_i(
         F.col("tile_x"), F.col("tile_y"),
         F.col(value_col).cast("long").alias("_x"),
     )
-    foc = focal_stats(base, zoom, "_x", 1)
+    foc = focal_stats(base, zoom, "_x")
     edge = F.lit(n_side - 1)
     w_i = (
         (F.lit(1) + F.least(F.col("tile_x"), F.lit(1))
@@ -1311,15 +1302,13 @@ def flow_accumulation(
     )
 
 
-def flow_accumulation_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
+def flow_accumulation_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`flow_accumulation` (unrolled CTE chain)."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
     parts = [_d8_cte(base_cte, zoom)]
     parts.append(
         ", fa_0 AS (SELECT tile_x, tile_y, 1 AS acc FROM d8f)"
     )
-    for i in range(rounds):
+    for i in range(4):
         parts.append(f"""
 , fi_{i} AS (SELECT e.rcv_x AS tile_x, e.rcv_y AS tile_y,
                     SUM(a.acc) AS inflow
@@ -1331,7 +1320,7 @@ def flow_accumulation_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
                  FROM d8f d LEFT JOIN fi_{i} f USING (tile_x, tile_y))""")
     parts.append(
         f"\nSELECT tile_x, tile_y, CAST(acc AS BIGINT) AS acc"
-        f" FROM fa_{rounds}"
+        f" FROM fa_4"
     )
     return "".join(parts)
 
@@ -1558,17 +1547,15 @@ def proximity(tiles: DataFrame, zoom: int, rounds: int = 3) -> DataFrame:
     )
 
 
-def proximity_sql(base_cte: str, zoom: int, rounds: int = 3) -> str:
+def proximity_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`proximity` (unrolled CTE chain)."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
     edge = 2 ** zoom - 1
     parts = [base_cte]
     parts.append(
         ", px_0 AS (SELECT tile_x, tile_y, CAST(0 AS BIGINT) AS dist"
         " FROM base)"
     )
-    for i in range(rounds):
+    for i in range(3):
         parts.append(f"""
 , px_{i + 1} AS (
     SELECT p.tile_x + o1.dx AS tile_x, p.tile_y + o2.dy AS tile_y,
@@ -1582,7 +1569,7 @@ def proximity_sql(base_cte: str, zoom: int, rounds: int = 3) -> str:
     GROUP BY 1, 2)""")
     parts.append(
         f"\nSELECT tile_x, tile_y, CAST(dist AS BIGINT) AS dist"
-        f" FROM px_{rounds}"
+        f" FROM px_3"
     )
     return "".join(parts)
 
@@ -1659,14 +1646,8 @@ def sieve_components(
     )
 
 
-def sieve_components_sql(
-    base_cte: str, zoom: int, rounds: int = 4, min_size: int = 3,
-) -> str:
+def sieve_components_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`sieve_components` (unrolled CTE chain)."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
-    if min_size < 1:
-        raise ValueError(f"min_size must be >= 1, got {min_size}")
     edge = 2 ** zoom - 1
     parts = [base_cte]
     parts.append(f"""
@@ -1674,7 +1655,7 @@ def sieve_components_sql(
                   CAST(tile_y AS BIGINT) * {2 ** zoom} + tile_x AS label,
                   CAST(page_count AS BIGINT) AS v
            FROM base)""")
-    for i in range(rounds):
+    for i in range(4):
         parts.append(f"""
 , sv_{i + 1} AS (
     SELECT p.tile_x + o.dx AS tile_x, p.tile_y + o.dy AS tile_y,
@@ -1691,9 +1672,9 @@ def sieve_components_sql(
 SELECT tile_x, tile_y, label,
        CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS comp_cells,
        CAST(SUM(v) OVER (PARTITION BY label) AS BIGINT) AS comp_mass,
-       CAST(CASE WHEN COUNT(*) OVER (PARTITION BY label) >= {min_size}
+       CAST(CASE WHEN COUNT(*) OVER (PARTITION BY label) >= 3
                  THEN 1 ELSE 0 END AS INT) AS keep
-FROM sv_{rounds}""")
+FROM sv_4""")
     return "".join(parts)
 
 
@@ -1725,7 +1706,7 @@ def geary_c(tiles: DataFrame, zoom: int) -> DataFrame:
         F.col("tile_x"), F.col("tile_y"),
         F.col("page_count").cast("long").alias("_x"),
     )
-    foc = focal_stats(base, zoom, "_x", 1)
+    foc = focal_stats(base, zoom, "_x")
     edge = F.lit(n_side - 1)
     w_i = (
         (F.lit(1) + F.least(F.col("tile_x"), F.lit(1))
@@ -1843,7 +1824,7 @@ def local_moran(tiles: DataFrame, zoom: int) -> DataFrame:
         F.col("tile_x"), F.col("tile_y"),
         F.col("page_count").cast("long").alias("_x"),
     )
-    foc = focal_stats(base, zoom, "_x", 1)
+    foc = focal_stats(base, zoom, "_x")
     totals = base.agg(
         F.sum(F.col("_x").cast("decimal(38,0)")).alias("_s"),
         F.sum(F.col("_x").cast("decimal(38,0)") * F.col("_x")).alias("_q"),
@@ -1999,10 +1980,8 @@ def fillnodata(tiles: DataFrame, zoom: int, rounds: int = 3) -> DataFrame:
     )
 
 
-def fillnodata_sql(base_cte: str, zoom: int, rounds: int = 3) -> str:
+def fillnodata_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`fillnodata` (unrolled CTE chain)."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
     edge = 2 ** zoom - 1
     n_grid = 4 ** zoom
     parts = [base_cte]
@@ -2011,7 +1990,7 @@ def fillnodata_sql(base_cte: str, zoom: int, rounds: int = 3) -> str:
                   CAST(tile_y AS BIGINT) * {2 ** zoom} + tile_x AS pack,
                   CAST(page_count AS BIGINT) AS v
            FROM base)""")
-    for i in range(rounds):
+    for i in range(3):
         parts.append(f"""
 , fn_{i + 1} AS (
     SELECT p.tile_x + o1.dx AS tile_x, p.tile_y + o2.dy AS tile_y,
@@ -2029,7 +2008,7 @@ def fillnodata_sql(base_cte: str, zoom: int, rounds: int = 3) -> str:
 SELECT tile_x, tile_y, CAST(pack // {n_grid} AS BIGINT) AS dist,
        CAST(pack % {n_grid} AS BIGINT) AS src,
        CAST(v AS BIGINT) AS fill_v
-FROM fn_{rounds}""")
+FROM fn_3""")
     return "".join(parts)
 
 
@@ -2097,17 +2076,15 @@ def polygonize(tiles: DataFrame, zoom: int, rounds: int = 4) -> DataFrame:
     )
 
 
-def polygonize_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
+def polygonize_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`polygonize` (unrolled CTE chain)."""
-    if rounds < 1:
-        raise ValueError(f"rounds must be >= 1, got {rounds}")
     edge = 2 ** zoom - 1
     parts = [base_cte]
     parts.append(f"""
 , pg_0 AS (SELECT tile_x, tile_y, CAST(page_count AS BIGINT) AS v,
                   CAST(tile_y AS BIGINT) * {2 ** zoom} + tile_x AS label
            FROM base)""")
-    for i in range(rounds):
+    for i in range(4):
         parts.append(f"""
 , pg_{i + 1} AS (
     SELECT p.tile_x + o.dx AS tile_x, p.tile_y + o.dy AS tile_y, p.v AS v,
@@ -2121,7 +2098,7 @@ def polygonize_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
     parts.append(f"""
 SELECT tile_x, tile_y, v, label,
        CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT) AS region_cells
-FROM pg_{rounds}""")
+FROM pg_4""")
     return "".join(parts)
 
 
@@ -2280,11 +2257,11 @@ def semivariogram(tiles: DataFrame, zoom: int, max_lag: int = 4) -> DataFrame:
     )
 
 
-def semivariogram_sql(base_cte: str, zoom: int, max_lag: int = 4) -> str:
+def semivariogram_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`semivariogram` — ``base_cte`` exposes
     ``base(tile_x, tile_y, page_count)`` (WITH included)."""
     rows = []
-    for h in range(1, max_lag + 1):
+    for h in range(1, 5):
         for axis in ("x", "y"):
             rows.append(f"(0, 0, {h}, '{axis}', 'L')")
             kdx = -h if axis == "x" else 0
@@ -2313,11 +2290,14 @@ SELECT lag, CAST(n_pairs AS BIGINT) AS n_pairs,
 FROM sv_a"""
 
 
-def join_counts(tiles: DataFrame, zoom: int, threshold: int = 2) -> DataFrame:
+_JOIN_COUNTS_THRESHOLD = 2
+
+
+def join_counts(tiles: DataFrame, zoom: int) -> DataFrame:
     """Join-count statistics (Cliff-Ord BB/BW/WW) of the binarized
     density grid under rook adjacency over the FULL ``2^zoom`` grid —
     the categorical sibling of :func:`morans_i`/:func:`geary_c`: a
-    cell is *black* iff ``value ≥ threshold``, absent cells are white
+    cell is *black* iff ``value ≥ 2``, absent cells are white
     (zero-density convention).  One row
     ``(n_black, n_white, j_bb, j_bw, j_ww, j_total, exp_bb_mil)``:
     all counts exact BIGINT; ``j_total = 2·n·(n−1)`` closed-form;
@@ -2334,7 +2314,7 @@ def join_counts(tiles: DataFrame, zoom: int, threshold: int = 2) -> DataFrame:
     """
     n = 2 ** zoom
     j_total = 2 * n * (n - 1)
-    b = (F.col("page_count").cast("long") >= F.lit(threshold)).cast("long")
+    b = (F.col("page_count").cast("long") >= F.lit(_JOIN_COUNTS_THRESHOLD)).cast("long")
     off = F.explode(
         F.array(*[
             F.struct(F.lit(kdx).alias("kdx"), F.lit(kdy).alias("kdy"),
@@ -2392,13 +2372,13 @@ def join_counts(tiles: DataFrame, zoom: int, threshold: int = 2) -> DataFrame:
     )
 
 
-def join_counts_sql(base_cte: str, zoom: int, threshold: int = 2) -> str:
+def join_counts_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`join_counts`."""
     n = 2 ** zoom
     j_total = 2 * n * (n - 1)
     return f"""{base_cte}
 , jc_v AS (SELECT b.tile_x + o.kdx AS px, b.tile_y + o.kdy AS py, o.axis,
-                  CASE WHEN CAST(b.page_count AS BIGINT) >= {threshold}
+                  CASE WHEN CAST(b.page_count AS BIGINT) >= {_JOIN_COUNTS_THRESHOLD}
                        THEN 1 ELSE 0 END AS bb
            FROM base b,
                 (VALUES (0, 0, 'x'), (-1, 0, 'x'),
@@ -2414,7 +2394,7 @@ def join_counts_sql(base_cte: str, zoom: int, threshold: int = 2) -> str:
                    SUM(CASE WHEN blk = 1 THEN 1 ELSE 0 END) AS j_bw,
                    SUM(CASE WHEN blk = 0 THEN 1 ELSE 0 END) AS j_ww_occ
             FROM jc_p)
-, jc_c AS (SELECT SUM(CASE WHEN CAST(page_count AS BIGINT) >= {threshold}
+, jc_c AS (SELECT SUM(CASE WHEN CAST(page_count AS BIGINT) >= {_JOIN_COUNTS_THRESHOLD}
                            THEN 1 ELSE 0 END) AS n_black FROM base)
 SELECT CAST(n_black AS BIGINT) AS n_black,
        CAST({n * n} - n_black AS BIGINT) AS n_white,
@@ -2843,10 +2823,13 @@ def _nn_final(intdiv: str) -> list[str]:
     ]
 
 
-def nn_index(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
+_NN_INDEX_MAX_RING = 3
+
+
+def nn_index(tiles: DataFrame, zoom: int) -> DataFrame:
     """Grid-adapted Clark-Evans nearest-neighbor index of the occupied
     cells: per occupied cell, the EXACT Chebyshev distance to the
-    nearest OTHER occupied cell, searched out to ``max_ring`` (cells
+    nearest OTHER occupied cell, searched out to ring 3 (cells
     whose NN is farther are counted in ``n_cells`` but excluded from
     the mean — the bounded-round contract shared by proximity/BFS).
     One row ``(n_cells, n_within, sum_nn, mean_nn_mil, ce_mil)``:
@@ -2861,11 +2844,9 @@ def nn_index(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     pair-key hash aggregate taking ``min(ring)``, one single-row fold.
     Grid-bounded, no self-join, no window, no Python.
     """
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     entries = [F.struct(F.lit(0).alias("r"), F.lit(0).alias("dx"),
                         F.lit(0).alias("dy"))]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _NN_INDEX_MAX_RING + 1):
         entries += [
             F.struct(F.lit(k).alias("r"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -2895,13 +2876,11 @@ def nn_index(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
                .selectExpr(*_nn_final("div"))
 
 
-def nn_index_sql(tiles_cte: str, zoom: int, max_ring: int = 3) -> str:
+def nn_index_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`nn_index` — identical offsets and final
     projection."""
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     vals = ["(0, 0, 0)"]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _NN_INDEX_MAX_RING + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
     final = ",\n       ".join(_nn_final("//"))
     return f"""WITH nn_t AS ({tiles_cte}),
@@ -2939,10 +2918,13 @@ def _ripley_final(max_r: int, grid_n: int) -> list[str]:
     ]
 
 
-def ripley_k(points: DataFrame, zoom: int, max_r: int = 4) -> DataFrame:
+_RIPLEY_K_MAX_R = 4
+
+
+def ripley_k(points: DataFrame, zoom: int) -> DataFrame:
     """Grid-adapted Ripley's K of the point pattern (one row per cell
     per point is fine — multiplicities count) at Chebyshev radii
-    ``1..max_r``: per radius, the EXACT number of unordered distinct
+    ``1..4``: per radius, the EXACT number of unordered distinct
     point pairs within distance r, plus ``k_ratio_mil`` — observed
     over the CSR expectation ``P·((2r+1)²−1)/G²`` (no edge
     correction; > 1e6 ⇒ clustered at that scale, the multi-scale
@@ -2950,21 +2932,19 @@ def ripley_k(points: DataFrame, zoom: int, max_r: int = 4) -> DataFrame:
     totals staged DECIMAL(38,0) exactly as :func:`knox_stat`.
 
     Scale design: points fold to cell counts first, then ONE dual-role
-    vote explode over the ``(2·max_r+1)²`` disc offsets carrying the
+    vote explode over the ``9²`` disc offsets carrying the
     ring number, ONE pair-key hash aggregate with per-ring conditional
-    vote sums, one single-row fold, and a ``max_r``-way bounded UNION
+    vote sums, one single-row fold, and a 4-way bounded UNION
     for the per-radius rows.  No self-join, no window, no Python.
     """
-    if max_r < 1:
-        raise ValueError(f"max_r must be >= 1, got {max_r}")
     counts = points.groupBy(
         F.col("tile_x").cast("long").alias("cx"),
         F.col("tile_y").cast("long").alias("cy"),
     ).agg(F.count(F.lit(1)).alias("n"))
     entries = [F.struct(F.lit(0).alias("r"), F.lit(0).alias("dx"),
                         F.lit(0).alias("dy"))]
-    for dx in range(-max_r, max_r + 1):
-        for dy in range(-max_r, max_r + 1):
+    for dx in range(-_RIPLEY_K_MAX_R, _RIPLEY_K_MAX_R + 1):
+        for dy in range(-_RIPLEY_K_MAX_R, _RIPLEY_K_MAX_R + 1):
             entries.append(
                 F.struct(F.lit(max(abs(dx), abs(dy)) + 1).alias("r"),
                          F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
@@ -2986,48 +2966,46 @@ def ripley_k(points: DataFrame, zoom: int, max_r: int = 4) -> DataFrame:
             F.sum(F.when((F.col("r") > 0) & (F.col("r") <= k + 1),
                          F.col("n"))
                   .otherwise(F.lit(0))).alias(f"vs{k}")
-            for k in range(1, max_r + 1)
+            for k in range(1, _RIPLEY_K_MAX_R + 1)
         ],
     )
     fold = g.filter(F.col("a").isNotNull()).agg(
         F.sum(F.col("a").cast(d)).alias("n_pts"),
         *[
             F.sum(F.col("a").cast(d) * F.col(f"vs{k}")).alias(f"o{k}")
-            for k in range(1, max_r + 1)
+            for k in range(1, _RIPLEY_K_MAX_R + 1)
         ],
     )
     per_r = fold.selectExpr(
         "n_pts",
-        "stack(" + str(max_r) + ", "
-        + ", ".join(f"CAST({k} AS BIGINT), o{k}" for k in range(1, max_r + 1))
+        "stack(" + str(_RIPLEY_K_MAX_R) + ", "
+        + ", ".join(f"CAST({k} AS BIGINT), o{k}" for k in range(1, _RIPLEY_K_MAX_R + 1))
         + ") AS (radius, o_r)",
     )
-    return per_r.selectExpr(*_ripley_final(max_r, 2 ** zoom))
+    return per_r.selectExpr(*_ripley_final(_RIPLEY_K_MAX_R, 2 ** zoom))
 
 
-def ripley_k_sql(points_cte: str, zoom: int, max_r: int = 4) -> str:
+def ripley_k_sql(points_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`ripley_k` — identical disc offsets,
     conditional ring sums and final projection (the per-radius rows
     come from the same bounded UNION via UNPIVOT-free UNION ALL)."""
-    if max_r < 1:
-        raise ValueError(f"max_r must be >= 1, got {max_r}")
     vals = ["(0, 0, 0)"]
-    for dx in range(-max_r, max_r + 1):
-        for dy in range(-max_r, max_r + 1):
+    for dx in range(-_RIPLEY_K_MAX_R, _RIPLEY_K_MAX_R + 1):
+        for dy in range(-_RIPLEY_K_MAX_R, _RIPLEY_K_MAX_R + 1):
             vals.append(f"({max(abs(dx), abs(dy)) + 1}, {dx}, {dy})")
     ring_sums = ",\n                ".join(
         f"SUM(CASE WHEN r <= {k + 1} AND r > 0 THEN n ELSE 0 END) AS vs{k}"
-        for k in range(1, max_r + 1)
+        for k in range(1, _RIPLEY_K_MAX_R + 1)
     )
     o_sums = ",\n                ".join(
         f"SUM(CAST(a AS HUGEINT) * vs{k}) AS o{k}"
-        for k in range(1, max_r + 1)
+        for k in range(1, _RIPLEY_K_MAX_R + 1)
     )
     union = "\nUNION ALL\n".join(
         f"SELECT n_pts, CAST({k} AS BIGINT) AS radius, o{k} AS o_r FROM rk_f"
-        for k in range(1, max_r + 1)
+        for k in range(1, _RIPLEY_K_MAX_R + 1)
     )
-    final = ",\n       ".join(_ripley_final(max_r, 2 ** zoom))
+    final = ",\n       ".join(_ripley_final(_RIPLEY_K_MAX_R, 2 ** zoom))
     return f"""WITH rk_pts AS ({points_cte}),
 rk_c AS (SELECT tile_x AS cx, tile_y AS cy, COUNT(*) AS n
          FROM rk_pts GROUP BY 1, 2),
@@ -3258,12 +3236,7 @@ def _scan_final(intdiv: str, top_k: int) -> list[str]:
     ]
 
 
-def scan_stat(
-    tiles: DataFrame,
-    zoom: int,
-    radius: int = 1,
-    top_k: int = 20,
-) -> DataFrame:
+def scan_stat(tiles: DataFrame, zoom: int, top_k: int = 20) -> DataFrame:
     """Simplified spatial scan statistic — the Kulldorff-style hotspot
     shortlist: for every window center, the EXACT relative risk of its
     edge-clipped ``(2r+1)²`` window against the global rate,
@@ -3280,7 +3253,7 @@ def scan_stat(
     onto it, one top-K window over the grid-bounded candidate table.
     """
     d = "decimal(38,0)"
-    fs = focal_stats(tiles, zoom, "page_count", radius).select(
+    fs = focal_stats(tiles, zoom, "page_count").select(
         "tile_x", "tile_y",
         F.col("focal_sum").cast(d).alias("focal_sum"),
         F.col("n_cells").cast(d).alias("win_area"),
@@ -3303,17 +3276,11 @@ def scan_stat(
     return ranked.selectExpr(*_scan_final("div", top_k))
 
 
-def scan_stat_sql(
-    tiles_cte: str,
-    zoom: int,
-    radius: int = 1,
-    top_k: int = 20,
-) -> str:
+def scan_stat_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`scan_stat` — identical window fold
     (offsets + closed-form in-bounds area) and final projection."""
     edge = 2 ** zoom - 1
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _offsets(radius))
-    r = radius
+    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _offsets(1))
     return f"""WITH sc_t AS ({tiles_cte}),
 sc_v AS (SELECT t.tile_x + o.dx AS nx, t.tile_y + o.dy AS ny,
                 CAST(t.page_count AS BIGINT) AS v
@@ -3322,8 +3289,8 @@ sc_v AS (SELECT t.tile_x + o.dx AS nx, t.tile_y + o.dy AS ny,
            AND t.tile_y + o.dy BETWEEN 0 AND {edge}),
 sc_f AS (SELECT nx AS tile_x, ny AS tile_y,
                 CAST(SUM(v) AS HUGEINT) AS focal_sum,
-                CAST((1 + LEAST(nx, {r}) + LEAST({edge} - nx, {r}))
-                   * (1 + LEAST(ny, {r}) + LEAST({edge} - ny, {r}))
+                CAST((1 + LEAST(nx, 1) + LEAST({edge} - nx, 1))
+                   * (1 + LEAST(ny, 1) + LEAST({edge} - ny, 1))
                    AS HUGEINT) AS win_area
          FROM sc_v GROUP BY 1, 2),
 sc_g AS (SELECT CAST(SUM(page_count) AS HUGEINT) AS total,
@@ -3335,29 +3302,30 @@ sc_r AS (SELECT f.*, g.total, g.n_quadrats,
                     // (f.win_area * g.total) DESC,
                     f.focal_sum DESC, f.tile_x ASC, f.tile_y ASC) AS _rk
          FROM sc_f f, sc_g g)
-SELECT {", ".join(_scan_final("//", top_k))}
-FROM sc_r WHERE _rk <= {int(top_k)}"""
+SELECT {", ".join(_scan_final("//", 20))}
+FROM sc_r WHERE _rk <= 20"""
 
 
-def g_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
+_G_FUNCTION_MAX_RING = 3
+
+
+def g_function(tiles: DataFrame, zoom: int) -> DataFrame:
     """Diggle's G function — the nearest-neighbor distance CDF of the
     occupied cells (the distributional refinement of
     :func:`nn_index`'s mean): one row per Chebyshev distance ``k =
-    1..max_ring`` with the exact count of cells whose nearest OTHER
+    1..3`` with the exact count of cells whose nearest OTHER
     occupied cell sits at exactly ``k`` and the cumulative CDF in mil
     (``g_mil = cum·10^6 div n_cells`` — cells with NN beyond the
     bound stay in the denominator, the bounded-round contract).
     FULLY exact, NO float.
 
     Scale design: the :func:`nn_index` ring-vote explode + min-ring
-    aggregate, then a ``max_ring``-bounded group + running sum over
-    that ≤ ``max_ring``-row table.
+    aggregate, then a 3-ring-bounded group + running sum over
+    that ≤ 3-row table.
     """
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     entries = [F.struct(F.lit(0).alias("r"), F.lit(0).alias("dx"),
                         F.lit(0).alias("dy"))]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _G_FUNCTION_MAX_RING + 1):
         entries += [
             F.struct(F.lit(k).alias("r"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -3399,12 +3367,10 @@ def g_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     )
 
 
-def g_function_sql(tiles_cte: str, zoom: int, max_ring: int = 3) -> str:
+def g_function_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`g_function` (int-div ``//``)."""
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     vals = ["(0, 0, 0)"]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _G_FUNCTION_MAX_RING + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
     return f"""WITH gf_t AS ({tiles_cte}),
 gf_v AS (SELECT t.tile_x + o.dx AS kx, t.tile_y + o.dy AS ky, o.r
@@ -3592,10 +3558,13 @@ SELECT {final}
 FROM se_a"""
 
 
-def f_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
+_F_FUNCTION_MAX_RING = 3
+
+
+def f_function(tiles: DataFrame, zoom: int) -> DataFrame:
     """Diggle's F function (the EMPTY-SPACE function) — the CDF of the
     distance from an empty grid cell to its nearest OCCUPIED cell: one
-    row per Chebyshev distance ``k = 1..max_ring`` with the exact count
+    row per Chebyshev distance ``k = 1..3`` with the exact count
     of empty cells whose nearest occupied cell sits at exactly ``k``
     and the cumulative CDF in mil (``f_mil = cum·10^6 div n_empty``;
     empty cells beyond the ring bound stay in the denominator — the
@@ -3609,16 +3578,14 @@ def f_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
 
     Scale design: the :func:`g_function` ring-vote explode (occupied
     cells vote r=0 at themselves, r=k at ring-k neighbors) + ONE
-    min-ring aggregate over vote keys, then a ``max_ring``-bounded
-    group + running sum.  Vote rows ≈ occupied·(2·max_ring+1)², all
+    min-ring aggregate over vote keys, then a 3-ring-bounded
+    group + running sum.  Vote rows ≈ occupied·7², all
     grid-bounded.
     """
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n = 1 << zoom
     entries = [F.struct(F.lit(0).alias("r"), F.lit(0).alias("dx"),
                         F.lit(0).alias("dy"))]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _F_FUNCTION_MAX_RING + 1):
         entries += [
             F.struct(F.lit(k).alias("r"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -3665,13 +3632,11 @@ def f_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     )
 
 
-def f_function_sql(tiles_cte: str, zoom: int, max_ring: int = 3) -> str:
+def f_function_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`f_function` (int-div ``//``)."""
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n = 1 << zoom
     vals = ["(0, 0, 0)"]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _F_FUNCTION_MAX_RING + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
     return f"""WITH ff_t AS ({tiles_cte}),
 ff_v AS (SELECT t.tile_x + o.dx AS kx, t.tile_y + o.dy AS ky, o.r
@@ -3698,12 +3663,15 @@ SELECT CAST(k AS BIGINT) AS k,
 FROM ff_c, ff_n"""
 
 
-def j_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
+_J_FUNCTION_MAX_RING = 3
+
+
+def j_function(tiles: DataFrame, zoom: int) -> DataFrame:
     """Van Lieshout & Baddeley's J function — ``J(k) = (1 − G(k)) /
     (1 − F(k))``, the single-number CSR diagnostic combining the
     nearest-neighbor CDF (:func:`g_function`) and the empty-space CDF
     (:func:`f_function`): J < 1 clustered, J ≈ 1 CSR, J > 1 regular.
-    One row per Chebyshev distance ``k = 1..max_ring``:
+    One row per Chebyshev distance ``k = 1..3``:
     ``(k, g_cum, f_cum, g_mil, f_mil, j_mil)`` with every distance in
     the spine present (zero-event distances carry the cumulative
     forward).  FULLY exact: both CDFs are exact mil floordivs and
@@ -3712,17 +3680,15 @@ def j_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
 
     Scale design: ONE ring-vote explode + ONE ``(kx, ky)`` min-ring
     aggregate serves both CDFs (occupied rows feed G, empty rows feed
-    F), folded to a ≤ ``2·max_ring``-row histogram; the k spine, the
+    F), folded to a ≤ 6-row histogram; the k spine, the
     two running sums and the final projection are all
-    ``max_ring``-bounded.  ``n_empty = 4^zoom − n_cells`` stays
+    3-ring-bounded.  ``n_empty = 4^zoom − n_cells`` stays
     closed-form — the grid never materializes.
     """
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n = 1 << zoom
     entries = [F.struct(F.lit(0).alias("r"), F.lit(0).alias("dx"),
                         F.lit(0).alias("dy"))]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _J_FUNCTION_MAX_RING + 1):
         entries += [
             F.struct(F.lit(k).alias("r"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -3755,7 +3721,7 @@ def j_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
         (F.lit(n).cast("long") * F.lit(n) - F.count(F.lit(1)))
         .alias("n_empty"),
     )
-    spine = tiles.sparkSession.range(1, max_ring + 1).select(
+    spine = tiles.sparkSession.range(1, _J_FUNCTION_MAX_RING + 1).select(
         F.col("id").alias("k")
     )
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
@@ -3790,15 +3756,13 @@ def j_function(tiles: DataFrame, zoom: int, max_ring: int = 3) -> DataFrame:
     )
 
 
-def j_function_sql(tiles_cte: str, zoom: int, max_ring: int = 3) -> str:
+def j_function_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`j_function` (int-div ``//``)."""
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n = 1 << zoom
     vals = ["(0, 0, 0)"]
-    for k in range(1, max_ring + 1):
+    for k in range(1, _J_FUNCTION_MAX_RING + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
-    spine = ", ".join(f"({k})" for k in range(1, max_ring + 1))
+    spine = ", ".join(f"({k})" for k in range(1, _J_FUNCTION_MAX_RING + 1))
     return f"""WITH jf_t AS ({tiles_cte}),
 jf_v AS (SELECT t.tile_x + o.dx AS kx, t.tile_y + o.dy AS ky, o.r
          FROM jf_t t, (VALUES {", ".join(vals)}) o(r, dx, dy)
@@ -3844,9 +3808,12 @@ def _ring_w_total(n: int, k: int) -> int:
     )
 
 
-def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
+_CORRELOGRAM_MAX_LAG = 3
+
+
+def correlogram(tiles: DataFrame, zoom: int) -> DataFrame:
     """Moran spatial correlogram — global Moran's I at Chebyshev lag
-    EXACTLY ``k`` for ``k = 1..max_lag`` (binary ring-k weights over
+    EXACTLY ``k`` for ``k = 1..3`` (binary ring-k weights over
     the full ``4^zoom`` grid, absent cells value 0): the
     autocorrelation-range diagnostic (how fast I(k) decays gives the
     cluster scale; :func:`morans_i` is the k = 1 row).  One row per
@@ -3868,8 +3835,6 @@ def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
     one per-lag fold; S/Q/B_k come from ONE base fold broadcast back.
     The input never shuffles twice; nothing is O(grid).
     """
-    if max_lag < 1:
-        raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     n_side = 2 ** zoom
     n_grid = 4 ** zoom
     d = "decimal(38,0)"
@@ -3879,7 +3844,7 @@ def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
         F.col("page_count").cast("long").alias("_x"),
     )
     entries = []
-    for k in range(1, max_lag + 1):
+    for k in range(1, _CORRELOGRAM_MAX_LAG + 1):
         entries += [
             F.struct(F.lit(k).alias("k"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -3922,7 +3887,7 @@ def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
         )
 
     b_cols = []
-    for k in range(1, max_lag + 1):
+    for k in range(1, _CORRELOGRAM_MAX_LAG + 1):
         w_i = (
             _width("tile_x", k) * _width("tile_y", k)
             - _width("tile_x", k - 1) * _width("tile_y", k - 1)
@@ -3936,16 +3901,16 @@ def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
         F.sum(F.col("_x").cast(d) * F.col("_x")).alias("q"),
         *b_cols,
     )
-    spine = tiles.sparkSession.range(1, max_lag + 1).select(
+    spine = tiles.sparkSession.range(1, _CORRELOGRAM_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("k")
     )
     b_case = "CASE " + " ".join(
-        f"WHEN k = {k} THEN b_{k}" for k in range(1, max_lag + 1)
+        f"WHEN k = {k} THEN b_{k}" for k in range(1, _CORRELOGRAM_MAX_LAG + 1)
     ) + " END"
     w_case = "CASE " + " ".join(
         f"WHEN k = {k} THEN CAST({_ring_w_total(n_side, k)}"
         " AS decimal(38,0))"
-        for k in range(1, max_lag + 1)
+        for k in range(1, _CORRELOGRAM_MAX_LAG + 1)
     ) + " END"
     joined = (
         spine.join(F.broadcast(c_rows), "k", "left")
@@ -3977,17 +3942,15 @@ def correlogram(tiles: DataFrame, zoom: int, max_lag: int = 3) -> DataFrame:
     )
 
 
-def correlogram_sql(base_cte: str, zoom: int, max_lag: int = 3) -> str:
+def correlogram_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`correlogram` (int-div ``//``; identical
     sign-split and closed forms)."""
-    if max_lag < 1:
-        raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     n_side = 2 ** zoom
     n_grid = 4 ** zoom
     vals = []
-    for k in range(1, max_lag + 1):
+    for k in range(1, _CORRELOGRAM_MAX_LAG + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
-    spine = ", ".join(f"({k})" for k in range(1, max_lag + 1))
+    spine = ", ".join(f"({k})" for k in range(1, _CORRELOGRAM_MAX_LAG + 1))
 
     def width(coord: str, m: int) -> str:
         if m == 0:
@@ -3999,14 +3962,14 @@ def correlogram_sql(base_cte: str, zoom: int, max_lag: int = 3) -> str:
         f"SUM(CAST(_x AS HUGEINT) * ({width('tile_x', k)}"
         f" * {width('tile_y', k)} - {width('tile_x', k - 1)}"
         f" * {width('tile_y', k - 1)})) AS b_{k}"
-        for k in range(1, max_lag + 1)
+        for k in range(1, _CORRELOGRAM_MAX_LAG + 1)
     )
     b_case = "CASE " + " ".join(
-        f"WHEN s.k = {k} THEN m.b_{k}" for k in range(1, max_lag + 1)
+        f"WHEN s.k = {k} THEN m.b_{k}" for k in range(1, _CORRELOGRAM_MAX_LAG + 1)
     ) + " END"
     w_case = "CASE " + " ".join(
         f"WHEN s.k = {k} THEN CAST({_ring_w_total(n_side, k)} AS HUGEINT)"
-        for k in range(1, max_lag + 1)
+        for k in range(1, _CORRELOGRAM_MAX_LAG + 1)
     ) + " END"
     return f"""WITH cg_t AS ({base_cte}),
 cg_b AS (SELECT CAST(tile_x AS BIGINT) AS tile_x,
@@ -4050,20 +4013,19 @@ SELECT CAST(k AS INT) AS k,
 FROM cg_f"""
 
 
-def emerging_hotspots(
-    pts: DataFrame,
-    top_k: int = 50,
-    min_buckets: int = 3,
-    bucket_sec: int = 3600,
-) -> DataFrame:
+_EMERGING_HOTSPOTS_MIN_BUCKETS = 3
+_EMERGING_HOTSPOTS_TOP_K = 50
+
+
+def emerging_hotspots(pts: DataFrame, bucket_sec: int = 3600) -> DataFrame:
     """Emerging/declining hot spots — the space-time-cube trend scan:
     per occupied cell, the EXACT Mann-Kendall S statistic of its
     page-count series over the cell's OBSERVED time buckets (pairs
     ``i < j`` by bucket, ``S = Σ sign(cnt_j − cnt_i)``; absent buckets
     are not imputed — the trend is over the cell's active periods,
-    documented contract).  Cells with ≥ ``min_buckets`` observed
+    documented contract).  Cells with ≥ 3 observed
     buckets rank by ``(|S| desc, S desc, tile_x, tile_y)`` — a strict
-    total order — cut to ``top_k``; ``trend`` is the sign label.
+    total order — cut to 50; ``trend`` is the sign label.
     FULLY exact integer.
 
     Scale design: corpus folds ONCE to ``(cell, bucket, cnt)``
@@ -4072,8 +4034,6 @@ def emerging_hotspots(
     count per cell (≤ the series length, never the corpus); top-k is
     a distributed TakeOrdered.  No self-join, no Python.
     """
-    if min_buckets < 2:
-        raise ValueError(f"min_buckets must be >= 2, got {min_buckets}")
     cb = pts.groupBy(
         F.col("tile_x").cast("long").alias("tile_x"),
         F.col("tile_y").cast("long").alias("tile_y"),
@@ -4083,7 +4043,7 @@ def emerging_hotspots(
     cells = cb.groupBy("tile_x", "tile_y").agg(
         F.collect_list(F.struct("bkt", "cnt")).alias("series"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
-    ).filter(F.col("n_buckets") >= int(min_buckets))
+    ).filter(F.col("n_buckets") >= _EMERGING_HOTSPOTS_MIN_BUCKETS)
     pairs = (
         cells.select(
             "tile_x", "tile_y", "n_buckets",
@@ -4120,19 +4080,12 @@ def emerging_hotspots(
     return out.orderBy(
         F.abs(F.col("s_stat")).desc(), F.col("s_stat").desc(),
         F.col("tile_x").asc(), F.col("tile_y").asc(),
-    ).limit(int(top_k))
+    ).limit(_EMERGING_HOTSPOTS_TOP_K)
 
 
-def emerging_hotspots_sql(
-    pts_cte: str,
-    top_k: int = 50,
-    min_buckets: int = 3,
-    bucket_sec: int = 3600,
-) -> str:
+def emerging_hotspots_sql(pts_cte: str, bucket_sec: int = 3600) -> str:
     """DuckDB twin of :func:`emerging_hotspots` — within-cell pair
     self-join over observed buckets (int-div ``//``)."""
-    if min_buckets < 2:
-        raise ValueError(f"min_buckets must be >= 2, got {min_buckets}")
     return f"""WITH eh_p AS ({pts_cte}),
 eh_c AS (SELECT tile_x, tile_y,
                 CAST(ts_sec AS BIGINT) // {int(bucket_sec)} AS bkt,
@@ -4140,7 +4093,7 @@ eh_c AS (SELECT tile_x, tile_y,
          FROM eh_p GROUP BY 1, 2, 3),
 eh_n AS (SELECT tile_x, tile_y, CAST(COUNT(*) AS BIGINT) AS n_buckets
          FROM eh_c GROUP BY 1, 2
-         HAVING COUNT(*) >= {int(min_buckets)}),
+         HAVING COUNT(*) >= {_EMERGING_HOTSPOTS_MIN_BUCKETS}),
 eh_s AS (SELECT a.tile_x, a.tile_y,
                 CAST(SUM(CASE WHEN b.cnt > a.cnt THEN 1
                               WHEN b.cnt < a.cnt THEN -1
@@ -4159,7 +4112,7 @@ SELECT CAST(n.tile_x AS BIGINT) AS tile_x,
 FROM eh_n n JOIN eh_s s
   ON s.tile_x = n.tile_x AND s.tile_y = n.tile_y
 ORDER BY ABS(s.s_stat) DESC, s.s_stat DESC, n.tile_x ASC, n.tile_y ASC
-LIMIT {int(top_k)}"""
+LIMIT {_EMERGING_HOTSPOTS_TOP_K}"""
 
 
 def rank_size(tiles: DataFrame, top_k: int = 50) -> DataFrame:
@@ -4208,7 +4161,7 @@ def rank_size(tiles: DataFrame, top_k: int = 50) -> DataFrame:
     )
 
 
-def rank_size_sql(tiles_cte: str, top_k: int = 50) -> str:
+def rank_size_sql(tiles_cte: str) -> str:
     """DuckDB twin of :func:`rank_size` (int-div ``//``)."""
     return f"""WITH rs_t AS ({tiles_cte}),
 rs_k AS (SELECT CAST(tile_x AS BIGINT) AS tile_x,
@@ -4216,7 +4169,7 @@ rs_k AS (SELECT CAST(tile_x AS BIGINT) AS tile_x,
                 CAST(page_count AS BIGINT) AS cnt
          FROM rs_t
          ORDER BY cnt DESC, tile_x ASC, tile_y ASC
-         LIMIT {int(top_k)}),
+         LIMIT 50),
 rs_r AS (SELECT *,
                 ROW_NUMBER() OVER (ORDER BY cnt DESC, tile_x ASC,
                                    tile_y ASC) AS rank,
@@ -4229,11 +4182,10 @@ SELECT CAST(rank AS BIGINT) AS rank,
 FROM rs_r"""
 
 
-def colocation_quotient(
-    cells: DataFrame,
-    zoom: int,
-    max_ring: int = 3,
-) -> DataFrame:
+_COLOCATION_QUOTIENT_MAX_RING = 3
+
+
+def colocation_quotient(cells: DataFrame, zoom: int) -> DataFrame:
     """Leslie–Kronenfeld colocation quotient (CLQ) between every
     ordered label pair over the occupied-cell pattern — ``CLQ_{a→b} =
     (C_{a→b}/N_a) / (N_b'/(N−1))`` where ``C_{a→b}`` sums, over
@@ -4245,7 +4197,7 @@ def colocation_quotient(
     ``(lang_a, lang_b, n_a, n_b, s_nano, clq_mil)``.
 
     Exactness contract: the NN set is the cells at the MINIMAL
-    Chebyshev ring ≤ ``max_ring`` (ALL ties included; cells with no
+    Chebyshev ring ≤ 3 (ALL ties included; cells with no
     occupied neighbor within the bound contribute nothing — the
     bounded-ring contract of :func:`g_function`); each cell's
     fraction is the exact floordiv ``(cnt_b·10^9) div |NN|``, and
@@ -4258,8 +4210,6 @@ def colocation_quotient(
     fold's cell partitioning, one pair fold; label totals broadcast.
     Nothing is O(grid²); no Python.
     """
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n_side = 2 ** zoom
     d = "decimal(38,0)"
     base = cells.select(
@@ -4268,7 +4218,7 @@ def colocation_quotient(
         F.col("lang").alias("_l"),
     )
     entries = []
-    for k in range(1, max_ring + 1):
+    for k in range(1, _COLOCATION_QUOTIENT_MAX_RING + 1):
         entries += [
             F.struct(F.lit(k).alias("k"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -4339,15 +4289,11 @@ def colocation_quotient(
     )
 
 
-def colocation_quotient_sql(
-    cells_cte: str, zoom: int, max_ring: int = 3
-) -> str:
+def colocation_quotient_sql(cells_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`colocation_quotient` (int-div ``//``)."""
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n_side = 2 ** zoom
     vals = []
-    for k in range(1, max_ring + 1):
+    for k in range(1, _COLOCATION_QUOTIENT_MAX_RING + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
     return f"""WITH cq_t AS ({cells_cte}),
 cq_b AS (SELECT CAST(tile_x AS BIGINT) AS tile_x,
@@ -4770,7 +4716,7 @@ def moran_quadrants(tiles: DataFrame, zoom: int) -> DataFrame:
         )
     )
     spine = tiles.sparkSession.createDataFrame(
-        [("HH",), ("HL",), ("LH",), ("LL",)], "quadrant string"
+        pd.DataFrame({"quadrant": ["HH", "HL", "LH", "LL"]}), "quadrant string"
     )
     return (
         spine.join(F.broadcast(census), "quadrant", "left")
@@ -4906,7 +4852,10 @@ SELECT n_cells, rook_pairs,
 FROM cp_n, cp_e"""
 
 
-def diurnal(pts: DataFrame, top_k: int = 50, min_pages: int = 8) -> DataFrame:
+_DIURNAL_TOP_K = 50
+
+
+def diurnal(pts: DataFrame, min_pages: int = 8) -> DataFrame:
     """Diurnal periodicity scan — per cell, the EXACT chi-square
     statistic of its hour-of-day activity histogram against the
     uniform 24-hour profile (crawl-scheduler artifacts and regional
@@ -4920,7 +4869,7 @@ def diurnal(pts: DataFrame, top_k: int = 50, min_pages: int = 8) -> DataFrame:
     is FULLY exact — ABSENT hours contribute the closed-form ``T²``
     term, so no 24-row spine is ever joined.  Cells with ≥
     ``min_pages`` pages rank by ``(chi2_mil desc, tile_x, tile_y)``
-    and cut to ``top_k``; ``n_hours`` is the distinct active hours.
+    and cut to 50; ``n_hours`` is the distinct active hours.
 
     Scale design: one ``(cell, hour)`` corpus fold (map-side
     combinable), one per-cell fold, distributed TakeOrdered.  No
@@ -4960,13 +4909,11 @@ def diurnal(pts: DataFrame, top_k: int = 50, min_pages: int = 8) -> DataFrame:
     return out.orderBy(
         F.col("chi2_mil").desc(), F.col("tile_x").asc(),
         F.col("tile_y").asc(),
-    ).limit(int(top_k))
+    ).limit(_DIURNAL_TOP_K)
 
 
-def diurnal_sql(pts_cte: str, top_k: int = 50, min_pages: int = 8) -> str:
+def diurnal_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`diurnal` (int-div ``//``)."""
-    if min_pages < 1:
-        raise ValueError(f"min_pages must be >= 1, got {min_pages}")
     return f"""WITH di_p AS ({pts_cte}),
 di_h AS (SELECT tile_x, tile_y,
                 (CAST(ts_sec AS BIGINT) // 3600) % 24 AS hour,
@@ -4986,9 +4933,9 @@ SELECT CAST(tile_x AS BIGINT) AS tile_x,
        n_hours,
        CAST(((_obs + (24 - n_hours) * CAST(t AS HUGEINT) * t) * 1000000)
             // (576 * CAST(t AS HUGEINT)) AS BIGINT) AS chi2_mil
-FROM di_c WHERE t >= {int(min_pages)}
+FROM di_c WHERE t >= 8
 ORDER BY chi2_mil DESC, tile_x ASC, tile_y ASC
-LIMIT {int(top_k)}"""
+LIMIT {_DIURNAL_TOP_K}"""
 
 
 # D8 direction table: (idx, dx, dy, compass) in fixed priority order —
@@ -5248,13 +5195,11 @@ def lacunarity(
     return out
 
 
-def lacunarity_sql(
-    tiles_cte: str, zoom: int, box_sizes: "tuple[int, ...]" = (1, 2, 4)
-) -> str:
+def lacunarity_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`lacunarity` (int-div ``//``)."""
     n_side = 2 ** zoom
     parts = []
-    for r in box_sizes:
+    for r in (1, 2, 4):
         if r < 1 or n_side % r != 0:
             raise ValueError(f"box size {r} must divide {n_side}")
         n_boxes = (n_side // r) ** 2
@@ -5272,11 +5217,10 @@ FROM (SELECT CAST(SUM(sv) AS HUGEINT) AS s,
     return f"WITH lc_t AS ({tiles_cte})\n" + "\nUNION ALL\n".join(parts)
 
 
-def pair_correlation(
-    tiles: DataFrame,
-    zoom: int,
-    max_ring: int = 3,
-) -> DataFrame:
+_PAIR_CORRELATION_MAX_RING = 3
+
+
+def pair_correlation(tiles: DataFrame, zoom: int) -> DataFrame:
     """Pair-correlation function g(k) — the ring-wise (non-cumulative)
     sibling of Ripley's K: for each Chebyshev distance ``k``, the
     ratio of OBSERVED ordered occupied-cell pairs at exactly ``k`` to
@@ -5294,8 +5238,6 @@ def pair_correlation(
     grid-bounded equi-join of votes onto occupied cells, one per-k
     fold; the spine/denominators are broadcast literals.
     """
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n_side = 2 ** zoom
     n_grid = 4 ** zoom
     d = "decimal(38,0)"
@@ -5304,7 +5246,7 @@ def pair_correlation(
         F.col("tile_y").cast("long").alias("tile_y"),
     )
     entries = []
-    for k in range(1, max_ring + 1):
+    for k in range(1, _PAIR_CORRELATION_MAX_RING + 1):
         entries += [
             F.struct(F.lit(k).alias("k"), F.lit(dx).alias("dx"),
                      F.lit(dy).alias("dy"))
@@ -5332,12 +5274,12 @@ def pair_correlation(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
     )
     n_row = base.agg(F.count(F.lit(1)).cast("long").alias("n_occ"))
-    spine = tiles.sparkSession.range(1, max_ring + 1).select(
+    spine = tiles.sparkSession.range(1, _PAIR_CORRELATION_MAX_RING + 1).select(
         F.col("id").cast("int").alias("k")
     )
     w_case = "CASE " + " ".join(
         f"WHEN k = {k} THEN CAST({_ring_w_total(n_side, k)} AS BIGINT)"
-        for k in range(1, max_ring + 1)
+        for k in range(1, _PAIR_CORRELATION_MAX_RING + 1)
     ) + " END"
     return (
         spine.join(F.broadcast(hits), "k", "left")
@@ -5355,21 +5297,17 @@ def pair_correlation(
     )
 
 
-def pair_correlation_sql(
-    tiles_cte: str, zoom: int, max_ring: int = 3
-) -> str:
+def pair_correlation_sql(tiles_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`pair_correlation` (int-div ``//``)."""
-    if max_ring < 1:
-        raise ValueError(f"max_ring must be >= 1, got {max_ring}")
     n_side = 2 ** zoom
     n_grid = 4 ** zoom
     vals = []
-    for k in range(1, max_ring + 1):
+    for k in range(1, _PAIR_CORRELATION_MAX_RING + 1):
         vals += [f"({k}, {dx}, {dy})" for dx, dy in _ring_offsets(k)]
-    spine = ", ".join(f"({k})" for k in range(1, max_ring + 1))
+    spine = ", ".join(f"({k})" for k in range(1, _PAIR_CORRELATION_MAX_RING + 1))
     w_case = "CASE " + " ".join(
         f"WHEN s.k = {k} THEN CAST({_ring_w_total(n_side, k)} AS BIGINT)"
-        for k in range(1, max_ring + 1)
+        for k in range(1, _PAIR_CORRELATION_MAX_RING + 1)
     ) + " END"
     return f"""WITH pc_t AS ({tiles_cte}),
 pc_b AS (SELECT CAST(tile_x AS BIGINT) AS tile_x,

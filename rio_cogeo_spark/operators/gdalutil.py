@@ -74,24 +74,24 @@ def raster_hist(tiles: DataFrame, n_buckets: int = 16) -> DataFrame:
     )
 
 
-def raster_hist_sql(base_cte: str, n_buckets: int = 16) -> str:
+def raster_hist_sql(base_cte: str) -> str:
     """DuckDB twin of :func:`raster_hist` — ``base_cte`` exposes
     ``base`` with ``page_count`` (WITH included)."""
     return f"""{base_cte}
 , rh_v AS (SELECT CAST(page_count AS BIGINT) AS v FROM base)
 , rh_b AS (SELECT MIN(v) AS vmin, MAX(v) AS vmax FROM rh_v)
-, rh_o AS (SELECT least({n_buckets - 1},
-                        ((v - vmin) * {n_buckets}) // (vmax - vmin + 1))
+, rh_o AS (SELECT least(15,
+                        ((v - vmin) * 16) // (vmax - vmin + 1))
                       AS bucket,
                   COUNT(*) AS n_cells
            FROM rh_v CROSS JOIN rh_b GROUP BY 1)
 , rh_s AS (SELECT r.range AS bucket, b.vmin, b.vmax
-           FROM range({n_buckets}) r CROSS JOIN rh_b b)
+           FROM range(16) r CROSS JOIN rh_b b)
 SELECT CAST(s.bucket AS BIGINT) AS bucket,
-       CAST(s.vmin + (s.bucket * (s.vmax - s.vmin + 1)) // {n_buckets}
+       CAST(s.vmin + (s.bucket * (s.vmax - s.vmin + 1)) // 16
             AS BIGINT) AS lo,
        CAST(s.vmin + ((s.bucket + 1) * (s.vmax - s.vmin + 1))
-            // {n_buckets} - 1 AS BIGINT) AS hi,
+            // 16 - 1 AS BIGINT) AS hi,
        CAST(COALESCE(o.n_cells, 0) AS BIGINT) AS n_cells
 FROM rh_s s LEFT JOIN rh_o o ON s.bucket = o.bucket"""
 
@@ -124,14 +124,14 @@ def scale_bytes(tiles: DataFrame, lo: int = 0, hi: int = 255) -> DataFrame:
     )
 
 
-def scale_bytes_sql(base_cte: str, lo: int = 0, hi: int = 255) -> str:
+def scale_bytes_sql(base_cte: str) -> str:
     """DuckDB twin of :func:`scale_bytes`."""
     return f"""{base_cte}
 , sb_v AS (SELECT tile_x, tile_y, CAST(page_count AS BIGINT) AS v
            FROM base)
 , sb_b AS (SELECT MIN(v) AS vmin, MAX(v) AS vmax FROM sb_v)
 SELECT tile_x, tile_y, v,
-       CAST({lo} + ((v - vmin) * {hi - lo})
+       CAST(0 + ((v - vmin) * 255)
             // greatest(1, vmax - vmin) AS BIGINT) AS scaled
 FROM sb_v CROSS JOIN sb_b"""
 
@@ -395,21 +395,22 @@ WHERE tile_x BETWEEN {tx0} AND {tx1}
   AND tile_y BETWEEN {ty0} AND {ty1}"""
 
 
-def upsample(tiles: DataFrame, factor: int = 2) -> DataFrame:
-    """Nearest-neighbor upsample of the tile grid by an integer factor
+_UPSAMPLE_FACTOR = 2
+
+
+def upsample(tiles: DataFrame) -> DataFrame:
+    """Nearest-neighbor upsample of the tile grid by a factor of 2
     — the ``gdal_translate -outsize 200% 200%`` analog (and the inverse
     of one overview decimation step): every tile becomes its
     ``factor²`` children at the finer grid with the value copied.
     Pure explode projection — the child-offset array is a plan literal;
     zero joins, zero shuffles. Returns ``(tile_x, tile_y, value)`` in
-    child-grid coordinates (``child_x = tile_x·factor + i``).
+    child-grid coordinates (``child_x = tile_x·2 + i``).
     """
-    if factor < 1:
-        raise ValueError(f"factor must be >= 1, got {factor}")
     off = F.explode(
         F.array(*[
             F.struct(F.lit(i).alias("i"), F.lit(j).alias("j"))
-            for i in range(factor) for j in range(factor)
+            for i in range(_UPSAMPLE_FACTOR) for j in range(_UPSAMPLE_FACTOR)
         ])
     ).alias("off")
     return tiles.select(
@@ -418,21 +419,21 @@ def upsample(tiles: DataFrame, factor: int = 2) -> DataFrame:
         F.col("page_count").cast("long").alias("value"),
         off,
     ).select(
-        (F.col("_tx") * factor + F.col("off.i")).cast("long")
+        (F.col("_tx") * _UPSAMPLE_FACTOR + F.col("off.i")).cast("long")
         .alias("tile_x"),
-        (F.col("_ty") * factor + F.col("off.j")).cast("long")
+        (F.col("_ty") * _UPSAMPLE_FACTOR + F.col("off.j")).cast("long")
         .alias("tile_y"),
         "value",
     )
 
 
-def upsample_sql(base_cte: str, factor: int = 2) -> str:
+def upsample_sql(base_cte: str) -> str:
     """DuckDB twin of :func:`upsample`."""
     return f"""{base_cte}
-SELECT CAST(b.tile_x * {factor} + o1.range AS BIGINT) AS tile_x,
-       CAST(b.tile_y * {factor} + o2.range AS BIGINT) AS tile_y,
+SELECT CAST(b.tile_x * {_UPSAMPLE_FACTOR} + o1.range AS BIGINT) AS tile_x,
+       CAST(b.tile_y * {_UPSAMPLE_FACTOR} + o2.range AS BIGINT) AS tile_y,
        CAST(b.page_count AS BIGINT) AS value
-FROM base b CROSS JOIN range({factor}) o1 CROSS JOIN range({factor}) o2"""
+FROM base b CROSS JOIN range({_UPSAMPLE_FACTOR}) o1 CROSS JOIN range({_UPSAMPLE_FACTOR}) o2"""
 
 
 _CALC_OPS = {
@@ -479,11 +480,9 @@ def raster_calc(a: DataFrame, b: DataFrame, op: str = "sub") -> DataFrame:
     )
 
 
-def raster_calc_sql(a_cte: str, b_cte: str, op: str = "sub") -> str:
+def raster_calc_sql(a_cte: str, b_cte: str) -> str:
     """DuckDB twin of :func:`raster_calc`. ``a_cte``/``b_cte`` are
     SELECTs exposing ``(tile_x, tile_y, page_count)``."""
-    if op not in _CALC_OPS:
-        raise ValueError(f"op must be one of {sorted(_CALC_OPS)}, got {op!r}")
     return f"""
 WITH rc_a AS ({a_cte}), rc_b AS ({b_cte})
 , rc_j AS (SELECT COALESCE(a.tile_x, b.tile_x) AS tile_x,
@@ -492,7 +491,7 @@ WITH rc_a AS ({a_cte}), rc_b AS ({b_cte})
                   CAST(COALESCE(b.page_count, 0) AS BIGINT) AS vb
            FROM rc_a a FULL OUTER JOIN rc_b b
              ON a.tile_x = b.tile_x AND a.tile_y = b.tile_y)
-SELECT tile_x, tile_y, va, vb, CAST({_CALC_OPS[op]} AS BIGINT) AS res
+SELECT tile_x, tile_y, va, vb, CAST({_CALC_OPS["sub"]} AS BIGINT) AS res
 FROM rc_j"""
 
 
@@ -664,7 +663,7 @@ def footprint(
     )
 
 
-def footprint_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
+def footprint_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`footprint` — wraps
     :func:`rio_cogeo_spark.operators.focal.polygonize_sql` on the
     occupancy projection."""
@@ -673,7 +672,7 @@ def footprint_sql(base_cte: str, zoom: int, rounds: int = 4) -> str:
     occ_cte = f"""WITH fp_base AS ({base_cte}
 SELECT tile_x, tile_y, 1 AS page_count FROM base),
 base AS (SELECT * FROM fp_base)"""
-    inner = polygonize_sql(occ_cte, zoom, rounds=rounds)
+    inner = polygonize_sql(occ_cte, zoom)
     return f"""WITH fp_r AS ({inner})
 SELECT label, CAST(COUNT(*) AS BIGINT) AS n_cells,
        CAST(MIN(tile_x) AS BIGINT) AS min_x,
@@ -695,10 +694,13 @@ def _idw_weights(radius: int) -> "dict[int, int]":
     return {d: lcm // (d * d) for d in range(1, radius + 1)}
 
 
-def idw(tiles: DataFrame, zoom: int, radius: int = 2) -> DataFrame:
+_IDW_RADIUS = 2
+
+
+def idw(tiles: DataFrame, zoom: int) -> DataFrame:
     """Inverse-distance-weighted interpolation — the ``gdal_grid
     invdist`` analog with the EXACT-integer kernel: weights are
-    ``lcm{d²}/d²`` over Chebyshev distance ``d ≤ radius`` (the scaled
+    ``lcm{d²}/d²`` over Chebyshev distance ``d ≤ 2`` (the scaled
     1/d² — identical ordering to GDAL's invdist power-2, but every
     weight is BIGINT so the quotient is deterministic). An OCCUPIED
     node reports its own value exactly (GDAL's behavior when a sample
@@ -710,14 +712,12 @@ def idw(tiles: DataFrame, zoom: int, radius: int = 2) -> DataFrame:
     ((2R+1)² slots) + ONE combinable aggregate + a projection; no
     join, no window.
     """
-    if radius < 1:
-        raise ValueError(f"radius must be >= 1, got {radius}")
-    w = _idw_weights(radius)
+    w = _idw_weights(_IDW_RADIUS)
     n = F.lit(2 ** zoom)
     offs = [
         (dx, dy, 0 if (dx == 0 and dy == 0) else w[max(abs(dx), abs(dy))])
-        for dx in range(-radius, radius + 1)
-        for dy in range(-radius, radius + 1)
+        for dx in range(-_IDW_RADIUS, _IDW_RADIUS + 1)
+        for dy in range(-_IDW_RADIUS, _IDW_RADIUS + 1)
     ]
     off = F.explode(
         F.array(*[
@@ -767,15 +767,15 @@ def idw(tiles: DataFrame, zoom: int, radius: int = 2) -> DataFrame:
     )
 
 
-def idw_sql(base_cte: str, zoom: int, radius: int = 2) -> str:
+def idw_sql(base_cte: str, zoom: int) -> str:
     """DuckDB twin of :func:`idw`."""
-    w = _idw_weights(radius)
+    w = _idw_weights(_IDW_RADIUS)
     edge = 2 ** zoom - 1
     rows = ", ".join(
         f"({dx}, {dy}, "
         f"{0 if (dx == 0 and dy == 0) else w[max(abs(dx), abs(dy))]})"
-        for dx in range(-radius, radius + 1)
-        for dy in range(-radius, radius + 1)
+        for dx in range(-_IDW_RADIUS, _IDW_RADIUS + 1)
+        for dy in range(-_IDW_RADIUS, _IDW_RADIUS + 1)
     )
     return f"""{base_cte}
 , iw_v AS (SELECT b.tile_x + o.dx AS nx, b.tile_y + o.dy AS ny,

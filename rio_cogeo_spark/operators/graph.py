@@ -38,8 +38,8 @@ Scale design (100 TB / 10^8-host graph):
   (10^8 hosts x 16 B ≈ 1.6 GB is marginal, 10^7 is trivial);
 * iteration count is FIXED and small (the crawl scheduler wants a
   stable ordering, not convergence to 1e-12); lineage therefore stays
-  bounded without checkpointing, but ``checkpoint_every`` is exposed
-  for long chains (localCheckpoint cuts the recursive plan);
+  bounded without checkpointing (``host_distance`` and ``k_core``
+  localCheckpoint every second round to cut the recursive plan);
 * no step collects: degrees, ranks, and the final ordering are all
   DataFrames.
 
@@ -84,7 +84,6 @@ def host_pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping_pct: int = 85,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Fixed-point damped PageRank over a host edge list.
 
@@ -140,16 +139,12 @@ def host_pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=False)
 
     return ranks.select("host", F.col("rank").alias("rank_ppb"))
 
 
 def host_pagerank_sql(
     edges_cte: str,
-    iterations: int = 3,
-    damping_pct: int = 85,
     extra_ctes: tuple = (),
     final_select: str | None = None,
 ) -> str:
@@ -162,14 +157,14 @@ def host_pagerank_sql(
     ``final_select`` let a caller compose the rank table with e.g. the
     degree tables in ONE query (the contract query does).
     """
-    base = ((100 - damping_pct) * SCALE) // 100
+    base = (15 * SCALE) // 100  # teleport share at 85% damping
     parts = [
         f"WITH e AS ({edges_cte})",
         "nodes AS (SELECT src AS host FROM e UNION SELECT dst FROM e)",
         "outdeg AS (SELECT src AS host, COUNT(*) AS outdeg FROM e GROUP BY 1)",
         f"r0 AS (SELECT host, CAST({SCALE} AS BIGINT) AS rank FROM nodes)",
     ]
-    for i in range(iterations):
+    for i in range(3):
         parts.append(
             f"c{i + 1} AS (SELECT e.dst AS host, "
             f"SUM(r{i}.rank // o.outdeg) AS s "
@@ -178,23 +173,18 @@ def host_pagerank_sql(
         )
         parts.append(
             f"r{i + 1} AS (SELECT n.host, "
-            f"CAST({base} + ({damping_pct} * COALESCE(c.s, 0)) // 100 "
+            f"CAST({base} + (85 * COALESCE(c.s, 0)) // 100 "
             f"AS BIGINT) AS rank "
             f"FROM nodes n LEFT JOIN c{i + 1} c ON n.host = c.host)"
         )
     parts.extend(extra_ctes)
     body = ",\n".join(parts)
     if final_select is None:
-        final_select = f"SELECT host, rank AS rank_ppb FROM r{iterations}"
+        final_select = f"SELECT host, rank AS rank_ppb FROM r3"
     return f"{body}\n{final_select}"
 
 
-def host_distance(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int = 4,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def host_distance(edges: DataFrame, seeds: DataFrame, max_hops: int = 4) -> DataFrame:
     """BFS hop distance from a seed host set — crawl-frontier DEPTH (how
     many link hops a host sits from the trusted seed list), the other
     classic crawl-ordering signal beside :func:`host_pagerank`
@@ -214,8 +204,8 @@ def host_distance(
     fold with map-side partials; the dist table is node-bounded and
     broadcast into the relaxation join. ``max_hops`` is fixed and small
     (crawl schedulers care about the first few hops), so the unrolled
-    lineage stays bounded; ``checkpoint_every`` cuts it for deeper runs. No
-    step collects.
+    lineage stays bounded; a localCheckpoint every second round cuts it
+    for deeper runs. No step collects.
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
@@ -234,16 +224,12 @@ def host_distance(
             .groupBy("host")
             .agg(F.min("hops").alias("hops"))
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
+        if (it + 1) % 2 == 0:
             dist = dist.localCheckpoint(eager=False)
     return dist.select("host", "hops")
 
 
-def host_distance_sql(
-    edges_cte: str,
-    seeds_cte: str,
-    max_hops: int = 4,
-) -> str:
+def host_distance_sql(edges_cte: str, seeds_cte: str) -> str:
     """DuckDB twin of :func:`host_distance`: the fixed hop count unrolls
     into chained CTEs (same min-fold per round, exact ints — hash-
     identical, not approximate). ``seeds_cte`` exposes ``(host)``."""
@@ -252,7 +238,7 @@ def host_distance_sql(
         f"s AS ({seeds_cte})",
         "d0 AS (SELECT DISTINCT host, CAST(0 AS INT) AS hops FROM s)",
     ]
-    for i in range(max_hops):
+    for i in range(4):
         parts.append(
             f"d{i + 1} AS (SELECT host, CAST(MIN(hops) AS INT) AS hops FROM ("
             f"SELECT host, hops FROM d{i} "
@@ -261,7 +247,7 @@ def host_distance_sql(
             f"FROM d{i} d JOIN e ON d.host = e.src) GROUP BY 1)"
         )
     body = ",\n".join(parts)
-    return f"{body}\nSELECT host, hops FROM d{max_hops}"
+    return f"{body}\nSELECT host, hops FROM d4"
 
 
 def reciprocal_links(edges: DataFrame) -> DataFrame:
@@ -463,16 +449,11 @@ def host_trustrank(
     return trust.select("host", F.col("trust").alias("trust_ppb"))
 
 
-def host_trustrank_sql(
-    edges_cte: str,
-    seeds_cte: str,
-    iterations: int = 3,
-    damping_pct: int = 85,
-) -> str:
+def host_trustrank_sql(edges_cte: str, seeds_cte: str) -> str:
     """DuckDB twin of :func:`host_trustrank`: the fixed iteration count
     unrolls into chained CTEs (same exact-BIGINT formulas — hash-
     identical, not approximate). ``seeds_cte`` exposes ``(host)``."""
-    base = ((100 - damping_pct) * SCALE) // 100
+    base = (15 * SCALE) // 100  # teleport share at 85% damping
     parts = [
         f"WITH e AS ({edges_cte})",
         f"s AS (SELECT DISTINCT host FROM ({seeds_cte}))",
@@ -485,7 +466,7 @@ def host_trustrank_sql(
         f"t0 AS (SELECT host, CAST(seed * {SCALE} AS BIGINT) AS trust "
         "FROM flagged)",
     ]
-    for i in range(iterations):
+    for i in range(3):
         parts.append(
             f"c{i + 1} AS (SELECT e.dst AS host, "
             f"SUM(t{i}.trust // o.outdeg) AS s "
@@ -494,12 +475,12 @@ def host_trustrank_sql(
         )
         parts.append(
             f"t{i + 1} AS (SELECT f.host, "
-            f"CAST(f.seed * {base} + ({damping_pct} * COALESCE(c.s, 0)) // 100 "
+            f"CAST(f.seed * {base} + (85 * COALESCE(c.s, 0)) // 100 "
             f"AS BIGINT) AS trust "
             f"FROM flagged f LEFT JOIN c{i + 1} c ON f.host = c.host)"
         )
     body = ",\n".join(parts)
-    return f"{body}\nSELECT host, trust AS trust_ppb FROM t{iterations}"
+    return f"{body}\nSELECT host, trust AS trust_ppb FROM t3"
 
 
 def apportion_budget(weights: DataFrame, budget: int) -> DataFrame:
@@ -961,7 +942,7 @@ def k_core(
     return alive.select("host", F.col("deg").cast("long").alias("deg"))
 
 
-def k_core_sql(edges_cte: str, k: int, rounds: int = 3) -> str:
+def k_core_sql(edges_cte: str, k: int) -> str:
     """DuckDB twin of :func:`k_core`: the fixed round count unrolls into
     chained CTEs (same induced-degree fold per round, exact ints)."""
     parts = [
@@ -972,7 +953,7 @@ def k_core_sql(edges_cte: str, k: int, rounds: int = 3) -> str:
         "SELECT u AS host FROM kc_und UNION ALL SELECT v FROM kc_und)"
         f" GROUP BY 1 HAVING COUNT(*) >= {k})",
     ]
-    for i in range(rounds - 1):
+    for i in range(2):
         parts.append(
             f"a{i + 1} AS (SELECT host, COUNT(*) AS deg FROM ("
             f"SELECT e.u AS host FROM kc_und e"
@@ -987,7 +968,7 @@ def k_core_sql(edges_cte: str, k: int, rounds: int = 3) -> str:
     body = ",\n".join(parts)
     return (
         f"{body}\nSELECT host, CAST(deg AS BIGINT) AS deg"
-        f" FROM a{rounds - 1}"
+        f" FROM a2"
     )
 
 
@@ -1089,10 +1070,12 @@ SELECT CAST(m_edges AS BIGINT) AS m_edges,
 FROM da_s"""
 
 
+_COCITATION_MIN_COMMON = 1
+
+
 def cocitation(
     edges: DataFrame,
     mode: str = "cocitation",
-    min_common: int = 1,
     max_degree: int | None = None,
 ) -> DataFrame:
     """Co-citation / bibliographic-coupling pair counts over the host
@@ -1100,7 +1083,7 @@ def cocitation(
     two hosts by the number of COMMON CITERS (shared in-neighbors),
     ``coupling`` by common CITED hosts (shared out-neighbors).  One
     row per unordered pair ``(host_a, host_b, n_common)`` with
-    ``host_a < host_b`` and ``n_common >= min_common``, all exact
+    ``host_a < host_b`` and ``n_common >= 1``, all exact
     BIGINTs.
 
     Scale design: one self-join of the (deduped) edge list
@@ -1129,48 +1112,36 @@ def cocitation(
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    return pairs.filter(F.col("n_common") >= min_common).select(
+    return pairs.filter(F.col("n_common") >= _COCITATION_MIN_COMMON).select(
         "host_a", "host_b",
         F.col("n_common").cast("long").alias("n_common"),
     )
 
 
-def cocitation_sql(
-    edges_select: str,
-    mode: str = "cocitation",
-    min_common: int = 1,
-    max_degree: int | None = None,
-) -> str:
-    """DuckDB twin of :func:`cocitation` — ``edges_select`` exposes
-    ``(src, dst)``."""
-    if mode not in ("cocitation", "coupling"):
-        raise ValueError(f"mode must be cocitation|coupling, got {mode!r}")
-    pivot, leaf = ("dst", "src") if mode == "coupling" else ("src", "dst")
-    cap = (
-        f""",
-cc_deg AS (SELECT p FROM (SELECT p, COUNT(*) AS d FROM cc_e GROUP BY 1)
-           WHERE d <= {int(max_degree)}),
-cc_k AS (SELECT e.* FROM cc_e e JOIN cc_deg USING (p))"""
-        if max_degree is not None
-        else ",\ncc_k AS (SELECT * FROM cc_e)"
-    )
+def cocitation_sql(edges_select: str) -> str:
+    """DuckDB twin of :func:`cocitation` in ``cocitation`` mode —
+    ``edges_select`` exposes ``(src, dst)``."""
     return f"""WITH cc_raw AS ({edges_select}),
-cc_e AS (SELECT DISTINCT {pivot} AS p, {leaf} AS l FROM cc_raw){cap}
+cc_e AS (SELECT DISTINCT src AS p, dst AS l FROM cc_raw),
+cc_k AS (SELECT * FROM cc_e)
 SELECT a.l AS host_a, b.l AS host_b,
        CAST(COUNT(*) AS BIGINT) AS n_common
 FROM cc_k a JOIN cc_k b ON a.p = b.p AND a.l < b.l
 GROUP BY 1, 2
-HAVING COUNT(*) >= {int(min_common)}"""
+HAVING COUNT(*) >= {_COCITATION_MIN_COMMON}"""
 
 
-def host_majority_lang(docs: DataFrame, n_hosts: int = 97) -> DataFrame:
+_HOST_MAJORITY_LANG_N_HOSTS = 97
+
+
+def host_majority_lang(docs: DataFrame) -> DataFrame:
     """Majority language per host over the deterministic ``id % n``
     host space — deterministic ties (count DESC, lang ASC).  One
     corpus fold + one window over the host-bounded count table."""
     from pyspark.sql import Window
 
     hl = docs.selectExpr(
-        f"doc_id % {int(n_hosts)} AS host", "lang AS lang"
+        f"doc_id % {_HOST_MAJORITY_LANG_N_HOSTS} AS host", "lang AS lang"
     ).groupBy("host", "lang").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("host").orderBy(
         F.col("cnt").desc(), F.col("lang").asc()
@@ -1182,12 +1153,12 @@ def host_majority_lang(docs: DataFrame, n_hosts: int = 97) -> DataFrame:
     )
 
 
-def host_majority_lang_sql(docs_select: str, n_hosts: int = 97) -> str:
+def host_majority_lang_sql(docs_select: str) -> str:
     """DuckDB twin of :func:`host_majority_lang` (standalone SELECT)."""
     return f"""SELECT host, lang FROM (
   SELECT host, lang, ROW_NUMBER() OVER
          (PARTITION BY host ORDER BY cnt DESC, lang ASC) AS _rk
-  FROM (SELECT doc_id % {int(n_hosts)} AS host, lang AS lang,
+  FROM (SELECT doc_id % {_HOST_MAJORITY_LANG_N_HOSTS} AS host, lang AS lang,
                COUNT(*) AS cnt
         FROM ({docs_select}) GROUP BY 1, 2))
 WHERE _rk = 1"""

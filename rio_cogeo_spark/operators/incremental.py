@@ -59,8 +59,6 @@ def pyramid_delta(
     max_zoom: int,
     overview_level: int,
     bands: Optional[List[BandSpec]] = None,
-    tms: Optional[grid.TileMatrixSet] = None,
-    decimation_base: int = 2,
 ) -> DataFrame:
     """Full per-level pyramid of ONLY the delta pages.
 
@@ -81,9 +79,7 @@ def pyramid_delta(
         new_pages,
         max_zoom=max_zoom,
         overview_level=overview_level,
-        decimation_base=decimation_base,
         bands=bands,
-        tms=tms,
     )
     return tiles
 

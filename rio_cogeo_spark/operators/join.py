@@ -71,13 +71,13 @@ def _star_ring(clon: float, clat: float, r_out: float, r_in: float, points: int 
     return tuple(np.append(lons, lons[0])), tuple(np.append(lats, lats[0]))
 
 
-def build_admin_areas(rect_half: float = 0.6, stars: bool = False) -> List[AdminArea]:
+def build_admin_areas(stars: bool = False) -> List[AdminArea]:
     """Deterministic admin boundaries around the 20 megacity hotspots:
     axis-aligned rectangles (SQL-oracle-friendly) and, optionally, concave
     stars (exercising the ray-cast refine beyond bbox semantics)."""
     areas = []
     for cid, name, clat, clon in MEGACITIES:
-        lons, lats = _rect_ring(clon, clat, rect_half)
+        lons, lats = _rect_ring(clon, clat, 0.6)
         areas.append(AdminArea(f"A{cid:03d}", name, lons, lats))
     if stars:
         for cid, name, clat, clon in MEGACITIES[:5]:
@@ -408,22 +408,16 @@ def _ring_coverage_dist2(q_lon, q_lat, tx, ty, zoom: int, ring) -> np.ndarray:
     return np.maximum(d, 0.0) ** 2
 
 
-def knn_kring_exact(
-    pages: DataFrame,
-    queries_df: DataFrame,
-    k: int = 5,
-    zoom: int = KNN_ZOOM,
-    start_ring: int = 1,
-    max_ring: int = 64,
-) -> DataFrame:
+def knn_kring_exact(pages: DataFrame, queries_df: DataFrame, k: int = 5) -> DataFrame:
     """Provably exact k-ring kNN in TWO distributed phases (no per-round
     result collects — the only driver-side data is one aggregate row per
     query, O(|queries|)):
 
-    phase 1  ring=start_ring probe → per-query (n, kth distance).
-    routing  per query: kth-dist <= coverage_bound(start_ring) → done;
-             else compute the smallest ring whose coverage bound covers
-             the kth distance (vectorized binary search on the bound).
+    phase 1  ring-1 probe at ``KNN_ZOOM`` → per-query (n, kth distance).
+    routing  per query: kth-dist <= coverage_bound(1) → done; else
+             compute the smallest ring (at most 64) whose coverage bound
+             covers the kth distance (vectorized binary search on the
+             bound).
     phase 2  per-row-ring explode (k_ring_cells) → one more join →
              top-k. Exact by construction: the phase-2 ring contains the
              phase-1 ring, so its kth distance can only shrink and stays
@@ -440,55 +434,55 @@ def knn_kring_exact(
     routing keeps that residual to the genuinely empty-neighborhood
     queries — a tiny set for any real point distribution.
     """
-    with_cell = pages.withColumn("cell", cell_id(F.col("lon"), F.col("lat"), zoom))
+    with_cell = pages.withColumn("cell", cell_id(F.col("lon"), F.col("lat"), KNN_ZOOM))
 
     # phase 1 output is O(k·|queries|): checkpoint it so the stats agg,
     # the routing pass and the done-branch join all reuse one computation
     # of the big join (lineage truncated; blocks freed when the result
     # DataFrame is GC'd).
-    phase1 = knn_kring(with_cell.drop("cell"), queries_df, k=k, zoom=zoom,
-                       ring=start_ring).localCheckpoint(eager=True)
+    phase1 = knn_kring(with_cell.drop("cell"), queries_df, k=k, zoom=KNN_ZOOM,
+                       ring=1).localCheckpoint(eager=True)
     stats = phase1.groupBy("query_id").agg(
         F.count(F.lit(1)).alias("n"), F.max("dist2").alias("dkth")
     )
 
-    k_, zoom_, sr_, mr_ = int(k), int(zoom), int(start_ring), int(max_ring)
+    k_ = int(k)
 
     @F.pandas_udf("int")
     def _route(q_lat_s: pd.Series, q_lon_s: pd.Series, n_s: pd.Series,
                dkth_s: pd.Series) -> pd.Series:
         # Per-query routing decision, whole Arrow batch at once:
-        #   -2 → exact broadcast scan (under-filled ring, or max_ring
+        #   -2 → exact broadcast scan (under-filled ring, or ring 64
         #        cannot certify);  -1 → phase-1 answer already certified;
         #   r>0 → re-probe with ring r (smallest ring whose coverage
         #        bound covers the phase-1 kth distance — vectorized
-        #        binary search, log2(max_ring) bound evaluations total).
+        #        binary search, log2(64) bound evaluations total).
         lat = q_lat_s.to_numpy(dtype=np.float64)
         lon = q_lon_s.to_numpy(dtype=np.float64)
         n_got = n_s.fillna(0).to_numpy(dtype=np.int64)
         dkth = dkth_s.fillna(np.inf).to_numpy(dtype=np.float64)
-        tx, ty = grid.tile_index(lon, lat, zoom_)
+        tx, ty = grid.tile_index(lon, lat, KNN_ZOOM)
         out = np.full(lon.shape[0], -2, dtype=np.int64)
         filled = n_got >= k_
         if filled.any():
             bound0 = _ring_coverage_dist2(
-                lon, lat, tx, ty, zoom_, np.full(lon.shape[0], sr_)
+                lon, lat, tx, ty, KNN_ZOOM, np.full(lon.shape[0], 1)
             )
             done = filled & (dkth <= bound0)
             out[done] = -1
             todo = filled & ~done
             if todo.any():
-                lo = np.full(lon.shape[0], sr_, dtype=np.int64)
-                hi = np.full(lon.shape[0], mr_, dtype=np.int64)
+                lo = np.full(lon.shape[0], 1, dtype=np.int64)
+                hi = np.full(lon.shape[0], 64, dtype=np.int64)
                 while True:
                     active = todo & (lo < hi)
                     if not active.any():
                         break
                     mid = (lo + hi) // 2
-                    ge = _ring_coverage_dist2(lon, lat, tx, ty, zoom_, mid) >= dkth
+                    ge = _ring_coverage_dist2(lon, lat, tx, ty, KNN_ZOOM, mid) >= dkth
                     hi = np.where(active & ge, mid, hi)
                     lo = np.where(active & ~ge, mid + 1, lo)
-                b_final = _ring_coverage_dist2(lon, lat, tx, ty, zoom_, lo)
+                b_final = _ring_coverage_dist2(lon, lat, tx, ty, KNN_ZOOM, lo)
                 out[todo] = np.where(b_final[todo] >= dkth[todo], lo[todo], -2)
         return pd.Series(out.astype(np.int32))
 
@@ -505,7 +499,7 @@ def knn_kring_exact(
 
     exp = routed.filter(F.col("ring") > 0)
     qcells = (
-        exp.withColumn("cell", cell_id(F.col("q_lon"), F.col("q_lat"), zoom))
+        exp.withColumn("cell", cell_id(F.col("q_lon"), F.col("q_lat"), KNN_ZOOM))
         .withColumn("cell", F.explode(k_ring_cells(F.col("cell"), F.col("ring"))))
         .select("query_id", "q_lat", "q_lon", "cell")
     )
@@ -519,12 +513,11 @@ def knn_kring_exact(
     return out_done.unionByName(out_expand).unionByName(out_brute)
 
 
-def zonal_stats(pages: DataFrame, areas: List[AdminArea],
-                zoom: int = PREFILTER_ZOOM) -> DataFrame:
+def zonal_stats(pages: DataFrame, areas: List[AdminArea]) -> DataFrame:
     """Raster↔vector zonal stats (SURVEY.md §2.3 J4): PIP join then
     per-polygon aggregate — the generalization of the reference's
     per-window read loop (cogeo.py:371-379)."""
-    hits = point_in_polygon(pages, areas, zoom, how="inner")
+    hits = point_in_polygon(pages, areas, PREFILTER_ZOOM, how="inner")
     return (
         hits.groupBy("admin_id")
         .agg(

@@ -58,15 +58,15 @@ def extract_links(pages: DataFrame) -> DataFrame:
     )
 
 
-def extract_links_sql(pages_cte: str, html_expr: str = "html") -> str:
+def extract_links_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`extract_links` (``pages_cte`` exposes
-    ``(url, {html_expr})`` with the html as VARCHAR)."""
+    ``(url, html)`` with the html as VARCHAR)."""
     pat = LINK_PATTERN.replace("'", "''")
     return rf"""
 WITH p AS ({pages_cte}),
 ext AS (SELECT url AS src_url,
-               regexp_extract_all({html_expr}, '{pat}', 1) AS hrefs,
-               regexp_extract_all({html_expr}, '{pat}', 2) AS anchors
+               regexp_extract_all(html, '{pat}', 1) AS hrefs,
+               regexp_extract_all(html, '{pat}', 2) AS anchors
         FROM p),
 ix AS (SELECT src_url, unnest(generate_series(1, len(hrefs))) AS i,
               hrefs, anchors FROM ext)
@@ -169,15 +169,15 @@ def extract_meta(pages: DataFrame) -> DataFrame:
     )
 
 
-def extract_meta_sql(pages_cte: str, html_expr: str = "html") -> str:
+def extract_meta_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`extract_meta` (``pages_cte`` exposes
-    ``(url, {html_expr})`` with the html as VARCHAR)."""
+    ``(url, html)`` with the html as VARCHAR)."""
     pat = META_PATTERN.replace("'", "''")
     return rf"""
 WITH p AS ({pages_cte}),
 ext AS (SELECT url,
-               regexp_extract_all({html_expr}, '{pat}', 1) AS names,
-               regexp_extract_all({html_expr}, '{pat}', 2) AS contents
+               regexp_extract_all(html, '{pat}', 1) AS names,
+               regexp_extract_all(html, '{pat}', 2) AS contents
         FROM p),
 ix AS (SELECT url, unnest(generate_series(1, len(names))) AS i,
               names, contents FROM ext)
@@ -225,7 +225,7 @@ def meta_robots_noindex(pages: DataFrame) -> DataFrame:
     return pages.filter(~blocked)
 
 
-def meta_robots_noindex_sql(pages_cte: str, html_expr: str = "html") -> str:
+def meta_robots_noindex_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`meta_robots_noindex` (html as VARCHAR);
     returns the kept rows of ``pages_cte``."""
     pat = META_PATTERN.replace("'", "''")
@@ -234,8 +234,8 @@ WITH p AS ({pages_cte})
 SELECT * FROM p
 WHERE NOT COALESCE(
     len(list_filter(
-        list_zip(regexp_extract_all({html_expr}, '{pat}', 1),
-                 regexp_extract_all({html_expr}, '{pat}', 2)),
+        list_zip(regexp_extract_all(html, '{pat}', 1),
+                 regexp_extract_all(html, '{pat}', 2)),
         z -> z[1] = 'robots' AND
              len(list_intersect(
                  string_split_regex(lower(z[2]), '[,\s]+'),
@@ -275,14 +275,14 @@ def extract_hreflang(pages: DataFrame) -> DataFrame:
     )
 
 
-def extract_hreflang_sql(pages_cte: str, html_expr: str = "html") -> str:
+def extract_hreflang_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`extract_hreflang`."""
     pat = HREFLANG_PATTERN.replace("'", "''")
     return rf"""
 WITH p AS ({pages_cte}),
 ext AS (SELECT url,
-               regexp_extract_all({html_expr}, '{pat}', 1) AS langs,
-               regexp_extract_all({html_expr}, '{pat}', 2) AS hrefs
+               regexp_extract_all(html, '{pat}', 1) AS langs,
+               regexp_extract_all(html, '{pat}', 2) AS hrefs
         FROM p),
 ix AS (SELECT url, unnest(generate_series(1, len(langs))) AS i,
               langs, hrefs FROM ext)
@@ -350,10 +350,7 @@ FROM alts a JOIN alts b
 SITEMAP_LOC_PATTERN = r"<loc>([^<]*)</loc>"
 
 
-def extract_sitemap_urls(
-    sitemaps: DataFrame,
-    host_col_name: str = "host",
-) -> DataFrame:
+def extract_sitemap_urls(sitemaps: DataFrame) -> DataFrame:
     """Per-host sitemap URL table ``(host, pos, loc_url)``: every
     ``<loc>`` entry of a sitemap/sitemap-index XML body in document
     order — the publisher-declared URL inventory, the highest-quality
@@ -365,7 +362,7 @@ def extract_sitemap_urls(
         F.col("xml"), F.lit(SITEMAP_LOC_PATTERN), 1
     )
     return sitemaps.select(
-        F.col(host_col_name).alias("host"), F.posexplode(locs)
+        "host", F.posexplode(locs)
     ).select(
         "host",
         F.col("pos").cast("int").alias("pos"),
@@ -373,13 +370,13 @@ def extract_sitemap_urls(
     )
 
 
-def extract_sitemap_urls_sql(sitemaps_cte: str, xml_expr: str = "xml") -> str:
+def extract_sitemap_urls_sql(sitemaps_cte: str) -> str:
     """DuckDB twin of :func:`extract_sitemap_urls` (``sitemaps_cte``
-    exposes ``(host, {xml_expr})``)."""
+    exposes ``(host, xml)``)."""
     pat = SITEMAP_LOC_PATTERN.replace("'", "''")
     return rf"""
 WITH s AS ({sitemaps_cte}),
-ext AS (SELECT host, regexp_extract_all({xml_expr}, '{pat}', 1) AS locs
+ext AS (SELECT host, regexp_extract_all(xml, '{pat}', 1) AS locs
         FROM s),
 ix AS (SELECT host, unnest(generate_series(1, len(locs))) AS i, locs
        FROM ext)

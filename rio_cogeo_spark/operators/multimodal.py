@@ -74,8 +74,7 @@ FEATURE_SCHEMA = (
 )
 
 
-def extract_features(media: DataFrame, decoder: str = "fake",
-                     thumb_px: int = 4) -> DataFrame:
+def extract_features(media: DataFrame, decoder: str = "fake") -> DataFrame:
     """Decode → feature-extract → thumbnail, one Arrow batch at a time via
     ``mapInPandas`` (partition-preserving; no shuffle). Features: byte
     stats of the decoded grid + a thumb_px² mean-pooled thumbnail."""
@@ -99,15 +98,15 @@ def extract_features(media: DataFrame, decoder: str = "fake",
                 img = decode(payload, w, h).astype(np.float64)
                 means.append(round(float(img.mean()), 6))
                 stds.append(round(float(img.std()), 6))
-                # mean-pool to a thumb_px x thumb_px grid (pad-safe)
-                yy = np.linspace(0, img.shape[0], thumb_px + 1, dtype=int)
-                xx = np.linspace(0, img.shape[1], thumb_px + 1, dtype=int)
+                # mean-pool to a 4 x 4 grid (pad-safe)
+                yy = np.linspace(0, img.shape[0], 5, dtype=int)
+                xx = np.linspace(0, img.shape[1], 5, dtype=int)
                 t = np.array(
                     [
                         [int(img[yy[i]:max(yy[i + 1], yy[i] + 1),
                                  xx[j]:max(xx[j + 1], xx[j] + 1)].mean())
-                         for j in range(thumb_px)]
-                        for i in range(thumb_px)
+                         for j in range(4)]
+                        for i in range(4)
                     ],
                     dtype=np.int64,
                 )
@@ -120,13 +119,12 @@ def extract_features(media: DataFrame, decoder: str = "fake",
     return media.mapInPandas(_proc, FEATURE_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000,
-                  max_frames: int = 8) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling plumbing for video rows: explode into (media_id,
     frame_idx, t_ms) — the shape a real ffmpeg seek UDF consumes. The
     decode of each frame stays behind the registry stub."""
     n_frames = F.least(
-        F.floor(F.col("duration_ms") / every_ms).cast("int") + 1, F.lit(max_frames)
+        F.floor(F.col("duration_ms") / 1000).cast("int") + 1, F.lit(8)
     )
     return (
         media.filter(F.col("kind") == "video")
@@ -134,6 +132,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000,
         .select(
             "media_id",
             "frame_idx",
-            (F.col("frame_idx") * every_ms).alias("t_ms"),
+            (F.col("frame_idx") * 1000).alias("t_ms"),
         )
     )

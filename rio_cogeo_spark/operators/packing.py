@@ -124,11 +124,7 @@ def pack_chunks(
     )
 
 
-def pack_chunks_sql(
-    table: str = "documents",
-    context_tokens: int = 2048,
-    n_shards: int = 64,
-) -> str:
+def pack_chunks_sql(context_tokens: int = 2048, n_shards: int = 64) -> str:
     """DuckDB twin of :func:`pack_chunks` — same integer math, so the
     assignment is bit-identical."""
     from rio_cogeo_spark.functions.text import MD5_60_SQL, TOKEN_COUNT_SQL
@@ -139,7 +135,7 @@ def pack_chunks_sql(
 WITH b AS (
   SELECT doc_id, {h} AS h,
          CAST({TOKEN_COUNT_SQL} AS BIGINT) AS n_tokens
-  FROM {table}
+  FROM documents
 ), s AS (
   SELECT doc_id, CAST(h % {n_shards} AS INT) AS shard, n_tokens,
          CAST(SUM(n_tokens) OVER (PARTITION BY h % {n_shards}

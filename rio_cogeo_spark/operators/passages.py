@@ -79,7 +79,6 @@ def repeated_ngram_spans(
     n: int = 8,
     min_count: int = 2,
     broadcast_hot: "bool | str" = "auto",
-    broadcast_hot_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """Maximal per-document spans of corpus-repeated n-grams.
 
@@ -93,7 +92,7 @@ def repeated_ngram_spans(
     repeated n-grams at 100 TB), so the DEFAULT is ``'auto'``: count
     the hot set (one aggregate over counts the plan computes anyway)
     and broadcast only when it is at or under
-    ``broadcast_hot_max_rows``; a too-big hot set falls back to the
+    5,000,000 rows; a too-big hot set falls back to the
     shuffle join instead of a broadcast OOM. Pass ``True``/``False``
     to force a strategy; results are identical either way
     (pytest-asserted) — only the join plan changes.
@@ -125,7 +124,7 @@ def repeated_ngram_spans(
         from pyspark.storagelevel import StorageLevel
 
         hot = hot.persist(StorageLevel.MEMORY_AND_DISK)
-        broadcast_hot = hot.count() <= broadcast_hot_max_rows
+        broadcast_hot = hot.count() <= 5_000_000
     hot = F.broadcast(hot) if broadcast_hot else hot
     hits = grams.join(hot, "h").select("doc_id", "pos")
 
@@ -218,27 +217,19 @@ FROM s GROUP BY doc_id, span_id"""
     return ctes, final
 
 
-def repeated_ngram_spans_sql(
-    table: str = "documents",
-    n: int = 8,
-    min_count: int = 2,
-) -> str:
+def repeated_ngram_spans_sql(table: str = "documents", n: int = 8) -> str:
     """DuckDB twin of :func:`repeated_ngram_spans` (same hash, same
     merge rule — bit-identical spans)."""
-    ctes, final = _spans_parts(table, n, min_count)
+    ctes, final = _spans_parts(table, n, 2)
     return f"{ctes}\n{final}"
 
 
-def cut_spans_sql(
-    table: str = "documents",
-    n: int = 8,
-    min_count: int = 2,
-) -> str:
+def cut_spans_sql(table: str = "documents", n: int = 8) -> str:
     """DuckDB twin of the spans → :func:`cut_spans` composition (same
     tokenizer, same 0-based span predicate — bit-identical text)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
-    ctes, final = _spans_parts(table, n, min_count)
+    ctes, final = _spans_parts(table, n, 2)
     return rf"""{ctes},
 spans AS ({final}),
 cuts AS (SELECT doc_id, list({{'s': span_start, 'e': span_end}}) AS cuts

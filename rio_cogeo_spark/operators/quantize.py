@@ -24,8 +24,8 @@ similarity.py as the scale path — quantization composes with either
 All-zero corpora have no scale (amax = 0 → NaN components); quantizing
 nothing is not meaningful input and is not defended.
 
-Column names are fixed (``vec_id``, ``label``); the vector column is
-``col``.
+Column names are fixed (``vec_id``, ``label``, and the vector column
+``embedding``).
 """
 
 from __future__ import annotations
@@ -37,10 +37,14 @@ from pyspark.sql import functions as F
 
 from rio_cogeo_spark.functions.vector import as_double_array
 
+# the ANN contract shared by the Spark builders and the DuckDB twin: the
+# first N_QUERIES vec_ids query the corpus for their TOP_K neighbours
+N_QUERIES = 5
+TOP_K = 10
+
 
 def quantize_embeddings(
     emb: DataFrame,
-    col: str = "embedding",
     extra_cols: tuple = (),
     amax: float = None,
 ) -> DataFrame:
@@ -52,11 +56,12 @@ def quantize_embeddings(
     passenger columns (e.g. the label the PQ codebook trainer groups
     by) through the projection unchanged.
     """
-    v = as_double_array(F.col(col))
+    v = as_double_array(F.col("embedding"))
     if amax is not None:
-        # fixed scale (index query path): pure projection, no aggregate
+        # fixed scale (index query path): pure projection, no aggregate;
+        # from pandas, a JVM local relation that no Python worker scans
         amax_df = emb.sparkSession.createDataFrame(
-            [(float(amax),)], "amax double"
+            pd.DataFrame({"amax": [float(amax)]}), "amax double"
         )
     else:
         amax_df = emb.agg(
@@ -87,21 +92,16 @@ def int_dot(a, b):
     )
 
 
-def ann_int8_topk(
-    emb: DataFrame,
-    k: int = 10,
-    n_queries: int = 5,
-    col: str = "embedding",
-) -> DataFrame:
+def ann_int8_topk(emb: DataFrame, k: int = 10) -> DataFrame:
     """Brute-force top-k by int8 dot product, queries drawn from the
-    corpus (``vec_id < n_queries``), self-matches excluded.
+    corpus (``vec_id < N_QUERIES``), self-matches excluded.
 
     Output ``(query_id, vec_id, rank, qdot)`` — all integers, so the
     oracle comparison is exact, not rounded. Ties break by vec_id.
     """
-    q = quantize_embeddings(emb, col)
+    q = quantize_embeddings(emb)
     queries = F.broadcast(
-        q.filter(F.col("vec_id") < n_queries).select(
+        q.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
             F.col("q_embedding").alias("q_vec"),
         )
@@ -154,18 +154,14 @@ def _subvectors(q: DataFrame, m: int, sd: int, extra=()):
     )
 
 
-def _emb_dim(emb: DataFrame, col: str) -> int:
-    row = emb.select(F.size(F.col(col)).alias("d")).first()
+def _emb_dim(emb: DataFrame) -> int:
+    row = emb.select(F.size(F.col("embedding")).alias("d")).first()
     if row is None:
         raise ValueError("empty embedding table")
     return int(row["d"])
 
 
-def pq_codebooks(
-    emb: DataFrame,
-    m: int = 4,
-    col: str = "embedding",
-) -> DataFrame:
+def pq_codebooks(emb: DataFrame, m: int = 4) -> DataFrame:
     """Train the m sub-codebooks: ``(subv, code, centroid array<long>)``,
     one int8 centroid per (subquantizer, label).
 
@@ -173,11 +169,11 @@ def pq_codebooks(
     per-(label, subv, pos) fold is map-side combinable and its output is
     codebook-bounded (m x n_labels x subdim rows), never corpus-bounded.
     """
-    dim = _emb_dim(emb, col)
+    dim = _emb_dim(emb)
     if m < 1 or dim % m != 0:
         raise ValueError(f"m={m} must divide the embedding dim {dim}")
     sd = dim // m
-    q = quantize_embeddings(emb, col, extra_cols=("label",))
+    q = quantize_embeddings(emb, extra_cols=("label",))
     subs = _subvectors(q, m, sd, extra=("label",))
     pose = subs.select(
         "label", "subv", F.posexplode("qsub").alias("pos", "val")
@@ -200,21 +196,16 @@ def pq_codebooks(
     )
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    m: int = 4,
-    col: str = "embedding",
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebooks: DataFrame, m: int = 4) -> DataFrame:
     """Assign each vector its m code words: ``(vec_id, subv, code)`` —
     argmin exact squared int distance per subquantizer, ties to the
     smallest code. Long-form output IS the PQ store shape (8-32x
     smaller than the vectors); the codebook broadcasts, the corpus
     never shuffles except the per-(vec, subv) argmin fold, whose rows
     are thin (id, subv, dist, code)."""
-    dim = _emb_dim(emb, col)
+    dim = _emb_dim(emb)
     sd = dim // m
-    q = quantize_embeddings(emb, col)
+    q = quantize_embeddings(emb)
     subs = _subvectors(q, m, sd)
     joined = subs.join(F.broadcast(codebooks), "subv")
     dist = F.aggregate(
@@ -231,15 +222,9 @@ def pq_encode(
     )
 
 
-def ann_pq_topk(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 10,
-    n_queries: int = 5,
-    col: str = "embedding",
-) -> DataFrame:
+def ann_pq_topk(emb: DataFrame, m: int = 4) -> DataFrame:
     """End-to-end PQ ANN: train codebooks, encode the corpus, score
-    ``vec_id < n_queries`` by asymmetric distance (exact int dot of the
+    ``vec_id < N_QUERIES`` by asymmetric distance (exact int dot of the
     int8 query subvector with each assigned centroid), rank desc.
 
     Output ``(query_id, vec_id, rank, score)`` — raw BIGINT scores, so
@@ -248,13 +233,13 @@ def ann_pq_topk(
     store; the per-(query, vec) sum map-side-combines its m rows; no
     vector data moves at query time.
     """
-    dim = _emb_dim(emb, col)
+    dim = _emb_dim(emb)
     sd = dim // m
-    cb = pq_codebooks(emb, m, col)
-    codes = pq_encode(emb, cb, m, col)
-    q = quantize_embeddings(emb, col)
+    cb = pq_codebooks(emb, m)
+    codes = pq_encode(emb, cb, m)
+    q = quantize_embeddings(emb)
     qsubs = _subvectors(
-        q.filter(F.col("vec_id") < n_queries), m, sd
+        q.filter(F.col("vec_id") < N_QUERIES), m, sd
     ).select(F.col("vec_id").alias("query_id"), "subv", "qsub")
     lut = qsubs.join(cb, "subv").select(
         "query_id", "subv", "code",
@@ -269,33 +254,27 @@ def ann_pq_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "rank", "score")
     )
 
 
-def ann_pq_sql(
-    m: int = 4,
-    k: int = 10,
-    n_queries: int = 5,
-    dim: int = 64,
-    table: str = "embeddings",
-) -> str:
+def ann_pq_sql() -> str:
     """DuckDB twin of :func:`ann_pq_topk` — textually parallel int8
     quantize, label-mean int8 codebooks, exact-int encode and ADC."""
-    sd = dim // m
+    sd = 16  # 64-dim vectors, m=4 sub-quantizers
     return f"""
 WITH pq_e AS (SELECT vec_id, label,
-                     list_transform({table}.embedding,
+                     list_transform(embeddings.embedding,
                                     x -> CAST(x AS DOUBLE)) AS v
-              FROM {table}),
+              FROM embeddings),
 pq_am AS (SELECT MAX(list_max(list_transform(v, x -> abs(x)))) AS amax
           FROM pq_e),
 pq_q8 AS (SELECT vec_id, label,
                  list_transform(v, x -> CAST(greatest(-127.0, least(127.0,
                      floor(x * 127.0 / amax + 0.5))) AS BIGINT)) AS qv
           FROM pq_e, pq_am),
-pq_j AS (SELECT unnest(generate_series(0, {m - 1})) AS subv),
+pq_j AS (SELECT unnest(generate_series(0, 3)) AS subv),
 pq_sub AS (SELECT vec_id, label, subv,
                   qv[subv * {sd} + 1 : (subv + 1) * {sd}] AS qsub
            FROM pq_q8, pq_j),
@@ -322,7 +301,7 @@ pq_lut AS (SELECT s.vec_id AS query_id, s.subv, c.code,
                   CAST(list_sum(list_transform(list_zip(s.qsub, c.centroid),
                        p -> p[1] * p[2])) AS BIGINT) AS dot
            FROM pq_sub s JOIN pq_cb c ON s.subv = c.subv
-           WHERE s.vec_id < {n_queries}),
+           WHERE s.vec_id < {N_QUERIES}),
 pq_s AS (SELECT l.query_id, x.vec_id, SUM(l.dot) AS score
          FROM pq_codes x JOIN pq_lut l
            ON x.subv = l.subv AND x.code = l.code
@@ -333,7 +312,7 @@ SELECT query_id, vec_id,
                                ORDER BY score DESC, vec_id ASC) AS INT)
            AS rank,
        CAST(score AS BIGINT) AS score
-FROM pq_s QUALIFY rank <= {k}"""
+FROM pq_s QUALIFY rank <= {TOP_K}"""
 
 
 def pq_save_index(
@@ -378,14 +357,14 @@ def pq_load_index(spark, path: str):
     return spark.read.parquet(path), params
 
 
-def corpus_amax(emb: DataFrame, col: str = "embedding") -> float:
+def corpus_amax(emb: DataFrame) -> float:
     """The absmax scale of a corpus (one scalar aggregate) — computed
     once at train time and persisted via :func:`pq_save_index`."""
     row = emb.agg(
         F.max(
             F.array_max(
                 F.transform(
-                    as_double_array(F.col(col)), F.abs
+                    as_double_array(F.col("embedding")), F.abs
                 )
             )
         ).alias("amax")
@@ -398,8 +377,6 @@ def ann_pq_query_with_index(
     codes: DataFrame,
     queries: DataFrame,
     path: str,
-    k: int = 10,
-    col: str = "embedding",
 ) -> DataFrame:
     """Query a persisted PQ index: ``codes`` is the stored
     ``(vec_id, subv, code)`` table from :func:`pq_encode`, ``queries``
@@ -410,13 +387,13 @@ def ann_pq_query_with_index(
     """
     cb, params = pq_load_index(spark, path)
     dim, m, amax = params["dim"], params["m"], params["amax"]
-    qdim = _emb_dim(queries, col)
+    qdim = _emb_dim(queries)
     if qdim != dim:
         raise ValueError(
             f"query dim {qdim} != index dim {dim} (param manifest mismatch)"
         )
     sd = dim // m
-    q = quantize_embeddings(queries, col, amax=amax)
+    q = quantize_embeddings(queries, amax=amax)
     qsubs = _subvectors(q, m, sd).select(
         F.col("vec_id").alias("query_id"), "subv", "qsub"
     )
@@ -433,27 +410,19 @@ def ann_pq_query_with_index(
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "rank", "score")
     )
 
 
-def ann_ivfpq_topk(
-    emb: DataFrame,
-    m: int = 4,
-    k: int = 10,
-    n_queries: int = 5,
-    n_probe: int = 3,
-    lloyd_iters: int = 0,
-    n_lists: int = None,
-    col: str = "embedding",
-) -> DataFrame:
+def ann_ivfpq_topk(emb: DataFrame, n_probe: int = 3) -> DataFrame:
     """IVFPQ — the composition that IS the production 10^12-vector
     index (faiss IndexIVFPQ): IVF coarse routing shrinks candidates to
     ~n_probe/n_lists of the corpus, PQ ADC scores them from codes alone
-    (no vector data moves at query time). Routing quantizer options as
-    :func:`similarity.ann_ivf_topk`; PQ contract as
-    :func:`ann_pq_topk`. With ``n_probe >= n_lists`` the candidate set
+    (no vector data moves at query time). The routing quantizer is
+    :func:`similarity.ivf_build_centroids`' one list per ``label``, and
+    centroids and list routing both read the ``embedding`` column; PQ
+    contract as :func:`ann_pq_topk`, with m=4 sub-quantizers. With ``n_probe >= n_lists`` the candidate set
     is the full corpus and the output equals :func:`ann_pq_topk`
     exactly — the certification trick the ``ann_ivf`` contract uses.
 
@@ -466,11 +435,9 @@ def ann_ivfpq_topk(
         ivf_build_centroids,
     )
 
-    dim = _emb_dim(emb, col)
-    sd = dim // m
-    centroids = ivf_build_centroids(
-        emb, col, lloyd_iters=lloyd_iters, n_lists=n_lists
-    )
+    dim = _emb_dim(emb)
+    sd = dim // 4
+    centroids = ivf_build_centroids(emb)
     norm_c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
     indexed = ivf_assign_lists(emb, centroids)
     np_ = int(min(n_probe, norm_c.shape[0]))
@@ -482,23 +449,21 @@ def ann_ivfpq_topk(
         order = np.argsort(-(mtx @ norm_c.T), axis=1, kind="stable")[:, :np_]
         return pd.Series([row.astype(np.int32).tolist() for row in order])
 
-    cb = pq_codebooks(emb, m, col)
-    codes = pq_encode(emb, cb, m, col).join(
+    cb = pq_codebooks(emb)
+    codes = pq_encode(emb, cb).join(
         indexed.select("vec_id", "ivf_list"), "vec_id"
     )
 
-    raw_q = emb.filter(F.col("vec_id") < n_queries)
+    raw_q = emb.filter(F.col("vec_id") < N_QUERIES)
     probes = raw_q.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(_probe_lists(F.col(col))).alias("ivf_list"),
+        F.explode(_probe_lists(F.col("embedding"))).alias("ivf_list"),
     )
     # queries quantize at the CORPUS scale (the codebooks' training
     # amax) — quantizing the filtered query set alone would rescale
     # every LUT dot (the pq_save_index manifest rule)
-    q = quantize_embeddings(emb, col).filter(
-        F.col("vec_id") < n_queries
-    )
-    qsubs = _subvectors(q, m, sd).select(
+    q = quantize_embeddings(emb).filter(F.col("vec_id") < N_QUERIES)
+    qsubs = _subvectors(q, 4, sd).select(
         F.col("vec_id").alias("query_id"), "subv", "qsub"
     )
     lut = qsubs.join(cb, "subv").select(
@@ -516,6 +481,6 @@ def ann_ivfpq_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "rank", "score")
     )

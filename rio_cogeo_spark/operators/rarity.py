@@ -8,7 +8,7 @@ Per document, over the WHOLE corpus's unigram distribution:
 * ``mean_tok_freq_ppb`` — the token-occurrence-weighted mean of each
   token's corpus frequency, in parts-per-billion;
 * ``rare_frac_ppm`` — the fraction of the doc's token occurrences whose
-  token appears ≤ ``rare_cnt`` times corpus-wide, in parts-per-million.
+  token appears ≤ 2 times corpus-wide, in parts-per-million.
 
 All arithmetic is exact BIGINT (``div``, never float division), so both
 columns hash identically on Spark and DuckDB regardless of partitioning
@@ -47,13 +47,10 @@ from rio_cogeo_spark.operators.search import build_postings
 
 _PPB = 1_000_000_000
 _PPM = 1_000_000
+_TOKEN_RARITY_RARE_CNT = 2
 
 
-def token_rarity(
-    docs: DataFrame,
-    rare_cnt: int = 2,
-    broadcast_vocab: bool = True,
-) -> DataFrame:
+def token_rarity(docs: DataFrame, broadcast_vocab: bool = True) -> DataFrame:
     """Score every document against the corpus unigram distribution.
 
     Returns ``(doc_id, n_tokens, mean_tok_freq_ppb, rare_frac_ppm)``;
@@ -91,7 +88,7 @@ def token_rarity(
             F.sum("tf").alias("n_tokens"),
             F.expr("sum(tf * freq_ppb) div sum(tf)").alias("mean_tok_freq_ppb"),
             F.expr(
-                f"(sum(CASE WHEN cnt <= {int(rare_cnt)} THEN tf ELSE 0 END)"
+                f"(sum(CASE WHEN cnt <= {_TOKEN_RARITY_RARE_CNT} THEN tf ELSE 0 END)"
                 f" * {_PPM}) div sum(tf)"
             ).alias("rare_frac_ppm"),
         )
@@ -99,12 +96,12 @@ def token_rarity(
     )
 
 
-def token_rarity_sql(table: str = "documents", rare_cnt: int = 2) -> str:
+def token_rarity_sql() -> str:
     """DuckDB twin of :func:`token_rarity` (same exact-BIGINT formulas)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM {table}),
+WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 vocab AS (SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1),
 tot AS (SELECT SUM(cnt) AS total FROM vocab)
@@ -112,7 +109,7 @@ SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_tokens,
        CAST(SUM(tf * ((cnt * {_PPB}) // total)) // SUM(tf) AS BIGINT)
            AS mean_tok_freq_ppb,
-       CAST((SUM(CASE WHEN cnt <= {int(rare_cnt)} THEN tf ELSE 0 END)
+       CAST((SUM(CASE WHEN cnt <= {_TOKEN_RARITY_RARE_CNT} THEN tf ELSE 0 END)
         * {_PPM}) // SUM(tf) AS BIGINT) AS rare_frac_ppm
 FROM tf JOIN vocab USING (term) CROSS JOIN tot
 GROUP BY 1"""
@@ -196,11 +193,10 @@ SELECT doc_id, n_paras, n_langs,
 FROM agg"""
 
 
-def bigram_lm(
-    docs: DataFrame,
-    novel_cnt: int = 1,
-    broadcast_model: bool = True,
-) -> DataFrame:
+_BIGRAM_LM_NOVEL_CNT = 1
+
+
+def bigram_lm(docs: DataFrame, broadcast_model: bool = True) -> DataFrame:
     """Bigram-LM predictability score — the conditional-probability form
     of the CCNet/Gopher LM-quality filter (:func:`token_rarity` is the
     unconditional unigram form). KenLM-style pipelines score each page
@@ -215,7 +211,7 @@ def bigram_lm(
       predictability (low = word-salad / OCR noise / other-language
       leakage; implausibly high = boilerplate made of frozen phrases);
     * ``novel_frac_ppm`` — the fraction of the doc's bigram occurrences
-      whose bigram appears ≤ ``novel_cnt`` times corpus-wide.
+      whose bigram appears ≤ 1 times corpus-wide.
 
     Returns ``(doc_id, n_bigrams, mean_pred_ppm, novel_frac_ppm)``;
     docs with fewer than 2 tokens emit no row (no bigram to score).
@@ -279,7 +275,7 @@ def bigram_lm(
                 F.count(F.lit(1)).alias("n_bigrams"),
                 F.expr("sum(pred_ppm) div count(1)").alias("mean_pred_ppm"),
                 F.expr(
-                    f"(sum(CASE WHEN cnt2 <= {int(novel_cnt)} THEN 1 ELSE 0 END)"
+                    f"(sum(CASE WHEN cnt2 <= {_BIGRAM_LM_NOVEL_CNT} THEN 1 ELSE 0 END)"
                     f" * {_PPM}) div count(1)"
                 ).alias("novel_frac_ppm"),
             )
@@ -308,7 +304,7 @@ def bigram_lm(
             F.sum("tf").alias("n_bigrams"),
             F.expr("sum(tf * pred_ppm) div sum(tf)").alias("mean_pred_ppm"),
             F.expr(
-                f"(sum(CASE WHEN cnt2 <= {int(novel_cnt)} THEN tf ELSE 0 END)"
+                f"(sum(CASE WHEN cnt2 <= {_BIGRAM_LM_NOVEL_CNT} THEN tf ELSE 0 END)"
                 f" * {_PPM}) div sum(tf)"
             ).alias("novel_frac_ppm"),
         )
@@ -316,14 +312,14 @@ def bigram_lm(
     )
 
 
-def bigram_lm_sql(table: str = "documents", novel_cnt: int = 1) -> str:
+def bigram_lm_sql() -> str:
     """DuckDB twin of :func:`bigram_lm` (same positional bigram build —
     inclusive 1-based list slice, as in passages._spans_parts — and the
     same exact-BIGINT formulas)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM {table}),
+WITH t AS (SELECT doc_id, {TOKENS_SQL} AS toks FROM documents),
 bg AS (SELECT doc_id,
               unnest(list_transform(
                   generate_series(1, greatest(len(toks) - 1, 0)),
@@ -338,7 +334,7 @@ model AS (SELECT bigram, cnt2, (cnt2 * {_PPM}) // cnt1 AS pred_ppm
 SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_bigrams,
        CAST(SUM(tf * pred_ppm) // SUM(tf) AS BIGINT) AS mean_pred_ppm,
-       CAST((SUM(CASE WHEN cnt2 <= {int(novel_cnt)} THEN tf ELSE 0 END)
+       CAST((SUM(CASE WHEN cnt2 <= {_BIGRAM_LM_NOVEL_CNT} THEN tf ELSE 0 END)
         * {_PPM}) // SUM(tf) AS BIGINT) AS novel_frac_ppm
 FROM tf JOIN model USING (bigram)
 GROUP BY 1"""
@@ -414,15 +410,13 @@ def collocations(
     )
 
 
-def collocations_sql(
-    table: str = "documents", min_cnt: int = 5, topk: int = 100
-) -> str:
+def collocations_sql(min_cnt: int = 5, topk: int = 100) -> str:
     """DuckDB twin of :func:`collocations` (same positional bigram
     build and the same staged exact-BIGINT lift expression)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH t AS (SELECT {TOKENS_SQL} AS toks FROM {table}),
+WITH t AS (SELECT {TOKENS_SQL} AS toks FROM documents),
 bg AS (SELECT unnest(list_transform(
            generate_series(1, greatest(len(toks) - 1, 0)),
            i -> array_to_string(toks[i:i+1], ' '))) AS bigram
@@ -444,14 +438,13 @@ ORDER BY lift_ppm DESC, cnt2 DESC, bigram ASC
 LIMIT {int(topk)}"""
 
 
-def ccnet_buckets(
-    docs: DataFrame,
-    n_buckets: int = 3,
-    broadcast_model: bool = True,
-) -> DataFrame:
+_CCNET_N_BUCKETS = 3
+
+
+def ccnet_buckets(docs: DataFrame, broadcast_model: bool = True) -> DataFrame:
     """CCNet-style per-language perplexity bucketing: score every page
     with the corpus bigram LM (:func:`bigram_lm`) and split each
-    language into ``n_buckets`` equal-count bands — CCNet's
+    language into 3 equal-count bands — CCNet's
     head/middle/tail split, which downstream mixes sample from at
     different rates. NTILE over (``mean_pred_ppm`` DESC, ``doc_id``)
     gives an exact, total order, so bucket assignment is deterministic
@@ -477,7 +470,7 @@ def ccnet_buckets(
     w = Window.partitionBy("lang").orderBy(
         F.col("mean_pred_ppm").desc(), F.col("doc_id")
     )
-    n = int(n_buckets)
+    n = _CCNET_N_BUCKETS
     return (
         docs.select("doc_id", "lang")
         .join(scores, "doc_id")
@@ -493,11 +486,11 @@ def ccnet_buckets(
     )
 
 
-def ccnet_buckets_sql(table: str = "documents", n_buckets: int = 3) -> str:
+def ccnet_buckets_sql() -> str:
     """DuckDB twin of :func:`ccnet_buckets` (bigram-LM CTEs +
     the same NTILE window)."""
-    lm = bigram_lm_sql(table).strip()
-    n = int(n_buckets)
+    lm = bigram_lm_sql().strip()
+    n = _CCNET_N_BUCKETS
     return rf"""
 WITH lm AS ({lm})
 SELECT d.doc_id, d.lang, lm.mean_pred_ppm,
@@ -508,7 +501,7 @@ SELECT d.doc_id, d.lang, lm.mean_pred_ppm,
             WHEN NTILE({n}) OVER (PARTITION BY d.lang
             ORDER BY lm.mean_pred_ppm DESC, d.doc_id) = {n} THEN 'tail'
             ELSE 'middle' END AS bucket_name
-FROM {table} d JOIN lm ON d.doc_id = lm.doc_id"""
+FROM documents d JOIN lm ON d.doc_id = lm.doc_id"""
 
 
 def lexical_diversity(docs: DataFrame) -> DataFrame:
@@ -548,12 +541,12 @@ def lexical_diversity(docs: DataFrame) -> DataFrame:
     )
 
 
-def lexical_diversity_sql(table: str = "documents") -> str:
+def lexical_diversity_sql() -> str:
     """DuckDB twin of :func:`lexical_diversity`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM {table}),
+WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2)
 SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_tokens,
@@ -609,12 +602,12 @@ def vocab_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def vocab_stats_sql(table: str = "documents") -> str:
+def vocab_stats_sql() -> str:
     """DuckDB twin of :func:`vocab_stats`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT lang, unnest({TOKENS_SQL}) AS term FROM {table}),
+WITH tok AS (SELECT lang, unnest({TOKENS_SQL}) AS term FROM documents),
 cnt AS (SELECT lang, term, COUNT(*) AS cnt FROM tok GROUP BY 1, 2)
 SELECT lang,
        CAST(SUM(cnt) AS BIGINT) AS n_tokens,
@@ -627,11 +620,11 @@ SELECT lang,
 FROM cnt GROUP BY 1"""
 
 
-def host_lang_purity(
-    pages: DataFrame,
-    min_docs: int = 5,
-    purity_ppm: int = 600_000,
-) -> DataFrame:
+_HOST_LANG_PURITY_MIN_DOCS = 5
+_HOST_LANG_PURITY_PPM = 600_000
+
+
+def host_lang_purity(pages: DataFrame) -> DataFrame:
     """Per-HOST language consistency — the CCNet-published domain
     statistic and a standard spam/farm signal: a legitimate site serves
     one dominant language; a host spraying many languages across its
@@ -643,8 +636,8 @@ def host_lang_purity(
     Returns ``(host, n_docs, n_langs, major_lang, major_frac_ppm,
     suspect)`` — majority fraction in exact ppm ints, ties to the
     lexicographically smallest language, ``suspect`` true when the
-    host has at least ``min_docs`` pages and the majority share falls
-    below ``purity_ppm`` (default: flag hosts under 60% dominant).
+    host has at least 5 pages and the majority share falls below
+    600,000 ppm (hosts under 60% dominant).
 
     Scale design (100 TB): one map-side-combinable count per
     (host, lang) — group cardinality is hosts x language tags, never
@@ -678,21 +671,17 @@ def host_lang_purity(
                 "major_frac_ppm"
             ),
             (
-                (F.col("n_docs") >= F.lit(int(min_docs)))
+                (F.col("n_docs") >= F.lit(_HOST_LANG_PURITY_MIN_DOCS))
                 & (
                     F.expr("(-best.nn * 1000000) div n_docs")
-                    < F.lit(int(purity_ppm))
+                    < F.lit(_HOST_LANG_PURITY_PPM)
                 )
             ).alias("suspect"),
         )
     )
 
 
-def host_lang_purity_sql(
-    pages_cte: str,
-    min_docs: int = 5,
-    purity_ppm: int = 600_000,
-) -> str:
+def host_lang_purity_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`host_lang_purity` (``pages_cte`` exposes
     ``(url, lang)``)."""
     from rio_cogeo_spark.functions.text import HOST_SQL
@@ -709,17 +698,17 @@ hp_agg AS (SELECT host,
 SELECT host, n_docs, n_langs,
        best.lang AS major_lang,
        CAST((-best.nn * 1000000) // n_docs AS BIGINT) AS major_frac_ppm,
-       (n_docs >= {int(min_docs)}
+       (n_docs >= {_HOST_LANG_PURITY_MIN_DOCS}
         AND CAST((-best.nn * 1000000) // n_docs AS BIGINT)
-            < {int(purity_ppm)}) AS suspect
+            < {_HOST_LANG_PURITY_PPM}) AS suspect
 FROM hp_agg"""
 
 
-def host_quality_trend(
-    pages: DataFrame,
-    day_sec: int = 86_400,
-    drop_ppm: int = 100_000,
-) -> DataFrame:
+_TREND_DAY_SEC = 86_400
+_TREND_DROP_PPM = 100_000
+
+
+def host_quality_trend(pages: DataFrame) -> DataFrame:
     """Per-host quality TREND across crawl days — the takeover/decay
     monitor: a host whose Gopher-gate pass rate drops sharply between
     crawl days just got parked, compromised, or template-spammed, and
@@ -727,7 +716,7 @@ def host_quality_trend(
     one row per (host, day) with ``(host, day, n_docs, pass_docs,
     pass_ppm, prev_pass_ppm, delta_ppm, degrading)`` — all exact ints;
     ``prev_pass_ppm`` is NULL on a host's first observed day, and
-    ``degrading`` flags ``delta_ppm <= -drop_ppm`` (default: a 10-point
+    ``degrading`` flags ``delta_ppm <= -100000`` (a 10-point
     pass-rate drop).
 
     Scale design (100 TB): the per-doc Gopher mask is a zero-Exchange
@@ -744,7 +733,7 @@ def host_quality_trend(
     per_day = (
         pages.select(
             host_col(F.col("url")).alias("host"),
-            F.expr(f"ts_sec div {int(day_sec)}").alias("day"),
+            F.expr(f"ts_sec div {_TREND_DAY_SEC}").alias("day"),
             gg["gopher_pass"].cast("long").alias("p"),
         )
         .groupBy("host", "day")
@@ -766,17 +755,13 @@ def host_quality_trend(
         .withColumn(
             "degrading",
             F.coalesce(
-                F.col("delta_ppm") <= F.lit(-int(drop_ppm)), F.lit(False)
+                F.col("delta_ppm") <= F.lit(-_TREND_DROP_PPM), F.lit(False)
             ),
         )
     )
 
 
-def host_quality_trend_sql(
-    pages_cte: str,
-    day_sec: int = 86_400,
-    drop_ppm: int = 100_000,
-) -> str:
+def host_quality_trend_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`host_quality_trend` (``pages_cte`` exposes
     ``(url, ts_sec, text)``)."""
     from rio_cogeo_spark.functions.text import HOST_SQL, gopher_gate_sql
@@ -785,7 +770,7 @@ def host_quality_trend_sql(
     return rf"""
 WITH hq_in AS ({pages_cte}),
 hq_doc AS (SELECT {HOST_SQL} AS host,
-                  ts_sec // {int(day_sec)} AS day,
+                  ts_sec // {_TREND_DAY_SEC} AS day,
                   CASE WHEN {gp} THEN 1 ELSE 0 END AS p
            FROM hq_in),
 hq_day AS (SELECT host, day,
@@ -802,6 +787,6 @@ hq_lag AS (SELECT *,
            FROM hq_ppm)
 SELECT host, day, n_docs, pass_docs, pass_ppm, prev_pass_ppm,
        pass_ppm - prev_pass_ppm AS delta_ppm,
-       COALESCE(pass_ppm - prev_pass_ppm <= -{int(drop_ppm)}, FALSE)
+       COALESCE(pass_ppm - prev_pass_ppm <= -{_TREND_DROP_PPM}, FALSE)
            AS degrading
 FROM hq_lag"""

@@ -21,6 +21,7 @@ or timestamp column.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -77,19 +78,19 @@ def corpus_info(docs: DataFrame) -> DataFrame:
     )
 
 
-def corpus_info_sql(table: str = "documents") -> str:
+def corpus_info_sql() -> str:
     """DuckDB twin of :func:`corpus_info`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
 WITH base AS (SELECT COUNT(*) AS n_docs,
                      COUNT(DISTINCT lang) AS n_langs,
-                     SUM(length(text)) AS sum_chars FROM {table}),
+                     SUM(length(text)) AS sum_chars FROM documents),
 vocab AS (SELECT SUM(cnt) AS n_tokens, COUNT(*) AS n_types FROM
           (SELECT term, COUNT(*) AS cnt FROM
-           (SELECT unnest({TOKENS_SQL}) AS term FROM {table}) GROUP BY 1)),
+           (SELECT unnest({TOKENS_SQL}) AS term FROM documents) GROUP BY 1)),
 dups AS (SELECT SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS dup_docs FROM
-         (SELECT md5(text) AS h, COUNT(*) AS cnt FROM {table} GROUP BY 1))
+         (SELECT md5(text) AS h, COUNT(*) AS cnt FROM documents GROUP BY 1))
 SELECT CAST(n_docs AS BIGINT) AS n_docs,
        CAST(n_langs AS BIGINT) AS n_langs,
        CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -161,11 +162,11 @@ FROM cum WHERE cum >= (n + 1) // 2
 GROUP BY 1"""
 
 
-def group_quantiles(
-    docs: DataFrame,
-    quantiles: "tuple[tuple[int, int], ...]" = ((1, 4), (1, 2), (3, 4)),
-    labels: "tuple[str, ...]" = ("p25", "p50", "p75"),
-) -> DataFrame:
+_QUANTILE_LABELS = ("p25", "p50", "p75")
+_QUANTILES = ((1, 4), (1, 2), (3, 4))
+
+
+def group_quantiles(docs: DataFrame) -> DataFrame:
     """Exact per-group lower quantiles (generalizes
     :func:`group_median`): for each ``q = num/den``, the smallest value
     whose cumulative count reaches ``ceil(n·q)`` — all-int, no
@@ -176,10 +177,8 @@ def group_quantiles(
     ONE pass over the same value-frequency + cumulative-count table as
     the median (distinct-value-bounded, never a corpus sort); each
     quantile is a conditional MIN over that table, so adding quantiles
-    adds columns, not passes. Returns ``(lang, n, *labels)``.
+    adds columns, not passes. Returns ``(lang, n, p25, p50, p75)``.
     """
-    if len(quantiles) != len(labels):
-        raise ValueError("quantiles and labels must pair up")
     freq = docs.groupBy("lang", F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -198,7 +197,7 @@ def group_quantiles(
         ).alias("n"),
     )
     aggs = [F.max("n").alias("n")]
-    for (num, den), lab in zip(quantiles, labels):
+    for (num, den), lab in zip(_QUANTILES, _QUANTILE_LABELS):
         aggs.append(
             F.min(
                 F.when(
@@ -209,20 +208,16 @@ def group_quantiles(
     return cum.groupBy("lang").agg(*aggs)
 
 
-def group_quantiles_sql(
-    table: str = "documents",
-    quantiles: "tuple[tuple[int, int], ...]" = ((1, 4), (1, 2), (3, 4)),
-    labels: "tuple[str, ...]" = ("p25", "p50", "p75"),
-) -> str:
+def group_quantiles_sql() -> str:
     """DuckDB twin of :func:`group_quantiles`."""
     sels = ",\n       ".join(
         f"MIN(CASE WHEN cum * {int(den)} >= n * {int(num)} THEN v END)"
         f" AS {lab}"
-        for (num, den), lab in zip(quantiles, labels)
+        for (num, den), lab in zip(_QUANTILES, _QUANTILE_LABELS)
     )
     return rf"""
 WITH freq AS (SELECT lang, n_chars AS v, COUNT(*) AS cnt
-              FROM {table} GROUP BY 1, 2),
+              FROM documents GROUP BY 1, 2),
 cum AS (SELECT lang, v,
                SUM(cnt) OVER (PARTITION BY lang ORDER BY v
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -529,7 +524,7 @@ def volume_anomaly(pages: DataFrame, window_days: int = 7) -> DataFrame:
     )
 
 
-def volume_anomaly_sql(pages_cte: str, window_days: int = 7) -> str:
+def volume_anomaly_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`volume_anomaly` (``pages_cte`` exposes the
     timestamp column)."""
     return f"""
@@ -542,7 +537,7 @@ va_w AS (SELECT day, n_pages,
                 SUM(n_pages * n_pages) OVER tw AS s2
          FROM va_d
          WINDOW tw AS (ORDER BY day
-                       ROWS BETWEEN {window_days} PRECEDING
+                       ROWS BETWEEN 7 PRECEDING
                        AND 1 PRECEDING))
 SELECT day, CAST(n_pages AS BIGINT) AS n_pages,
        CAST(floor((CAST(s AS DOUBLE) / k) * 1000.0 + 0.5) AS BIGINT)
@@ -556,7 +551,7 @@ SELECT day, CAST(n_pages AS BIGINT) AS n_pages,
                            * (CAST(s AS DOUBLE) / k)))
                  * 1000.0 + 0.5) AS BIGINT)
             ELSE NULL END AS z_mil
-FROM va_w WHERE k = {window_days}"""
+FROM va_w WHERE k = 7"""
 
 
 def cohen_kappa(
@@ -925,11 +920,7 @@ def zipf_slope(docs: DataFrame, top_k: int = 500) -> DataFrame:
     )
 
 
-def zipf_slope_sql(
-    inner_cte: str,
-    tokens_sql: str,
-    top_k: int = 500,
-) -> str:
+def zipf_slope_sql(inner_cte: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`zipf_slope` (``inner_cte`` exposes a
     ``text`` column; ``tokens_sql`` is the shared tokenizer SQL)."""
     return f"""
@@ -937,7 +928,7 @@ WITH zf_src AS ({inner_cte}),
 zf_tf AS (SELECT term, COUNT(*) AS cnt
           FROM (SELECT unnest({tokens_sql}) AS term FROM zf_src)
           GROUP BY 1
-          ORDER BY cnt DESC, term ASC LIMIT {top_k}),
+          ORDER BY cnt DESC, term ASC LIMIT 500),
 zf_xy AS (SELECT CAST(floor(ln(CAST(ROW_NUMBER() OVER
                     (ORDER BY cnt DESC, term ASC) AS DOUBLE)) * 1000000)
                     AS BIGINT) AS x,
@@ -1319,9 +1310,9 @@ def heaps_fit(docs: DataFrame, n_points: int = 8) -> DataFrame:
     )
 
 
-def heaps_fit_sql(table: str, tokens_sql: str, n_points: int = 8) -> str:
+def heaps_fit_sql(table: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`heaps_fit`."""
-    pts = [(j, 2 ** (n_points - 1 - j)) for j in range(n_points)]
+    pts = [(j, 2 ** (7 - j)) for j in range(8)]
     tok_cols = ", ".join(
         f"SUM(CASE WHEN d * {div} <= mx THEN ntok ELSE 0 END) AS tok_{j}"
         for j, div in pts
@@ -1825,18 +1816,16 @@ def volume_acf(pages: DataFrame, max_lag: int = 7) -> DataFrame:
     ).orderBy("lag")
 
 
-def volume_acf_sql(pages_cte: str, max_lag: int = 7) -> str:
+def volume_acf_sql(pages_cte: str) -> str:
     """DuckDB twin of :func:`volume_acf`."""
-    if max_lag < 1:
-        raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     lag_sel = ", ".join(
         f"LAG(y, {k}) OVER (ORDER BY day) AS lag{k}"
-        for k in range(1, max_lag + 1)
+        for k in range(1, 8)
     )
     prod_rows = ", ".join(
         f"({k}, CASE WHEN lag{k} IS NULL THEN NULL"
         f" ELSE (t.n * d.y - t.s) * (t.n * lag{k} - t.s) END)"
-        for k in range(1, max_lag + 1)
+        for k in range(1, 8)
     )
     return f"""
 WITH ac_p AS ({pages_cte}),
@@ -1918,12 +1907,12 @@ def group_boxplot(docs: DataFrame) -> DataFrame:
     )
 
 
-def group_boxplot_sql(table: str = "documents") -> str:
+def group_boxplot_sql() -> str:
     """DuckDB twin of :func:`group_boxplot`."""
     return f"""
 WITH bx_f AS (SELECT lang AS grp, CAST(n_chars AS BIGINT) AS v,
                      COUNT(*) AS cnt
-              FROM {table} GROUP BY 1, 2),
+              FROM documents GROUP BY 1, 2),
 bx_c AS (SELECT grp, v, cnt,
                 SUM(cnt) OVER (PARTITION BY grp ORDER BY v
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
@@ -2042,13 +2031,13 @@ def kruskal_wallis(docs: DataFrame) -> DataFrame:
     )
 
 
-def kruskal_wallis_sql(table: str = "documents") -> str:
+def kruskal_wallis_sql() -> str:
     """DuckDB twin of :func:`kruskal_wallis` — the identical pinned
     double expression tree."""
     return f"""
 WITH kw_gv AS (SELECT lang AS grp, CAST(n_chars AS BIGINT) AS v,
                       COUNT(*) AS f
-               FROM {table} GROUP BY 1, 2),
+               FROM documents GROUP BY 1, 2),
 kw_vf AS (SELECT v, SUM(f) AS fv FROM kw_gv GROUP BY v),
 kw_r AS (SELECT v, fv,
                 2 * COALESCE(SUM(fv) OVER (ORDER BY v
@@ -2583,11 +2572,7 @@ def term_burstiness(docs: DataFrame, top_k: int = 50) -> DataFrame:
     )
 
 
-def term_burstiness_sql(
-    docs_select: str,
-    tokens_sql: str,
-    top_k: int = 50,
-) -> str:
+def term_burstiness_sql(docs_select: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`term_burstiness` — ``docs_select`` exposes
     ``(text, t_bucket)``; identical fold shapes, int-div ``//``."""
     return f"""WITH tb_docs AS ({docs_select}),
@@ -2610,7 +2595,7 @@ SELECT term,
        CAST(n_buckets AS BIGINT) AS n_buckets,
        CAST(((d_span * q - s * s) * 1000000) // (d_span * s)
             AS BIGINT) AS vmr_mil
-FROM tb_rk WHERE _rk <= {int(top_k)}"""
+FROM tb_rk WHERE _rk <= 50"""
 
 
 def lang_vocab_overlap(docs: DataFrame) -> DataFrame:
@@ -2785,11 +2770,7 @@ def term_localization(pages: DataFrame, top_k: int = 50) -> DataFrame:
     return ranked.selectExpr(*_term_geo_final("div"))
 
 
-def term_localization_sql(
-    pages_select: str,
-    tokens_sql: str,
-    top_k: int = 50,
-) -> str:
+def term_localization_sql(pages_select: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`term_localization` — ``pages_select``
     exposes ``(text, tile_x, tile_y)``; identical moments and final
     projection (int-div ``//``)."""
@@ -2809,7 +2790,7 @@ tg_rk AS (SELECT *, ROW_NUMBER() OVER
               (ORDER BY w_total DESC, term ASC) AS _rk
           FROM tg_m)
 SELECT {final}
-FROM tg_rk WHERE _rk <= {int(top_k)}"""
+FROM tg_rk WHERE _rk <= 50"""
 
 
 def cell_diversity(pages: DataFrame) -> DataFrame:
@@ -2959,10 +2940,12 @@ _REGIONAL_FINAL = [
 ]
 
 
+_REGIONAL_TERMS_HALF = 0.6
+
+
 def regional_terms(
     pages: DataFrame,
     cities: DataFrame,
-    half: float = 0.6,
     top_k: int = 5,
     min_in: int = 3,
 ) -> DataFrame:
@@ -2978,7 +2961,7 @@ def regional_terms(
     exact BIGINTs, NULL when the term saturates a side; candidates
     need ``a ≥ min_in``.  Ranked by the exact integer (odds_mil,
     n_in, term) key — identical on both engines.  ``cities`` exposes
-    ``(city, c_lat, c_lon)``; boxes are ±``half`` degrees (disjoint
+    ``(city, c_lat, c_lon)``; boxes are ±0.6 degrees (disjoint
     for the megacity fixture).
 
     Scale design: region tagging is ONE broadcast range join of the
@@ -2998,10 +2981,10 @@ def regional_terms(
     ))
     tagged = pages.join(
         c,
-        (F.col("lat") >= F.col("c_lat") - half)
-        & (F.col("lat") <= F.col("c_lat") + half)
-        & (F.col("lon") >= F.col("c_lon") - half)
-        & (F.col("lon") <= F.col("c_lon") + half),
+        (F.col("lat") >= F.col("c_lat") - _REGIONAL_TERMS_HALF)
+        & (F.col("lat") <= F.col("c_lat") + _REGIONAL_TERMS_HALF)
+        & (F.col("lon") >= F.col("c_lon") - _REGIONAL_TERMS_HALF)
+        & (F.col("lon") <= F.col("c_lon") + _REGIONAL_TERMS_HALF),
         "inner",
     )
     a = (
@@ -3055,14 +3038,7 @@ def regional_terms(
     )
 
 
-def regional_terms_sql(
-    pages_select: str,
-    cities_select: str,
-    tokens_sql: str,
-    half: float = 0.6,
-    top_k: int = 5,
-    min_in: int = 3,
-) -> str:
+def regional_terms_sql(pages_select: str, cities_select: str, tokens_sql: str) -> str:
     """DuckDB twin of :func:`regional_terms` — identical folds, odds
     arithmetic (int-div ``//``) and rank key.  NULL odds sort last on
     both engines (Spark ``desc_nulls_last`` ↔ DuckDB ``DESC NULLS
@@ -3071,13 +3047,13 @@ def regional_terms_sql(
 rt_c AS ({cities_select}),
 rt_tag AS (SELECT c.city, p.text
            FROM rt_p p JOIN rt_c c
-             ON p.lat BETWEEN c.c_lat - CAST({half} AS DOUBLE)
-                          AND c.c_lat + CAST({half} AS DOUBLE)
-            AND p.lon BETWEEN c.c_lon - CAST({half} AS DOUBLE)
-                          AND c.c_lon + CAST({half} AS DOUBLE)),
+             ON p.lat BETWEEN c.c_lat - CAST({_REGIONAL_TERMS_HALF} AS DOUBLE)
+                          AND c.c_lat + CAST({_REGIONAL_TERMS_HALF} AS DOUBLE)
+            AND p.lon BETWEEN c.c_lon - CAST({_REGIONAL_TERMS_HALF} AS DOUBLE)
+                          AND c.c_lon + CAST({_REGIONAL_TERMS_HALF} AS DOUBLE)),
 rt_a AS (SELECT city, term, COUNT(*) AS a
          FROM (SELECT city, unnest({tokens_sql}) AS term FROM rt_tag)
-         GROUP BY 1, 2 HAVING COUNT(*) >= {int(min_in)}),
+         GROUP BY 1, 2 HAVING COUNT(*) >= 3),
 rt_at AS (SELECT city, CAST(COUNT(*) AS HUGEINT) AS at
           FROM (SELECT city, unnest({tokens_sql}) AS term FROM rt_tag)
           GROUP BY 1),
@@ -3103,7 +3079,7 @@ rt_rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY city ORDER BY
               odds_mil DESC NULLS LAST, n_in DESC, term ASC) AS _rk
           FROM rt_o)
 SELECT {", ".join(_REGIONAL_FINAL)}
-FROM rt_rk WHERE _rk <= {int(top_k)}"""
+FROM rt_rk WHERE _rk <= 5"""
 
 
 def _dissim_final(intdiv: str) -> list[str]:
@@ -3387,12 +3363,7 @@ _HOST_SPREAD_FINAL_DOC = """host geographic footprint with exact
 moment numerators; rms_mil is the ONE pinned double per row."""
 
 
-def host_spread(
-    pts: DataFrame,
-    min_pages: int = 2,
-    top_k: int = 50,
-    host_col_name: str = "host",
-) -> DataFrame:
+def host_spread(pts: DataFrame, min_pages: int = 2, top_k: int = 50) -> DataFrame:
     """Geographic footprint per host — which sites publish from (or
     about) everywhere vs one place: per host with ≥ ``min_pages``
     pages, ``(host, n_pages, n_cells, mean_x_mil, mean_y_mil,
@@ -3416,7 +3387,7 @@ def host_spread(
         raise ValueError(f"min_pages must be >= 1, got {min_pages}")
     d = "decimal(38,0)"
     hc = pts.groupBy(
-        F.col(host_col_name).alias("host"),
+        F.col("host"),
         F.col("tile_x").cast("long").alias("cx"),
         F.col("tile_y").cast("long").alias("cy"),
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -3447,9 +3418,7 @@ def host_spread(
     ).limit(int(top_k))
 
 
-def host_spread_sql(
-    pts_cte: str, min_pages: int = 2, top_k: int = 50
-) -> str:
+def host_spread_sql(pts_cte: str, min_pages: int = 2) -> str:
     """DuckDB twin of :func:`host_spread` (int-div ``//``; identical
     pinned-double tree for ``rms_mil``)."""
     if min_pages < 1:
@@ -3478,7 +3447,7 @@ SELECT host,
             * CAST(1000000 AS DOUBLE)) AS BIGINT) AS rms_mil
 FROM hs_h
 ORDER BY n_cells DESC, n_pages DESC, host ASC
-LIMIT {int(top_k)}"""
+LIMIT 50"""
 
 
 def morisita_horn(pts: DataFrame) -> DataFrame:
@@ -3819,14 +3788,17 @@ SELECT CAST(n_cells AS BIGINT) AS n_cells,
 FROM th_a"""
 
 
-def syndication(pts: DataFrame, top_k: int = 50) -> DataFrame:
+_SYNDICATION_TOP_K = 50
+
+
+def syndication(pts: DataFrame) -> DataFrame:
     """Spatially replicated content — syndication/mirror geography:
     per content fingerprint occupying ≥ 2 distinct cells, the exact
     page/cell counts, the bounding box of its cells, and the Chebyshev
     span (how FAR the same content travels; wire-service copy spans
     continents, templated spam clusters locally).  Ranked
     ``(cheb_span desc, n_pages desc, fp asc)`` — strict total order —
-    cut to ``top_k``.  FULLY exact integer.
+    cut to 50.  FULLY exact integer.
 
     Scale design: two-level map-side-combinable fold (corpus →
     ``(fp, cell)`` → fp) — the dup-group bbox needs NO pairwise
@@ -3859,10 +3831,10 @@ def syndication(pts: DataFrame, top_k: int = 50) -> DataFrame:
     return grp.orderBy(
         F.col("cheb_span").desc(), F.col("n_pages").desc(),
         F.col("fp").asc(),
-    ).limit(int(top_k))
+    ).limit(_SYNDICATION_TOP_K)
 
 
-def syndication_sql(pts_cte: str, top_k: int = 50) -> str:
+def syndication_sql(pts_cte: str) -> str:
     """DuckDB twin of :func:`syndication` — ``pts_cte`` exposes
     ``(fp, tile_x, tile_y)``."""
     return f"""WITH sy_p AS ({pts_cte}),
@@ -3882,17 +3854,15 @@ SELECT fp, n_pages, n_cells,
        CAST(GREATEST(x1 - x0, y1 - y0) AS BIGINT) AS cheb_span
 FROM sy_g
 ORDER BY cheb_span DESC, n_pages DESC, fp ASC
-LIMIT {int(top_k)}"""
+LIMIT {_SYNDICATION_TOP_K}"""
 
 
-def city_langs(
-    pts: DataFrame,
-    cities: DataFrame,
-    box_deg: float = 0.6,
-    top_k: int = 3,
-) -> DataFrame:
+_CITY_LANGS_BOX_DEG = 0.6
+
+
+def city_langs(pts: DataFrame, cities: DataFrame, top_k: int = 3) -> DataFrame:
     """Language profile per megacity — per city, the top ``top_k``
-    languages inside its ±``box_deg``° box with exact share
+    languages inside its ±0.6° box with exact share
     ``share_mil = cnt·10^6 div city_total`` (the demographic view the
     :func:`regional_terms` vocabulary view sits beside).  Rank by
     ``(cnt desc, lang asc)`` per city — strict total order.  FULLY
@@ -3905,10 +3875,10 @@ def city_langs(
     """
     tagged = pts.join(
         F.broadcast(cities),
-        (F.col("lat") >= F.col("c_lat") - float(box_deg))
-        & (F.col("lat") <= F.col("c_lat") + float(box_deg))
-        & (F.col("lon") >= F.col("c_lon") - float(box_deg))
-        & (F.col("lon") <= F.col("c_lon") + float(box_deg)),
+        (F.col("lat") >= F.col("c_lat") - _CITY_LANGS_BOX_DEG)
+        & (F.col("lat") <= F.col("c_lat") + _CITY_LANGS_BOX_DEG)
+        & (F.col("lon") >= F.col("c_lon") - _CITY_LANGS_BOX_DEG)
+        & (F.col("lon") <= F.col("c_lon") + _CITY_LANGS_BOX_DEG),
     )
     cl = tagged.groupBy(
         "city", F.col("lang")
@@ -3932,22 +3902,17 @@ def city_langs(
     )
 
 
-def city_langs_sql(
-    pts_cte: str,
-    cities_sql: str,
-    box_deg: float = 0.6,
-    top_k: int = 3,
-) -> str:
+def city_langs_sql(pts_cte: str, cities_sql: str) -> str:
     """DuckDB twin of :func:`city_langs` (int-div ``//``)."""
     return f"""WITH cl_p AS ({pts_cte}),
 cl_c AS ({cities_sql}),
 cl_t AS (SELECT c.city, p.lang AS lang,
                 CAST(COUNT(*) AS BIGINT) AS cnt
          FROM cl_p p JOIN cl_c c
-           ON p.lat BETWEEN c.c_lat - CAST({box_deg} AS DOUBLE)
-                        AND c.c_lat + CAST({box_deg} AS DOUBLE)
-          AND p.lon BETWEEN c.c_lon - CAST({box_deg} AS DOUBLE)
-                        AND c.c_lon + CAST({box_deg} AS DOUBLE)
+           ON p.lat BETWEEN c.c_lat - CAST({_CITY_LANGS_BOX_DEG} AS DOUBLE)
+                        AND c.c_lat + CAST({_CITY_LANGS_BOX_DEG} AS DOUBLE)
+          AND p.lon BETWEEN c.c_lon - CAST({_CITY_LANGS_BOX_DEG} AS DOUBLE)
+                        AND c.c_lon + CAST({_CITY_LANGS_BOX_DEG} AS DOUBLE)
          GROUP BY 1, 2),
 cl_w AS (SELECT *,
                 SUM(cnt) OVER (PARTITION BY city) AS city_total,
@@ -3960,7 +3925,7 @@ SELECT city,
        CAST(cnt AS BIGINT) AS cnt,
        CAST(city_total AS BIGINT) AS city_total,
        CAST((cnt * 1000000) // city_total AS BIGINT) AS share_mil
-FROM cl_w WHERE rank <= {int(top_k)}"""
+FROM cl_w WHERE rank <= 3"""
 
 
 def zoom_entropy(tiles: DataFrame) -> DataFrame:
@@ -4054,8 +4019,10 @@ def urban_gradient(
     if not city_cells:
         raise ValueError("city_cells must be non-empty")
     spark = pts.sparkSession
+    # from pandas: a JVM local relation, so no Python worker scans it
     cities = spark.createDataFrame(
-        [(n, int(cx), int(cy)) for n, cx, cy in city_cells],
+        pd.DataFrame([(n, int(cx), int(cy)) for n, cx, cy in city_cells],
+                     columns=["city", "cx", "cy"]),
         "city string, cx long, cy long",
     )
     cells = pts.groupBy(
@@ -4133,8 +4100,9 @@ def city_catchment(
         raise ValueError("city_cells must be non-empty")
     spark = pts.sparkSession
     cities = spark.createDataFrame(
-        [(i, n, int(cx), int(cy))
-         for i, (n, cx, cy) in enumerate(city_cells)],
+        pd.DataFrame([(i, n, int(cx), int(cy))
+                      for i, (n, cx, cy) in enumerate(city_cells)],
+                     columns=["idx", "city", "cx", "cy"]),
         "idx int, city string, cx long, cy long",
     )
     cells = pts.groupBy(

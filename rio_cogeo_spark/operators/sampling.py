@@ -63,6 +63,9 @@ def sample_stratified(
     return docs.filter(u < rate)
 
 
+_SPLITS = (("train", 0.98), ("val", 0.01), ("test", 0.01))
+
+
 def split_assign(
     docs: DataFrame,
     weights: Optional[List[Tuple[str, float]]] = None,
@@ -71,7 +74,7 @@ def split_assign(
     """Deterministic train/val/test assignment: cumulative-weight bins
     over the uniform hash. Weights need not sum to 1 (normalized).
     A row's split never changes across reruns or engines."""
-    weights = weights or [("train", 0.98), ("val", 0.01), ("test", 0.01)]
+    weights = weights or _SPLITS
     total = sum(w for _, w in weights)
     u = uniform_hash(F.col(key_col))
     expr = F.lit(weights[-1][0])  # remainder bucket
@@ -85,16 +88,18 @@ def split_assign(
     return docs.withColumn("split", expr)
 
 
+_WEIGHT_SCALE = 1000
+
+
 def temperature_mix(
     docs: DataFrame,
     target_ppm: int = 250_000,
-    alpha: float = 0.5,
-    weight_scale: int = 1000,
     broadcast_rates: bool = True,
 ) -> DataFrame:
     """Temperature-weighted domain sampling (the multilingual /
     multi-source mix primitive, XLM-R-style): sample domain ``d`` with
-    probability proportional to ``count_d ** alpha``, down-weighting
+    probability proportional to ``count_d ** 0.5`` (temperature
+    ``alpha = 0.5``), down-weighting
     head domains and up-weighting the tail, at an overall target rate of
     ``target_ppm`` parts-per-million of the corpus.
 
@@ -102,16 +107,14 @@ def temperature_mix(
 
         rate_d = target_frac * tot * c_d**(alpha-1) / sum_d' c_d'**alpha
 
-    Exact-integer construction: ``w_d = floor(c_d**alpha *
-    weight_scale)`` quantizes the power once per domain; every later
+    Exact-integer construction: ``w_d = floor(sqrt(c_d) * 1000)``
+    quantizes the power once per domain; every later
     step (sums, products, floor-division to ppm, the keep comparison
     against the 60-bit key hash) is integer arithmetic in DECIMAL(38,0)
     / HUGEINT, so the kept set is bit-identical across engines and
-    summation orders — same trick as search.py's integer idf. For the
-    default ``alpha=0.5`` the power is ``sqrt``, which IEEE 754 requires
-    to be correctly rounded, making even the quantization step
-    engine-exact; other alphas go through ``pow`` (documented caveat:
-    last-ulp pow differences could flip a w_d at a floor boundary).
+    summation orders — same trick as search.py's integer idf. The power
+    is ``sqrt``, which IEEE 754 requires to be correctly rounded, making
+    even the quantization step engine-exact.
 
     Plan shape at 100 TB: one map-side-combinable groupBy(domain) count
     (domain cardinality sized, not corpus sized) → one single-row total
@@ -127,13 +130,9 @@ def temperature_mix(
     """
     if not 0 < target_ppm <= 1_000_000:
         raise ValueError("target_ppm must be in (0, 1e6]")
-    c = F.col("c")
-    power = (
-        F.sqrt(c) if alpha == 0.5 else F.pow(c, F.lit(float(alpha)))
-    )
     counts = docs.groupBy("lang").agg(F.count("*").alias("c"))
     weighted = counts.withColumn(
-        "w", F.floor(power * weight_scale).cast("long")
+        "w", F.floor(F.sqrt("c") * _WEIGHT_SCALE).cast("long")
     )
     totals = weighted.agg(
         F.sum("c").alias("tot"), F.sum("w").alias("totw")
@@ -161,18 +160,13 @@ def temperature_mix(
     )
 
 
-def temperature_mix_sql(
-    table: str = "documents",
-    target_ppm: int = 250_000,
-    select: str = "doc_id, lang",
-    weight_scale: int = 1000,
-) -> str:
+def temperature_mix_sql(target_ppm: int = 250_000, select: str = "doc_id, lang") -> str:
     """DuckDB twin of :func:`temperature_mix` (alpha = 0.5)."""
     h = MD5_60_SQL.format(c="CAST(d.doc_id AS VARCHAR)")
     return rf"""
-WITH c AS (SELECT lang, COUNT(*) AS c FROM {table} GROUP BY 1),
+WITH c AS (SELECT lang, COUNT(*) AS c FROM documents GROUP BY 1),
 w AS (SELECT lang, c,
-             CAST(floor(sqrt(c) * {weight_scale}) AS BIGINT) AS w
+             CAST(floor(sqrt(c) * {_WEIGHT_SCALE}) AS BIGINT) AS w
       FROM c),
 t AS (SELECT CAST(SUM(c) AS HUGEINT) AS tot,
              CAST(SUM(w) AS HUGEINT) AS totw FROM w),
@@ -182,16 +176,14 @@ r AS (SELECT lang,
                         // (CAST(c AS HUGEINT) * totw) AS BIGINT))
                AS rate_ppm
       FROM w, t)
-SELECT {select} FROM {table} d JOIN r USING (lang)
+SELECT {select} FROM documents d JOIN r USING (lang)
 WHERE {h} % {_U_MOD} < r.rate_ppm"""
 
 
-def split_assign_sql(
-    key: str,
-    weights: Optional[List[Tuple[str, float]]] = None,
-) -> str:
-    """DuckDB twin of :func:`split_assign`'s split expression."""
-    weights = weights or [("train", 0.98), ("val", 0.01), ("test", 0.01)]
+def split_assign_sql(key: str) -> str:
+    """DuckDB twin of :func:`split_assign`'s split expression at the
+    default weights."""
+    weights = _SPLITS
     total = sum(w for _, w in weights)
     u = uniform_hash_sql(key)
     acc = 0.0
@@ -242,14 +234,14 @@ def cap_per_group(
     )
 
 
-def cap_per_host(pages: DataFrame, k: int, n_salts: int = 16) -> DataFrame:
+def cap_per_host(pages: DataFrame, k: int) -> DataFrame:
     """``cap_per_group`` keyed by the canonical URL host (adds a
     ``host`` column)."""
     from rio_cogeo_spark.functions.text import host_col
 
     return cap_per_group(
         pages.withColumn("host", host_col(F.col("url"))),
-        ["host"], k, n_salts=n_salts,
+        ["host"], k,
     )
 
 
@@ -270,8 +262,6 @@ def split_assign_leakage_safe(
     docs: DataFrame,
     pairs: DataFrame,
     weights=None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
 ) -> DataFrame:
     """Leakage-safe train/val/test assignment: every member of a
     near-dup CLUSTER gets the cluster's split, so a test document's
@@ -290,7 +280,7 @@ def split_assign_leakage_safe(
     the corpus never shuffles."""
     from rio_cogeo_spark.operators.dedup import connected_components
 
-    comp = connected_components(pairs, src, dst).select(
+    comp = connected_components(pairs).select(
         F.col("doc_id"), "component"
     )
     keyed = docs.join(comp, "doc_id", "left").withColumn(
@@ -304,7 +294,6 @@ def filter_by_group_quantile(
     docs: DataFrame,
     q: float = 0.25,
     exact: bool = True,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Quantile-threshold filtering — the quality-cutoff stage ("drop
     the bottom quartile per language"): keep rows whose ``n_chars``
@@ -325,7 +314,7 @@ def filter_by_group_quantile(
         cut = F.round(F.expr(f"percentile(n_chars, {float(q)})"), 6)
     else:
         cut = F.expr(
-            f"approx_percentile(n_chars, {float(q)}, {int(accuracy)})"
+            f"approx_percentile(n_chars, {float(q)}, 10000)"
         )
     cuts = docs.groupBy("lang").agg(cut.alias("__cut"))
     return (
@@ -423,17 +412,14 @@ def importance_weights(
     )
 
 
-def importance_weights_sql(
-    table: str = "documents",
-    target_pred: str = "lang = 'en'",
-) -> str:
+def importance_weights_sql() -> str:
     """DuckDB twin of :func:`importance_weights` (same positional bigram
     build and the same staged exact-BIGINT ratio)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH t0 AS (SELECT doc_id, ({target_pred}) AS is_t,
-                   {TOKENS_SQL} AS toks FROM {table}),
+WITH t0 AS (SELECT doc_id, (lang = 'en') AS is_t,
+                   {TOKENS_SQL} AS toks FROM documents),
 bg AS (SELECT doc_id, is_t,
               unnest(list_transform(
                   generate_series(1, greatest(len(toks) - 1, 0)),
@@ -506,10 +492,7 @@ def curriculum_interleave(docs: DataFrame, score_col=None) -> DataFrame:
     )
 
 
-def curriculum_interleave_sql(
-    table: str = "documents",
-    score_expr: str = None,
-) -> str:
+def curriculum_interleave_sql(score_expr: str = None) -> str:
     """DuckDB twin of :func:`curriculum_interleave`."""
     order = "doc_id ASC"
     if score_expr is not None:
@@ -519,11 +502,11 @@ WITH ci_r AS (SELECT doc_id, lang,
                      CAST(row_number() OVER (PARTITION BY lang
                                              ORDER BY {order}) AS BIGINT)
                          AS rank_in_group
-              FROM {table}),
+              FROM documents),
 ci_g AS (SELECT lang,
                 CAST(row_number() OVER (ORDER BY lang ASC) AS BIGINT)
                     - 1 AS gidx
-         FROM (SELECT DISTINCT lang FROM {table})),
+         FROM (SELECT DISTINCT lang FROM documents)),
 ci_n AS (SELECT COUNT(*) AS n_groups FROM ci_g)
 SELECT r.doc_id, r.lang, r.rank_in_group,
        CAST(r.rank_in_group * n.n_groups + g.gidx AS BIGINT)

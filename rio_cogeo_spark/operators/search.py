@@ -104,13 +104,11 @@ def topk_per_group(
     group_cols: List[str],
     order_col: str,
     k: int,
-    ascending: bool = False,
 ) -> DataFrame:
     """Generic per-group top-k (window + row_number ≤ k): 'best k pages
     per domain', 'longest k docs per language'. One shuffle on the group
     key; rank is emitted as ``rank``."""
-    direction = F.asc(order_col) if ascending else F.desc(order_col)
-    w = Window.partitionBy(*group_cols).orderBy(direction, F.asc("doc_id"))
+    w = Window.partitionBy(*group_cols).orderBy(F.desc(order_col), F.asc("doc_id"))
     return (
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -307,7 +305,7 @@ def trending_terms(
     )
 
 
-def trending_terms_sql(table: str, window_sec: int = 3600, k: int = 5) -> str:
+def trending_terms_sql(table: str, window_sec: int = 3600) -> str:
     """DuckDB twin of :func:`trending_terms`."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
@@ -321,7 +319,7 @@ rnk AS (SELECT window_start, term, n,
                CAST(row_number() OVER (PARTITION BY window_start
                     ORDER BY n DESC, term) AS INT) AS rank
         FROM cnt)
-SELECT window_start, term, n, rank FROM rnk WHERE rank <= {int(k)}"""
+SELECT window_start, term, n, rank FROM rnk WHERE rank <= 5"""
 
 
 def tfidf_keywords(docs: DataFrame, k: int = 5) -> DataFrame:
@@ -360,15 +358,15 @@ def tfidf_keywords(docs: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def tfidf_keywords_sql(table: str = "documents", k: int = 5) -> str:
+def tfidf_keywords_sql() -> str:
     """DuckDB twin of :func:`tfidf_keywords` (same exact-BIGINT score)."""
     from rio_cogeo_spark.functions.text import TOKENS_SQL
 
     return rf"""
-WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM {table}),
+WITH tok AS (SELECT doc_id, unnest({TOKENS_SQL}) AS term FROM documents),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
 dfx AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-tot AS (SELECT COUNT(*) AS n_total FROM {table}),
+tot AS (SELECT COUNT(*) AS n_total FROM documents),
 sc AS (SELECT tf.doc_id, tf.term, tf.tf,
               CAST(tf.tf * ((tot.n_total * {_IDF_SCALE}) // dfx.df)
                    AS BIGINT) AS score
@@ -376,7 +374,7 @@ sc AS (SELECT tf.doc_id, tf.term, tf.tf,
 rnk AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
              ORDER BY score DESC, term) AS INT) AS rank FROM sc)
 SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, score, rank
-FROM rnk WHERE rank <= {int(k)}"""
+FROM rnk WHERE rank <= 5"""
 
 
 def lexical_cosine_pairs(

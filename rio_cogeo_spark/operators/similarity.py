@@ -27,7 +27,6 @@ def ann_bruteforce_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
 
@@ -52,9 +51,7 @@ def ann_bruteforce_topk(
     q = queries.select(
         "query_id", as_double_array(F.col("q_embedding")).alias("_q")
     ).withColumn("_nb", F.sqrt(dot(F.col("_q"), F.col("_q"))))
-    joined = e.crossJoin(F.broadcast(q))
-    if not include_self:
-        joined = joined.filter(F.col("vec_id") != F.col("query_id"))
+    joined = e.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
     cos = F.round(
         dot(F.col("_e"), F.col("_q")) / (F.col("_na") * F.col("_nb")), 6
     )
@@ -67,14 +64,14 @@ def ann_bruteforce_topk(
     )
 
 
-def _component_means(df: DataFrame, key_col: str, vec_col: str) -> dict:
+def _component_means(df: DataFrame, key_col: str) -> dict:
     """Per-key per-component vector means via posexplode + avg — the
     mergeable shape: partial aggregation combines map-side, so the
     shuffle carries n_partitions x n_keys x dim partial sums, never a
     ``collect_list`` of whole vectors per group. Only the (n_keys x dim)
     mean matrix reaches the driver."""
     rows = (
-        df.select(key_col, F.posexplode(vec_col).alias("pos", "x"))
+        df.select(key_col, F.posexplode("embedding").alias("pos", "x"))
         .groupBy(key_col, "pos")
         .agg(F.avg(F.col("x").cast("double")).alias("m"))
         .collect()
@@ -88,18 +85,16 @@ def _component_means(df: DataFrame, key_col: str, vec_col: str) -> dict:
 def _kmeanspp_sample_seed(
     embeddings: DataFrame,
     n_lists: int,
-    vec_col: str,
     sample_rows: int,
-    seed: int,
 ) -> np.ndarray:
     """k-means++ seeding from a DETERMINISTIC corpus sample: the sample
     is the ``sample_rows`` smallest ``xxhash64(id)`` rows (a distributed
     TakeOrdered — no full sort, no dependence on partitioning or row
     order), and the ++ chain runs driver-side on that small matrix with
-    a fixed RNG. Only sample_rows x dim doubles ever reach the driver."""
+    a fixed RNG (seed 13). Only sample_rows x dim doubles ever reach the driver."""
     rows = (
-        embeddings.select(F.col(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(seed)))
+        embeddings.select(F.col("embedding").alias("v"))
+        .orderBy(F.xxhash64(F.col("vec_id").cast("string"), F.lit(13)))
         .limit(int(sample_rows))
         .collect()
     )
@@ -110,7 +105,7 @@ def _kmeanspp_sample_seed(
             f"n_lists={n_lists} exceeds the seed sample ({X.shape[0]} rows); "
             "raise sample_rows"
         )
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(13)
 
     def _pp_seed():
         centers = [X[int(rng.integers(X.shape[0]))]]
@@ -150,11 +145,9 @@ def _kmeanspp_sample_seed(
     return best_cent
 
 
-def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
-                        lloyd_iters: int = 0,
+def ivf_build_centroids(embeddings: DataFrame, lloyd_iters: int = 0,
                         n_lists: int = None,
-                        sample_rows: int = 4096,
-                        seed: int = 13) -> np.ndarray:
+                        sample_rows: int = 4096) -> np.ndarray:
     """IVF coarse quantizer. Two seeding modes:
 
     * ``n_lists`` given — k-means++ over a deterministic hash-ordered
@@ -174,10 +167,10 @@ def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
     (the standard empty-cluster rule), so n_lists is stable."""
     if n_lists is not None:
         cent = _kmeanspp_sample_seed(
-            embeddings, int(n_lists), vec_col, sample_rows, seed
+            embeddings, int(n_lists), sample_rows
         )
     else:
-        by_list = _component_means(embeddings, "label", vec_col)
+        by_list = _component_means(embeddings, "label")
         labels = sorted(by_list)
         dim = max(max(d) for d in by_list.values()) + 1
         cent = np.array(
@@ -185,8 +178,8 @@ def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
             dtype=np.float64,
         )
     for _ in range(int(lloyd_iters)):
-        assigned = ivf_assign_lists(embeddings, cent, vec_col)
-        by_idx = _component_means(assigned, "ivf_list", vec_col)
+        assigned = ivf_assign_lists(embeddings, cent)
+        by_idx = _component_means(assigned, "ivf_list")
         new_cent = cent.copy()
         for idx, comps in by_idx.items():
             new_cent[int(idx)] = [comps[p] for p in range(cent.shape[1])]
@@ -194,8 +187,7 @@ def ivf_build_centroids(embeddings: DataFrame, vec_col: str = "embedding",
     return cent
 
 
-def ivf_assign_lists(embeddings: DataFrame, centroids: np.ndarray,
-                     vec_col: str = "embedding") -> DataFrame:
+def ivf_assign_lists(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Add ``ivf_list`` = nearest centroid by cosine (one Lloyd step —
     the routing rule MUST be distance-based so that a query near vector v
     probes v's list; an arbitrary partition column is not routable).
@@ -208,7 +200,7 @@ def ivf_assign_lists(embeddings: DataFrame, centroids: np.ndarray,
         m = m / np.linalg.norm(m, axis=1, keepdims=True)
         return pd.Series((m @ norm_c.T).argmax(axis=1).astype(np.int32))
 
-    return embeddings.withColumn("ivf_list", _assign(F.col(vec_col)))
+    return embeddings.withColumn("ivf_list", _assign(F.col("embedding")))
 
 
 def ann_ivf_topk(
@@ -238,7 +230,7 @@ def ann_ivf_topk(
     sample seed (see :func:`ivf_build_centroids`) — the right mode for a
     corpus without a meaningful grouping column."""
     centroids = ivf_build_centroids(
-        embeddings, "embedding", lloyd_iters=lloyd_iters,
+        embeddings, lloyd_iters=lloyd_iters,
         n_lists=n_lists,
     )
     norm_c = centroids / np.linalg.norm(centroids, axis=1, keepdims=True)
@@ -268,16 +260,15 @@ def ann_ivf_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def _hyperplanes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.default_rng(42)
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_bucket(df: DataFrame, vec_col: str, dim: int, n_planes: int = 8,
-               seed: int = 42) -> DataFrame:
+def lsh_bucket(df: DataFrame, vec_col: str, dim: int, n_planes: int = 8) -> DataFrame:
     """Add a random-hyperplane sign-bucket column (int, 2**n_planes
     buckets). Vectorized: one matmul per Arrow batch."""
-    planes = _hyperplanes(dim, n_planes, seed)
+    planes = _hyperplanes(dim, n_planes)
 
     @F.pandas_udf("int")
     def _bucket(vecs: pd.Series) -> pd.Series:
@@ -294,20 +285,18 @@ def ann_lsh_topk(
     queries: DataFrame,
     dim: int,
     k: int = 10,
-    n_planes: int = 6,
-    seed: int = 42,
     include_self: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket
     (plus hamming-1 neighbor buckets for recall), then exact cosine + rank.
     """
-    emb_b = lsh_bucket(embeddings, "embedding", dim, n_planes, seed)
+    emb_b = lsh_bucket(embeddings, "embedding", dim, 6)
 
-    q_b = lsh_bucket(queries, "q_embedding", dim, n_planes, seed)
+    q_b = lsh_bucket(queries, "q_embedding", dim, 6)
     # expand query buckets to hamming-1 ring
     ring = F.array(
         F.col("bucket").cast("int"),
-        *[F.col("bucket").bitwiseXOR(F.lit(1 << i)).cast("int") for i in range(n_planes)],
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << i)).cast("int") for i in range(6)],
     )
     q_ring = q_b.withColumn("bucket", F.explode(ring))
 
@@ -349,7 +338,8 @@ def ivf_save_index(
         for i in range(centroids.shape[0])
     ]
     spark.createDataFrame(
-        rows, "list_id int, centroid array<double>"
+        pd.DataFrame(rows, columns=["list_id", "centroid"]),
+        "list_id int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
@@ -368,7 +358,6 @@ def ann_ivf_topk_with_index(
     centroids: np.ndarray,
     k: int = 10,
     n_probe: int = 3,
-    include_self: bool = False,
 ) -> DataFrame:
     """IVF ANN against a prebuilt quantizer (see :func:`ivf_save_index`)
     — identical query plan to :func:`ann_ivf_topk` minus the build."""
@@ -386,9 +375,9 @@ def ann_ivf_topk_with_index(
     probes = queries.withColumn(
         "ivf_list", F.explode(_probe_lists(F.col("q_embedding")))
     )
-    joined = indexed.join(F.broadcast(probes), "ivf_list", "inner")
-    if not include_self:
-        joined = joined.filter(F.col("vec_id") != F.col("query_id"))
+    joined = indexed.join(F.broadcast(probes), "ivf_list", "inner").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
     cos = cosine_rounded(F.col("embedding"), F.col("q_embedding"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
@@ -424,7 +413,7 @@ def semantic_dedup_pairs(
     that sorts the same table twice (ROUND5.md §9); the final verify is
     the shared JVM ``cosine_rounded`` expression, bit-identical to the
     DuckDB twin."""
-    assigned = ivf_assign_lists(embeddings, centroids, "embedding")
+    assigned = ivf_assign_lists(embeddings, centroids)
     grouped = (
         assigned.groupBy("ivf_list")
         .agg(F.collect_list("vec_id").alias("ids"))
@@ -514,7 +503,7 @@ def pool_embeddings(vecs: DataFrame) -> DataFrame:
     )
 
 
-def pool_embeddings_sql(table: str = "embeddings") -> str:
+def pool_embeddings_sql() -> str:
     """DuckDB twin of :func:`pool_embeddings` — the same
     sorted-by-id sequential double fold (list_reduce is a left fold;
     the 0.0-seeded Spark fold adds one exact 0.0+x step, which cannot
@@ -522,7 +511,7 @@ def pool_embeddings_sql(table: str = "embeddings") -> str:
     return rf"""
 WITH ex AS (
   SELECT label, vec_id, u.i AS dim, CAST(u.v AS DOUBLE) AS val
-  FROM {table},
+  FROM embeddings,
        unnest(list_transform(embedding,
               (x, i) -> struct_pack(i := i, v := x))) AS t(u)
 )
@@ -538,8 +527,6 @@ def bitext_mine(
     tgt: DataFrame,
     k: int = 4,
     margin_threshold_ppm: int = 1_000_000,
-    src_id: str = "src_id",
-    tgt_id: str = "tgt_id",
 ) -> DataFrame:
     """Margin-based bitext mining (Artetxe & Schwenk, ACL 2019 — the
     LASER / CCMatrix / ParaCrawl parallel-corpus miner): for every
@@ -586,11 +573,11 @@ def bitext_mine(
         )
     from rio_cogeo_spark.functions.vector import cosine_rounded
 
-    s = src.select(F.col(src_id), F.col("embedding").alias("_sv"))
-    t = tgt.select(F.col(tgt_id), F.col("embedding").alias("_tv"))
+    s = src.select(F.col("src_id"), F.col("embedding").alias("_sv"))
+    t = tgt.select(F.col("tgt_id"), F.col("embedding").alias("_tv"))
     pairs = s.crossJoin(F.broadcast(t)).select(
-        src_id,
-        tgt_id,
+        "src_id",
+        "tgt_id",
         F.round(cosine_rounded(F.col("_sv"), F.col("_tv")) * 1_000_000, 0)
         .cast("long")
         .alias("cos_u"),
@@ -616,26 +603,26 @@ def bitext_mine(
             )
         )
 
-    a_src = _nn_mean(src_id, tgt_id, "a_src")
-    a_tgt = _nn_mean(tgt_id, src_id, "a_tgt")
+    a_src = _nn_mean("src_id", "tgt_id", "a_src")
+    a_tgt = _nn_mean("tgt_id", "src_id", "a_tgt")
     # a_src is src-cardinality (joins back co-partitioned on src_id — a
     # legitimate shuffle at corpus scale); a_tgt is target-bounded and
     # rides the same broadcast budget as the target set itself
     scored = (
-        pairs.join(a_src, src_id)
-        .join(F.broadcast(a_tgt), tgt_id)
+        pairs.join(a_src, "src_id")
+        .join(F.broadcast(a_tgt), "tgt_id")
         .filter(F.col("a_src") + F.col("a_tgt") > 0)
         .select(
-            src_id,
-            tgt_id,
+            "src_id",
+            "tgt_id",
             "cos_u",
             F.expr("(2 * cos_u * 1000000) div (a_src + a_tgt)").alias(
                 "margin_ppm"
             ),
         )
     )
-    best = Window.partitionBy(src_id).orderBy(
-        F.col("margin_ppm").desc(), F.col(tgt_id).asc()
+    best = Window.partitionBy("src_id").orderBy(
+        F.col("margin_ppm").desc(), F.col("tgt_id").asc()
     )
     return (
         scored.withColumn("_b", F.row_number().over(best))
@@ -643,18 +630,11 @@ def bitext_mine(
             (F.col("_b") == 1)
             & (F.col("margin_ppm") >= margin_threshold_ppm)
         )
-        .select(src_id, tgt_id, "cos_u", "margin_ppm")
+        .select("src_id", "tgt_id", "cos_u", "margin_ppm")
     )
 
 
-def bitext_mine_sql(
-    src_cte: str,
-    tgt_cte: str,
-    k: int = 4,
-    margin_threshold_ppm: int = 1_000_000,
-    src_id: str = "src_id",
-    tgt_id: str = "tgt_id",
-) -> str:
+def bitext_mine_sql(src_cte: str, tgt_cte: str, k: int = 4) -> str:
     """DuckDB twin of :func:`bitext_mine` (each CTE exposes
     ``({src,tgt}_id, embedding)``)."""
     from rio_cogeo_spark.functions.vector import cosine_sql
@@ -662,43 +642,37 @@ def bitext_mine_sql(
     cos = cosine_sql("s.embedding", "t.embedding")
     return rf"""
 WITH s AS ({src_cte}), t AS ({tgt_cte}),
-p AS (SELECT s.{src_id}, t.{tgt_id},
+p AS (SELECT s.src_id, t.tgt_id,
              CAST(round(({cos}) * 1000000, 0) AS BIGINT) AS cos_u
       FROM s CROSS JOIN t),
-rs AS (SELECT {src_id}, cos_u,
-              ROW_NUMBER() OVER (PARTITION BY {src_id}
-                                 ORDER BY cos_u DESC, {tgt_id}) AS r
+rs AS (SELECT src_id, cos_u,
+              ROW_NUMBER() OVER (PARTITION BY src_id
+                                 ORDER BY cos_u DESC, tgt_id) AS r
        FROM p),
-a_src AS (SELECT {src_id},
+a_src AS (SELECT src_id,
                  CAST((SUM(cos_u + 1000000) // COUNT(*)) - 1000000
                       AS BIGINT) AS a_src
           FROM rs WHERE r <= {int(k)} GROUP BY 1),
-rt AS (SELECT {tgt_id}, cos_u,
-              ROW_NUMBER() OVER (PARTITION BY {tgt_id}
-                                 ORDER BY cos_u DESC, {src_id}) AS r
+rt AS (SELECT tgt_id, cos_u,
+              ROW_NUMBER() OVER (PARTITION BY tgt_id
+                                 ORDER BY cos_u DESC, src_id) AS r
        FROM p),
-a_tgt AS (SELECT {tgt_id},
+a_tgt AS (SELECT tgt_id,
                  CAST((SUM(cos_u + 1000000) // COUNT(*)) - 1000000
                       AS BIGINT) AS a_tgt
           FROM rt WHERE r <= {int(k)} GROUP BY 1),
-m AS (SELECT p.{src_id}, p.{tgt_id}, p.cos_u,
+m AS (SELECT p.src_id, p.tgt_id, p.cos_u,
              CAST((2 * p.cos_u * 1000000) // (a_src + a_tgt)
                   AS BIGINT) AS margin_ppm
-      FROM p JOIN a_src USING ({src_id}) JOIN a_tgt USING ({tgt_id})
+      FROM p JOIN a_src USING (src_id) JOIN a_tgt USING (tgt_id)
       WHERE a_src + a_tgt > 0),
-best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY {src_id}
-                   ORDER BY margin_ppm DESC, {tgt_id}) AS b FROM m)
-SELECT {src_id}, {tgt_id}, cos_u, margin_ppm
-FROM best WHERE b = 1 AND margin_ppm >= {int(margin_threshold_ppm)}"""
+best AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY src_id
+                   ORDER BY margin_ppm DESC, tgt_id) AS b FROM m)
+SELECT src_id, tgt_id, cos_u, margin_ppm
+FROM best WHERE b = 1 AND margin_ppm >= 1000000"""
 
 
-def hard_negatives(
-    candidates: DataFrame,
-    pairs: DataFrame,
-    k: int = 10,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
+def hard_negatives(candidates: DataFrame, pairs: DataFrame, k: int = 10) -> DataFrame:
     """Hard-negative mining for contrastive training (DPR, Karpukhin et
     al. EMNLP'20; SimCSE): per anchor, the top-``k`` most-similar
     candidates that are NOT the anchor itself and NOT in the anchor's
@@ -724,7 +698,7 @@ def hard_negatives(
     """
     from rio_cogeo_spark.operators.dedup import connected_components
 
-    comp = connected_components(pairs, src, dst)
+    comp = connected_components(pairs)
     cq = F.broadcast(comp.select(
         F.col("doc_id").alias("query_id"), F.col("component").alias("_q_comp")
     ))
@@ -854,13 +828,13 @@ SELECT label,
 FROM cd_f"""
 
 
-def _jl_matrix(in_dim: int, out_dim: int, seed: int = 42):
+def _jl_matrix(in_dim: int, out_dim: int):
     """Deterministic Gaussian projection matrix (Python stdlib RNG —
     engine-independent by construction; the literal doubles are shared
     verbatim by the Spark expression and the SQL twin)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     scale = 1.0 / (out_dim ** 0.5)
     return [
         [rng.gauss(0.0, 1.0) * scale for _ in range(in_dim)]
@@ -868,11 +842,7 @@ def _jl_matrix(in_dim: int, out_dim: int, seed: int = 42):
     ]
 
 
-def random_projection(
-    emb: DataFrame,
-    out_dim: int = 16,
-    seed: int = 42,
-) -> DataFrame:
+def random_projection(emb: DataFrame, out_dim: int = 16) -> DataFrame:
     """Johnson–Lindenstrauss random projection — the dimensionality
     reduction step in front of ANN/clustering at 100 TB (a 64→16
     projection cuts vector bandwidth 4x while approximately preserving
@@ -896,7 +866,7 @@ def random_projection(
         raise ValueError(
             f"out_dim must be in [1, {in_dim}], got {out_dim}"
         )
-    mat = _jl_matrix(in_dim, out_dim, seed)
+    mat = _jl_matrix(in_dim, out_dim)
     comps = []
     for j in range(out_dim):
         terms = " + ".join(
@@ -917,24 +887,19 @@ def random_projection(
     )
 
 
-def random_projection_sql(
-    table: str = "embeddings",
-    in_dim: int = 64,
-    out_dim: int = 16,
-    seed: int = 42,
-) -> str:
+def random_projection_sql() -> str:
     """DuckDB twin of :func:`random_projection` — the identical literal
     matrix and the identical left-to-right multiply-add chains."""
-    mat = _jl_matrix(in_dim, out_dim, seed)
+    mat = _jl_matrix(64, 16)
     selects = []
-    for j in range(out_dim):
+    for j in range(16):
         terms = " + ".join(
             f"CAST(embedding[{i + 1}] AS DOUBLE)"
             f" * CAST({mat[j][i]!r} AS DOUBLE)"
-            for i in range(in_dim)
+            for i in range(64)
         )
         selects.append(
             f"SELECT vec_id, CAST({j} AS INT) AS dim,"
-            f" round({terms}, 6) AS val FROM {table}"
+            f" round({terms}, 6) AS val FROM embeddings"
         )
     return "\nUNION ALL\n".join(selects)

@@ -115,13 +115,13 @@ def warp_bands(resampling: str = "sum") -> List[BandSpec]:
     return [b[0], value, b[2]]
 
 
-def hll_band(name: str, col: str, lg_k: int = 12) -> BandSpec:
+def hll_band(name: str, col: str) -> BandSpec:
     """A mergeable distinct-count band: ``hll_sketch_agg(col)`` at the
     base level, ``hll_union_agg`` at every overview level. Read the
     estimate with :func:`with_hll_estimates`. Exact for small per-tile
     cardinalities (the sketch stays in sparse mode), ~2% error beyond
-    2**lg_k."""
-    return BandSpec(name, lambda: F.hll_sketch_agg(F.col(col), lg_k), "hll")
+    2**12."""
+    return BandSpec(name, lambda: F.hll_sketch_agg(F.col(col), 12), "hll")
 
 
 def with_hll_estimates(tiles: DataFrame, bands: List[BandSpec]) -> DataFrame:
@@ -429,7 +429,6 @@ def cog_translate(
     max_zoom: Optional[int] = None,
     overview_level: Optional[int] = None,
     decimation_base: int = 2,
-    blocksize: int = grid.DEFAULT_BLOCKSIZE,
     bands: Optional[List[BandSpec]] = None,
     nodata: Optional[float] = None,
     validity_col: Optional[str] = None,
@@ -512,7 +511,6 @@ def cog_translate(
         max_zoom,
         overview_level,
         decimation_base,
-        blocksize,
         aligned_levels=(aligned_levels if web_optimized else None),
         overview_blocksize=overview_blocksize,
         tms=tms,

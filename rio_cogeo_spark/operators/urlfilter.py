@@ -114,22 +114,13 @@ def path_pattern_filter(
     )
 
 
-def path_pattern_filter_sql(
-    table: str,
-    patterns: Iterable[str],
-    case_insensitive: bool = True,
-) -> str:
+def path_pattern_filter_sql(table: str, patterns: Iterable[str]) -> str:
     """DuckDB twin of :func:`path_pattern_filter`."""
-    pats = sorted(set(patterns))
-    if case_insensitive:
-        pats = [p.lower() for p in pats]
-        url = "lower(url)"
-    else:
-        url = "url"
+    pats = [p.lower() for p in sorted(set(patterns))]
     arr = ", ".join("'" + p.replace("'", "''") + "'" for p in pats)
     return (
         f"SELECT * FROM {table} WHERE len(list_filter([{arr}], "
-        f"p -> contains({url}, p))) = 0"
+        f"p -> contains(lower(url), p))) = 0"
     )
 
 
@@ -182,10 +173,10 @@ def canonical_url(url: Column) -> Column:
 CANONICAL_URL_SQL_COL = "__CANON_INPUT__"
 
 
-def canonical_url_sql(col: str = "url") -> str:
+def canonical_url_sql() -> str:
     """DuckDB twin of :func:`canonical_url` (RE2 'g' flag where Spark
     replaces all; ``\\1`` instead of ``$1``)."""
-    u = f"regexp_replace({col}, '#.*$', '', 'g')"
+    u = f"regexp_replace(url, '#.*$', '', 'g')"
     u = f"regexp_replace({u}, '{_TRACKING_PARAM}', '', 'g')"
     u = f"regexp_replace({u}, '^([^?#]*)&', '\\1?', 'g')"
     u = f"regexp_replace({u}, '[?&]+$', '', 'g')"
@@ -261,14 +252,10 @@ def resolve_redirects(redirects: DataFrame, max_hops: int = 16) -> DataFrame:
     )
 
 
-def resolve_redirects_sql(
-    redirects_cte: str, max_hops: int = 16
-) -> str:
+def resolve_redirects_sql(redirects_cte: str) -> str:
     """DuckDB twin of :func:`resolve_redirects` (``redirects_cte``
     exposes ``(src, dst)``)."""
-    import math
-
-    rounds = max(1, math.ceil(math.log2(int(max_hops))))
+    rounds = 4  # ceil(log2(16)): chains of up to 16 hops, resolve_redirects' default
     parts = [
         f"WITH rr_m AS ({redirects_cte})",
         "rr_f0 AS (SELECT src, dst AS cur, CAST(1 AS BIGINT) AS hops"
@@ -291,7 +278,7 @@ def resolve_redirects_sql(
     )
 
 
-def robots_rules(robots: DataFrame, host_col_name: str = "host") -> DataFrame:
+def robots_rules(robots: DataFrame) -> DataFrame:
     """Parse ``robots.txt`` bodies into per-host Disallow rules for the
     wildcard agent: ``(host, prefix)`` — one row per non-empty
     ``Disallow:`` path prefix governed by a ``User-agent`` run that
@@ -312,7 +299,7 @@ def robots_rules(robots: DataFrame, host_col_name: str = "host") -> DataFrame:
     :func:`robots_rules_sql`.
     """
     lines = robots.select(
-        F.col(host_col_name).alias("host"),
+        "host",
         F.posexplode(F.split(F.col("body"), "\n")).alias("i", "line"),
     ).select("host", "i", F.trim("line").alias("line"))
     low = F.lower(F.col("line"))

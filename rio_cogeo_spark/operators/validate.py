@@ -213,14 +213,13 @@ CHECK_ORDER = [
 
 
 def validate_report(tiles: DataFrame, meta: DataFrame,
-                    properties: Optional[Dict[str, str]] = None,
-                    strict: bool = False) -> DataFrame:
+                    properties: Optional[Dict[str, str]] = None) -> DataFrame:
     """Full validation report as a DataFrame — one row per structural
     check ``(check_name, ok, detail)`` plus a ``valid`` summary row —
     the queryable form of the reference's (is_valid, errors, warnings)
     triple (cogeo.py:701-703). ``detail`` carries the reference-parity
     failure message when a check fails, else ''."""
-    errors, warnings, checks = _validate_impl(tiles, meta, properties, strict)
+    errors, warnings, checks = _validate_impl(tiles, meta, properties)
     spark = tiles.sparkSession
     rows = [("valid", len(errors) == 0, "")]
     rows += [

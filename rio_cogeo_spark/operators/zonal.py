@@ -32,15 +32,11 @@ from rio_cogeo_spark.operators.join import (
 )
 
 
-def zonal_mode(
-    pages: DataFrame,
-    areas: List[AdminArea],
-    zoom: int = PREFILTER_ZOOM,
-) -> DataFrame:
+def zonal_mode(pages: DataFrame, areas: List[AdminArea]) -> DataFrame:
     """Per-zone majority class: ``(admin_id, mode_class, mode_count,
     zone_count, mode_ppm)`` for every zone containing at least one
     page."""
-    hits = point_in_polygon(pages, areas, zoom, how="inner")
+    hits = point_in_polygon(pages, areas, PREFILTER_ZOOM, how="inner")
     counts = hits.groupBy("admin_id", "lang").agg(
         F.count(F.lit(1)).alias("n")
     )

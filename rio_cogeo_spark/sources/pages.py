@@ -241,12 +241,7 @@ def read_pyramid(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
-def verify_written_tiles(
-    pages: DataFrame,
-    root: str,
-    bands: Optional[List[BandSpec]] = None,
-    decimation_base: int = 2,
-) -> dict:
+def verify_written_tiles(pages: DataFrame, root: str) -> dict:
     """Golden-tile verification of the WRITTEN artifact: re-read the
     committed pyramid from disk, independently recompute every level from
     the source pages, and compare a per-tile digest over all band values —
@@ -261,14 +256,14 @@ def verify_written_tiles(
     spark = pages.sparkSession
     written = read_pyramid(spark, root)
     zooms = sorted(r["zoom"] for r in written.select("zoom").distinct().collect())
-    bands = bands or default_bands()
+    bands = default_bands()
     band_cols = [c for c in written.columns if c not in ("zoom", "tile_x", "tile_y")]
 
     # independent recompute of the same level chain (children first)
     fresh = base_tiles(pages, max(zooms), bands)
     levels = [fresh]
     for z in reversed(zooms[:-1]):
-        fresh = next_level(fresh, z, decimation_base, bands)
+        fresh = next_level(fresh, z, 2, bands)
         levels.append(fresh)
     fresh_all = levels[0]
     for lv in levels[1:]:

@@ -24,14 +24,12 @@ from pyspark.sql import functions as F
 
 from rio_cogeo_spark.operators.dedup import shingles_col
 
+# shingle length and tumbling window, shared by the stream and its batch twin
+SHINGLE_N = 3
+WINDOW = "1 hour"
 
-def contamination_stream(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-) -> DataFrame:
+
+def contamination_stream(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Per-window, per-document count of distinct word n-grams shared
     with any benchmark document, over a streaming corpus. Output:
     ``(window_sec, doc_id, n_hits)`` with ``n_hits >= 1`` — the
@@ -43,21 +41,21 @@ def contamination_stream(
     """
     bench_sh = (
         benchmark.select(
-            F.explode(shingles_col(F.col("text"), n)).alias("shingle")
+            F.explode(shingles_col(F.col("text"), SHINGLE_N)).alias("shingle")
         )
         .distinct()
     )
     corpus_sh = (
-        corpus.withWatermark("ts", watermark)
+        corpus.withWatermark("ts", "2 hours")
         .select(
             F.col("doc_id"),
             F.col("ts"),
-            F.explode(shingles_col(F.col("text"), n)).alias("shingle"),
+            F.explode(shingles_col(F.col("text"), SHINGLE_N)).alias("shingle"),
         )
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle", "inner")
-        .groupBy(F.window("ts", window).alias("w"), "doc_id")
+        .groupBy(F.window("ts", WINDOW).alias("w"), "doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_sec"),
@@ -67,28 +65,23 @@ def contamination_stream(
     )
 
 
-def contamination_batch_windowed(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 3,
-    window: str = "1 hour",
-) -> DataFrame:
+def contamination_batch_windowed(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Batch twin of :func:`contamination_stream` (same plan minus the
     watermark) — the streaming==batch assertion target."""
     bench_sh = (
         benchmark.select(
-            F.explode(shingles_col(F.col("text"), n)).alias("shingle")
+            F.explode(shingles_col(F.col("text"), SHINGLE_N)).alias("shingle")
         )
         .distinct()
     )
     corpus_sh = corpus.select(
         F.col("doc_id"),
         F.col("ts"),
-        F.explode(shingles_col(F.col("text"), n)).alias("shingle"),
+        F.explode(shingles_col(F.col("text"), SHINGLE_N)).alias("shingle"),
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle", "inner")
-        .groupBy(F.window("ts", window).alias("w"), "doc_id")
+        .groupBy(F.window("ts", WINDOW).alias("w"), "doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_sec"),

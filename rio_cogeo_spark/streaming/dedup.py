@@ -21,18 +21,18 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import fingerprint
 
 
-def dedup_stream(docs: DataFrame, delay: str = "1 hour") -> DataFrame:
+def dedup_stream(docs: DataFrame) -> DataFrame:
     """First-seen exact dedup of a streaming DataFrame by content
     fingerprint (md5 of the normalized text — the same fingerprint the
     batch ``exact_dedup`` uses, so a batch backfill and the stream agree
     on what counts as a duplicate).
 
-    State per key is dropped once the watermark passes ``delay`` beyond
+    State per key is dropped once the watermark passes 1 hour beyond
     its event time, so memory is bounded by (dup-arrival horizon ×
     ingest rate), not stream length.
     """
     return (
         docs.withColumn("fp", fingerprint(F.col("text")))
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["fp"])
     )

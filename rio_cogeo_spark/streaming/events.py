@@ -16,6 +16,7 @@ EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
 )
+WINDOW = "1 hour"  # shared by windowed_rollup and its batch twin
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -27,12 +28,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def windowed_rollup(events: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
+def windowed_rollup(events: DataFrame) -> DataFrame:
     """Tumbling-window per-type rollup with late-data watermark."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -46,10 +46,10 @@ def windowed_rollup(events: DataFrame, window: str = "1 hour",
     )
 
 
-def windowed_rollup_batch(events: DataFrame, window: str = "1 hour") -> DataFrame:
+def windowed_rollup_batch(events: DataFrame) -> DataFrame:
     """Batch twin of :func:`windowed_rollup` (same plan minus watermark)."""
     return (
-        events.groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -82,7 +82,7 @@ def run_stream_to_memory(
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
-def stateful_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataFrame:
+def stateful_user_totals(events: DataFrame) -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``
     (SURVEY.md §2.9): running per-user event count + value total carried
     in state across micro-batches. Batch twin: groupBy(user).agg."""
@@ -104,7 +104,7 @@ def stateful_user_totals(events: DataFrame, timeout: str = "NoTimeout") -> DataF
         outputStructType="user_id long, n_events long, total_value double",
         stateStructType="n long, total double",
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf="NoTimeout",
     )
 
 
@@ -115,14 +115,14 @@ def stateful_user_totals_batch(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize_batch(events: DataFrame) -> DataFrame:
     """Gap-based sessionization (batch): session starts when the per-user
-    inter-event gap exceeds ``gap_minutes``. Returns per-session rows
+    inter-event gap exceeds 30 minutes. Returns per-session rows
     (user_id, session_id, n_events, t_start_sec, t_end_sec)."""
     w = Window.partitionBy("user_id").orderBy("ts")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
     with_s = (
-        events.withColumn("new_sess", (gap.isNull() | (gap > gap_minutes * 60)).cast("int"))
+        events.withColumn("new_sess", (gap.isNull() | (gap > 30 * 60)).cast("int"))
         .withColumn("session_seq", F.sum("new_sess").over(w))
     )
     return (
@@ -180,15 +180,15 @@ def event_transitions(events: DataFrame) -> DataFrame:
     )
 
 
-def event_transitions_sql(table: str = "events") -> str:
-    """DuckDB twin of :func:`event_transitions` over ``{table}`` with
+def event_transitions_sql() -> str:
+    """DuckDB twin of :func:`event_transitions` over ``events`` with
     the standard events schema (user_id, event_type, ts, event_id)."""
     return f"""
 WITH tr_p AS (SELECT LAG(event_type) OVER (PARTITION BY user_id
                                            ORDER BY ts, event_id)
                      AS prev_type,
                      event_type AS curr_type
-              FROM {table}),
+              FROM events),
 tr_c AS (SELECT prev_type, curr_type, COUNT(*) AS cnt
          FROM tr_p WHERE prev_type IS NOT NULL GROUP BY 1, 2)
 SELECT prev_type, curr_type, cnt,

@@ -2,7 +2,7 @@
 
 The streaming form of ``operators/dedup.mirror_docs``: as pages arrive,
 maintain per content fingerprint the set of hosts it has been seen on,
-and surface fingerprints once they span ``min_hosts`` distinct hosts.
+and surface fingerprints once they span at least 2 distinct hosts.
 Spark-first: a plain streaming aggregation — ``groupBy(fp).agg(
 collect_set(host), count(*))`` — no custom state code; the state row
 per fingerprint holds exactly the host set being maintained (bounded by
@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 from rio_cogeo_spark.functions.text import fingerprint, host_col
 
 
-def mirror_stream(pages: DataFrame, min_hosts: int = 2) -> DataFrame:
+def mirror_stream(pages: DataFrame) -> DataFrame:
     """Continuously-maintained mirror registry: one row per content
-    fingerprint currently seen on ≥ ``min_hosts`` distinct hosts, with
+    fingerprint currently seen on ≥ 2 distinct hosts, with
     the live distinct-host and total-copy counts."""
     tagged = pages.select(
         host_col(F.col("url")).alias("host"),
@@ -41,5 +41,5 @@ def mirror_stream(pages: DataFrame, min_hosts: int = 2) -> DataFrame:
             F.size(F.collect_set("host")).alias("n_hosts"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-        .filter(F.col("n_hosts") >= int(min_hosts))
+        .filter(F.col("n_hosts") >= 2)
     )

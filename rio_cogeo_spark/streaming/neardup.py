@@ -8,7 +8,7 @@ document's 64-bit simhash splits into 4 equality bands (pigeonhole:
 any pair within hamming 3 shares at least one exact band), and a
 custom stateful operator keyed by (band, bucket) holds the bucket's
 recent members, emitting a candidate pair for every stored member
-within ``max_hamming`` of the new arrival.
+within hamming 3 of the new arrival.
 
 Spark-first choices:
 
@@ -70,16 +70,12 @@ def simhash_banded(docs: DataFrame) -> DataFrame:
              F.col("bb.bucket").alias("bucket"))
 
 
-def neardup_pairs_stream(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    horizon_sec: int = 3600,
-) -> DataFrame:
+def neardup_pairs_stream(docs: DataFrame, horizon_sec: int = 3600) -> DataFrame:
     """Streaming simhash near-dup candidate pairs.
 
     Input: a streaming DataFrame with (doc_id long, text string,
     ts timestamp). Output (append): ``(doc_a, doc_b, hamming)``
-    with hamming <= ``max_hamming`` and doc_a the earlier-arriving doc
+    with hamming <= 3 and doc_a the earlier-arriving doc
     (ties by doc_id). Pairs may repeat across colliding bands —
     distinct-ify downstream (stateless).
 
@@ -126,7 +122,7 @@ def neardup_pairs_stream(
                     if pid == did:
                         continue
                     h = bin((ph ^ sh) & 0xFFFFFFFFFFFFFFFF).count("1")
-                    if h <= max_hamming:
+                    if h <= 3:
                         # earlier arrival first; ties by doc_id
                         a, b = (
                             (pid, did)

@@ -29,12 +29,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import List, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from rio_cogeo_spark.operators.incremental import pyramid_delta, pyramid_merge
-from rio_cogeo_spark.operators.translate import BandSpec, default_bands
+from rio_cogeo_spark.operators.translate import default_bands
 
 MANIFEST = "MANIFEST.json"
 
@@ -55,14 +55,13 @@ def update_pyramid_store(
     store_dir: str,
     max_zoom: int,
     overview_level: int,
-    bands: Optional[List[BandSpec]] = None,
 ) -> bool:
     """The foreachBatch body — also usable directly as a batch step.
 
     Returns True when the batch was applied, False when skipped (empty
     batch, or a checkpoint replay of an already-committed batch_id).
     """
-    bands = bands or default_bands()
+    bands = default_bands()
     spark = batch_pages.sparkSession
     mpath = os.path.join(store_dir, MANIFEST)
     prev = None
@@ -100,24 +99,19 @@ def maintain_pyramid(
     store_dir: str,
     max_zoom: int,
     overview_level: int,
-    bands: Optional[List[BandSpec]] = None,
     checkpoint: Optional[str] = None,
-    available_now: bool = True,
 ):
-    """Start the maintenance query over a streaming pages frame.
-
-    ``available_now=True`` drains the current source and stops — the
-    batch-parity mode the tests and the contract query use; False runs
-    continuously. Returns the StreamingQuery.
+    """Start the maintenance query over a streaming pages frame. It
+    drains the current source and stops (``availableNow``), the
+    batch-parity mode the tests and the contract query use. Returns the
+    StreamingQuery.
     """
     os.makedirs(store_dir, exist_ok=True)
     writer = pages_stream.writeStream.foreachBatch(
         lambda df, bid: update_pyramid_store(
-            df, bid, store_dir, max_zoom, overview_level, bands
+            df, bid, store_dir, max_zoom, overview_level
         )
     )
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -21,6 +21,9 @@ PAGES_SCHEMA = (
     "doc_id long, url string, text string, lang string, n_chars long, "
     "ts_sec long"
 )
+# tumbling window and late-data watermark, shared by each stream/batch twin
+WINDOW = "6 hours"
+WATERMARK = "12 hours"
 
 
 def _gate_rates_agg(scored: DataFrame, windowed_key) -> DataFrame:
@@ -57,22 +60,18 @@ def _score(pages: DataFrame) -> DataFrame:
     )
 
 
-def gate_rates(
-    pages_stream: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "12 hours",
-) -> DataFrame:
+def gate_rates(pages_stream: DataFrame) -> DataFrame:
     """Watermarked streaming form: ``(win_sec, n_pages, n_pass,
     pass_ppm, kill_bit0..kill_bit5)`` per tumbling window."""
-    scored = _score(pages_stream).withWatermark("ts", watermark)
-    return _gate_rates_agg(scored, F.window("ts", window).alias("w"))
+    scored = _score(pages_stream).withWatermark("ts", WATERMARK)
+    return _gate_rates_agg(scored, F.window("ts", WINDOW).alias("w"))
 
 
-def gate_rates_batch(pages: DataFrame, window: str = "6 hours") -> DataFrame:
+def gate_rates_batch(pages: DataFrame) -> DataFrame:
     """Batch twin of :func:`gate_rates` (same plan minus watermark) —
     the equality target for the streaming test."""
     return _gate_rates_agg(
-        _score(pages), F.window("ts", window).alias("w")
+        _score(pages), F.window("ts", WINDOW).alias("w")
     )
 
 
@@ -109,11 +108,7 @@ def _host_gate_agg(scored: DataFrame, windowed_key) -> DataFrame:
     )
 
 
-def host_gate_rates(
-    pages_stream: DataFrame,
-    window: str = "6 hours",
-    watermark: str = "12 hours",
-) -> DataFrame:
+def host_gate_rates(pages_stream: DataFrame) -> DataFrame:
     """Per-(window, HOST) streaming Gopher pass rate — the live form of
     :func:`~rio_cogeo_spark.operators.rarity.host_quality_trend`: the
     ingest dashboard that pages a crawl operator when a specific
@@ -122,13 +117,11 @@ def host_gate_rates(
     host) — bounded by active hosts per window, never pages; the fold
     is map-side combinable and the watermark expires closed windows so
     state does not grow with crawl age."""
-    scored = _host_score(pages_stream).withWatermark("ts", watermark)
-    return _host_gate_agg(scored, F.window("ts", window).alias("w"))
+    scored = _host_score(pages_stream).withWatermark("ts", WATERMARK)
+    return _host_gate_agg(scored, F.window("ts", WINDOW).alias("w"))
 
 
-def host_gate_rates_batch(
-    pages: DataFrame, window: str = "6 hours"
-) -> DataFrame:
+def host_gate_rates_batch(pages: DataFrame) -> DataFrame:
     """Batch twin of :func:`host_gate_rates` — the equality target for
     the streaming==batch test."""
-    return _host_gate_agg(_host_score(pages), F.window("ts", window).alias("w"))
+    return _host_gate_agg(_host_score(pages), F.window("ts", WINDOW).alias("w"))

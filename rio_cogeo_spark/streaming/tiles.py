@@ -23,6 +23,7 @@ from rio_cogeo_spark.operators.translate import assign_tiles
 from rio_cogeo_spark.synth import pages_select
 
 DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+WINDOW = "1 hour"  # shared by tile_rollup and its batch twin
 
 
 def read_pages_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,18 +40,13 @@ def read_pages_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pages.withColumn("warc_ts", F.timestamp_seconds(F.col("ts_sec")))
 
 
-def tile_rollup(
-    pages: DataFrame,
-    zoom: int,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def tile_rollup(pages: DataFrame, zoom: int) -> DataFrame:
     """Watermarked per-window base-tile aggregation over a streaming (or
     batch) pages frame carrying ``warc_ts`` event time."""
     assigned = assign_tiles(pages, zoom)
     return (
-        assigned.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "tile_x", "tile_y")
+        assigned.withWatermark("warc_ts", "2 hours")
+        .groupBy(F.window("warc_ts", WINDOW).alias("w"), "tile_x", "tile_y")
         .agg(
             F.count(F.lit(1)).alias("page_count"),
             F.sum("n_chars").alias("sum_chars"),
@@ -65,11 +61,11 @@ def tile_rollup(
     )
 
 
-def tile_rollup_batch(pages: DataFrame, zoom: int, window: str = "1 hour") -> DataFrame:
+def tile_rollup_batch(pages: DataFrame, zoom: int) -> DataFrame:
     """Batch twin of :func:`tile_rollup` (same plan minus watermark)."""
     assigned = assign_tiles(pages, zoom)
     return (
-        assigned.groupBy(F.window("warc_ts", window).alias("w"), "tile_x", "tile_y")
+        assigned.groupBy(F.window("warc_ts", WINDOW).alias("w"), "tile_x", "tile_y")
         .agg(
             F.count(F.lit(1)).alias("page_count"),
             F.sum("n_chars").alias("sum_chars"),

@@ -378,7 +378,7 @@ def main() -> None:
                 docs, min_shared=2, k=3, w=4, df_cap="auto"
             ).count(),
             "bloom_prefilter": lambda: bloom_prefilter(
-                corpus, bench_docs, n=3, m_bits=1 << 20, n_hashes=4
+                corpus, bench_docs, m_bits=1 << 20, n_hashes=4
             ).count(),
             # eighth-session spatial-stats additions (ROUND5.md §140):
             # cell keys derive deterministically from doc_id (the grid

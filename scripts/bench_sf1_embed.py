@@ -125,7 +125,7 @@ def main() -> None:
             # quantize pass is a projection — per-vector cost constant
             from rio_cogeo_spark.operators.quantize import ann_int8_topk
 
-            return ann_int8_topk(emb.drop("label"), k=10, n_queries=5).count()
+            return ann_int8_topk(emb.drop("label"), k=10).count()
 
         def _pq():
             # PQ ADC: codebook fold + encode projection + broadcast-LUT
@@ -133,7 +133,7 @@ def main() -> None:
             # fixed at the 10 labels)
             from rio_cogeo_spark.operators.quantize import ann_pq_topk
 
-            return ann_pq_topk(emb, m=4, k=10, n_queries=5).count()
+            return ann_pq_topk(emb, m=4).count()
 
         return {
             "semantic_dedup": _semantic,

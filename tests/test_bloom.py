@@ -41,7 +41,7 @@ def test_bloom_superset_and_planted_hits(spark):
     assert planted <= exact
     flagged = {
         r.doc_id
-        for r in bloom_prefilter(corpus, bench, n=3, m_bits=1 << 14).collect()
+        for r in bloom_prefilter(corpus, bench, m_bits=1 << 14).collect()
     }
     assert exact <= flagged  # the zero-false-negative contract
 
@@ -57,7 +57,7 @@ def test_bloom_matches_duckdb_twin(spark, tmp_path):
         got = sorted(
             tuple(r)
             for r in bloom_prefilter(
-                corpus, bench, n=3, m_bits=m, n_hashes=3
+                corpus, bench, m_bits=m, n_hashes=3
             ).collect()
         )
         con = duckdb.connect()
@@ -67,7 +67,7 @@ def test_bloom_matches_duckdb_twin(spark, tmp_path):
         sql = bloom_prefilter_sql(
             "SELECT doc_id, text FROM documents",
             "SELECT 'intro alpha beta gamma delta epsilon zeta outro' AS text",
-            n=3, m_bits=m, n_hashes=3,
+            m_bits=m, n_hashes=3,
         )
         want = sorted(tuple(r) for r in con.execute(sql).fetchall())
         assert got == want, m
@@ -78,11 +78,11 @@ def test_bloom_false_positives_shrink_with_m(spark):
     exact = {r.doc_id for r in contamination_hits(corpus, bench, n=3).collect()}
     tiny = {
         r.doc_id
-        for r in bloom_prefilter(corpus, bench, n=3, m_bits=1 << 6).collect()
+        for r in bloom_prefilter(corpus, bench, m_bits=1 << 6).collect()
     }
     big = {
         r.doc_id
-        for r in bloom_prefilter(corpus, bench, n=3, m_bits=1 << 16).collect()
+        for r in bloom_prefilter(corpus, bench, m_bits=1 << 16).collect()
     }
     assert exact <= big <= tiny
     assert len(tiny) > len(big)  # 64 bits over ~1k probe shingles must collide
@@ -90,7 +90,7 @@ def test_bloom_false_positives_shrink_with_m(spark):
 
 def test_bloom_corpus_plan_has_no_exchange(spark):
     corpus, bench, _ = _corpus_bench(spark)
-    plan = plan_of(bloom_prefilter(corpus, bench, n=3))
+    plan = plan_of(bloom_prefilter(corpus, bench))
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
 
@@ -106,4 +106,4 @@ def test_bloom_arg_validation(spark):
 def test_bloom_empty_benchmark_flags_nothing(spark):
     corpus, _, _ = _corpus_bench(spark)
     bench = corpus.filter(F.lit(False)).select("text")
-    assert bloom_prefilter(corpus, bench, n=3).count() == 0
+    assert bloom_prefilter(corpus, bench).count() == 0

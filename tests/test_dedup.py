@@ -73,7 +73,7 @@ def test_simhash_pairs_exact_by_construction(docs):
                 brute.add((ids[i], ids[j]))
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in DD.simhash_pairs(docs, max_hamming=3).collect()
+        for r in DD.simhash_pairs(docs).collect()
     }
     assert got == brute
     # planted exact dups have identical simhash → hamming 0
@@ -102,7 +102,7 @@ def test_ann_lsh_finds_planted_near_duplicates(spark, emb):
     queries = spark.createDataFrame(
         qrows, "query_id long, q_embedding array<double>"
     )
-    approx = SIM.ann_lsh_topk(emb, queries, dim=64, k=3, n_planes=6, include_self=True)
+    approx = SIM.ann_lsh_topk(emb, queries, dim=64, k=3, include_self=True)
     top1 = {r["query_id"]: r["vec_id"] for r in approx.filter(F.col("rank") == 1).collect()}
     hits = sum(1 for q, v in top1.items() if q == v)
     assert hits >= 19, top1  # >=95% of planted near-dups found at rank 1
@@ -165,7 +165,6 @@ def test_scale_safe_defaults_and_auto_chunks(spark):
     import inspect
 
     assert inspect.signature(DD.ngram_jaccard_pairs).parameters["df_cap"].default == "auto"
-    assert inspect.signature(DD.embedding_neardup_pairs).parameters["n_chunks"].default is None
 
     # auto chunk count scales linearly with corpus bytes (dim 4 doubles)
     def corpus(n):
@@ -199,7 +198,7 @@ def test_jaccard_threshold_curve_golden(spark):
         ],
         "doc_id long, text string",
     )
-    out = jaccard_threshold_curve(docs, n=3, step_ppm=100_000, df_cap=None)
+    out = jaccard_threshold_curve(docs, step_ppm=100_000, df_cap=None)
     rows = [(r.bucket_ppm, r.n_pairs, r.n_pairs_ge) for r in out.collect()]
     assert rows == [(1_000_000, 1, 1)]
 
@@ -219,7 +218,7 @@ def test_jaccard_threshold_curve_cumulative_monotone(spark):
         "doc_id long, text string",
     )
     out = (
-        jaccard_threshold_curve(docs, n=3, step_ppm=10_000, df_cap=None)
+        jaccard_threshold_curve(docs, step_ppm=10_000, df_cap=None)
         .orderBy(F.col("bucket_ppm").desc())
         .collect()
     )

@@ -478,7 +478,7 @@ def test_hillshade_flat_surface_is_ambient(spark):
         "tile_x long, tile_y long, page_count long",
     )
     out = {(r.tile_x, r.tile_y): r.shade_mil
-           for r in hillshade(tiles, 4, altitude_deg=45.0).collect()}
+           for r in hillshade(tiles, 4).collect()}
     want = int(math.floor(255.0 * math.sin(math.radians(45.0)) * 1000 + 0.5))
     # interior cells (all 8 neighbors at the same height) are exactly flat
     assert out[(2, 2)] == want and out[(3, 3)] == want
@@ -1576,7 +1576,7 @@ def test_emerging_hotspots_mk(spark):
     # cell (2,2): only 2 buckets -> filtered at min_buckets=3
     rows += [(2, 2, 0), (2, 2, h)]
     df = spark.createDataFrame(rows, "tile_x long, tile_y long, ts_sec long")
-    got = emerging_hotspots(df, min_buckets=3).collect()
+    got = emerging_hotspots(df).collect()
     assert [(r.tile_x, r.tile_y, r.s_stat, r.trend) for r in got] == [
         (0, 0, 3, "rising"), (1, 1, -1, "falling"),
     ]

@@ -106,7 +106,7 @@ def test_join_counts_checkerboard_and_blob(spark):
     df = spark.createDataFrame(
         rows, "tile_x long, tile_y long, page_count long"
     )
-    r = join_counts(df, 2, threshold=2).collect()[0]
+    r = join_counts(df, 2).collect()[0]
     n = 4
     j_total = 2 * n * (n - 1)  # 24
     assert r.j_total == j_total
@@ -126,7 +126,7 @@ def test_join_counts_below_threshold_all_white(spark):
     df = spark.createDataFrame(
         [(0, 0, 1), (1, 0, 1)], "tile_x long, tile_y long, page_count long"
     )
-    r = join_counts(df, 2, threshold=2).collect()[0]
+    r = join_counts(df, 2).collect()[0]
     assert r.n_black == 0 and r.j_bb == 0 and r.j_bw == 0
     assert r.j_ww == r.j_total
     assert r.exp_bb_mil == 0

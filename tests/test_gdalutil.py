@@ -208,7 +208,7 @@ def test_upsample_children_exact(spark):
     """One tile at (2, 3) -> 4 children at (4..5, 6..7), value copied;
     mass quadruples (nearest), cell count x4."""
     out = gdalutil.upsample(
-        _tiles(spark, [(2, 3)], value=[9]), factor=2
+        _tiles(spark, [(2, 3)], value=[9])
     ).collect()
     assert {(r.tile_x, r.tile_y) for r in out} == {
         (4, 6), (4, 7), (5, 6), (5, 7)
@@ -220,7 +220,7 @@ def test_upsample_roundtrip_with_overview(spark):
     """Upsample then decimate back (sum/4 = value for nearest): every
     parent's 4 children sum to 4x the parent."""
     df = _tiles(spark, [(0, 0), (1, 0), (3, 2)], value=[5, 7, 11])
-    up = gdalutil.upsample(df, factor=2)
+    up = gdalutil.upsample(df)
     back = (
         up.groupBy(
             (F.col("tile_x") / 2).cast("long").alias("tile_x"),
@@ -332,7 +332,7 @@ def test_idw_weights_and_values(spark):
     gets 8000 (d=1), node (4,2) gets 8000 (d=2, single vote), the
     sample itself reports exactly 8000 as 'data'."""
     out = {(r.tile_x, r.tile_y): r for r in gdalutil.idw(
-        _tiles(spark, [(2, 2)], value=[8]), 5, radius=2
+        _tiles(spark, [(2, 2)], value=[8]), 5
     ).collect()}
     assert len(out) == 25  # full 5x5 neighborhood in-bounds
     assert out[(2, 2)].src == "data" and out[(2, 2)].value_mil == 8000
@@ -344,7 +344,7 @@ def test_idw_two_donors_weighted_mean(spark):
     """Node (1,0) between v=10 at d=1 (w=4) and v=40 at d=2 (w=1):
     floor(1000·(4·10 + 1·40)/5) = 16000."""
     out = {(r.tile_x, r.tile_y): r for r in gdalutil.idw(
-        _tiles(spark, [(0, 0), (3, 0)], value=[10, 40]), 5, radius=2
+        _tiles(spark, [(0, 0), (3, 0)], value=[10, 40]), 5
     ).collect()}
     n = out[(1, 0)]
     assert n.src == "interp" and n.n_votes == 2

@@ -78,7 +78,7 @@ def test_kcore_matches_duckdb_unroll(spark):
                    - {(a, a) for a in range(13)})
     got = {r.host: r.deg
            for r in k_core(_edges(spark, edges), k=4, rounds=3).collect()}
-    sql = k_core_sql(_values_cte(edges), k=4, rounds=3)
+    sql = k_core_sql(_values_cte(edges), k=4)
     want = {int(h): int(d) for h, d in duckdb.sql(sql).fetchall()}
     assert got == want
 

@@ -245,7 +245,7 @@ def test_knn_exact_handles_empty_regions(spark, pages):
     }
     exact = {
         (r["query_id"], r["rank"]): (r["doc_id"], r["dist2"])
-        for r in J.knn_kring_exact(pages, q, k=5, start_ring=1).collect()
+        for r in J.knn_kring_exact(pages, q, k=5).collect()
     }
     assert exact == brute and len(brute) == 15
 

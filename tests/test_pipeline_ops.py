@@ -74,7 +74,7 @@ def test_repetition_matches_duckdb_twin(spark, tmp_path):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM parquet_scan('{p}/*.parquet')"
     )
-    want = sorted(con.execute(TX.repetition_sql("documents")).fetchall())
+    want = sorted(con.execute(TX.repetition_sql()).fetchall())
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
@@ -144,7 +144,7 @@ def test_contamination_hits_and_rate(spark):
     assert hits == {1: 2, 3: 1}  # doc 2 clean -> absent
     rate = {
         r["doc_id"]: r
-        for r in contamination_rate(corpus, bench, n=3).collect()
+        for r in contamination_rate(corpus, bench).collect()
     }
     assert rate[1]["n_shingles"] == 2 and rate[1]["hit_frac"] == pytest.approx(1.0)
     assert rate[3]["n_shingles"] == 2 and rate[3]["hit_frac"] == pytest.approx(0.5)
@@ -462,7 +462,7 @@ def test_host_lang_purity_golden_and_twin(spark):
     got = {
         r.host: (r.n_docs, r.n_langs, r.major_lang, r.major_frac_ppm,
                  r.suspect)
-        for r in host_lang_purity(df, min_docs=5, purity_ppm=600_000).collect()
+        for r in host_lang_purity(df).collect()
     }
     assert got["pure.example"] == (6, 1, "en", 1000000, False)
     assert got["mixed.example"] == (7, 3, "en", 428571, True)
@@ -482,7 +482,7 @@ def test_host_lang_purity_golden_and_twin(spark):
     )
     got_rows = sorted(
         tuple(r)
-        for r in host_lang_purity(df, min_docs=5, purity_ppm=600_000).collect()
+        for r in host_lang_purity(df).collect()
     )
     assert got_rows == want
 

@@ -205,7 +205,7 @@ ROWS = [
     # blocked-matmul candidates: equi-joins + pandas map, no cartesian
     Row("embedding_neardup_pairs", {"BroadcastExchange": 4,
         "BroadcastHashJoin Inner": 4, "Exchange": 3, "MapInPandas": 1,
-        "ObjectHashAggregate": 4},
+        "ObjectHashAggregate": 4, "Scan ExistingRDD": 0},
         lambda c: DD.embedding_neardup_pairs(c.emb, threshold=0.4)),
     Row("contamination_hits", {"BroadcastExchange": 1, "BroadcastHashJoin Inner": 1,
         "Exchange": 2, "Generate": 2, "HashAggregate": 4},
@@ -392,7 +392,7 @@ ROWS = [
     Row("bloom_prefilter", {"ArrowEvalPython": 2},
         lambda c: contamination.bloom_prefilter(
             c.docs.filter(F.col("doc_id") % 97 != 0).select("doc_id", "text"),
-            c.docs.filter(F.col("doc_id") % 97 == 0).select("text"), n=3, m_bits=1 << 16)),
+            c.docs.filter(F.col("doc_id") % 97 == 0).select("text"), m_bits=1 << 16)),
     Row("anchor_stats", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
         "Exchange": 5, "Generate": 3, "HashAggregate": 8, "Window": 1,
         "WindowGroupLimit": 2, "partial_count": 3},
@@ -450,7 +450,7 @@ ROWS = [
             for keep in (F.col("doc_id") % 10 != 9, F.col("doc_id") % 10 == 9)))),
     Row("assemble_viewport", {"BroadcastExchange": 2, "BroadcastHashJoin Inner": 2,
         "Exchange": 5, "Generate": 2, "HashAggregate": 6, "SortAggregate": 2,
-        "Window": 1, "partial_max": 1},
+        "Window": 1, "partial_max": 1, "Scan ExistingRDD": 0},
         lambda c: FC.assemble_viewport(
             FC.compact_tiles(FC.dilate_tiles(c.base_t, 8), 8, min_zoom=5),
             8, (100, 70, 139, 109), min_zoom=5)),
@@ -476,7 +476,7 @@ ROWS = [
         "BroadcastNestedLoopJoin Cross": 4, "Exchange": 11, "Generate": 6,
         "HashAggregate": 14, "ObjectHashAggregate": 4, "SortAggregate": 2, "Window": 1,
         "WindowGroupLimit": 2, "partial_sum": 3},
-        lambda c: quantize.ann_pq_topk(c.emb, m=4, k=10, n_queries=5)),
+        lambda c: quantize.ann_pq_topk(c.emb, m=4)),
     Row("focal_mode", {"Exchange": 2, "Generate": 1, "HashAggregate": 2,
         "SortAggregate": 2, "partial_min|partial_count": 2},
         lambda c: FC.focal_mode(
@@ -518,7 +518,7 @@ ROWS = [
         "BroadcastHashJoin Inner": 5, "BroadcastNestedLoopJoin Cross": 4,
         "Exchange": 11, "Generate": 7, "HashAggregate": 14, "ObjectHashAggregate": 4,
         "SortAggregate": 2, "Window": 1, "WindowGroupLimit": 2, "partial_sum": 3},
-        lambda c: quantize.ann_ivfpq_topk(c.emb, m=4, k=10, n_queries=5, n_probe=4)),
+        lambda c: quantize.ann_ivfpq_topk(c.emb, n_probe=4)),
     Row("rle_encode_tiles", {"Exchange": 1, "Generate": 1, "HashAggregate": 2,
         "Window": 2, "partial_count": 1},
         lambda c: raster.rle_encode_tiles(c.rng(
@@ -648,7 +648,7 @@ ROWS = [
     Row("clip", {"Filter": 2},
         lambda c: GU.clip(c.cr_in, 5, (-10.0, 35.0, 30.0, 60.0))),
     Row("upsample", {"Generate": 1},
-        lambda c: GU.upsample(c.cr_in, factor=2)),
+        lambda c: GU.upsample(c.cr_in)),
     Row("raster_calc", {"Exchange": 3, "HashAggregate": 4,
         "SortMergeJoin FullOuter": 1},
         lambda c: GU.raster_calc(c.a8_in, c.a8_shift, op="sub")),
@@ -658,7 +658,7 @@ ROWS = [
     Row("slope_pct", {"Exchange": 2, "Generate": 1, "HashAggregate": 4},
         lambda c: GU.slope_pct(c.a8_in, 5)),
     Row("idw", {"Exchange": 2, "Generate": 1, "HashAggregate": 4},
-        lambda c: GU.idw(c.a8_in, 5, radius=2)),
+        lambda c: GU.idw(c.a8_in, 5)),
     Row("tindex", {},
         lambda c: GU.tindex(c.cr_in, 5)),
     Row("footprint", {"Exchange": 4, "Generate": 2, "HashAggregate": 8},
@@ -683,7 +683,7 @@ ROWS = [
         lambda c: FC.semivariogram(c.a8_in, 5, max_lag=4)),
     Row("join_counts", {"BroadcastExchange": 1, "BroadcastNestedLoopJoin Cross": 1,
         "Exchange": 5, "Generate": 1, "HashAggregate": 10},
-        lambda c: FC.join_counts(c.a8_in, 5, threshold=2)),
+        lambda c: FC.join_counts(c.a8_in, 5)),
     Row("kendall_tau", {"BroadcastExchange": 2, "BroadcastNestedLoopJoin Cross": 1,
         "BroadcastNestedLoopJoin Inner": 1, "Exchange": 2, "HashAggregate": 4,
         "Scan ExistingRDD": 6},
@@ -844,7 +844,7 @@ ROWS = [
             "tile_x", "tile_y", "CAST(t_bucket * 4000 AS LONG) AS ts_sec"))),
     Row("moran_quadrants", {"BroadcastExchange": 3, "BroadcastHashJoin LeftOuter": 2,
         "BroadcastNestedLoopJoin Cross": 1, "Exchange": 3, "Generate": 1,
-        "HashAggregate": 6},
+        "HashAggregate": 6, "Scan ExistingRDD": 0},
         lambda c: FC.moran_quadrants(c.cg_in, 6)),
     Row("zoom_entropy", {"Exchange": 1, "HashAggregate": 2, "Window": 1},
         lambda c: RP.zoom_entropy(c.cg_in.selectExpr(
@@ -858,7 +858,7 @@ ROWS = [
         lambda c: FC.diurnal(c.kx_in.selectExpr(
             "tile_x", "tile_y", "CAST(t_bucket * 3700 AS LONG) AS ts_sec"), min_pages=1)),
     Row("urban_gradient", {"BroadcastExchange": 2, "BroadcastNestedLoopJoin Cross": 2,
-        "Exchange": 3, "HashAggregate": 8, "(?i)partial": 5},
+        "Exchange": 3, "HashAggregate": 8, "(?i)partial": 5, "Scan ExistingRDD": 0},
         lambda c: RP.urban_gradient(c.kx_xy, [("a", 0, 0), ("b", 40, 40)])),
     # the flagship registry query, one fused plan at sf0.001
     Row("geo_corpus", {"BroadcastExchange": 1, "BroadcastHashJoin Inner": 1,

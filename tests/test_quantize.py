@@ -46,7 +46,7 @@ def test_int_dot_is_exact(spark):
 def test_ann_int8_recall_vs_float_dot(spark):
     emb = _emb(spark)
     k = 10
-    got = ann_int8_topk(emb, k=k, n_queries=5).collect()
+    got = ann_int8_topk(emb, k=k).collect()
     by_q = {}
     for r in got:
         by_q.setdefault(r.query_id, set()).add(r.vec_id)
@@ -123,7 +123,7 @@ def test_pq_recall_improves_with_m_and_beats_random(spark):
 
     def recall(m):
         got = {(r.query_id, r.vec_id)
-               for r in ann_pq_topk(emb, m=m, k=10, n_queries=5).collect()}
+               for r in ann_pq_topk(emb, m=m).collect()}
         return len(got & gt) / len(gt)
 
     r4, r16 = recall(4), recall(16)
@@ -208,7 +208,7 @@ def test_pq_index_roundtrip_query_equals_inline(spark, tmp_path):
     )
     want = sorted(
         (r.query_id, r.vec_id, r.rank, r.score)
-        for r in ann_pq_topk(emb, m=4, k=10, n_queries=5).collect()
+        for r in ann_pq_topk(emb, m=4).collect()
     )
     assert got == want
 
@@ -247,17 +247,17 @@ def test_ivfpq_partial_probe_recall_and_speedup_structure(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     full = {(r.query_id, r.vec_id)
-            for r in ann_pq_topk(emb, m=4, k=10, n_queries=5).collect()}
+            for r in ann_pq_topk(emb, m=4).collect()}
     # all lists probed == exact PQ output
     allp = {(r.query_id, r.vec_id)
             for r in ann_ivfpq_topk(
-                emb, m=4, k=10, n_queries=5, n_probe=10).collect()}
+                emb, n_probe=10).collect()}
     assert allp == full
     # partial probe: a SUBSET-quality result — k rows per query still
     # returned, overlap with the full ranking is substantial
     part = {(r.query_id, r.vec_id)
             for r in ann_ivfpq_topk(
-                emb, m=4, k=10, n_queries=5, n_probe=4).collect()}
+                emb, n_probe=4).collect()}
     assert len(part) == 50
     assert len(part & full) / len(full) >= 0.3
 

@@ -525,12 +525,12 @@ def test_streaming_tile_rollup_equals_batch(spark, sf_small):
     stream_pages = read_pages_stream(spark, sf_small)
     assert stream_pages.isStreaming
     got = run_stream_to_memory(
-        tile_rollup(stream_pages, zoom=6, window="1 hour"), "tile_rollup_t"
+        tile_rollup(stream_pages, zoom=6), "tile_rollup_t"
     ).collect()
     batch_pages = synth_pages(spark, sf_small).withColumn(
         "warc_ts", F.timestamp_seconds(F.col("ts_sec"))
     )
-    exp = tile_rollup_batch(batch_pages, zoom=6, window="1 hour").collect()
+    exp = tile_rollup_batch(batch_pages, zoom=6).collect()
     key = lambda r: (r["window_sec"], r["tile_x"], r["tile_y"])  # noqa: E731
     got_m = {key(r): (r["page_count"], r["sum_chars"]) for r in got}
     exp_m = {key(r): (r["page_count"], r["sum_chars"]) for r in exp}
@@ -625,7 +625,7 @@ def test_simhash_md5_60_exact_by_construction(spark, sf_mid):
                 brute.add((ids[i], ids[j]))
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in DD.simhash_pairs(docs, max_hamming=3, hasher="md5_60").collect()
+        for r in DD.simhash_pairs(docs, hasher="md5_60").collect()
     }
     assert got == brute
     assert all((i, i + 100000) in got for i in range(20))

@@ -467,7 +467,7 @@ def test_streaming_neardup_equals_batch(spark, tmp_path):
 
     batch = {
         (min(r["doc_a"], r["doc_b"]), max(r["doc_a"], r["doc_b"]))
-        for r in DD.simhash_pairs(docs, max_hamming=3).collect()
+        for r in DD.simhash_pairs(docs).collect()
     }
     assert batch  # the families must produce near-dup pairs
 
@@ -480,7 +480,7 @@ def test_streaming_neardup_equals_batch(spark, tmp_path):
             reader = reader.option(k, v)
         stream = reader.parquet(src)
         got_df = run_stream_to_memory(
-            neardup_pairs_stream(stream, max_hamming=3, horizon_sec=86400),
+            neardup_pairs_stream(stream, horizon_sec=86400),
             name, output_mode="append",
         )
         got = {
@@ -513,7 +513,7 @@ def test_streaming_neardup_horizon_bounds_state(spark, tmp_path):
     docs.coalesce(1).write.parquet(src)
     stream = spark.readStream.schema(docs.schema).parquet(src)
     got_df = run_stream_to_memory(
-        neardup_pairs_stream(stream, max_hamming=3, horizon_sec=60),
+        neardup_pairs_stream(stream, horizon_sec=60),
         "neardup_horizon", output_mode="append",
     )
     pairs = {(r["doc_a"], r["doc_b"]) for r in got_df.collect()}
@@ -1189,7 +1189,7 @@ def test_token_rarity_scores_common_vs_rare(spark):
         [(1, "the the the"), (2, "the the the"), (3, "zyx q")],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r for r in token_rarity(df, rare_cnt=2).collect()}
+    got = {r["doc_id"]: r for r in token_rarity(df).collect()}
     ppb = 1_000_000_000
     # doc 1/2: every token has corpus cnt 6 → freq_ppb = 6e9 div 8
     assert got[1]["mean_tok_freq_ppb"] == (6 * ppb) // 8
@@ -1418,7 +1418,7 @@ def test_mirror_docs_cross_host_only(spark):
         ],
         "doc_id long, url string, text string",
     )
-    got = {r["doc_id"]: r for r in mirror_docs(df, min_hosts=2).collect()}
+    got = {r["doc_id"]: r for r in mirror_docs(df).collect()}
     assert set(got) == {1, 2, 3}
     assert got[1]["n_hosts"] == 2 and got[1]["n_copies"] == 3
     assert got[2]["host"] == "b.com"
@@ -1436,7 +1436,7 @@ def test_mirror_docs_whitespace_insensitive_fp(spark):
         ],
         "doc_id long, url string, text string",
     )
-    assert mirror_docs(df, min_hosts=2).count() == 2
+    assert mirror_docs(df).count() == 2
 
 
 @pytest.mark.parametrize("files_per_trigger", [1, 3])
@@ -1472,7 +1472,7 @@ def test_mirror_stream_equals_batch(spark, tmp_path, files_per_trigger):
     streamed = {r["fp"]: (r["n_hosts"], r["n_copies"]) for r in got.collect()}
     batch = {
         r["fp"]: (r["n_hosts"], r["n_copies"])
-        for r in mirror_docs(df, min_hosts=2)
+        for r in mirror_docs(df)
         .select("fp", "n_hosts", "n_copies").distinct().collect()
     }
     assert streamed == batch
@@ -1679,7 +1679,7 @@ def test_pagerank_matches_duckdb_unroll(spark):
     }
     vals = ", ".join(f"({s}, {d})" for s, d in edges)
     sql = host_pagerank_sql(
-        f"SELECT src, dst FROM (VALUES {vals}) AS v(src, dst)", iterations=3
+        f"SELECT src, dst FROM (VALUES {vals}) AS v(src, dst)"
     )
     want = {int(h): int(r) for h, r in duckdb.sql(sql).fetchall()}
     assert got == want
@@ -1800,7 +1800,7 @@ def test_canonical_url_matches_duckdb_twin(spark):
     want = sorted(
         r[0]
         for r in duckdb.sql(
-            f"SELECT {canonical_url_sql('url')} FROM (VALUES {vals}) t(url)"
+            f"SELECT {canonical_url_sql()} FROM (VALUES {vals}) t(url)"
         ).fetchall()
     )
     assert got == want
@@ -1882,7 +1882,7 @@ def test_bigram_lm_conditional_scores(spark):
         [(1, "a b a b"), (2, "a b c"), (3, "x")],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r for r in bigram_lm(df, novel_cnt=1).collect()}
+    got = {r["doc_id"]: r for r in bigram_lm(df).collect()}
     assert 3 not in got  # <2 tokens → no bigram → absent
     assert got[1]["n_bigrams"] == 3
     assert got[1]["mean_pred_ppm"] == (2 * 1_000_000 + 500_000) // 3
@@ -1988,7 +1988,7 @@ def test_ccnet_buckets_deterministic_tertiles(spark):
         for i in range(6)
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    got = {r["doc_id"]: r for r in ccnet_buckets(df, n_buckets=3).collect()}
+    got = {r["doc_id"]: r for r in ccnet_buckets(df).collect()}
     assert len(got) == 6
     buckets = [got[i]["bucket"] for i in sorted(got)]
     assert sorted(buckets) == [1, 1, 2, 2, 3, 3]
@@ -2008,7 +2008,7 @@ def test_ccnet_buckets_partitioned_by_lang(spark):
          (4, "fr", "x y x y"), (5, "en", "c d c d"), (6, "fr", "z w z w")],
         "doc_id long, lang string, text string",
     )
-    got = ccnet_buckets(df, n_buckets=3).collect()
+    got = ccnet_buckets(df).collect()
     # each lang gets its own full 1..3 tiling
     for lang in ("en", "fr"):
         assert sorted(r["bucket"] for r in got if r["lang"] == lang) == [1, 2, 3]
@@ -2483,7 +2483,6 @@ def test_trustrank_matches_duckdb_unroll(spark):
     sql = host_trustrank_sql(
         f"SELECT src, dst FROM (VALUES {vals}) AS v(src, dst)",
         "SELECT host FROM (VALUES (0), (1), (2)) AS s(host)",
-        iterations=3,
     )
     want = {int(h): int(t) for h, t in duckdb.sql(sql).fetchall()}
     assert got == want
@@ -2770,7 +2769,7 @@ def test_resolve_redirects_chains_loops_and_twin(spark):
     want = sorted(
         tuple(r)
         for r in con.execute(
-            resolve_redirects_sql("SELECT src, dst FROM rsrc", 16)
+            resolve_redirects_sql("SELECT src, dst FROM rsrc")
         ).fetchall()
     )
     assert got == want

@@ -57,7 +57,7 @@ def test_script_mix_matches_duckdb_twin(spark):
     got = sorted(tuple(r) for r in _mix_df(spark, ROWS).collect())
     con = duckdb.connect()
     con.register("d", pd.DataFrame(ROWS, columns=["doc_id", "text"]))
-    s = script_mix_sql("text")
+    s = script_mix_sql()
     want = sorted(
         tuple(r)
         for r in con.execute(

@@ -161,7 +161,7 @@ def test_streaming_rollup_equals_batch(spark, sf_small):
 
 def test_sessionize(spark, sf_small):
     ev = spark.read.parquet(f"{sf_small}/events.parquet")
-    sess = EV.sessionize_batch(ev, gap_minutes=30).cache()
+    sess = EV.sessionize_batch(ev).cache()
     n_events = ev.count()
     assert sess.agg(F.sum("n_events")).first()[0] == n_events
     assert sess.filter(F.col("t_end_sec") < F.col("t_start_sec")).count() == 0
@@ -208,16 +208,16 @@ def test_multimodal_pipeline(spark, sf_small):
     media = MM.attach_media(docs).cache()
     assert media.count() == docs.count()
 
-    feats = MM.extract_features(media, decoder="fake", thumb_px=4).cache()
+    feats = MM.extract_features(media, decoder="fake").cache()
     assert feats.count() == docs.count()
     row = feats.first()
     assert len(row["thumb"]) == 16
     assert row["feat_std"] >= 0.0
     # deterministic: re-run equals
-    again = MM.extract_features(media, decoder="fake", thumb_px=4)
+    again = MM.extract_features(media, decoder="fake")
     assert feats.exceptAll(again).count() == 0
 
-    frames = MM.sample_frames(media, every_ms=1000, max_frames=8)
+    frames = MM.sample_frames(media)
     vids = media.filter(F.col("kind") == "video").count()
     assert frames.select("media_id").distinct().count() == vids
     assert frames.agg(F.max("frame_idx")).first()[0] <= 7

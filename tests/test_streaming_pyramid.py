@@ -73,7 +73,7 @@ def test_streaming_available_now_matches_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stream = read_pages_stream(spark, SF)
     q = maintain_pyramid(
-        stream, store, ZOOM, LEVELS, checkpoint=ckpt, available_now=True
+        stream, store, ZOOM, LEVELS, checkpoint=ckpt
     )
     q.awaitTermination(300)
     got = _vals(read_pyramid_store(spark, store))
@@ -81,7 +81,7 @@ def test_streaming_available_now_matches_batch(spark, tmp_path):
     # restarting the drained stream applies nothing new
     q2 = maintain_pyramid(
         read_pages_stream(spark, SF), store, ZOOM, LEVELS,
-        checkpoint=ckpt, available_now=True,
+        checkpoint=ckpt,
     )
     q2.awaitTermination(300)
     assert _vals(read_pyramid_store(spark, store)) == got

@@ -94,7 +94,7 @@ def test_winnow_pairs_matches_duckdb_twin(spark):
     assert any(a == 100 and b == 101 for a, b, _ in got)
     con = duckdb.connect()
     con.register("docs_in", pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sql = winnow_pairs_sql("SELECT doc_id, text FROM docs_in", 1, 3, 4)
+    sql = winnow_pairs_sql("SELECT doc_id, text FROM docs_in", 1)
     assert got == sorted(tuple(r) for r in con.execute(sql).fetchall())
 
 
