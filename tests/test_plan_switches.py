@@ -18,6 +18,9 @@ sets it; the scan iterates to a fixpoint. Anything passed from
 ``bench.py`` or ``perfbench/`` counts as set: those callers are frozen. A
 test parametrized over ``(function, "name")`` rows that calls
 ``fn(..., **{name: <bool>})`` sets ``name`` to the bools it passes.
+Two views of the same rule name the options they cover: bool plan
+switches (``broadcast_*``, ``reuse*``, ``materialize_*``, ``salt_*``)
+and column parameters (``*_col``, ``*_cols``).
 
 The same pass fails a call that passes a keyword the resolved package
 function does not accept, or more positional arguments than it takes:
@@ -31,12 +34,15 @@ import contextlib
 import functools
 import gc
 import os
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "rio_cogeo_spark"
 FROZEN = (REPO / "bench.py", REPO / "perfbench")
 SET = object()  # a passed value that is not comparable with a default
+SWITCH = re.compile(r"^(broadcast_|reuse|materialize_|salt_)")
+COLUMN = re.compile(r"_cols?$")
 
 
 @contextlib.contextmanager
@@ -377,6 +383,29 @@ def test_every_option_has_a_caller_that_sets_it():
     assert not unset, (
         "parameters whose default no call changes; fix the value as a "
         f"constant and delete the parameter: {unset}"
+    )
+
+
+def test_every_plan_switch_has_a_caller_that_flips_it():
+    options, _, _ = _scan()
+    switches = {k for k, d in options.items() if SWITCH.match(k[2]) and d in ("True", "False")}
+    assert switches, "scan found no plan switches; the pattern or package path is stale"
+    unflipped = sorted(f"{m.rpartition('.')[2]}.{q}({p}={options[(m, q, p)]})"
+                       for m, q, p in unset_options() & switches)
+    assert not unflipped, (
+        "plan switches whose other value no call passes; delete the switch "
+        f"and keep the path callers run: {unflipped}"
+    )
+
+
+def test_every_column_parameter_has_a_caller_that_sets_it():
+    options, _, _ = _scan()
+    columns = {k for k in options if COLUMN.search(k[2])}
+    assert columns, "scan found no column parameters; the pattern or package path is stale"
+    single = sorted(f"{m.rpartition('.')[2]}.{q}({p})" for m, q, p in unset_options() & columns)
+    assert not single, (
+        "column parameters that no call sets to another value; write the "
+        f"column name as a literal and delete the parameter: {single}"
     )
 
 
